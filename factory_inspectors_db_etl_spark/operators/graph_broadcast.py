@@ -8,8 +8,7 @@ node table removes the edge-side exchange+sort per round — the r11 g1
 win — but an UNGATED broadcast would OOM the driver on billion-node
 graphs (VERDICT r11 item #4: "nothing automatically flips it").
 
-This module centralizes the decision (previously
-``plans/catalog_ext._graph_small_side``, broadcast-always by default):
+This module centralizes the decision:
 
 * ``spark.graft.graph.broadcast`` = ``auto`` (default) | ``true`` | ``false``
   - ``true`` / ``false``: unconditional, the pre-r12 behavior.
@@ -30,7 +29,9 @@ on |V| once per query is a correct conservative bound for every round
 |V| under the threshold means every round's broadcast is too).
 
 Per-call explicit override (``broadcast=True/False``) wins over the
-conf; the g1b/g3b shuffle-mode contract variants use it.
+conf; the g1b/g3b shuffle-mode contract variants use it.  Any other conf
+value (``off``, ``0``, a non-positive or non-integer ``maxRows``) raises
+``ValueError`` instead of silently reading as the default.
 """
 
 from __future__ import annotations
@@ -61,17 +62,22 @@ def resolve_graph_broadcast(
     if broadcast is not None:
         return broadcast
     mode = (spark.conf.get(GRAPH_BROADCAST_CONF, "auto") or "auto").lower()
-    if mode == "false":
-        return False
-    if mode == "true":
-        return True
+    if mode not in ("auto", "true", "false"):
+        raise ValueError(
+            f"unknown {GRAPH_BROADCAST_CONF}={mode!r}; expected one of {{auto, true, false}}"
+        )
+    raw = spark.conf.get(GRAPH_BROADCAST_MAX_ROWS_CONF, None) or str(_DEFAULT_MAX_ROWS)
+    try:
+        limit = int(raw)
+    except ValueError:
+        limit = 0
+    if limit <= 0:
+        raise ValueError(f"{GRAPH_BROADCAST_MAX_ROWS_CONF}={raw!r} must be a positive integer")
+    if mode != "auto":
+        return mode == "true"
     # auto: gate on the caller's row bound when one exists
     if n_rows is None:
         return True
-    limit = int(
-        spark.conf.get(GRAPH_BROADCAST_MAX_ROWS_CONF, str(_DEFAULT_MAX_ROWS))
-        or _DEFAULT_MAX_ROWS
-    )
     bound = n_rows() if callable(n_rows) else int(n_rows)
     return bound <= limit
 

@@ -9,9 +9,9 @@ Cross-engine determinism conventions (the driver hash-compares values):
 * Averages are ``CAST(exact-decimal-sum AS DOUBLE) / count`` — one IEEE
   division on identical inputs.
 * Every rank/limit has a total ordering (explicit tiebreak columns).
-* Window/LSH hashes are md5/xxhash64 on explicit strings, not engine hash
-  partitioning.  xxhash64-based ops have no DuckDB equivalent and are
-  registered as rows-only checks (no oracle entry).
+* Window/LSH hashes are md5 on explicit strings, not engine hash
+  partitioning.  xxhash64 has no DuckDB equivalent, so it appears only
+  where results do not depend on the hash value (salts, shingle ids).
 * DuckDB ``row_number``/``rank``/``ntile`` return BIGINT; oracles cast to
   INTEGER to match Spark.
 """
@@ -49,15 +49,17 @@ from ..operators.similarity import (
 )
 from ..operators import text_analysis as TA
 from ..sources.tables import load_table
-from .catalog_ext import EXT_ORACLES as _EXT_ORACLES, EXT_QUERIES as _EXT_QUERIES
-from .catalog_ext2 import EXT2_ORACLES as _EXT2_ORACLES, EXT2_QUERIES as _EXT2_QUERIES
-from .catalog_ext3 import EXT3_ORACLES as _EXT3_ORACLES, EXT3_QUERIES as _EXT3_QUERIES
-from .catalog_ext4 import EXT4_ORACLES as _EXT4_ORACLES, EXT4_QUERIES as _EXT4_QUERIES
-from .catalog_ext5 import EXT5_ORACLES as _EXT5_ORACLES, EXT5_QUERIES as _EXT5_QUERIES
-from .catalog_ext6 import EXT6_ORACLES as _EXT6_ORACLES, EXT6_QUERIES as _EXT6_QUERIES
-from .catalog_ext7 import EXT7_ORACLES as _EXT7_ORACLES, EXT7_QUERIES as _EXT7_QUERIES
-from .catalog_ext8 import EXT8_ORACLES as _EXT8_ORACLES, EXT8_QUERIES as _EXT8_QUERIES
-from .catalog_ext9 import EXT9_ORACLES as _EXT9_ORACLES, EXT9_QUERIES as _EXT9_QUERIES
+from . import (
+    catalog_ext,
+    catalog_ext2,
+    catalog_ext3,
+    catalog_ext4,
+    catalog_ext5,
+    catalog_ext6,
+    catalog_ext7,
+    catalog_ext8,
+    catalog_ext9,
+)
 
 
 def _dec(c) -> F.Column:
@@ -3303,421 +3305,150 @@ JOIN l ON q.doc_id = l.doc_id
 JOIN c ON q.doc_id = c.doc_id
 """
 
-# Ordering contract: the external driver verifies the FIRST 50 keys of this
-# dict per round.  Rotation history: r2 = the 50 §2-core keys; r3 = 29
-# never-checked + 21 core; r4 = changed/new/r2-parked; r5 = r2-stale
-# refreshes + the 47 round-5 additions; r6 = the 9 never-checked late-r5d
-# additions + 26 new round-6 queries + r6-changed code + 8 oldest-r3 core;
-# r10 = the 4 ext8 promotions + the 46-row r6 cohort (all 50 green,
-# CORRECTNESS_r10.json); r11 = the full 50-row r7 cohort (all 50 green,
-# CORRECTNESS_r11.json).
-#
-# Round 12 is the 47-row r8 cohort — due exactly now by the staleness
-# pin — PLUS the three staged promotions (m_bmp_decode built r9,
-# p_cluster_safe_split / er_entity_clusters built r11), which LEAD the
-# window because they are the only never-driver-checked rows in the
-# registry (VERDICT r11 items #4/#9).  47 + 3 = 50, zero spare slots.
-# Union across rounds stays total and every rotated-out query is
-# re-verified locally by tests/test_catalog_vs_duckdb.py each round.
-# tests/test_plan_shapes.py pins the rotation rule itself two ways: no
-# never-driver-checked query may sit outside the first-50 window, and
-# no query outside the window may be more than 4 rounds stale at the
-# upcoming driver run.
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- the r12 window: the 3 promotions (never driver-checked, so
-    # they lead) + the 47-row r8 cohort ---
-    "m_bmp_decode": _EXT8_QUERIES["m_bmp_decode"],
-    "p_cluster_safe_split": _EXT9_QUERIES["p_cluster_safe_split"],
-    "er_entity_clusters": _EXT9_QUERIES["er_entity_clusters"],
-    "d_semantic_dedup_lshassign": _EXT6_QUERIES["d_semantic_dedup_lshassign"],
-    "g8_kcore": _EXT6_QUERIES["g8_kcore"],
-    "a25_quantile_sketch_rollup": _EXT5_QUERIES["a25_quantile_sketch_rollup"],
-    "w34_survival_curve": _EXT6_QUERIES["w34_survival_curve"],
-    "p_ks_drift": _EXT6_QUERIES["p_ks_drift"],
-    "t_zipf_fit": _EXT6_QUERIES["t_zipf_fit"],
-    "g7_degree_assortativity": _EXT6_QUERIES["g7_degree_assortativity"],
-    "d_simhash_neardup": q_d_simhash_neardup,
-    "a5_approx_sketches": q_a5_approx_sketches,
-    "s11_stream_dedup": q_s11_stream_dedup,
-    "p_mixture_sample": q_p_mixture_sample,
-    "j9_merge_upsert": q_j9_merge_upsert,
-    "p_zorder_layout": q_p_zorder_layout,
-    "a8_reaggregate": q_a8_reaggregate,
-    "a9_sketch_rollup": q_a9_sketch_rollup,
-    "t_span_dedup": q_t_span_dedup,
-    "t_quality_classifier": q_t_quality_classifier,
-    "a10_histogram": _EXT_QUERIES["a10_histogram"],
-    "j10_salted_join": _EXT_QUERIES["j10_salted_join"],
-    "d_keep_best": _EXT_QUERIES["d_keep_best"],
-    "t_unigram_lm": _EXT_QUERIES["t_unigram_lm"],
-    "a11_groupwise_linreg": _EXT_QUERIES["a11_groupwise_linreg"],
-    "g2_triangle_count": _EXT_QUERIES["g2_triangle_count"],
-    "w15_cumulative_distinct": _EXT_QUERIES["w15_cumulative_distinct"],
-    "t_bpe_train": _EXT_QUERIES["t_bpe_train"],
-    "j11_interval_overlap": _EXT_QUERIES["j11_interval_overlap"],
-    "s2c_variant_extract": _EXT_QUERIES["s2c_variant_extract"],
-    "t_bpe_encode": _EXT_QUERIES["t_bpe_encode"],
-    "j4_case_insensitive_join": q_j4_case_insensitive_join,
-    "j5_anti_join": q_j5_anti_join,
-    "j5b_semi_join": q_j5b_semi_join,
-    "j6_asof_fill": q_j6_asof_fill,
-    "j6b_asof_join": q_j6b_asof_join,
-    "j8_range_join": q_j8_range_join,
-    "j8b_range_join_bucketed": q_j8b_range_join_bucketed,
-    "w1_forward_fill": q_w1_forward_fill,
-    "w5_latest_per_group": q_w5_latest_per_group,
-    "w6_global_surrogate": q_w6_global_surrogate,
-    "w7_lag_delta": q_w7_lag_delta,
-    "w8_rank_suite": q_w8_rank_suite,
-    "w9_range_frame": q_w9_range_frame,
-    "w10_funnel": q_w10_funnel,
-    "w11_cohort_retention": q_w11_cohort_retention,
-    "o5_topk": q_o5_topk,
-    "e1_union_dedup": q_e1_union_dedup,
-    "e2_except": q_e2_except,
-    "e3_intersect": q_e3_intersect,
-    # ------- 50-slot window boundary (e3_intersect is position 50) -------
-    # FORWARD COHORT ARITHMETIC (r12 accounting): this window is the 3
-    # staged promotions + the 47-row r8 cohort - zero spare slots, and
-    # the registry now sits AT the 200-query rotation ceiling (197 + 3
-    # promoted).  Dues: r13 <- r9 cohort (50, exactly full), r14 <- r10
-    # cohort (50, exactly full), r15 <- r11 cohort (the 50-row r7-origin
-    # block the r11 window refreshed), r16 <- this window again.  Every
-    # future window is exactly full, so ANY new operator must first
-    # demote a row to PYTEST_ONLY in RETIREMENT_ORDER (below), from the
-    # cohort due the round the addition lands (test_plan_shapes pins the
-    # ceiling and simulates the demotion path).  The tail below is
-    # grouped by due round (r9, r10, then r11 cohort) so each rotation
-    # stays a block move.
-    # (Keep this comment in sync by COUNTING - list(QUERIES).index(name) -
-    # tests/test_plan_shapes.py pins it.)
-    # --- r9 cohort (due at round 13): the 50 rows the r9 window
-    # refreshed — 6 queries new in r9 (catalog_ext7) + the 44 formerly
-    # r5-stale rows ---
-    "w35_changepoint": _EXT7_QUERIES["w35_changepoint"],
-    "j24_interp_join": _EXT7_QUERIES["j24_interp_join"],
-    "a26_entropy": _EXT7_QUERIES["a26_entropy"],
-    "a27_bottomk_distinct": _EXT7_QUERIES["a27_bottomk_distinct"],
-    "t_readability": _EXT7_QUERIES["t_readability"],
-    "g9_link_prediction": _EXT7_QUERIES["g9_link_prediction"],
-    "s9_tumbling_window": q_s9_tumbling_window,
-    "d_exact_dedup": q_d_exact_dedup,
-    "s9b_sliding_window": q_s9b_sliding_window,
-    "s10_session_window": q_s10_session_window,
-    "t_chunk_windows": q_t_chunk_windows,
-    "s12_stream_stream_join": q_s12_stream_stream_join,
-    "s13_stream_stream_left_outer": _EXT_QUERIES["s13_stream_stream_left_outer"],
-    "g1b_pagerank_shuffle": _EXT_QUERIES["g1b_pagerank_shuffle"],
-    "g3b_label_prop_shuffle": _EXT_QUERIES["g3b_label_prop_shuffle"],
-    "a12_equidepth_histogram": _EXT_QUERIES["a12_equidepth_histogram"],
-    "a13_heavy_hitters": _EXT_QUERIES["a13_heavy_hitters"],
-    "d_substring_dedup": _EXT_QUERIES["d_substring_dedup"],
-    "j12_fuzzy_blocked_join": _EXT_QUERIES["j12_fuzzy_blocked_join"],
-    "d_incremental_dedup": q_d_incremental_dedup,
-    "w16_ohlc_resample": q_w16_ohlc_resample,
-    "j12b_deletion_join": _EXT_QUERIES["j12b_deletion_join"],
-    "d_setsim_prefix_join": _EXT2_QUERIES["d_setsim_prefix_join"],
-    "w17_gap_fill": _EXT2_QUERIES["w17_gap_fill"],
-    "j14_scd2_lookup": _EXT2_QUERIES["j14_scd2_lookup"],
-    "a14_mad_outliers": _EXT2_QUERIES["a14_mad_outliers"],
-    "w18_ewma": _EXT2_QUERIES["w18_ewma"],
-    "s14_stream_stream_full_outer": _EXT2_QUERIES["s14_stream_stream_full_outer"],
-    "t_bigram_lm": _EXT2_QUERIES["t_bigram_lm"],
-    "j15_nearest_event_join": _EXT3_QUERIES["j15_nearest_event_join"],
-    "a15_countmin": _EXT3_QUERIES["a15_countmin"],
-    "w19_rolling_median": _EXT3_QUERIES["w19_rolling_median"],
-    "j17_snapshot_diff": _EXT3_QUERIES["j17_snapshot_diff"],
-    "p_weighted_sample": _EXT3_QUERIES["p_weighted_sample"],
-    "a16_seasonal_baseline": _EXT3_QUERIES["a16_seasonal_baseline"],
-    "w20_twap": _EXT3_QUERIES["w20_twap"],
-    "w21_funnel_window": _EXT3_QUERIES["w21_funnel_window"],
-    "a17_mode": _EXT3_QUERIES["a17_mode"],
-    "p_impute": _EXT3_QUERIES["p_impute"],
-    "e2b_except_all": _EXT3_QUERIES["e2b_except_all"],
-    "e3b_intersect_all": _EXT3_QUERIES["e3b_intersect_all"],
-    "a18_gini": _EXT3_QUERIES["a18_gini"],
-    "w22_transition_matrix": _EXT3_QUERIES["w22_transition_matrix"],
-    "o7_diversified_topk": _EXT3_QUERIES["o7_diversified_topk"],
-    "h1_hierarchy_rollup": _EXT3_QUERIES["h1_hierarchy_rollup"],
-    "sim_ivf_topk": q_sim_ivf_topk,
-    "sim_ivf_topk_kmeans": q_sim_ivf_topk_kmeans,
-    "g1_pagerank": _EXT_QUERIES["g1_pagerank"],
-    "g3_label_propagation": _EXT_QUERIES["g3_label_propagation"],
-    "d_embedding_neardup_lsh": q_d_embedding_neardup_lsh,
-    # --- r10 cohort (due at round 14): the 4 catalog_ext8 promotions +
-    # the 46-row r6 block the r10 window refreshed (all 50 green,
-    # CORRECTNESS_r10.json) ---
-    "g10_neighbor_jaccard": _EXT8_QUERIES["g10_neighbor_jaccard"],
-    "t_mattr": _EXT8_QUERIES["t_mattr"],
-    "t_rake_keyphrases": _EXT8_QUERIES["t_rake_keyphrases"],
-    "t_lm_perplexity": _EXT8_QUERIES["t_lm_perplexity"],
-    "w25_streaks": _EXT3_QUERIES["w25_streaks"],
-    "p_benford": _EXT3_QUERIES["p_benford"],
-    "p_kanon": _EXT3_QUERIES["p_kanon"],
-    "w26_period_over_period": _EXT3_QUERIES["w26_period_over_period"],
-    "w27_dau_wau": _EXT3_QUERIES["w27_dau_wau"],
-    "w27b_wau_sketch": _EXT3_QUERIES["w27b_wau_sketch"],
-    "g4_khop_bfs": _EXT_QUERIES["g4_khop_bfs"],
-    "a21_weighted_median": _EXT3_QUERIES["a21_weighted_median"],
-    "j6c_asof_tolerance": q_j6c_asof_tolerance,
-    "d_containment": _EXT2_QUERIES["d_containment"],
-    "j13_bloom_filtered_join": _EXT2_QUERIES["j13_bloom_filtered_join"],
-    "p_fk_audit": _EXT3_QUERIES["p_fk_audit"],
-    "j16_tfidf_cosine_join": _EXT4_QUERIES["j16_tfidf_cosine_join"],
-    "g5_wcc": _EXT4_QUERIES["g5_wcc"],
-    "a22_hhi_concentration": _EXT4_QUERIES["a22_hhi_concentration"],
-    "w28_rfm_segmentation": _EXT4_QUERIES["w28_rfm_segmentation"],
-    "j18_interval_align": _EXT4_QUERIES["j18_interval_align"],
-    "t_ngram_novelty": _EXT4_QUERIES["t_ngram_novelty"],
-    "p_reservoir_sample": _EXT4_QUERIES["p_reservoir_sample"],
-    "o8_skyline_2d": _EXT4_QUERIES["o8_skyline_2d"],
-    "j21_grid_spatial_join": _EXT4_QUERIES["j21_grid_spatial_join"],
-    "t_vocab_growth": _EXT4_QUERIES["t_vocab_growth"],
-    "w29_last_touch_attribution": _EXT4_QUERIES["w29_last_touch_attribution"],
-    "g6_clustering_coeff": _EXT4_QUERIES["g6_clustering_coeff"],
-    "p_temporal_split": _EXT4_QUERIES["p_temporal_split"],
-    "j23_incremental_join_view": _EXT4_QUERIES["j23_incremental_join_view"],
-    "a24_percentile_rank": _EXT4_QUERIES["a24_percentile_rank"],
-    "p_balanced_downsample": _EXT4_QUERIES["p_balanced_downsample"],
-    "p_winsorize": _EXT4_QUERIES["p_winsorize"],
-    "w30_path_analysis": _EXT4_QUERIES["w30_path_analysis"],
-    "w31_interval_coalesce": _EXT4_QUERIES["w31_interval_coalesce"],
-    "s15_stream_stream_semi": _EXT4_QUERIES["s15_stream_stream_semi"],
-    "p_chi2_independence": _EXT4_QUERIES["p_chi2_independence"],
-    "e4_relational_division": _EXT4_QUERIES["e4_relational_division"],
-    "sim_cosine_topk": q_sim_cosine_topk,
-    "sim_lsh_topk": q_sim_lsh_topk,
-    "d_embedding_neardup": q_d_embedding_neardup,
-    "sim_pq_topk": q_sim_pq_topk,
-    "flagship_q5_revenue": flagship,
-    "s1_filter_project": q_s1_filter_project,
-    "f1_standardize": q_f1_standardize,
-    "f2_clean_number": q_f2_clean_number,
-    "f5_regex_extract": q_f5_regex_extract,
-    "f8_token_sort_canon": q_f8_token_sort_canon,
-    "f9_case_ladder": q_f9_case_ladder,
-    "f10_dict_canonicalize": q_f10_dict_canonicalize,
-    # --- r11 cohort (due at round 15): the 50-row r7-origin block the
-    # r11 window refreshed (all 50 green, CORRECTNESS_r11.json) ---
-    "d_dedup_clusters": q_d_dedup_clusters,
-    "m_jpeg_decode": _EXT5_QUERIES["m_jpeg_decode"],
-    "m_png_decode": _EXT4_QUERIES["m_png_decode"],
-    "m_wav_energy": _EXT4_QUERIES["m_wav_energy"],
-    "m_mp4_meta": _EXT4_QUERIES["m_mp4_meta"],
-    "j19_fifo_allocation": _EXT4_QUERIES["j19_fifo_allocation"],
-    "w32_interval_concurrency": _EXT5_QUERIES["w32_interval_concurrency"],
-    "t_collocation_lift": _EXT5_QUERIES["t_collocation_lift"],
-    "m_gif_decode": _EXT5_QUERIES["m_gif_decode"],
-    "w33_position_attribution": _EXT5_QUERIES["w33_position_attribution"],
-    "p_ldiversity": _EXT5_QUERIES["p_ldiversity"],
-    "f11_typed_date": q_f11_typed_date,
-    "a1_pricing_summary": q_a1_pricing_summary,
-    "a2_skew_safe_distinct": q_a2_skew_safe_distinct,
-    "a3_rollup": q_a3_rollup,
-    "a3b_cube": q_a3b_cube,
-    "a3c_grouping_sets": q_a3c_grouping_sets,
-    "a4_distinct_counts": q_a4_distinct_counts,
-    "j1_broadcast_dim_join": q_j1_broadcast_dim_join,
-    "j2_surrogate_dim": q_j2_surrogate_dim,
-    "j3_nullsafe_join": q_j3_nullsafe_join,
-    "a6_pivot": q_a6_pivot,
-    "a6b_unpivot": q_a6b_unpivot,
-    "a7_collect_set": q_a7_collect_set,
-    "s2b_json_extract": q_s2b_json_extract,
-    "u3_grouped_agg_udaf": q_u3_grouped_agg_udaf,
-    "w12_exact_percentiles": q_w12_exact_percentiles,
-    "w13_sessionize": q_w13_sessionize,
-    "w14_scd2_intervals": q_w14_scd2_intervals,
-    "t_repetition_stats": q_t_repetition_stats,
-    "p_profile_columns": q_p_profile_columns,
-    "p_curate_corpus": q_p_curate_corpus,
-    "d_contamination": q_d_contamination,
-    "t_pii_redact": q_t_pii_redact,
-    "p_hash_split": q_p_hash_split,
-    "p_stratified_sample": q_p_stratified_sample,
-    "p_group_sample": q_p_group_sample,
-    "p_pack_bins": q_p_pack_bins,
-    "t_text_stats": q_t_text_stats,
-    "t_language_guess": q_t_language_guess,
-    "t_quality_score": q_t_quality_score,
-    "t_token_count_bpe": q_t_token_count_bpe,
-    "t_char_fingerprint": q_t_char_fingerprint,
-    "m_multimodal_meta": q_m_multimodal_meta,
-    "m_multimodal_decode": q_m_multimodal_decode,
-    "m_frame_sample": q_m_frame_sample,
-    "d_ngram_jaccard": q_d_ngram_jaccard,
-    "d_minhash_lsh": q_d_minhash_lsh,
-    "d_simhash": q_d_simhash,
-    "t_tfidf_topk": q_t_tfidf_topk,
+# Each catalog module exports one REGISTRY of name -> (query, oracle SQL);
+# a query cannot be registered without its oracle.  These are this
+# module's own entries.
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "s1_filter_project": (q_s1_filter_project, O_S1),
+    "f5_regex_extract": (q_f5_regex_extract, O_F5),
+    "f2_clean_number": (q_f2_clean_number, O_F2),
+    "f8_token_sort_canon": (q_f8_token_sort_canon, O_F8),
+    "f9_case_ladder": (q_f9_case_ladder, O_F9),
+    "f10_dict_canonicalize": (q_f10_dict_canonicalize, O_F10),
+    "f11_typed_date": (q_f11_typed_date, O_F11),
+    "a1_pricing_summary": (q_a1_pricing_summary, O_A1),
+    "a5_approx_sketches": (q_a5_approx_sketches, O_A5),
+    "a3_rollup": (q_a3_rollup, O_A3),
+    "j6b_asof_join": (q_j6b_asof_join, O_J6B),
+    "j6c_asof_tolerance": (q_j6c_asof_tolerance, O_J6C),
+    "w10_funnel": (q_w10_funnel, O_W10),
+    "w11_cohort_retention": (q_w11_cohort_retention, O_W11),
+    "w16_ohlc_resample": (q_w16_ohlc_resample, O_W16),
+    "w12_exact_percentiles": (q_w12_exact_percentiles, O_W12),
+    "w14_scd2_intervals": (q_w14_scd2_intervals, O_W14),
+    "w13_sessionize": (q_w13_sessionize, O_W13),
+    "a6b_unpivot": (q_a6b_unpivot, O_A6B),
+    "w9_range_frame": (q_w9_range_frame, O_W9),
+    "a3b_cube": (q_a3b_cube, O_A3B),
+    "a3c_grouping_sets": (q_a3c_grouping_sets, O_A3C),
+    "a7_collect_set": (q_a7_collect_set, O_A7),
+    "a6_pivot": (q_a6_pivot, O_A6),
+    "a2_skew_safe_distinct": (q_a2_skew_safe_distinct, O_A2_SKEW),
+    "a4_distinct_counts": (q_a4_distinct_counts, O_A4),
+    "j1_broadcast_dim_join": (q_j1_broadcast_dim_join, O_J1),
+    "j2_surrogate_dim": (q_j2_surrogate_dim, O_J2),
+    "j3_nullsafe_join": (q_j3_nullsafe_join, O_J3),
+    "j4_case_insensitive_join": (q_j4_case_insensitive_join, O_J4),
+    "j5_anti_join": (q_j5_anti_join, O_J5),
+    "j5b_semi_join": (q_j5b_semi_join, O_J5B),
+    "j6_asof_fill": (q_j6_asof_fill, O_J6),
+    "j8_range_join": (q_j8_range_join, O_J8),
+    "j8b_range_join_bucketed": (q_j8b_range_join_bucketed, O_J8B),
+    "w1_forward_fill": (q_w1_forward_fill, O_W1),
+    "w5_latest_per_group": (q_w5_latest_per_group, O_W5),
+    "w6_global_surrogate": (q_w6_global_surrogate, O_W6),
+    "w7_lag_delta": (q_w7_lag_delta, O_W7),
+    "w8_rank_suite": (q_w8_rank_suite, O_W8),
+    "o5_topk": (q_o5_topk, O_O5),
+    "e1_union_dedup": (q_e1_union_dedup, O_E1),
+    "e2_except": (q_e2_except, O_E2),
+    "e3_intersect": (q_e3_intersect, O_E3),
+    "s9_tumbling_window": (q_s9_tumbling_window, O_S9),
+    "s9b_sliding_window": (q_s9b_sliding_window, O_S9B),
+    "s10_session_window": (q_s10_session_window, O_S10),
+    "s11_stream_dedup": (q_s11_stream_dedup, O_S11),
+    "s12_stream_stream_join": (q_s12_stream_stream_join, O_S12),
+    "d_exact_dedup": (q_d_exact_dedup, O_D_EXACT),
+    "d_ngram_jaccard": (q_d_ngram_jaccard, O_D_JACCARD),
+    "d_dedup_clusters": (q_d_dedup_clusters, O_D_CLUSTERS),
+    "d_minhash_lsh": (q_d_minhash_lsh, O_D_MINHASH),
+    "d_incremental_dedup": (q_d_incremental_dedup, O_D_INCREMENTAL),
+    "d_simhash": (q_d_simhash, O_D_SIMHASH),
+    "s2b_json_extract": (q_s2b_json_extract, O_S2B_JSON),
+    "t_tfidf_topk": (q_t_tfidf_topk, O_T_TFIDF),
+    "p_profile_columns": (q_p_profile_columns, O_P_PROFILE),
+    "p_curate_corpus": (q_p_curate_corpus, O_P_CURATE),
+    "p_pack_bins": (q_p_pack_bins, O_P_PACK),
+    "d_contamination": (q_d_contamination, O_D_CONTAM),
+    "t_chunk_windows": (q_t_chunk_windows, O_T_CHUNKS),
+    "t_pii_redact": (q_t_pii_redact, O_T_PII),
+    "p_hash_split": (q_p_hash_split, O_P_HASH_SPLIT),
+    "p_stratified_sample": (q_p_stratified_sample, O_P_STRATIFIED),
+    "p_group_sample": (q_p_group_sample, O_P_GROUP_SAMPLE),
+    "t_text_stats": (q_t_text_stats, O_T_STATS),
+    "t_language_guess": (q_t_language_guess, O_T_LANG),
+    "t_quality_score": (q_t_quality_score, O_T_QUALITY),
+    "t_repetition_stats": (q_t_repetition_stats, O_T_REPETITION),
+    "sim_cosine_topk": (q_sim_cosine_topk, O_SIM_TOPK),
+    "sim_lsh_topk": (q_sim_lsh_topk, O_SIM_LSH),
+    "t_token_count_bpe": (q_t_token_count_bpe, O_T_TOKEN_BPE),
+    "t_char_fingerprint": (q_t_char_fingerprint, O_T_CHAR_FP),
+    "d_embedding_neardup": (q_d_embedding_neardup, O_D_EMB_NEARDUP),
+    "d_embedding_neardup_lsh": (q_d_embedding_neardup_lsh, O_D_EMB_NEARDUP_LSH),
+    "sim_ivf_topk": (q_sim_ivf_topk, O_SIM_IVF),
+    "sim_ivf_topk_kmeans": (q_sim_ivf_topk_kmeans, O_SIM_IVF_KMEANS),
+    "d_simhash_neardup": (q_d_simhash_neardup, O_D_SIMHASH_NEARDUP),
+    "f1_standardize": (q_f1_standardize, O_F1),
+    "u3_grouped_agg_udaf": (q_u3_grouped_agg_udaf, O_U3),
+    "m_multimodal_meta": (q_m_multimodal_meta, O_M_META),
+    "m_multimodal_decode": (q_m_multimodal_decode, O_M_DECODE),
+    "m_frame_sample": (q_m_frame_sample, O_M_FRAME),
+    "flagship_q5_revenue": (flagship, O_FLAGSHIP),
+    "p_mixture_sample": (q_p_mixture_sample, O_P_MIXTURE),
+    "j9_merge_upsert": (q_j9_merge_upsert, O_J9_MERGE),
+    "p_zorder_layout": (q_p_zorder_layout, O_P_ZORDER),
+    "a8_reaggregate": (q_a8_reaggregate, O_A8_REAGG),
+    "a9_sketch_rollup": (q_a9_sketch_rollup, O_A9_SKETCH_ROLLUP),
+    "t_span_dedup": (q_t_span_dedup, O_T_SPAN_DEDUP),
+    "t_quality_classifier": (q_t_quality_classifier, O_T_QUALITY_CLS),
+    "sim_pq_topk": (q_sim_pq_topk, O_SIM_PQ),
 }
 
 
-ORACLES: dict[str, str] = {
-    "flagship_q5_revenue": O_FLAGSHIP,
-    "s1_filter_project": O_S1,
-    "f2_clean_number": O_F2,
-    "f5_regex_extract": O_F5,
-    "f8_token_sort_canon": O_F8,
-    "f9_case_ladder": O_F9,
-    "f10_dict_canonicalize": O_F10,
-    "f11_typed_date": O_F11,
-    "a1_pricing_summary": O_A1,
-    "a2_skew_safe_distinct": O_A2_SKEW,
-    "a5_approx_sketches": O_A5,
-    "a3_rollup": O_A3,
-    "a3b_cube": O_A3B,
-    "a3c_grouping_sets": O_A3C,
-    "t_repetition_stats": O_T_REPETITION,
-    "p_profile_columns": O_P_PROFILE,
-    "w14_scd2_intervals": O_W14,
-    "p_curate_corpus": O_P_CURATE,
-    "w12_exact_percentiles": O_W12,
-    "w13_sessionize": O_W13,
-    "a6_pivot": O_A6,
-    "a7_collect_set": O_A7,
-    "a6b_unpivot": O_A6B,
-    "a4_distinct_counts": O_A4,
-    "j1_broadcast_dim_join": O_J1,
-    "j2_surrogate_dim": O_J2,
-    "j3_nullsafe_join": O_J3,
-    "j4_case_insensitive_join": O_J4,
-    "j5_anti_join": O_J5,
-    "j5b_semi_join": O_J5B,
-    "j6_asof_fill": O_J6,
-    "j6b_asof_join": O_J6B,
-    "j6c_asof_tolerance": O_J6C,
-    "j8_range_join": O_J8,
-    "j8b_range_join_bucketed": O_J8B,
-    "w1_forward_fill": O_W1,
-    "w5_latest_per_group": O_W5,
-    "w6_global_surrogate": O_W6,
-    "w7_lag_delta": O_W7,
-    "w8_rank_suite": O_W8,
-    "w9_range_frame": O_W9,
-    "w10_funnel": O_W10,
-    "w11_cohort_retention": O_W11,
-    "w16_ohlc_resample": O_W16,
-    "o5_topk": O_O5,
-    "e1_union_dedup": O_E1,
-    "e2_except": O_E2,
-    "e3_intersect": O_E3,
-    "s9_tumbling_window": O_S9,
-    "s9b_sliding_window": O_S9B,
-    "s10_session_window": O_S10,
-    "s11_stream_dedup": O_S11,
-    "sim_ivf_topk_kmeans": O_SIM_IVF_KMEANS,
-    "s12_stream_stream_join": O_S12,
-    "p_mixture_sample": O_P_MIXTURE,
-    "j9_merge_upsert": O_J9_MERGE,
-    "p_zorder_layout": O_P_ZORDER,
-    "a8_reaggregate": O_A8_REAGG,
-    "a9_sketch_rollup": O_A9_SKETCH_ROLLUP,
-    "t_span_dedup": O_T_SPAN_DEDUP,
-    "t_quality_classifier": O_T_QUALITY_CLS,
-    "sim_pq_topk": O_SIM_PQ,
-    "d_exact_dedup": O_D_EXACT,
-    "d_ngram_jaccard": O_D_JACCARD,
-    "d_dedup_clusters": O_D_CLUSTERS,
-    "d_minhash_lsh": O_D_MINHASH,
-    "d_incremental_dedup": O_D_INCREMENTAL,
-    "d_simhash": O_D_SIMHASH,
-    "d_simhash_neardup": O_D_SIMHASH_NEARDUP,
-    "d_contamination": O_D_CONTAM,
-    "s2b_json_extract": O_S2B_JSON,
-    "t_tfidf_topk": O_T_TFIDF,
-    "t_chunk_windows": O_T_CHUNKS,
-    "t_pii_redact": O_T_PII,
-    "p_hash_split": O_P_HASH_SPLIT,
-    "p_stratified_sample": O_P_STRATIFIED,
-    "p_group_sample": O_P_GROUP_SAMPLE,
-    "p_pack_bins": O_P_PACK,
-    "t_text_stats": O_T_STATS,
-    "t_language_guess": O_T_LANG,
-    "t_quality_score": O_T_QUALITY,
-    "sim_cosine_topk": O_SIM_TOPK,
-    "sim_lsh_topk": O_SIM_LSH,
-    "sim_ivf_topk": O_SIM_IVF,
-    "d_embedding_neardup": O_D_EMB_NEARDUP,
-    "d_embedding_neardup_lsh": O_D_EMB_NEARDUP_LSH,
-    "t_token_count_bpe": O_T_TOKEN_BPE,
-    "t_char_fingerprint": O_T_CHAR_FP,
-    "m_multimodal_meta": O_M_META,
-    "m_multimodal_decode": O_M_DECODE,
-    "m_frame_sample": O_M_FRAME,
-    "f1_standardize": O_F1,
-    "u3_grouped_agg_udaf": O_U3,
-    **_EXT_ORACLES,
-    **_EXT2_ORACLES,
-    **_EXT3_ORACLES,
-    **_EXT4_ORACLES,
-    **_EXT5_ORACLES,
-    **_EXT6_ORACLES,
-    **_EXT7_ORACLES,
-    # round-10 promotions from catalog_ext8, plus m_bmp_decode's
-    # round-12 promotion (staged r9-r11, never driver-checked until now)
-    "g10_neighbor_jaccard": _EXT8_ORACLES["g10_neighbor_jaccard"],
-    "t_mattr": _EXT8_ORACLES["t_mattr"],
-    "t_rake_keyphrases": _EXT8_ORACLES["t_rake_keyphrases"],
-    "t_lm_perplexity": _EXT8_ORACLES["t_lm_perplexity"],
-    "m_bmp_decode": _EXT8_ORACLES["m_bmp_decode"],
-    # round-12 promotions from catalog_ext9 (staged r11)
-    "p_cluster_safe_split": _EXT9_ORACLES["p_cluster_safe_split"],
-    "er_entity_clusters": _EXT9_ORACLES["er_entity_clusters"],
-    # Every registered query has an oracle as of round 4: the two former
-    # rows-only entries were upgraded — d_embedding_neardup_lsh to a
-    # seeded-replay oracle (r3), a5_approx_sketches to a bounded-error
-    # contract (exact counts hash-checked + in-bound booleans, r4).
-}
+def merge_registries(*tables: dict) -> dict:
+    """Union of REGISTRY tables; a name registered twice raises."""
+    merged: dict = {}
+    for table in tables:
+        for name, pair in table.items():
+            if name in merged:
+                raise ValueError(f"catalog query {name!r} is registered twice")
+            merged[name] = pair
+    return merged
 
 
-# Demoted to pytest-only in round 9 (VERDICT r8 item #1): the three
-# semantic-dedup configurations with a MEASURED quadratic term — fixed
-# k=16 (pair term O(n²/k), 17.65× at 10× data), fixed-k multiprobe, and
-# auto-k with exact assignment (O(n·k) = O(n²/cell), 64.5× at 10×) —
-# stay fully oracle-verified by tests/test_catalog_vs_duckdb.py every
-# round as determinism baselines, but are no longer driver-registered
-# or benchmarked: a user reaching for the registered name gets only the
-# linear configuration (d_semantic_dedup_lshassign, sweep 4.71× at 10×),
-# which is also what operators/similarity.semantic_dedup now defaults to.
-PYTEST_ONLY_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "d_semantic_dedup": q_d_semantic_dedup,
-    "d_semantic_dedup_multiprobe": q_d_semantic_dedup_multiprobe,
-    "d_semantic_dedup_auto": _EXT5_QUERIES["d_semantic_dedup_auto"],
-}
-
-PYTEST_ONLY_ORACLES: dict[str, str] = {
-    "d_semantic_dedup": O_D_SEMANTIC_DEDUP,
-    "d_semantic_dedup_multiprobe": O_D_SEMANTIC_DEDUP_MP,
-    "d_semantic_dedup_auto": ORACLES.pop("d_semantic_dedup_auto"),
-}
-
-
-# STAGED queries: EMPTY as of round 12 — the three rows staged through
-# r11 (m_bmp_decode from catalog_ext8; p_cluster_safe_split and
-# er_entity_clusters from catalog_ext9) were promoted into the r12
-# window (they lead it, being the only never-driver-checked rows).
-#
-# REGISTRY CEILING: the 50-slot/4-round rotation supports at most 200
-# registered queries — the registry now sits AT 200 with ZERO headroom.
-# ANY further operator must first demote a row to PYTEST_ONLY_QUERIES
-# in RETIREMENT_ORDER (below).
-STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-STAGED_ORACLES: dict[str, str] = {}
-
-# Ordered retirement list (VERDICT r9 item #5): when a new operator
-# needs a registry slot past the 200-query rotation ceiling, demote
-# rows to PYTEST_ONLY_QUERIES in THIS order — each named row is the
-# special case of a registered general form that subsumes its driver
-# evidence (the general form keeps exercising the same operator code
-# path under the driver oracle; the demoted twin stays oracle-verified
-# locally every round like the semantic-dedup trio).
-RETIREMENT_ORDER: tuple[str, ...] = (
-    "e2_except",        # e2b_except_all subsumes (EXCEPT ALL ⊃ EXCEPT's dedup form)
-    "e3_intersect",     # e3b_intersect_all subsumes, same operator pair
-    "j8_range_join",    # j8b_range_join_bucketed is the same join + the scale path
-    "a3_rollup",        # a3c_grouping_sets plans the superset GROUPING SETS shape
-    "a3b_cube",         # a3c_grouping_sets again (cube = the full lattice)
-    "j5_anti_join",     # j5b_semi_join exercises the same left-semi/anti planner path
-    "s9_tumbling_window",  # s9b_sliding_window covers tumbling as slide=width
+_ALL = merge_registries(
+    REGISTRY,
+    catalog_ext.REGISTRY,
+    catalog_ext2.REGISTRY,
+    catalog_ext3.REGISTRY,
+    catalog_ext4.REGISTRY,
+    catalog_ext5.REGISTRY,
+    catalog_ext6.REGISTRY,
+    catalog_ext7.REGISTRY,
+    catalog_ext8.REGISTRY,
+    catalog_ext9.REGISTRY,
 )
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    n: q for n, (q, _) in _ALL.items()
+}
+ORACLES: dict[str, str] = {n: o for n, (_, o) in _ALL.items()}
+
+
+# Oracle-checked by tests/test_catalog_vs_duckdb.py but not registered:
+# the semantic-dedup configurations with a measured quadratic term
+# (fixed k=16, fixed-k multiprobe, and auto-k with exact assignment).
+# They are the determinism baselines for the registered linear form,
+# d_semantic_dedup_lshassign, and the only oracle check of the
+# assign="exact" path the recall tests use as their reference.
+_PYTEST_ONLY = {
+    "d_semantic_dedup": (q_d_semantic_dedup, O_D_SEMANTIC_DEDUP),
+    "d_semantic_dedup_multiprobe": (q_d_semantic_dedup_multiprobe, O_D_SEMANTIC_DEDUP_MP),
+    "d_semantic_dedup_auto": (
+        catalog_ext5.q_d_semantic_dedup_auto,
+        catalog_ext5.O_D_SEMANTIC_DEDUP_AUTO,
+    ),
+}
+PYTEST_ONLY_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    n: q for n, (q, _) in _PYTEST_ONLY.items()
+}
+PYTEST_ONLY_ORACLES: dict[str, str] = {n: o for n, (_, o) in _PYTEST_ONLY.items()}

@@ -17,11 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.dedup import assign_components, ngram_jaccard_pairs, portable_hash60
-from ..operators.graph_broadcast import (
-    GRAPH_BROADCAST_CONF,
-    graph_small_side,
-    resolve_graph_broadcast,
-)
+from ..operators.graph_broadcast import graph_small_side, resolve_graph_broadcast
 from ..operators.materialize import materialize
 from ..session import clamp_iterative_shuffle
 from ..operators import text_analysis as TA
@@ -35,26 +31,6 @@ def _dec(c) -> F.Column:
 
 def _portable60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def _graph_small_side(
-    spark: SparkSession,
-    df: DataFrame,
-    broadcast: bool | None = None,
-    n_rows=None,
-) -> DataFrame:
-    """The |V|-row side of each iterative-graph join (per-node ranks /
-    labels / contributions).  Delegates to
-    ``operators.graph_broadcast.graph_small_side`` (kept under the
-    historical name for call sites and tests): broadcast below the
-    ``spark.graft.graph.broadcast.maxRows`` size gate in the default
-    ``auto`` mode (r12, VERDICT r11 item #8), unconditional under
-    conf ``true``/``false``, per-call override first (the g1b/g3b
-    variants pass False — no shared session state to race on).  Loop
-    operators resolve ONCE per query via ``resolve_graph_broadcast``
-    with a cheap row bound from an already-materialized table and pass
-    the explicit bool here."""
-    return graph_small_side(spark, df, broadcast, n_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -452,7 +428,7 @@ def q_g1_pagerank(
     table every round — the per-round ranks⋈deg SMJ (two exchanges +
     two sorts of |V| rows, 5x per query) is gone, contributions are a
     projection of the checkpointed rank table; and the |V|-row
-    ``incoming`` aggregate rides ``_graph_small_side`` on the update
+    ``incoming`` aggregate rides ``graph_small_side`` on the update
     join too, so in broadcast mode one round = ONE exchange (the
     map-side-combined vote shuffle) instead of five.  Mass arithmetic
     is unchanged — same integer updates against the same static degrees
@@ -484,13 +460,13 @@ def q_g1_pagerank(
             F.col("node").alias("src"), F.expr("mass div deg").alias("contrib")
         )
         incoming = (
-            edges.join(_graph_small_side(spark, node_contrib, broadcast_nodes), "src")
+            edges.join(graph_small_side(spark, node_contrib, broadcast_nodes), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("contrib").alias("inmass"))
         )
         ranks = materialize(
             ranks.select("node", "deg")
-            .join(_graph_small_side(spark, incoming, broadcast_nodes), "node", "left")
+            .join(graph_small_side(spark, incoming, broadcast_nodes), "node", "left")
             .select(
                 "node",
                 "deg",
@@ -655,7 +631,7 @@ def q_g3_label_propagation(
     broadcast_nodes = resolve_graph_broadcast(spark, broadcast_nodes, edges.count)
     for _ in range(_LPA_ITERS):
         votes = (
-            edges.join(_graph_small_side(spark, labels, broadcast_nodes), edges["src"] == labels["node"])
+            edges.join(graph_small_side(spark, labels, broadcast_nodes), edges["src"] == labels["node"])
             .groupBy(F.col("dst").alias("node2"), "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
@@ -1573,7 +1549,7 @@ def q_g4_khop_bfs(spark: SparkSession, sf: str) -> DataFrame:
     for k in range(1, _BFS_HOPS + 1):
         reached = (
             edges.join(
-                _graph_small_side(
+                graph_small_side(
                     spark, frontier.select(F.col("node").alias("src")), bcast
                 ),
                 "src",
@@ -1587,7 +1563,7 @@ def q_g4_khop_bfs(spark: SparkSession, sf: str) -> DataFrame:
         # (size-gated to shuffle for billion-node graphs).
         new = materialize(
             reached.join(
-                _graph_small_side(spark, settled.select("node"), bcast),
+                graph_small_side(spark, settled.select("node"), bcast),
                 "node",
                 "left_anti",
             ).select("node", F.lit(k).cast("int").alias("hops")),
@@ -1633,52 +1609,27 @@ SELECT node AS part_id, CAST(dist AS INTEGER) AS hops FROM d{hops}
 O_G4_KHOP = _gen_khop_oracle()
 
 
-EXT_QUERIES = {
-    "a10_histogram": q_a10_histogram,
-    "a12_equidepth_histogram": q_a12_equidepth_histogram,
-    "a13_heavy_hitters": q_a13_heavy_hitters,
-    "d_substring_dedup": q_d_substring_dedup,
-    "j12_fuzzy_blocked_join": q_j12_fuzzy_blocked_join,
-    "j12b_deletion_join": q_j12b_deletion_join,
-    "s13_stream_stream_left_outer": q_s13_stream_stream_left_outer,
-    "g1b_pagerank_shuffle": q_g1b_pagerank_shuffle,
-    "g3b_label_prop_shuffle": q_g3b_label_prop_shuffle,
-    "j10_salted_join": q_j10_salted_join,
-    "d_keep_best": q_d_keep_best,
-    "t_unigram_lm": q_t_unigram_lm,
-    "a11_groupwise_linreg": q_a11_groupwise_linreg,
-    "g1_pagerank": q_g1_pagerank,
-    "g2_triangle_count": q_g2_triangle_count,
-    "w15_cumulative_distinct": q_w15_cumulative_distinct,
-    "t_bpe_train": q_t_bpe_train,
-    "j11_interval_overlap": q_j11_interval_overlap,
-    "s2c_variant_extract": q_s2c_variant_extract,
-    "t_bpe_encode": q_t_bpe_encode,
-    "g3_label_propagation": q_g3_label_propagation,
-    "g4_khop_bfs": q_g4_khop_bfs,
-}
-
-EXT_ORACLES = {
-    "a12_equidepth_histogram": O_A12_EQUIDEPTH,
-    "a13_heavy_hitters": O_A13_HEAVY_HITTERS,
-    "d_substring_dedup": O_D_SUBSTRING_DEDUP,
-    "j12_fuzzy_blocked_join": O_J12_FUZZY,
-    "j12b_deletion_join": O_J12B_DELETION,
-    "s13_stream_stream_left_outer": O_S13_LEFT_OUTER,
-    "g3_label_propagation": O_G3_LPA,
-    "g1b_pagerank_shuffle": O_G1_PAGERANK,
-    "g3b_label_prop_shuffle": O_G3_LPA,
-    "t_bpe_encode": O_T_BPE_ENCODE,
-    "s2c_variant_extract": O_S2C_VARIANT,
-    "j11_interval_overlap": O_J11_INTERVAL_OVERLAP,
-    "t_bpe_train": O_T_BPE_TRAIN,
-    "g2_triangle_count": O_G2_TRIANGLES,
-    "w15_cumulative_distinct": O_W15_CUM_DISTINCT,
-    "a10_histogram": O_A10_HISTOGRAM,
-    "j10_salted_join": O_J10_SALTED,
-    "d_keep_best": O_D_KEEP_BEST,
-    "t_unigram_lm": O_T_UNIGRAM_LM,
-    "a11_groupwise_linreg": O_A11_LINREG,
-    "g1_pagerank": O_G1_PAGERANK,
-    "g4_khop_bfs": O_G4_KHOP,
+REGISTRY = {
+    "a10_histogram": (q_a10_histogram, O_A10_HISTOGRAM),
+    "a12_equidepth_histogram": (q_a12_equidepth_histogram, O_A12_EQUIDEPTH),
+    "a13_heavy_hitters": (q_a13_heavy_hitters, O_A13_HEAVY_HITTERS),
+    "d_substring_dedup": (q_d_substring_dedup, O_D_SUBSTRING_DEDUP),
+    "j12_fuzzy_blocked_join": (q_j12_fuzzy_blocked_join, O_J12_FUZZY),
+    "j12b_deletion_join": (q_j12b_deletion_join, O_J12B_DELETION),
+    "s13_stream_stream_left_outer": (q_s13_stream_stream_left_outer, O_S13_LEFT_OUTER),
+    "g1b_pagerank_shuffle": (q_g1b_pagerank_shuffle, O_G1_PAGERANK),
+    "g3b_label_prop_shuffle": (q_g3b_label_prop_shuffle, O_G3_LPA),
+    "j10_salted_join": (q_j10_salted_join, O_J10_SALTED),
+    "d_keep_best": (q_d_keep_best, O_D_KEEP_BEST),
+    "t_unigram_lm": (q_t_unigram_lm, O_T_UNIGRAM_LM),
+    "a11_groupwise_linreg": (q_a11_groupwise_linreg, O_A11_LINREG),
+    "g1_pagerank": (q_g1_pagerank, O_G1_PAGERANK),
+    "g2_triangle_count": (q_g2_triangle_count, O_G2_TRIANGLES),
+    "w15_cumulative_distinct": (q_w15_cumulative_distinct, O_W15_CUM_DISTINCT),
+    "t_bpe_train": (q_t_bpe_train, O_T_BPE_TRAIN),
+    "j11_interval_overlap": (q_j11_interval_overlap, O_J11_INTERVAL_OVERLAP),
+    "s2c_variant_extract": (q_s2c_variant_extract, O_S2C_VARIANT),
+    "t_bpe_encode": (q_t_bpe_encode, O_T_BPE_ENCODE),
+    "g3_label_propagation": (q_g3_label_propagation, O_G3_LPA),
+    "g4_khop_bfs": (q_g4_khop_bfs, O_G4_KHOP),
 }

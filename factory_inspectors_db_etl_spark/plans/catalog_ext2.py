@@ -597,26 +597,14 @@ WHERE NOT d.is_train
 """
 
 
-EXT2_QUERIES = {
-    "t_bigram_lm": q_t_bigram_lm,
-    "d_setsim_prefix_join": q_d_setsim_prefix_join,
-    "d_containment": q_d_containment,
-    "w17_gap_fill": q_w17_gap_fill,
-    "j13_bloom_filtered_join": q_j13_bloom_filtered_join,
-    "j14_scd2_lookup": q_j14_scd2_lookup,
-    "a14_mad_outliers": q_a14_mad_outliers,
-    "w18_ewma": q_w18_ewma,
-    "s14_stream_stream_full_outer": q_s14_stream_stream_full_outer,
-}
-
-EXT2_ORACLES = {
-    "t_bigram_lm": O_T_BIGRAM_LM,
-    "s14_stream_stream_full_outer": O_S14_FULL_OUTER,
-    "d_setsim_prefix_join": O_D_SETSIM_PREFIX,
-    "d_containment": O_D_CONTAINMENT,
-    "w17_gap_fill": O_W17_GAP_FILL,
-    "j13_bloom_filtered_join": O_J13_BLOOM,
-    "j14_scd2_lookup": O_J14_SCD2_LOOKUP,
-    "a14_mad_outliers": O_A14_MAD,
-    "w18_ewma": O_W18_EWMA,
+REGISTRY = {
+    "t_bigram_lm": (q_t_bigram_lm, O_T_BIGRAM_LM),
+    "d_setsim_prefix_join": (q_d_setsim_prefix_join, O_D_SETSIM_PREFIX),
+    "d_containment": (q_d_containment, O_D_CONTAINMENT),
+    "w17_gap_fill": (q_w17_gap_fill, O_W17_GAP_FILL),
+    "j13_bloom_filtered_join": (q_j13_bloom_filtered_join, O_J13_BLOOM),
+    "j14_scd2_lookup": (q_j14_scd2_lookup, O_J14_SCD2_LOOKUP),
+    "a14_mad_outliers": (q_a14_mad_outliers, O_A14_MAD),
+    "w18_ewma": (q_w18_ewma, O_W18_EWMA),
+    "s14_stream_stream_full_outer": (q_s14_stream_stream_full_outer, O_S14_FULL_OUTER),
 }

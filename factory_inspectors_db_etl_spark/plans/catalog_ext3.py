@@ -578,27 +578,6 @@ FROM ev JOIN cells c ON c.event_type = ev.event_type AND c.hod = ev.hod
 """
 
 
-EXT3_QUERIES = {
-    "j15_nearest_event_join": q_j15_nearest_event_join,
-    "a15_countmin": q_a15_countmin,
-    "w19_rolling_median": q_w19_rolling_median,
-    "p_fk_audit": q_p_fk_audit,
-    "j17_snapshot_diff": q_j17_snapshot_diff,
-    "p_weighted_sample": q_p_weighted_sample,
-    "a16_seasonal_baseline": q_a16_seasonal_baseline,
-}
-
-EXT3_ORACLES = {
-    "j15_nearest_event_join": O_J15_NEAREST,
-    "a15_countmin": O_A15_CMS,
-    "w19_rolling_median": O_W19_ROLLING_MEDIAN,
-    "p_fk_audit": O_P_FK_AUDIT,
-    "j17_snapshot_diff": O_J17_SNAPSHOT_DIFF,
-    "p_weighted_sample": O_P_WEIGHTED_SAMPLE,
-    "a16_seasonal_baseline": O_A16_SEASONAL,
-}
-
-
 # ---------------------------------------------------------------------------
 # W20: time-weighted average (TWAP) per user-day
 # ---------------------------------------------------------------------------
@@ -924,29 +903,6 @@ SELECT o_custkey FROM orders WHERE year(o_orderdate) <= 1995
 INTERSECT ALL
 SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
 """
-
-
-EXT3_QUERIES.update(
-    {
-        "w20_twap": q_w20_twap,
-        "w21_funnel_window": q_w21_funnel_window,
-        "a17_mode": q_a17_mode,
-        "p_impute": q_p_impute,
-        "e2b_except_all": q_e2b_except_all,
-        "e3b_intersect_all": q_e3b_intersect_all,
-    }
-)
-
-EXT3_ORACLES.update(
-    {
-        "w20_twap": O_W20_TWAP,
-        "w21_funnel_window": O_W21_FUNNEL_WINDOW,
-        "a17_mode": O_A17_MODE,
-        "p_impute": O_P_IMPUTE,
-        "e2b_except_all": O_E2B_EXCEPT_ALL,
-        "e3b_intersect_all": O_E3B_INTERSECT_ALL,
-    }
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1653,34 +1609,29 @@ FROM c GROUP BY 1
 """
 
 
-EXT3_QUERIES.update(
-    {
-        "a18_gini": q_a18_gini,
-        "w22_transition_matrix": q_w22_transition_matrix,
-        "o7_diversified_topk": q_o7_diversified_topk,
-        "h1_hierarchy_rollup": q_h1_hierarchy_rollup,
-        "w25_streaks": q_w25_streaks,
-        "p_benford": q_p_benford,
-        "p_kanon": q_p_kanon,
-        "w26_period_over_period": q_w26_period_over_period,
-        "w27_dau_wau": q_w27_dau_wau,
-        "w27b_wau_sketch": q_w27b_wau_sketch,
-        "a21_weighted_median": q_a21_weighted_median,
-    }
-)
-
-EXT3_ORACLES.update(
-    {
-        "a18_gini": O_A18_GINI,
-        "w22_transition_matrix": O_W22_TRANSITIONS,
-        "o7_diversified_topk": O_O7_DIVERSIFIED_TOPK,
-        "h1_hierarchy_rollup": O_H1_HIERARCHY,
-        "w25_streaks": O_W25_STREAKS,
-        "p_benford": O_P_BENFORD,
-        "p_kanon": O_P_KANON,
-        "w26_period_over_period": O_W26_POP,
-        "w27_dau_wau": O_W27_DAU_WAU,
-        "w27b_wau_sketch": O_W27B_WAU_SKETCH,
-        "a21_weighted_median": O_A21_WEIGHTED_MEDIAN,
-    }
-)
+REGISTRY = {
+    "j15_nearest_event_join": (q_j15_nearest_event_join, O_J15_NEAREST),
+    "a15_countmin": (q_a15_countmin, O_A15_CMS),
+    "w19_rolling_median": (q_w19_rolling_median, O_W19_ROLLING_MEDIAN),
+    "p_fk_audit": (q_p_fk_audit, O_P_FK_AUDIT),
+    "j17_snapshot_diff": (q_j17_snapshot_diff, O_J17_SNAPSHOT_DIFF),
+    "p_weighted_sample": (q_p_weighted_sample, O_P_WEIGHTED_SAMPLE),
+    "a16_seasonal_baseline": (q_a16_seasonal_baseline, O_A16_SEASONAL),
+    "w20_twap": (q_w20_twap, O_W20_TWAP),
+    "w21_funnel_window": (q_w21_funnel_window, O_W21_FUNNEL_WINDOW),
+    "a17_mode": (q_a17_mode, O_A17_MODE),
+    "p_impute": (q_p_impute, O_P_IMPUTE),
+    "e2b_except_all": (q_e2b_except_all, O_E2B_EXCEPT_ALL),
+    "e3b_intersect_all": (q_e3b_intersect_all, O_E3B_INTERSECT_ALL),
+    "a18_gini": (q_a18_gini, O_A18_GINI),
+    "w22_transition_matrix": (q_w22_transition_matrix, O_W22_TRANSITIONS),
+    "o7_diversified_topk": (q_o7_diversified_topk, O_O7_DIVERSIFIED_TOPK),
+    "h1_hierarchy_rollup": (q_h1_hierarchy_rollup, O_H1_HIERARCHY),
+    "w25_streaks": (q_w25_streaks, O_W25_STREAKS),
+    "p_benford": (q_p_benford, O_P_BENFORD),
+    "p_kanon": (q_p_kanon, O_P_KANON),
+    "w26_period_over_period": (q_w26_period_over_period, O_W26_POP),
+    "w27_dau_wau": (q_w27_dau_wau, O_W27_DAU_WAU),
+    "w27b_wau_sketch": (q_w27b_wau_sketch, O_W27B_WAU_SKETCH),
+    "a21_weighted_median": (q_a21_weighted_median, O_A21_WEIGHTED_MEDIAN),
+}

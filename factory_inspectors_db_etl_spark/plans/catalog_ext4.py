@@ -1689,60 +1689,31 @@ HAVING count(DISTINCT o_orderpriority) = kk
 """
 
 
-EXT4_QUERIES = {
-    "j16_tfidf_cosine_join": q_j16_tfidf_cosine_join,
-    "g5_wcc": q_g5_wcc,
-    "m_png_decode": q_m_png_decode,
-    "a22_hhi_concentration": q_a22_hhi_concentration,
-    "w28_rfm_segmentation": q_w28_rfm_segmentation,
-    "j18_interval_align": q_j18_interval_align,
-    "t_ngram_novelty": q_t_ngram_novelty,
-    "p_reservoir_sample": q_p_reservoir_sample,
-    "o8_skyline_2d": q_o8_skyline_2d,
-    "j19_fifo_allocation": q_j19_fifo_allocation,
-    "j21_grid_spatial_join": q_j21_grid_spatial_join,
-    "m_wav_energy": q_m_wav_energy,
-    "t_vocab_growth": q_t_vocab_growth,
-    "w29_last_touch_attribution": q_w29_last_touch_attribution,
-    "g6_clustering_coeff": q_g6_clustering_coeff,
-    "p_temporal_split": q_p_temporal_split,
-    "j23_incremental_join_view": q_j23_incremental_join_view,
-    "a24_percentile_rank": q_a24_percentile_rank,
-    "p_balanced_downsample": q_p_balanced_downsample,
-    "m_mp4_meta": q_m_mp4_meta,
-    "p_winsorize": q_p_winsorize,
-    "w30_path_analysis": q_w30_path_analysis,
-    "w31_interval_coalesce": q_w31_interval_coalesce,
-    "s15_stream_stream_semi": q_s15_stream_stream_semi,
-    "p_chi2_independence": q_p_chi2_independence,
-    "e4_relational_division": q_e4_relational_division,
-}
-
-EXT4_ORACLES = {
-    "j16_tfidf_cosine_join": O_J16,
-    "g5_wcc": O_G5_WCC,
-    "m_png_decode": O_M_PNG,
-    "a22_hhi_concentration": O_A22_HHI,
-    "w28_rfm_segmentation": O_W28_RFM,
-    "j18_interval_align": O_J18_ALIGN,
-    "t_ngram_novelty": O_T_NOVELTY,
-    "p_reservoir_sample": O_P_RESERVOIR,
-    "o8_skyline_2d": O_O8_SKYLINE,
-    "j19_fifo_allocation": O_J19_FIFO,
-    "j21_grid_spatial_join": O_J21_SPATIAL,
-    "m_wav_energy": O_M_WAV,
-    "t_vocab_growth": O_T_VOCAB_GROWTH,
-    "w29_last_touch_attribution": O_W29_ATTRIBUTION,
-    "g6_clustering_coeff": O_G6_CLUSTERING,
-    "p_temporal_split": O_P_TEMPORAL_SPLIT,
-    "j23_incremental_join_view": O_J23_INC_VIEW,
-    "a24_percentile_rank": O_A24_PCT_RANK,
-    "p_balanced_downsample": O_P_BALANCED,
-    "m_mp4_meta": O_M_MP4,
-    "p_winsorize": O_P_WINSORIZE,
-    "w30_path_analysis": O_W30_PATHS,
-    "w31_interval_coalesce": O_W31_COALESCE,
-    "s15_stream_stream_semi": O_S15_SEMI,
-    "p_chi2_independence": O_P_CHI2,
-    "e4_relational_division": O_E4_DIVISION,
+REGISTRY = {
+    "j16_tfidf_cosine_join": (q_j16_tfidf_cosine_join, O_J16),
+    "g5_wcc": (q_g5_wcc, O_G5_WCC),
+    "m_png_decode": (q_m_png_decode, O_M_PNG),
+    "a22_hhi_concentration": (q_a22_hhi_concentration, O_A22_HHI),
+    "w28_rfm_segmentation": (q_w28_rfm_segmentation, O_W28_RFM),
+    "j18_interval_align": (q_j18_interval_align, O_J18_ALIGN),
+    "t_ngram_novelty": (q_t_ngram_novelty, O_T_NOVELTY),
+    "p_reservoir_sample": (q_p_reservoir_sample, O_P_RESERVOIR),
+    "o8_skyline_2d": (q_o8_skyline_2d, O_O8_SKYLINE),
+    "j19_fifo_allocation": (q_j19_fifo_allocation, O_J19_FIFO),
+    "j21_grid_spatial_join": (q_j21_grid_spatial_join, O_J21_SPATIAL),
+    "m_wav_energy": (q_m_wav_energy, O_M_WAV),
+    "t_vocab_growth": (q_t_vocab_growth, O_T_VOCAB_GROWTH),
+    "w29_last_touch_attribution": (q_w29_last_touch_attribution, O_W29_ATTRIBUTION),
+    "g6_clustering_coeff": (q_g6_clustering_coeff, O_G6_CLUSTERING),
+    "p_temporal_split": (q_p_temporal_split, O_P_TEMPORAL_SPLIT),
+    "j23_incremental_join_view": (q_j23_incremental_join_view, O_J23_INC_VIEW),
+    "a24_percentile_rank": (q_a24_percentile_rank, O_A24_PCT_RANK),
+    "p_balanced_downsample": (q_p_balanced_downsample, O_P_BALANCED),
+    "m_mp4_meta": (q_m_mp4_meta, O_M_MP4),
+    "p_winsorize": (q_p_winsorize, O_P_WINSORIZE),
+    "w30_path_analysis": (q_w30_path_analysis, O_W30_PATHS),
+    "w31_interval_coalesce": (q_w31_interval_coalesce, O_W31_COALESCE),
+    "s15_stream_stream_semi": (q_s15_stream_stream_semi, O_S15_SEMI),
+    "p_chi2_independence": (q_p_chi2_independence, O_P_CHI2),
+    "e4_relational_division": (q_e4_relational_division, O_E4_DIVISION),
 }

@@ -727,24 +727,14 @@ WHERE u.rn = 1
 """
 
 
-EXT5_QUERIES = {
-    "m_jpeg_decode": q_m_jpeg_decode,
-    "w32_interval_concurrency": q_w32_interval_concurrency,
-    "t_collocation_lift": q_t_collocation_lift,
-    "m_gif_decode": q_m_gif_decode,
-    "w33_position_attribution": q_w33_position_attribution,
-    "p_ldiversity": q_p_ldiversity,
-    "d_semantic_dedup_auto": q_d_semantic_dedup_auto,
-    "a25_quantile_sketch_rollup": q_a25_quantile_sketch_rollup,
-}
-
-EXT5_ORACLES = {
-    "m_jpeg_decode": O_M_JPEG,
-    "w32_interval_concurrency": O_W32_CONCURRENCY,
-    "t_collocation_lift": O_T_COLLOCATION,
-    "m_gif_decode": O_M_GIF,
-    "w33_position_attribution": O_W33_ATTRIBUTION,
-    "p_ldiversity": O_P_LDIVERSITY,
-    "d_semantic_dedup_auto": O_D_SEMANTIC_DEDUP_AUTO,
-    "a25_quantile_sketch_rollup": O_A25_QUANTILE_ROLLUP,
+# d_semantic_dedup_auto is not registered: plans.catalog lists it in
+# PYTEST_ONLY_QUERIES as a quadratic baseline.
+REGISTRY = {
+    "m_jpeg_decode": (q_m_jpeg_decode, O_M_JPEG),
+    "w32_interval_concurrency": (q_w32_interval_concurrency, O_W32_CONCURRENCY),
+    "t_collocation_lift": (q_t_collocation_lift, O_T_COLLOCATION),
+    "m_gif_decode": (q_m_gif_decode, O_M_GIF),
+    "w33_position_attribution": (q_w33_position_attribution, O_W33_ATTRIBUTION),
+    "p_ldiversity": (q_p_ldiversity, O_P_LDIVERSITY),
+    "a25_quantile_sketch_rollup": (q_a25_quantile_sketch_rollup, O_A25_QUANTILE_ROLLUP),
 }

@@ -21,10 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.graph_broadcast import resolve_graph_broadcast
+from ..operators.graph_broadcast import graph_small_side, resolve_graph_broadcast
 from ..operators.materialize import materialize
 from ..sources.tables import load_table
-from .catalog_ext import _graph_small_side
 
 # ---------------------------------------------------------------------------
 # W34: life-table survival curve (Kaplan-Meier, administrative censoring)
@@ -479,8 +478,8 @@ def q_g7_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     # checkpoint-count bounds both attach joins (VERDICT r11 item #8)
     bcast = resolve_graph_broadcast(spark, None, deg.count)
     sxy_row = (
-        edges.join(_graph_small_side(spark, du, bcast), "u")
-        .join(_graph_small_side(spark, dv, bcast), "v")
+        edges.join(graph_small_side(spark, du, bcast), "u")
+        .join(graph_small_side(spark, dv, bcast), "v")
         .agg((F.lit(2) * F.sum(F.col("deg_u") * F.col("deg_v"))).alias("sxy"))
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
@@ -701,11 +700,12 @@ def q_g8_kcore(spark: SparkSession, sf: str) -> DataFrame:
     )
     cur = edges
     # r12: the |V|-bounded alive set rides the size-gated graph
-    # broadcast (the g1 pattern; |V| <= 2|E| on this oriented edge list,
-    # one cheap count of the materialized edges) — pins what the
-    # docstring previously left to AQE, so a round's only edge-scale
-    # exchange is the map-side-combined degree aggregation
-    bcast = resolve_graph_broadcast(spark, None, edges.count)
+    # broadcast (the g1 pattern) — pins what the docstring previously
+    # left to AQE, so a round's only edge-scale exchange is the
+    # map-side-combined degree aggregation.  On this oriented edge list
+    # |V| can reach 2|E| (a matching), so the gate's bound is twice one
+    # cheap count of the materialized edges
+    bcast = resolve_graph_broadcast(spark, None, lambda: 2 * edges.count())
     for _ in range(_KCORE_ROUNDS):
         deg = (
             cur.select(F.col("u").alias("node"))
@@ -722,10 +722,10 @@ def q_g8_kcore(spark: SparkSession, sf: str) -> DataFrame:
         # exactly the g5_wcc iteration discipline.
         cur = materialize(
             cur.join(
-                _graph_small_side(spark, alive.withColumnRenamed("node", "u"), bcast), "u"
+                graph_small_side(spark, alive.withColumnRenamed("node", "u"), bcast), "u"
             )
             .join(
-                _graph_small_side(spark, alive.withColumnRenamed("node", "v"), bcast), "v"
+                graph_small_side(spark, alive.withColumnRenamed("node", "v"), bcast), "v"
             )
             .select("u", "v")
         )
@@ -782,20 +782,11 @@ GROUP BY node
 O_G8_KCORE = _gen_kcore_oracle()
 
 
-EXT6_QUERIES = {
-    "w34_survival_curve": q_w34_survival_curve,
-    "p_ks_drift": q_p_ks_drift,
-    "t_zipf_fit": q_t_zipf_fit,
-    "g7_degree_assortativity": q_g7_degree_assortativity,
-    "d_semantic_dedup_lshassign": q_d_semantic_dedup_lshassign,
-    "g8_kcore": q_g8_kcore,
-}
-
-EXT6_ORACLES = {
-    "w34_survival_curve": O_W34_SURVIVAL,
-    "p_ks_drift": O_P_KS_DRIFT,
-    "t_zipf_fit": O_T_ZIPF,
-    "g7_degree_assortativity": O_G7_ASSORTATIVITY,
-    "d_semantic_dedup_lshassign": O_D_SEMANTIC_DEDUP_LSHASSIGN,
-    "g8_kcore": O_G8_KCORE,
+REGISTRY = {
+    "w34_survival_curve": (q_w34_survival_curve, O_W34_SURVIVAL),
+    "p_ks_drift": (q_p_ks_drift, O_P_KS_DRIFT),
+    "t_zipf_fit": (q_t_zipf_fit, O_T_ZIPF),
+    "g7_degree_assortativity": (q_g7_degree_assortativity, O_G7_ASSORTATIVITY),
+    "d_semantic_dedup_lshassign": (q_d_semantic_dedup_lshassign, O_D_SEMANTIC_DEDUP_LSHASSIGN),
+    "g8_kcore": (q_g8_kcore, O_G8_KCORE),
 }

@@ -24,10 +24,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash60
-from ..operators.graph_broadcast import resolve_graph_broadcast
+from ..operators.graph_broadcast import graph_small_side, resolve_graph_broadcast
 from ..operators.materialize import materialize
 from ..sources.tables import load_table
-from .catalog_ext import _graph_small_side
 
 _LN_SCALE = 100_000  # fixed-point scale for ln() snapping (t_zipf discipline)
 
@@ -624,7 +623,7 @@ def q_g9_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     aa_w = F.round(F.lit(1_000_000.0) / F.log(F.col("deg").cast("double"))).cast(
         "long"
     )
-    # r11: the |V|-row filtered-degree table rides _graph_small_side
+    # r11: the |V|-row filtered-degree table rides graph_small_side
     # (broadcast by default, conf-switchable to a shuffle join via
     # spark.graft.graph.broadcast) — the pre-r11 plan SMJ-joined adj
     # against mid and, because adj_mid feeds both wedge sides, ran that
@@ -635,13 +634,11 @@ def q_g9_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     # collect_list-and-explode wedge form (one adj shuffle) was measured
     # SLOWER at sf0.1 — ObjectHashAggregate + Generate leave whole-stage
     # codegen (isolated 3.2s -> 5.2s), so the codegen self-join stays.
-    # r12 size gate: |V| <= 2|E| over the symmetric adjacency and mid is
-    # the deg-filtered subset, so the materialized edge count is a cheap
-    # conservative bound (VERDICT r11 item #8)
-    adj_mid = adj.join(
-        _graph_small_side(spark, mid, resolve_graph_broadcast(spark, None, edges.count)),
-        "w",
-    ).select(
+    # r12 size gate: mid is a deg-filtered subset of V, and |V| can reach
+    # 2|E| on this oriented edge list, so twice the materialized edge
+    # count bounds it (VERDICT r11 item #8)
+    bcast = resolve_graph_broadcast(spark, None, lambda: 2 * edges.count())
+    adj_mid = adj.join(graph_small_side(spark, mid, bcast), "w").select(
         "w", "x", aa_w.alias("aa")
     )
     p1 = adj_mid.select("w", F.col("x").alias("u"), "aa")
@@ -705,20 +702,11 @@ LIMIT {_G9_TOP}
 """
 
 
-EXT7_QUERIES = {
-    "w35_changepoint": q_w35_changepoint,
-    "j24_interp_join": q_j24_interp_join,
-    "a26_entropy": q_a26_entropy,
-    "a27_bottomk_distinct": q_a27_bottomk_distinct,
-    "t_readability": q_t_readability,
-    "g9_link_prediction": q_g9_link_prediction,
-}
-
-EXT7_ORACLES = {
-    "w35_changepoint": O_W35_CHANGEPOINT,
-    "j24_interp_join": O_J24_INTERP,
-    "a26_entropy": O_A26_ENTROPY,
-    "a27_bottomk_distinct": O_A27_BOTTOMK,
-    "t_readability": O_T_READABILITY,
-    "g9_link_prediction": O_G9_LINK_PREDICTION,
+REGISTRY = {
+    "w35_changepoint": (q_w35_changepoint, O_W35_CHANGEPOINT),
+    "j24_interp_join": (q_j24_interp_join, O_J24_INTERP),
+    "a26_entropy": (q_a26_entropy, O_A26_ENTROPY),
+    "a27_bottomk_distinct": (q_a27_bottomk_distinct, O_A27_BOTTOMK),
+    "t_readability": (q_t_readability, O_T_READABILITY),
+    "g9_link_prediction": (q_g9_link_prediction, O_G9_LINK_PREDICTION),
 }

@@ -1,11 +1,6 @@
-"""Catalog extension built in round 9 (staged then), promoted in round
-10: g10_neighbor_jaccard, t_mattr, t_rake_keyphrases, t_lm_perplexity
-lead the r10 driver window; m_bmp_decode stays in
-``plans.catalog.STAGED_QUERIES`` until r12's spare slots (the local
-DuckDB-oracle gate, tests/test_catalog_vs_duckdb.py, verifies it every
-round meanwhile).  g10's common-neighbor count was rewritten
-degree-ordered before promotion (VERDICT r9 item #2 — see its
-docstring).
+"""Catalog extension: g10_neighbor_jaccard, t_mattr, t_rake_keyphrases,
+t_lm_perplexity and m_bmp_decode.  g10's common-neighbor count is
+degree-ordered (VERDICT r9 item #2 — see its docstring).
 
 Same determinism discipline as plans.catalog (exact integers, one
 trailing IEEE division, ln snapped to fixed point, NULLIF on every
@@ -693,18 +688,10 @@ WHERE NOT d.is_train
 """
 
 
-EXT8_QUERIES = {
-    "m_bmp_decode": q_m_bmp_decode,
-    "t_lm_perplexity": q_t_lm_perplexity,
-    "g10_neighbor_jaccard": q_g10_neighbor_jaccard,
-    "t_mattr": q_t_mattr,
-    "t_rake_keyphrases": q_t_rake_keyphrases,
-}
-
-EXT8_ORACLES = {
-    "m_bmp_decode": O_M_BMP,
-    "t_lm_perplexity": O_T_LM_PERPLEXITY,
-    "g10_neighbor_jaccard": O_G10_NEIGHBOR_JACCARD,
-    "t_mattr": O_T_MATTR,
-    "t_rake_keyphrases": O_T_RAKE,
+REGISTRY = {
+    "m_bmp_decode": (q_m_bmp_decode, O_M_BMP),
+    "t_lm_perplexity": (q_t_lm_perplexity, O_T_LM_PERPLEXITY),
+    "g10_neighbor_jaccard": (q_g10_neighbor_jaccard, O_G10_NEIGHBOR_JACCARD),
+    "t_mattr": (q_t_mattr, O_T_MATTR),
+    "t_rake_keyphrases": (q_t_rake_keyphrases, O_T_RAKE),
 }

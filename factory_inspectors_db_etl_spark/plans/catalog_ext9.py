@@ -1,11 +1,5 @@
-"""Catalog extension built in round 11, STAGED for the round-12 driver
-window (r11's window is the full 50-row r7 cohort — zero spare slots;
-r12 has exactly three: 47 r8-cohort rows + m_bmp_decode + these two =
-50).  Until promotion the local DuckDB-oracle gate
-(tests/test_catalog_vs_duckdb.py) value-verifies both every round.
-
-Two operators a large-scale training-data pipeline needs and no
-registered query covers:
+"""Catalog extension: two operators a large-scale training-data
+pipeline needs and no other registered query covers:
 
 * ``p_cluster_safe_split`` — LEAKAGE-SAFE train/val split: near-dup
   CLUSTERS move between splits as a unit, so a validation document can
@@ -214,12 +208,7 @@ LEFT JOIN comp c ON c.node = r.nid
 """
 
 
-EXT9_QUERIES = {
-    "p_cluster_safe_split": q_p_cluster_safe_split,
-    "er_entity_clusters": q_er_entity_clusters,
-}
-
-EXT9_ORACLES = {
-    "p_cluster_safe_split": O_P_CLUSTER_SAFE_SPLIT,
-    "er_entity_clusters": O_ER_ENTITY_CLUSTERS,
+REGISTRY = {
+    "p_cluster_safe_split": (q_p_cluster_safe_split, O_P_CLUSTER_SAFE_SPLIT),
+    "er_entity_clusters": (q_er_entity_clusters, O_ER_ENTITY_CLUSTERS),
 }

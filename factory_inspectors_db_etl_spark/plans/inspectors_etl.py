@@ -123,7 +123,11 @@ def parsed_assignment_rows(
     With ``return_rejects=True`` also returns the quarantine DataFrame
     (P6): rows/assignments the reference warn-and-drops
     (populate_db_ru_v1.py:718-719,748-749) routed to a sink with a reason
-    column instead of vanishing into logs."""
+    column instead of vanishing into logs.
+
+    Eager: the call runs the reader (the HTML-tokenizer UDTF) as a Spark
+    job through its ``localCheckpoint`` barrier before returning, with
+    or without ``return_rejects``."""
     # ``cell0_std`` computed once in its own projection (codegen size; see
     # _role_columns docstring).
     # Checkpoint the reader output: the HTML-tokenizer UDTF (U2) is the

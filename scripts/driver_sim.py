@@ -3,6 +3,7 @@ bare SparkSession (no helpful configs), runs entry() + every query at the
 given sf dir, and order-insensitively compares against the DuckDB oracles.
 
 Usage: python scripts/driver_sim.py [sf_dir] [--hostile] [--only=q1,q2]
+  Runs on local[$SPARK_GRAFT_CPUS] (default: all cores).
   --hostile: non-UTC session timezone + Arrow off + 200 shuffle partitions
              (worst-case driver config).
   --only:    comma-separated query names — run just those (targeted
@@ -15,12 +16,14 @@ import hashlib
 import importlib.util
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
 SF = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/root/testdata/sf0.01"
 HOSTILE = "--hostile" in sys.argv
 ONLY = None
@@ -34,7 +37,11 @@ spec.loader.exec_module(mod)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-b = SparkSession.builder.master("local[8]").appName("driver-sim")
+# Python workers import query UDFs by module path, so they need the repo
+# on their path wherever the sim is launched from.
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+
+b = SparkSession.builder.master(f"local[{CPUS}]").appName("driver-sim")
 if HOSTILE:
     b = (
         b.config("spark.sql.session.timeZone", "America/New_York")
@@ -75,7 +82,7 @@ PORTABLE_ORACLE_TYPES = {
 def oracle_rows_via_pandas(ores):
     """Fetch oracle results the way the REAL driver does — through pandas
     (`.df()`), not `fetchall()` — so dtype artifacts (HUGEINT -> float64,
-    DECIMAL -> object) surface here instead of only in CORRECTNESS_r{N}.
+    DECIMAL -> object) surface here instead of only in the driver's run.
 
     One deliberate reconciliation: an INT-family column containing NULLs
     is upcast by pandas to float64 ("2.0"); the real driver's r2 results

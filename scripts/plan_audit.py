@@ -25,10 +25,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from factory_inspectors_db_etl_spark.plans.catalog import (  # noqa: E402
-    QUERIES,
-    STAGED_QUERIES,
-)
+from factory_inspectors_db_etl_spark.plans.catalog import QUERIES  # noqa: E402
 from factory_inspectors_db_etl_spark.session import get_spark  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -90,9 +87,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     flags = []
-    # staged rows are audited too — plan hygiene is part of the r12
-    # promotion bar, not something to discover after a driver slot opens
-    for name, fn in {**QUERIES, **STAGED_QUERIES}.items():
+    for name, fn in QUERIES.items():
         try:
             a = audit_one(fn(spark, SF))
         except Exception as e:  # noqa: BLE001

@@ -96,12 +96,10 @@ def _run_one(name: str, sf_dir: str) -> None:
         from factory_inspectors_db_etl_spark.plans.catalog import (
             PYTEST_ONLY_QUERIES,
             QUERIES,
-            STAGED_QUERIES,
         )
 
-        # demoted quadratic baselines and staged-for-next-window queries
-        # stay sweepable even though they are off the driver registry
-        lookup = {**QUERIES, **PYTEST_ONLY_QUERIES, **STAGED_QUERIES}
+        # the pytest-only quadratic baselines stay sweepable
+        lookup = {**QUERIES, **PYTEST_ONLY_QUERIES}
 
         def run(d):
             lookup[name](spark, d).write.mode("overwrite").format("noop").save()
