@@ -1,19 +1,26 @@
 """End-to-end inspectors ETL (SURVEY.md §3 EP1/EP2), Spark-first.
 
-The reference's sequential per-file loop with mutable state becomes a pure
-DAG: reader UDTF (U2) -> columnar classification/fills (P2-P6, W1-W4, F1-F9)
--> personnel-parser UDF + explode (U1/F4) -> as-of window (J6) -> dim builds
-(J2) -> broadcast FK joins (J1/J3) -> fact assembly (W6).
+The reference's engine is a sequential per-file loop with mutable state
+(populate_db_ru_v1.py:520-681).  Here that loop runs as ONE Arrow pass
+per document: a ``mapInPandas`` over whole-file ``(path, content)`` rows
+parses the table (U2), carries the loop state in Python and emits
+assignment-grain rows plus the location rejects, which one
+``localCheckpoint`` barrier materializes.  After the barrier the plan is
+columnar: dim builds (J2) each materialized once, broadcast FK joins
+(J1/J3), fact assembly (W6).
 
-State-to-window mapping (all per-file, ordered by the reader's row_idx):
-  current_okrug / current_gubernia     -> forward-fill of header markers (W4)
-  last_location_city_std               -> forward-fill of non-ditto cities (W1)
-  last_assigned_personnel_for_ditto    -> forward-fill of last qualifying
-                                          assignment struct, reset per header
-                                          epoch (W2)
-  current_senior_inspector_id          -> as-of fill over (file,okrug,gub) (J6)
-  rowspan counters                     -> handled inside the reader (W3)
-  dim caches                           -> build_dim + broadcast joins (J2/J1)
+Per-document state (reset per file, bounded by rows-per-document):
+  current okrug / gubernia                -> set by header markers and 1901
+                                             area rows (W4)
+  last location city                      -> resolves the city ditto (W1)
+  last qualifying assignment              -> resolves the personnel ditto;
+                                             every header marker clears it (W2)
+  senior inspector per (okrug, gubernia)  -> carried to senior-marker
+                                             segments (J6), else the
+                                             "ID не найден" note suffix
+  assignment counter                      -> per-file fact ordinal (W6)
+  rowspan counters                        -> inside the reader (W3)
+  dim caches                              -> build_dim + broadcast joins (J2/J1)
 
 Documented divergences from the reference (SURVEY.md §7):
   * surrogate ids are ordered by natural key (dims) / by (file, row_idx,
@@ -26,356 +33,290 @@ Documented divergences from the reference (SURVEY.md §7):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window as W
+import re
+from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
+
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dictionaries import KNOWN_EDUCATIONS, KNOWN_PROFESSIONS, KNOWN_RANKS, ROLE_MAP_STD
-from ..functions.personnel_parser import parse_personnel_udf
-from ..functions.text import canonicalize_person_name, clean_number, standardize_text
+from ..functions.personnel_parser import SENIOR_ROLE, parse_personnel
+from ..functions.text import canonicalize_person_name_py, clean_number, standardize_text_py
 from ..operators.dims import build_dim, mint_surrogate_ids
-from ..operators.fill import forward_fill_expr
-from ..sources.html_table import read_roster_rows
+
+# ``read_roster_rows`` is not used by the fused pass (it reads whole files)
+# but stays importable here: benchmark tooling wraps it by this name
+from ..sources.html_table import (  # noqa: F401
+    _emit_file_rows,
+    read_roster_files,
+    read_roster_rows,
+    roster_file_year,
+)
 
 UNKNOWN = "Неизвестно"
 
-# observe()-collected telemetry from the most recent build_warehouse run
-# (parsed_rows, rows_without_inspector, rows_without_city,
+# observe()-collected telemetry from the most recent parsed_assignment_rows
+# barrier (parsed_rows, rows_without_inspector, rows_without_city,
 # rows_with_start_date) — populated by the barrier's own job, no extra pass
 LAST_BUILD_METRICS: dict[str, int] = {}
 
 # profession keys that are also education keys are rejected from Professions
 # and rerouted to Educations (J5, populate_db_ru_v1.py:215-218,761-762)
-_PROF_EDU_OVERLAP = sorted(set(KNOWN_PROFESSIONS) & set(KNOWN_EDUCATIONS))
+_PROF_EDU_OVERLAP = frozenset(KNOWN_PROFESSIONS) & frozenset(KNOWN_EDUCATIONS)
+
+_SENIOR_POSITION = "Старший инспектор"
+_SENIOR_NOT_FOUND = "; Обслуж. ст.инсп.(ID не найден)"
+_VSYA = "вся губернія составляетъ одинъ участокъ"
+_NOT_SPECIFIED = "(должность не указана)"
+_UCH_NUM_RE = re.compile(r"[0-9]+")
 
 
-def _role_columns(df: DataFrame) -> DataFrame:
-    """F9 role classification (populate_db_ru_v1.py:683-698).
+def _classify_role(desc_raw: str | None) -> tuple[str, str | None, str | None]:
+    """F9 role classification (populate_db_ru_v1.py:683-698): returns
+    (position_role, uchastok_identifier, uchastok_description).
 
-    ``desc_std`` is materialized once (its own projection) rather than
-    inlined per ``when`` branch — inlining the F1 chain 7x blows the
-    whole-stage-codegen method-size limit and forces interpreted fallback.
-    """
-    df = df.withColumn("desc_std", standardize_text(F.col("desc_raw")))
-    desc_std = F.col("desc_std")
-    role_exact: Column = F.lit(None).cast("string")
-    for key, val in ROLE_MAP_STD.items():
-        role_exact = F.when(desc_std == key, F.lit(val)).otherwise(role_exact)
-    has_desc = F.trim(F.col("desc_raw")) != ""
-    uch_num = F.regexp_extract(
-        F.col("desc_raw"), r"^(\d+)\s*(?:-?й|-?ый|-? участокъ|-? участокь|-? уч\.)?", 1
-    )
-    desc_lower = F.lower(F.col("desc_raw"))
-    has_vsya = desc_lower.contains("вся губернія составляетъ одинъ участокъ")
-    not_specified = (
-        has_desc & (uch_num == "") & ~has_vsya & desc_lower.contains("(должность не указана)")
-    )
-    role = (
-        F.when(role_exact.isNotNull(), role_exact)
-        .when(not_specified, F.lit("Должность не указана"))
-        .when(has_desc, F.lit("Инспектор участка"))
-        .otherwise(F.lit("Не определена"))
-    )
-    uch_id = (
-        F.when(role_exact.isNotNull(), F.lit(None).cast("string"))
-        .when(uch_num != "", uch_num)
-        .when(has_vsya, F.lit("Вся губернія"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    uch_desc = F.when(
-        role_exact.isNotNull() | not_specified, F.lit(None).cast("string")
-    ).otherwise(F.col("desc_raw"))
-    return (
-        df.withColumn("position_role", role)
-        .withColumn("uchastok_identifier", uch_id)
-        .withColumn("uchastok_description", uch_desc)
-        .drop("desc_std")
-    )
+    "Blank" means empty after stripping ASCII spaces only, and the
+    uchastok number is the leading run of ASCII digits: Spark ``trim`` and
+    Java ``\\d`` semantics, which the warehouse goldens pin."""
+    role_exact = ROLE_MAP_STD.get(standardize_text_py(desc_raw))
+    if role_exact is not None:
+        return role_exact, None, None
+    if desc_raw is None:
+        return "Не определена", None, None
+    has_desc = desc_raw.strip(" ") != ""
+    m = _UCH_NUM_RE.match(desc_raw)
+    lower = desc_raw.lower()
+    has_vsya = _VSYA in lower
+    uch_id = m.group(0) if m else ("Вся губернія" if has_vsya else None)
+    if has_desc and m is None and not has_vsya and _NOT_SPECIFIED in lower:
+        return "Должность не указана", uch_id, None
+    return ("Инспектор участка" if has_desc else "Не определена"), uch_id, desc_raw
 
 
-def _note_row_filter(df: DataFrame) -> Column:
-    """P4 footnote/note-row predicate (populate_db_ru_v1.py:646-650);
-    True = keep."""
-    first = F.coalesce(F.col("cell0_raw"), F.lit(""))
-    lower = F.lower(first)
-    is_note = (
-        first.rlike(r"^[*)]")
-        | first.rlike(r"^1\)")
-        | lower.contains("примечание:")
-        | lower.contains("въ пензенской губерніи:")
-        | lower.contains("въ черноморской губ.")
-        | (
-            (F.col("n_raw_cells") == 1)
-            & ~first.rlike("[05-9]")
-            & (F.length(first) > 30)
-            & ~lower.contains("участокъ")
-            & ~lower.contains("инспекторъ")
+_NOTE_PREFIX_RE = re.compile(r"[*)]|1\)")
+_NOTE_MARKERS = ("примечание:", "въ пензенской губерніи:", "въ черноморской губ.")
+_NOTE_DIGITS_RE = re.compile(r"[05-9]")
+
+
+def _is_note_row(cell0_raw: str | None, n_raw_cells: int) -> bool:
+    """P4 footnote/note-row predicate (populate_db_ru_v1.py:646-650)."""
+    first = cell0_raw or ""
+    lower = first.lower()
+    return bool(
+        _NOTE_PREFIX_RE.match(first)
+        or any(k in lower for k in _NOTE_MARKERS)
+        or (
+            n_raw_cells == 1
+            and not _NOTE_DIGITS_RE.search(first)
+            and len(first) > 30
+            and "участокъ" not in lower
+            and "инспекторъ" not in lower
         )
     )
-    return ~is_note
+
+
+def _is_qualifying(a: dict) -> bool:
+    """A named, non-vacancy, non-marker assignment: what a later personnel
+    ditto "»" in the same header epoch repeats."""
+    return a["name"] is not None and not a["is_vacancy"] and a["special_role"] is None
+
+
+def _area_1901(r: dict) -> str | None:
+    """1901 files name the gubernia in the first cell of a data row; such
+    a row sets the gubernia and opens a header epoch."""
+    cell0_std = standardize_text_py(r["cell0_raw"])
+    if cell0_std is None or ("губернія" not in cell0_std and "область" not in cell0_std):
+        return None
+    return cell0_std.replace("губернія", "").replace("область", "").strip(" ")
+
+
+def _file_assignment_rows(source_file: str, year: int, html_text: str) -> Iterator[dict]:
+    """The reference's per-file loop over one document: reader rows in,
+    assignment-grain rows out in document order, plus the rows the
+    reference warn-and-drops as reject rows (``reject_reason`` set)."""
+    okrug = gubernia = city = ditto = None
+    ordinal = 0
+    seniors: dict[tuple[str, str], str] = {}
+    for r in _emit_file_rows(source_file, year, html_text):
+        kind = r["row_kind"]
+        # -- W4 header markers; each one opens a new ditto epoch -------------
+        if kind == "okrug_header":
+            okrug, marker = r["okrug_header_std"], UNKNOWN
+        elif kind == "gubernia_header":
+            marker = r["gubernia_header_std"]
+        else:
+            marker = _area_1901(r) if kind == "data" and year == 1901 else None
+        if marker is not None:
+            gubernia, ditto = marker, None
+        # -- P4 note rows ----------------------------------------------------
+        if kind != "data" or _is_note_row(r["cell0_raw"], r["n_raw_cells"]):
+            continue
+
+        # -- W1 location ditto; no city and no previous -> quarantine (:680)
+        loc_std = standardize_text_py(r["loc_raw"])
+        if loc_std is not None and loc_std != "»":
+            city = loc_std
+        personnel = r["personnel_html"]
+        if city is None:
+            yield {
+                "source_file": source_file,
+                "year": year,
+                "row_idx": r["row_idx"],
+                "reject_reason": "location_unresolvable",
+                "personnel_raw_string": personnel if personnel is not None else r["desc_raw"],
+            }
+            continue
+
+        # -- U1 parse + W2 personnel ditto within the epoch ------------------
+        if standardize_text_py(personnel) == "»":
+            assignments = [ditto] if ditto is not None else []
+        else:
+            assignments = parse_personnel(personnel)
+            qualifying = [a for a in assignments if _is_qualifying(a)]
+            if qualifying:
+                ditto = qualifying[-1]
+
+        okrug_name = okrug if okrug is not None else UNKNOWN
+        gubernia_name = gubernia if gubernia is not None else UNKNOWN
+        role, uch_id, uch_desc = _classify_role(r["desc_raw"])
+        row = {
+            "source_file": source_file,
+            "year": year,
+            "row_idx": r["row_idx"],
+            "okrug_name": okrug_name,
+            "gubernia_name": gubernia_name,
+            "city_std": city,
+            "est_raw": r["est_raw"],
+            "workers_raw": r["workers_raw"],
+            "boilers_raw": r["boilers_raw"],
+            "position_role": role,
+            "uchastok_identifier": uch_id,
+            "uchastok_description": uch_desc,
+            # ASCII spaces only: the stored raw string keeps NBSP padding
+            "personnel_raw_string": personnel.strip(" ") if personnel is not None else None,
+            "city_key": city.strip(" .,:;"),
+            "gubernia_std": standardize_text_py(gubernia_name),
+            "okrug_std": standardize_text_py(okrug_name),
+        }
+        # -- explode; F8 inspector key; J6 senior carry per (okrug, gubernia)
+        area_key = (okrug_name, gubernia_name)
+        for seg, a in enumerate(assignments):
+            name, vacancy, special = a["name"], a["is_vacancy"], a["special_role"]
+            key = canonicalize_person_name_py(name) if name is not None and not vacancy else None
+            notes = a["notes"]
+            if special == SENIOR_ROLE:
+                key = seniors.get(area_key)
+                if key is None:
+                    notes = (notes or "") + _SENIOR_NOT_FOUND
+            elif role == _SENIOR_POSITION and not vacancy and special is None and key is not None:
+                seniors[area_key] = key
+            # a named inspector whose name fails to canonicalize (:748)
+            reject = key is None and not vacancy and special is None and name is not None
+            if not reject:
+                ordinal += 1
+            prof = a["prof_abbr"]
+            prof_is_edu = prof in _PROF_EDU_OVERLAP
+            yield {
+                **row,
+                **a,
+                "segment_idx": seg,
+                "reject_reason": "inspector_unparsed" if reject else None,
+                "notes": notes.lstrip("; ") if notes is not None else None,
+                "inspector_key": key,
+                "education_key": prof if prof_is_edu else a["edu_abbr"],
+                "profession_key": None if prof_is_edu else prof,
+                "global_order": year * 10_000_000 + r["row_idx"] * 1000 + seg,
+                "file_ordinal": None if reject else ordinal,
+            }
+
+
+# the pass's output: one row per assignment or reject; reject rows carry
+# their quarantine payload in personnel_raw_string
+_PASS_DDL = (
+    "source_file string, year int, row_idx int, segment_idx int, reject_reason string,"
+    " okrug_name string, gubernia_name string, city_std string, est_raw string,"
+    " workers_raw string, boilers_raw string, position_role string,"
+    " uchastok_identifier string, uchastok_description string,"
+    " personnel_raw_string string, name string, rank_abbr string, prof_abbr string,"
+    " edu_abbr string, start_date_raw string, end_date_raw string, is_vacancy boolean,"
+    " is_acting boolean, notes string, special_role string, inspector_key string,"
+    " education_key string, profession_key string, city_key string,"
+    " gubernia_std string, okrug_std string, global_order bigint, file_ordinal int"
+)
+_PASS_COLUMNS = [field.split()[0] for field in _PASS_DDL.split(",")]
+
+
+def _assignment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: (path, content) batches -> the pass's rows."""
+    for pdf in batches:
+        out: list[dict] = []
+        for path, content in zip(pdf["path"], pdf["content"]):
+            named = roster_file_year(path)
+            if named is not None:
+                out.extend(_file_assignment_rows(*named, content))
+        yield pd.DataFrame(out, columns=_PASS_COLUMNS)
 
 
 def parsed_assignment_rows(
     spark: SparkSession, paths: str | list[str], return_rejects: bool = False
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Reader through exploded, dim-key-annotated assignment rows (one row
-    per assignment, pre-dim-join).
+    per assignment, pre-dim-join; ``file_ordinal`` is the row's 1-based
+    position among its file's assignments).
 
     With ``return_rejects=True`` also returns the quarantine DataFrame
     (P6): rows/assignments the reference warn-and-drops
     (populate_db_ru_v1.py:718-719,748-749) routed to a sink with a reason
     column instead of vanishing into logs.
 
-    Eager: the call runs the reader (the HTML-tokenizer UDTF) as a Spark
-    job through its ``localCheckpoint`` barrier before returning, with
-    or without ``return_rejects``."""
-    # ``cell0_std`` computed once in its own projection (codegen size; see
-    # _role_columns docstring).
-    # Checkpoint the reader output: the HTML-tokenizer UDTF (U2) is the
-    # expensive Python island at the root of EVERY downstream branch (the
-    # assignment rows, both reject branches) — without the barrier each
-    # branch of the rejects union replayed the full file parse (measured:
-    # the rejects table write alone cost ~100s of re-parsing; with the
-    # barriers here and in build_warehouse it is seconds).
-    # localCheckpoint (not persist): it ALSO truncates the logical plan,
-    # so every later withColumn/join doesn't re-analyze the whole upstream
-    # tree — eager analysis of the growing plan cost ~75ms per withColumn
-    # and ~450ms per join of pure driver time (profiled).  Net effect:
-    # build_warehouse() now spends its time EXECUTING the two Python
-    # islands once (eager checkpoint), analysis overhead collapses, and
-    # the downstream table writes dropped from 13.6/5.0/2.5s to
-    # ~1.2/1.5/1.9s (full-corpus warehouse bench 45.6s -> ~15s).  On a
-    # multi-tenant cluster where executor loss must be survivable, swap
-    # for reliable checkpoint() or persist(MEMORY_AND_DISK_2); semantics
-    # are identical.
-    rows = read_roster_rows(spark, paths).withColumn(
-        "cell0_std", standardize_text(F.col("cell0_raw"))
+    Eager: the call runs a Spark job before returning, with or without
+    ``return_rejects`` — the per-document pass (one task per input split
+    of whole files, no shuffle) materialized by one ``localCheckpoint``.
+    The barrier keeps the Python pass single-run for every consumer (five
+    dims, the fact, the rejects) and truncates the plan they analyze; the
+    ``etl_quality`` observation rides its job into ``LAST_BUILD_METRICS``.
+    Where executor loss must be survivable, a reliable ``checkpoint()``
+    has the same semantics."""
+    rows = read_roster_files(spark, paths).mapInPandas(_assignment_batches, _PASS_DDL)
+    stats = {
+        "est_raw": "establishments_count",
+        "workers_raw": "worker_count",
+        "boilers_raw": "boiler_count",
+    }
+    rows = rows.select(
+        *[F.col(c) for c in _PASS_COLUMNS if c not in stats],
+        *[clean_number(F.col(raw)).alias(out) for raw, out in stats.items()],
+    )
+    kept = F.col("reject_reason").isNull()
+
+    def kept_with(cond: Column) -> Column:
+        return F.sum(F.when(kept & cond, 1).otherwise(0))
+
+    obs = Observation("etl_quality")
+    rows = rows.observe(
+        obs,
+        F.count(F.when(kept, 1)).alias("parsed_rows"),
+        kept_with(F.col("inspector_key").isNull()).alias("rows_without_inspector"),
+        kept_with(F.col("city_key").isNull()).alias("rows_without_city"),
+        kept_with(F.col("start_date_raw").isNotNull()).alias("rows_with_start_date"),
     ).localCheckpoint()
+    LAST_BUILD_METRICS.clear()
+    LAST_BUILD_METRICS.update(obs.get)
 
-    per_file = W.partitionBy("source_file").orderBy("row_idx")
-
-    # -- W4 header propagation + reset epochs --------------------------------
-    std_cell0 = F.col("cell0_std")
-    area_1901 = (
-        (F.col("year") == 1901)
-        & (F.col("row_kind") == "data")
-        & std_cell0.isNotNull()
-        & (std_cell0.contains("губернія") | std_cell0.contains("область"))
-    )
-    area_gub = F.trim(
-        F.replace(F.replace(std_cell0, F.lit("губернія"), F.lit("")), F.lit("область"), F.lit(""))
-    )
-    okrug_marker = F.when(F.col("row_kind") == "okrug_header", F.col("okrug_header_std"))
-    gub_marker = (
-        F.when(F.col("row_kind") == "okrug_header", F.lit(UNKNOWN))
-        .when(
-            (F.col("row_kind") == "gubernia_header") & F.col("gubernia_header_std").isNotNull(),
-            F.col("gubernia_header_std"),
-        )
-        .when(area_1901, area_gub)
-    )
-    reset_marker = (
-        (F.col("row_kind") == "okrug_header")
-        | ((F.col("row_kind") == "gubernia_header") & F.col("gubernia_header_std").isNotNull())
-        | area_1901
-    )
-    rows = (
-        rows.withColumn(
-            "okrug_name",
-            F.coalesce(forward_fill_expr(okrug_marker, ["source_file"], ["row_idx"]), F.lit(UNKNOWN)),
-        )
-        .withColumn(
-            "gubernia_name",
-            F.coalesce(forward_fill_expr(gub_marker, ["source_file"], ["row_idx"]), F.lit(UNKNOWN)),
-        )
-        .withColumn(
-            "header_epoch",
-            F.sum(F.when(reset_marker, 1).otherwise(0)).over(
-                per_file.rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
-        )
-    )
-
-    # -- data rows, note filter (P4) ----------------------------------------
-    data = rows.filter(F.col("row_kind") == "data").filter(_note_row_filter(rows))
-
-    # -- W1 location ditto fill ---------------------------------------------
-    data = data.withColumn("loc_std", standardize_text(F.col("loc_raw")))
-    loc_std = F.col("loc_std")
-    loc_marker = F.when(loc_std.isNotNull() & (loc_std != "»"), loc_std)
-    data = data.withColumn(
-        "city_std", forward_fill_expr(loc_marker, ["source_file"], ["row_idx"])
-    )
-    # no city and no previous -> quarantine (:680)
-    rejects_city = data.filter(F.col("city_std").isNull()).select(
-        "source_file",
-        "year",
-        "row_idx",
-        F.lit(None).cast("int").alias("segment_idx"),
-        F.lit("location_unresolvable").alias("reject_reason"),
-        F.coalesce(F.col("personnel_html"), F.col("desc_raw")).alias("payload"),
-    )
-    data = data.filter(F.col("city_std").isNotNull())
-
-    # -- F2 stats, F9 roles --------------------------------------------------
-    data = (
-        data.withColumn("establishments_count", clean_number(F.col("est_raw")))
-        .withColumn("worker_count", clean_number(F.col("workers_raw")))
-        .withColumn("boiler_count", clean_number(F.col("boilers_raw")))
-    )
-    data = _role_columns(data)
-
-    # -- U1 parse + W2 personnel ditto --------------------------------------
-    data = data.withColumn(
-        "is_pers_ditto",
-        standardize_text(F.trim(F.col("personnel_html"))) == F.lit("»"),
-    )
-    data = data.withColumn(
-        "parsed",
-        F.when(F.col("is_pers_ditto"), F.lit(None)).otherwise(
-            parse_personnel_udf(F.col("personnel_html"))
-        ),
-    ).localCheckpoint()
-    # second barrier: the personnel-parser UDF (U1) output feeds the
-    # assignment explode AND the inspector-reject branch; the checkpoint
-    # keeps the parser single-run across the whole warehouse build and
-    # resets the analyzed-plan size before the window-heavy tail
-    qualifying = F.filter(
-        F.col("parsed"),
-        lambda a: a["name"].isNotNull() & ~a["is_vacancy"] & a["special_role"].isNull(),
-    )
-    last_qual = F.when(F.size(qualifying) > 0, F.element_at(qualifying, -1))
-    data = data.withColumn(
-        "ditto_source",
-        forward_fill_expr(last_qual, ["source_file", "header_epoch"], ["row_idx"]),
-    )
-    data = data.withColumn(
-        "assignments",
-        F.when(
-            F.col("is_pers_ditto"),
-            F.when(F.col("ditto_source").isNotNull(), F.array(F.col("ditto_source"))).otherwise(
-                F.array().cast("array<struct<name:string,rank_abbr:string,prof_abbr:string,"
-                               "edu_abbr:string,start_date_raw:string,end_date_raw:string,"
-                               "is_vacancy:boolean,is_acting:boolean,notes:string,special_role:string>>")
-            ),
-        ).otherwise(F.col("parsed")),
-    )
-
-    # -- explode to assignment grain ----------------------------------------
-    a = data.select(
-        "source_file",
-        "year",
-        "row_idx",
-        "okrug_name",
-        "gubernia_name",
-        "header_epoch",
-        "city_std",
-        "establishments_count",
-        "worker_count",
-        "boiler_count",
-        "position_role",
-        "uchastok_identifier",
-        "uchastok_description",
-        F.trim(F.col("personnel_html")).alias("personnel_raw_string"),
-        F.posexplode("assignments").alias("segment_idx", "a"),
-    ).select("*", "a.*").drop("a")
-
-    # -- inspector natural key (F8) + J6 senior as-of ------------------------
-    canon = canonicalize_person_name(F.col("name"))
-    a = a.withColumn(
-        "inspector_key",
-        F.when(~F.col("is_vacancy") & F.col("name").isNotNull(), canon),
-    )
-    senior_cond = (
-        (F.col("position_role") == "Старший инспектор")
-        & ~F.col("is_vacancy")
-        & F.col("special_role").isNull()
-        & F.col("inspector_key").isNotNull()
-    )
-    senior_w = (
-        W.partitionBy("source_file", "okrug_name", "gubernia_name")
-        .orderBy("row_idx", "segment_idx")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    senior_carry = F.last(
-        F.when(senior_cond, F.col("inspector_key")), ignorenulls=True
-    ).over(senior_w)
-    is_special = F.col("special_role") == F.lit("старший инспектор")
-    a = a.withColumn(
-        "inspector_key",
-        F.when(is_special, senior_carry).otherwise(F.col("inspector_key")),
-    ).withColumn(
-        "notes",
-        F.when(
-            is_special & senior_carry.isNull(),
-            F.ltrim(
-                F.concat(
-                    F.coalesce(F.col("notes"), F.lit("")),
-                    F.lit("; Обслуж. ст.инсп.(ID не найден)"),
-                ),
-            ),
-        ).otherwise(F.col("notes")),
-    )
-    # lstrip("; ") semantics on the appended-note branch
-    a = a.withColumn("notes", F.regexp_replace(F.col("notes"), r"^[; ]+", ""))
-
-    # -- J5 profession/education disambiguation ------------------------------
-    # (computed BEFORE the r12 barrier below so the checkpoint stores the
-    # finished columns once for all ~12 consumers; reject rows get them
-    # too — harmless, they are filtered right after)
-    prof_is_edu = F.col("prof_abbr").isin(_PROF_EDU_OVERLAP) if _PROF_EDU_OVERLAP else F.lit(False)
-    a = a.withColumn(
-        "education_key", F.when(prof_is_edu, F.col("prof_abbr")).otherwise(F.col("edu_abbr"))
-    ).withColumn("profession_key", F.when(prof_is_edu, F.lit(None)).otherwise(F.col("prof_abbr")))
-
-    # location natural-key components (:221-224)
-    a = (
-        a.withColumn("city_key", F.expr("btrim(city_std, ' .,:;')"))
-        .withColumn("gubernia_std", standardize_text(F.col("gubernia_name")))
-        .withColumn("okrug_std", standardize_text(F.col("okrug_name")))
-        .withColumn(
-            "global_order",
-            F.col("year").cast("long") * 10_000_000
-            + F.col("row_idx").cast("long") * 1000
-            + F.col("segment_idx"),
-        )
-    )
-
-    # r12 third barrier (guide §2.1 shared computation; the round's ETL
-    # stage profile): BOTH consumers of the exploded/senior-windowed
-    # stream — the assignment rows AND the inspector-reject quarantine —
-    # split right after this point, and without a barrier here the
-    # rejects table write re-ran the posexplode + senior-carry window +
-    # name canonicalization from the parsed checkpoint a second time
-    # (profiled: the rejects write alone cost ~2.8 s of the ~9.7 s full
-    # warehouse build+write, nearly all of it this recompute; with the
-    # barrier it is 0.33 s).  This barrier REPLACES the one
-    # build_warehouse used to own (same stream, same grain — moved
-    # before the split so both branches share it); the observe() metrics
-    # pass there rides a noop sink over these blocks instead of a second
-    # serialization.
-    a = a.localCheckpoint()
-
-    # assignments whose named inspector failed to canonicalize (:748):
-    # quarantine, not log-and-forget
-    _insp_reject = (
-        F.col("inspector_key").isNull()
-        & ~F.col("is_vacancy")
-        & F.col("special_role").isNull()
-        & F.col("name").isNotNull()
-    )
-    rejects_inspector = a.filter(_insp_reject).select(
+    a = rows.filter(kept).drop("reject_reason")
+    if not return_rejects:
+        return a
+    rejects = rows.filter(~kept).select(
         "source_file",
         "year",
         "row_idx",
         "segment_idx",
-        F.lit("inspector_unparsed").alias("reject_reason"),
+        "reject_reason",
         F.col("personnel_raw_string").alias("payload"),
     )
-    a = a.filter(~_insp_reject)
-
-    if return_rejects:
-        return a, rejects_city.unionByName(rejects_inspector)
-    return a
+    return a, rejects
 
 
 def _sql_str(s: str) -> str:
@@ -421,50 +362,27 @@ def _lookup_full_name(key_col: str, dictionary: dict[str, str]) -> Column:
     )
 
 
+def _concurrently(fn: Callable[[str, DataFrame], object], items: dict[str, DataFrame]) -> dict:
+    """``{name: fn(name, df)}``, the calls submitted from a local
+    thread pool so their Spark jobs run concurrently under the scheduler
+    (overlapping per-job scheduling and commit latency; with sequential
+    calls the cluster idles between small jobs).  The first error
+    re-raises."""
+    with ThreadPoolExecutor(max_workers=len(items)) as pool:
+        return dict(zip(items, pool.map(fn, items.keys(), items.values())))
+
+
 def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, DataFrame]:
     """Full star schema from roster HTML files (FIXTURES.md B3), plus the
     ``rejects`` quarantine table (P6).
 
-    The parsed assignment rows are the materialization point: five
-    dims, the fact (whose plan embeds all five dim subtrees), and the
-    rejects union all re-derive them, so without a barrier the HTML
-    parse + personnel UDF would run once PER CONSUMER (~12x on a full
-    warehouse write).  As of r12 the barrier LIVES INSIDE
-    ``parsed_assignment_rows`` (pre-reject-split, so the rejects write
-    shares it — see the stage-profile note there); ``a`` here is a
-    columnar filter over those checkpoint blocks, which also keeps the
-    analyzed plan flat for every consumer."""
+    Eager: before returning, the call runs the ``parsed_assignment_rows``
+    barrier job and then materializes each of the five dims exactly once
+    (``localCheckpoint``, the five concurrently).  A dim's write and the
+    fact's broadcast join then read the same blocks instead of each
+    re-deriving the dim.  The fact and the rejects stay lazy: columnar
+    plans over the checkpointed blocks, run by whoever writes them."""
     a, rejects = parsed_assignment_rows(spark, paths, return_rejects=True)
-    # Build telemetry via the observe() API: metrics ride ONE cheap
-    # noop-sink pass over the checkpointed assignment rows (columnar
-    # aggregates accumulate task-side), which is how a production
-    # pipeline gets its row-count / null-rate gates without paying a
-    # real second pass over the raw corpus.  (Pre-r12 the observe rode
-    # a SECOND localCheckpoint of ``a`` — profiling showed that
-    # re-serializing the multi-KB personnel payload into new blocks
-    # cost more than the scan it saved; the noop action runs the same
-    # observe node without storing anything.)  Collected into
-    # LAST_BUILD_METRICS after the action; pinned equal to a recomputed
-    # aggregate in tests/test_inspectors_etl.py.
-    obs = Observation("etl_quality")
-    observed = a.observe(
-        obs,
-        F.count(F.lit(1)).alias("parsed_rows"),
-        F.sum(F.when(F.col("inspector_key").isNull(), 1).otherwise(0)).alias(
-            "rows_without_inspector"
-        ),
-        F.sum(F.when(F.col("city_key").isNull(), 1).otherwise(0)).alias(
-            "rows_without_city"
-        ),
-        F.sum(F.when(F.col("start_date_raw").isNotNull(), 1).otherwise(0)).alias(
-            "rows_with_start_date"
-        ),
-    )
-    # the metrics pass is its own action; downstream consumers keep the
-    # un-observed plan (an Observation binds to its first action)
-    observed.write.mode("overwrite").format("noop").save()
-    LAST_BUILD_METRICS.clear()
-    LAST_BUILD_METRICS.update(obs.get)
 
     # bucket = first letter of the name: order-preserving (a string sorts
     # after every string with a smaller first char), so phase-1 windows
@@ -476,7 +394,7 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
         ["full_name"],
         "inspector_id",
         bucket=F.substring(F.col("full_name"), 1, 1),
-    ).withColumn("notes", F.lit(None).cast("string"))
+    ).select("inspector_id", "full_name", F.lit(None).cast("string").alias("notes"))
 
     locations = (
         a.groupBy("city_key", "gubernia_std", "okrug_std")
@@ -498,23 +416,34 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
             ["abbreviation"],
             id_col,
         )
-        return dim.withColumn("full_name_ru", _lookup_full_name("abbreviation", dictionary))
+        return dim.select(
+            id_col, "abbreviation", _lookup_full_name("abbreviation", dictionary).alias("full_name_ru")
+        )
 
-    ranks = _abbr_dim("rank_abbr", "rank_id", KNOWN_RANKS).withColumn(
-        "rank_type", F.lit(None).cast("string")
+    dims = _concurrently(
+        lambda _, dim: dim.localCheckpoint(),
+        {
+            "inspectors": inspectors,
+            "locations": locations,
+            "ranks": _abbr_dim("rank_abbr", "rank_id", KNOWN_RANKS).withColumn(
+                "rank_type", F.lit(None).cast("string")
+            ),
+            "professions": _abbr_dim("profession_key", "profession_id", KNOWN_PROFESSIONS),
+            "educations": _abbr_dim("education_key", "education_id", KNOWN_EDUCATIONS),
+        },
     )
-    professions = _abbr_dim("profession_key", "profession_id", KNOWN_PROFESSIONS)
-    educations = _abbr_dim("education_key", "education_id", KNOWN_EDUCATIONS)
 
     fact = (
         a.join(
-            F.broadcast(inspectors.select(F.col("full_name").alias("inspector_key"), "inspector_id")),
+            F.broadcast(
+                dims["inspectors"].select(F.col("full_name").alias("inspector_key"), "inspector_id")
+            ),
             on="inspector_key",
             how="left",
         )
         .join(
             F.broadcast(
-                locations.select(
+                dims["locations"].select(
                     "location_id",
                     "city_key",
                     F.col("gubernia_name").alias("gubernia_std"),
@@ -525,37 +454,37 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
             how="left",
         )
         .join(
-            F.broadcast(ranks.select(F.col("abbreviation").alias("rank_abbr"), "rank_id")),
+            F.broadcast(dims["ranks"].select(F.col("abbreviation").alias("rank_abbr"), "rank_id")),
             on="rank_abbr",
             how="left",
         )
         .join(
             F.broadcast(
-                professions.select(F.col("abbreviation").alias("profession_key"), "profession_id")
+                dims["professions"].select(
+                    F.col("abbreviation").alias("profession_key"), "profession_id"
+                )
             ),
             on="profession_key",
             how="left",
         )
         .join(
             F.broadcast(
-                educations.select(F.col("abbreviation").alias("education_key"), "education_id")
+                dims["educations"].select(
+                    F.col("abbreviation").alias("education_key"), "education_id"
+                )
             ),
             on="education_key",
             how="left",
         )
     )
-    # W6 surrogate ids, two-phase: per-file row_number (parallel windows,
-    # bounded by rows-per-document) + broadcast cumulative offsets ordered
-    # by year — identical ids to a global row_number over global_order
-    # (files are disjoint year ranges) without the single-partition funnel.
-    local = fact.withColumn(
-        "_rn",
-        F.row_number().over(W.partitionBy("source_file").orderBy("global_order")),
-    )
-    # offsets = rows in all earlier-year files, via a broadcast inequality
-    # self-join over the 13-row per-file counts (no cumsum window — see
+    # W6 surrogate ids, two-phase: the pass's per-file ordinal + broadcast
+    # cumulative offsets ordered by year — identical ids to a global
+    # row_number over global_order (files are disjoint year ranges)
+    # without a window or a single-partition funnel.  Offsets = rows in
+    # all earlier-year files, via a broadcast inequality self-join over
+    # the per-file counts (no cumsum window — see
     # operators.dims.mint_surrogate_ids for the pattern rationale)
-    counts = fact.groupBy("source_file").agg(
+    counts = a.groupBy("source_file").agg(
         F.count(F.lit(1)).alias("_n"), F.min("year").alias("_yr")
     )
     cb = counts.select(
@@ -574,10 +503,8 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
         .groupBy("source_file")
         .agg(F.coalesce(F.sum("_n2"), F.lit(0)).alias("_off"))
     )
-    fact = local.join(F.broadcast(offsets), "source_file").withColumn(
-        "assignment_id", (F.col("_rn") + F.col("_off")).cast("long")
-    ).select(
-        "assignment_id",
+    fact = fact.join(F.broadcast(offsets), "source_file").select(
+        (F.col("file_ordinal") + F.col("_off")).cast("long").alias("assignment_id"),
         "inspector_id",
         "year",
         "source_file",
@@ -593,8 +520,8 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
         "education_id",
         "start_date_raw",
         "end_date_raw",
-        F.col("is_acting").alias("is_acting"),
-        F.col("is_vacancy").alias("is_vacancy"),
+        "is_acting",
+        "is_vacancy",
         F.col("notes").alias("assignment_notes"),
         "establishments_count",
         "worker_count",
@@ -602,13 +529,8 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
     )
 
     return {
-        "inspectors": inspectors.select("inspector_id", "full_name", "notes"),
-        "locations": locations.select(
-            "location_id", "city_name", "gubernia_name", "okrug_name", "location_type"
-        ),
-        "ranks": ranks.select("rank_id", "abbreviation", "full_name_ru", "rank_type"),
-        "professions": professions.select("profession_id", "abbreviation", "full_name_ru"),
-        "educations": educations.select("education_id", "abbreviation", "full_name_ru"),
+        **dims,
+        "locations": dims["locations"].drop("city_key"),
         "assignments": fact,
         "rejects": rejects,
     }
@@ -633,24 +555,17 @@ def write_warehouse(tables: dict[str, DataFrame], out_dir: str) -> None:
     skip-marked until a reachable JDBC endpoint exists.
 
     The table writes are independent jobs over already-checkpointed
-    inputs, so they are submitted from a driver-side thread pool and run
-    concurrently under Spark's scheduler — this overlaps per-write
-    task-scheduling and commit latency (each write still parallelizes
-    across its own tasks; with one sequential write the cluster idles
-    between the small dim jobs).
+    inputs, so they run concurrently (each write still parallelizes
+    across its own tasks).
     """
-    from concurrent.futures import ThreadPoolExecutor
 
-    def _write(item: tuple[str, DataFrame]) -> None:
-        name, df = item
+    def _write(name: str, df: DataFrame) -> None:
         writer = df.write.mode("overwrite")
         if name == "assignments":
             writer = writer.partitionBy("year")
         writer.parquet(f"{out_dir}/{name}")
 
-    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        # list() drains the iterator so the first write error re-raises
-        list(pool.map(_write, tables.items()))
+    _concurrently(_write, tables)
 
 
 def bootstrap_warehouse_catalog(

@@ -39,7 +39,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from .html_table import READER_SCHEMA, _YEAR_RE, _emit_file_rows
+from .html_table import READER_SCHEMA, _emit_file_rows, roster_file_year
 
 _FIELD_ORDER = [f.name for f in READER_SCHEMA.fields]
 
@@ -86,13 +86,12 @@ class HtmlRosterReader(DataSourceReader):
         return [_RosterFilePartition(p) for p in self._paths]
 
     def read(self, partition: _RosterFilePartition) -> Iterator[tuple]:
-        base = partition.path.rsplit("/", 1)[-1]
-        m = _YEAR_RE.search(base)
-        if not m:
+        named = roster_file_year(partition.path)
+        if named is None:
             return  # same warn-and-skip as the reference's file loop (:507)
         with open(partition.path, encoding="utf-8", errors="replace") as f:
             content = f.read()
-        for row in _emit_file_rows(base, int(m.group(1)), content):
+        for row in _emit_file_rows(*named, content):
             yield tuple(row[c] for c in _FIELD_ORDER)
 
 
@@ -156,13 +155,12 @@ class HtmlRosterSimpleStreamReader(SimpleDataSourceStreamReader):
 
     def _rows_for(self, paths: list[str]) -> Iterator[tuple]:
         for p in paths:
-            base = p.rsplit("/", 1)[-1]
-            m = _YEAR_RE.search(base)
-            if not m:
+            named = roster_file_year(p)
+            if named is None:
                 continue  # same warn-and-skip as the batch reader
             with open(p, encoding="utf-8", errors="replace") as f:
                 content = f.read()
-            for row in _emit_file_rows(base, int(m.group(1)), content):
+            for row in _emit_file_rows(*named, content):
                 yield tuple(row[c] for c in _FIELD_ORDER)
 
     def read(self, start: dict):

@@ -386,27 +386,36 @@ def _emit_file_rows(source_file: str, year: int, html_text: str) -> Iterator[dic
         }
 
 
+def roster_file_year(path: str | None) -> tuple[str, int] | None:
+    """(base name, year) of a ``fabric{YYYY}.html`` path; None for any
+    other file, which every reader skips (:507 warn-and-skip)."""
+    base = (path or "").rsplit("/", 1)[-1]
+    m = _YEAR_RE.search(base)
+    return (base, int(m.group(1))) if m else None
+
+
 def parse_content_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas body: (path, content) batches -> reader rows.  Shared
     by the batch reader and the streaming file-ingestion path."""
+    columns = [f.name for f in READER_SCHEMA.fields]
     for pdf in batches:
         out: list[dict] = []
         for path, content in zip(pdf["path"], pdf["content"]):
-            base = path.rsplit("/", 1)[-1]
-            m = _YEAR_RE.search(base)
-            if not m:
-                continue  # :507 warn-and-skip
-            out.extend(_emit_file_rows(base, int(m.group(1)), content))
-        yield pd.DataFrame(
-            out, columns=[f.name for f in READER_SCHEMA.fields]
-        ) if out else pd.DataFrame(columns=[f.name for f in READER_SCHEMA.fields])
+            named = roster_file_year(path)
+            if named is not None:
+                out.extend(_emit_file_rows(*named, content))
+        yield pd.DataFrame(out, columns=columns)
+
+
+def read_roster_files(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    """Whole-file ``(path, content)`` rows, one per roster file: the input
+    of every per-document pass (the reader below, the fused ETL pass)."""
+    return spark.read.text(paths, wholetext=True).select(
+        F.input_file_name().alias("path"), F.col("value").alias("content")
+    )
 
 
 def read_roster_rows(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """Read yearly roster HTML file(s) into one row per <tr> (B1 schema of
     FIXTURES.md), with the reference's exact row-selection semantics."""
-    raw = (
-        spark.read.text(paths, wholetext=True)
-        .select(F.input_file_name().alias("path"), F.col("value").alias("content"))
-    )
-    return raw.mapInPandas(parse_content_batches, READER_SCHEMA)
+    return read_roster_files(spark, paths).mapInPandas(parse_content_batches, READER_SCHEMA)

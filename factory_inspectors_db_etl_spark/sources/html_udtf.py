@@ -30,9 +30,8 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .html_table import READER_SCHEMA, _YEAR_RE, _emit_file_rows
+from .html_table import READER_SCHEMA, _emit_file_rows, read_roster_files, roster_file_year
 
 _FIELD_NAMES = [f.name for f in READER_SCHEMA.fields]
 
@@ -41,11 +40,10 @@ class RosterRowsUDTF:
     """One (path, content) input row -> one output row per roster <tr>."""
 
     def eval(self, path: str, content: str):  # noqa: D102 — UDTF contract
-        base = (path or "").rsplit("/", 1)[-1]
-        m = _YEAR_RE.search(base)
-        if not m:
+        named = roster_file_year(path)
+        if named is None:
             return  # same warn-and-skip contract as the batch reader
-        for row in _emit_file_rows(base, int(m.group(1)), content or ""):
+        for row in _emit_file_rows(*named, content or ""):
             yield tuple(row[name] for name in _FIELD_NAMES)
 
 
@@ -66,10 +64,7 @@ def read_roster_rows_udtf(spark: SparkSession, paths: str | list[str]) -> DataFr
     """UDTF-form twin of ``html_table.read_roster_rows``: same schema,
     same rows, driven through a LATERAL table-function call."""
     name = register_roster_udtf(spark)
-    raw = (
-        spark.read.text(paths, wholetext=True)
-        .select(F.input_file_name().alias("path"), F.col("value").alias("content"))
-    )
+    raw = read_roster_files(spark, paths)
     # Deterministic digest, not builtin hash() (salted per process via
     # PYTHONHASHSEED, and collidable mod 1e8): stable view names across
     # runs, and distinct path args never replace each other's view.

@@ -13,6 +13,8 @@ spot-checked against the reference's semantics.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -186,6 +188,42 @@ def test_reader_row_counts_pinned():
 def test_reader_row_idx_dense_and_ordered(year):
     rows = _rows(year)
     assert [r["row_idx"] for r in rows] == list(range(len(rows)))
+
+
+# ---------------------------------------------------------------------------
+# Role classification (F9, populate_db_ru_v1.py:683-698)
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "desc, want",
+    [
+        # an exact ROLE_MAP key (after standardization): role only
+        ("Окружный фабричный инспекторъ.", ("Окружный инспектор", None, None)),
+        ("Старшій фабричный инспекторъ", ("Старший инспектор", None, None)),
+        # "(должность не указана)" with no uchastok number: no description
+        ("(должность не указана)", ("Должность не указана", None, None)),
+        # a leading number wins over the not-specified marker
+        ("3-й участокъ (должность не указана)",
+         ("Инспектор участка", "3", "3-й участокъ (должность не указана)")),
+        ("Вся губернія составляетъ одинъ участокъ",
+         ("Инспектор участка", "Вся губернія", "Вся губернія составляетъ одинъ участокъ")),
+        ("3-й участокъ", ("Инспектор участка", "3", "3-й участокъ")),
+        ("12 уч.", ("Инспектор участка", "12", "12 уч.")),
+        ("", ("Не определена", None, "")),
+        (" ", ("Не определена", None, " ")),
+        (None, ("Не определена", None, None)),
+        # only ASCII spaces count as blank (Spark's trim) ...
+        ("\xa0", ("Инспектор участка", None, "\xa0")),
+        # ... and only ASCII digits number an uchastok (Java's \d)
+        ("٣-й участокъ", ("Инспектор участка", None, "٣-й участокъ")),
+        ("３-й участокъ", ("Инспектор участка", None, "３-й участокъ")),
+    ],
+)
+def test_role_classification(desc, want):
+    from factory_inspectors_db_etl_spark.plans.inspectors_etl import _classify_role
+
+    assert _classify_role(desc) == want
 
 
 # ---------------------------------------------------------------------------
@@ -409,19 +447,29 @@ def test_refresh_year_partitions_dynamic_overwrite(spark, tmp_path):
         assert _os.stat(p).st_mtime_ns == m, f"{p} was rewritten"
 
 
-def test_observe_build_metrics_match_recompute(spark):
+def test_observe_build_metrics_match_recompute(spark, generated_roster):
     """build_warehouse's observe() telemetry must equal a recomputed
-    aggregate over the same parsed rows — and must cost zero extra jobs
-    (it rides the localCheckpoint materialization)."""
+    aggregate over the same parsed rows — and must cost zero extra jobs:
+    parsed_assignment_rows runs exactly one job, its barrier, and the
+    metrics ride it.  Runs on the 1905 file of the reference corpus, or
+    of the generated roster when the corpus is absent."""
     from factory_inspectors_db_etl_spark.plans.inspectors_etl import (
         LAST_BUILD_METRICS,
         build_warehouse,
         parsed_assignment_rows,
     )
 
-    build_warehouse(spark, f"{CORPUS}/fabric1905.html")
+    path = f"{CORPUS if os.path.isdir(CORPUS) else generated_roster}/fabric1905.html"
+    build_warehouse(spark, path)
     m = dict(LAST_BUILD_METRICS)
-    a = parsed_assignment_rows(spark, f"{CORPUS}/fabric1905.html")
+    sc = spark.sparkContext
+    sc.setJobGroup("observe_barrier", "parsed_assignment_rows")
+    try:
+        a = parsed_assignment_rows(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("observe_barrier")) == 1
+    assert dict(LAST_BUILD_METRICS) == m
     expect = a.selectExpr(
         "count(*) AS parsed_rows",
         "sum(CASE WHEN inspector_key IS NULL THEN 1 ELSE 0 END) AS rows_without_inspector",

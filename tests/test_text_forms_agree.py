@@ -33,16 +33,38 @@ ADVERSARIAL = [
 ]
 
 
-@pytest.fixture(scope="module")
-def corpus_strings():
-    """A deterministic sample of real cell texts from three generations."""
-    out = list(ADVERSARIAL)
-    td = re.compile(r"<td[^>]*>(.*?)</td>", re.DOTALL)
+_TD = re.compile(r"<td[^>]*>(.*?)</td>", re.DOTALL)
+
+
+def _reference_cells() -> list[str]:
+    out = []
     for year in (1901, 1905, 1913):
         with open(f"/root/reference/diplom/fabric{year}.html", encoding="utf-8") as f:
-            cells = td.findall(f.read())
+            cells = _TD.findall(f.read())
         out.extend(re.sub(r"<[^>]+>", "", c)[:80] for c in cells[::17][:120])
     return out
+
+
+def _generated_cells(roster_dir: str) -> list[str]:
+    """Every distinct cell text of the generated roster's three layout
+    generations (1901, 1905, 1913)."""
+    cells: set[str] = set()
+    for year in (1901, 1905, 1913):
+        with open(f"{roster_dir}/fabric{year}.html", encoding="utf-8") as f:
+            cells.update(re.sub(r"<[^>]+>", "", c)[:80] for c in _TD.findall(f.read()))
+    return sorted(cells)
+
+
+@pytest.fixture(scope="module")
+def corpus_strings(generated_roster):
+    """A deterministic sample of real cell texts from three generations;
+    without the reference corpus, the generated roster's cell texts (the
+    inputs the ETL's per-document pass standardizes in Python)."""
+    try:
+        cells = _reference_cells()
+    except FileNotFoundError:
+        cells = _generated_cells(generated_roster)
+    return ADVERSARIAL + cells
 
 
 def _compare(spark, strings, column_fn, python_fn, cast=None):
