@@ -1,37 +1,22 @@
-"""Order-sensitive fills (SURVEY.md §2.6 W1-W4).
+"""Window forward fill (SURVEY.md §2.6 W1/W2), the ``w1_forward_fill``
+catalog query's operator.
 
-The reference carries ditto marks / rowspans / header context as mutable
-loop state during a sequential document scan (populate_db_ru_v1.py:520-681).
-Spark-first, each becomes ``last(<marker>, ignorenulls=True)`` over a window
-partitioned by the ordering unit (the source file / document) and ordered by
-a stable in-document row index minted by the reader — never by DataFrame
-order, which is undefined after a shuffle.
+A ditto mark ("same as above") becomes ``last(<marker>, ignorenulls=True)``
+over a window partitioned by the ordering unit and ordered by a total
+in-group key — never by DataFrame order, which is undefined after a
+shuffle.  The roster ETL does not use it: its W1-W4 fills are loop state
+in the per-document pass (``plans.inspectors_etl``).
 
-Scale: window state is bounded by rows-per-document (~400 in the reference
-corpus); parallelism = number of documents.  At 100 TB the unit of ordering
-is still the document, so per-partition sort memory stays bounded.
+Scale: window state is bounded by rows per partition key; parallelism =
+number of partition keys.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def forward_fill_expr(
-    value: Column,
-    partition_by: Sequence[str | Column],
-    order_by: Sequence[str | Column],
-) -> Column:
-    """Expression form: last non-null ``value`` up to the current row."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return F.last(value, ignorenulls=True).over(w)
 
 
 def forward_fill(
@@ -42,13 +27,18 @@ def forward_fill(
     out_col: str | None = None,
     null_markers: Sequence[str] = (),
 ) -> DataFrame:
-    """Forward-fill ``col`` within each partition in ``order_by`` order.
+    """Forward-fill ``col`` within each partition in ``order_by`` order:
+    each row gets the last non-null value up to and including itself.
 
     ``null_markers``: sentinel strings (the ditto marks ``»`` / ``"``) that
     mean "repeat previous value"; they are first mapped to NULL, then filled.
     """
     value = F.col(col)
     if null_markers:
-        value = F.when(F.col(col).isin(list(null_markers)), F.lit(None)).otherwise(F.col(col))
-    filled = forward_fill_expr(value, partition_by, order_by)
-    return df.withColumn(out_col or col, filled)
+        value = F.when(value.isin(list(null_markers)), F.lit(None)).otherwise(value)
+    w = (
+        Window.partitionBy(*partition_by)
+        .orderBy(*order_by)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return df.withColumn(out_col or col, F.last(value, ignorenulls=True).over(w))

@@ -7,7 +7,8 @@ parses the table (U2), carries the loop state in Python and emits
 assignment-grain rows plus the location rejects, which one
 ``localCheckpoint`` barrier materializes.  After the barrier the plan is
 columnar: dim builds (J2) each materialized once, broadcast FK joins
-(J1/J3), fact assembly (W6).
+(J1/J3), fact assembly (W6).  ``stream_assignment_rows`` runs the same
+pass over the files the ``html_roster`` stream source emits.
 
 Per-document state (reset per file, bounded by rows-per-document):
   current okrug / gubernia                -> set by header markers and 1901
@@ -45,6 +46,7 @@ from ..functions.dictionaries import KNOWN_EDUCATIONS, KNOWN_PROFESSIONS, KNOWN_
 from ..functions.personnel_parser import SENIOR_ROLE, parse_personnel
 from ..functions.text import canonicalize_person_name_py, clean_number, standardize_text_py
 from ..operators.dims import build_dim, mint_surrogate_ids
+from ..sources.html_roster_source import HtmlRosterDataSource
 
 # ``read_roster_rows`` is not used by the fused pass (it reads whole files)
 # but stays importable here: benchmark tooling wraps it by this name
@@ -259,6 +261,34 @@ def _assignment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         yield pd.DataFrame(out, columns=_PASS_COLUMNS)
 
 
+def _pass_rows(files: DataFrame) -> DataFrame:
+    """Whole-file ``(path, content)`` rows -> the pass's rows, the three
+    stats cleaned to numbers: batch and stream run exactly this."""
+    rows = files.mapInPandas(_assignment_batches, _PASS_DDL)
+    stats = {
+        "est_raw": "establishments_count",
+        "workers_raw": "worker_count",
+        "boilers_raw": "boiler_count",
+    }
+    return rows.select(
+        *[F.col(c) for c in _PASS_COLUMNS if c not in stats],
+        *[clean_number(F.col(raw)).alias(out) for raw, out in stats.items()],
+    )
+
+
+def stream_assignment_rows(spark: SparkSession, dir_glob: str) -> DataFrame:
+    """Streaming form of the pass, for the reference's one incremental
+    pattern, a new yearly file (populate_db_ru_v1.py:16-21): the
+    ``html_roster`` source tails ``dir_glob`` (a glob, or a directory of
+    ``*.html``) and each new or rewritten roster file runs through the
+    same per-document pass as ``parsed_assignment_rows``, exactly once
+    per file version (see ``HtmlRosterSimpleStreamReader``).  Returns an
+    unstarted streaming DataFrame of the pass's rows before any barrier,
+    rejects included (``reject_reason`` set)."""
+    spark.dataSource.register(HtmlRosterDataSource)
+    return _pass_rows(spark.readStream.format("html_roster").load(dir_glob))
+
+
 def parsed_assignment_rows(
     spark: SparkSession, paths: str | list[str], return_rejects: bool = False
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
@@ -279,16 +309,7 @@ def parsed_assignment_rows(
     ``etl_quality`` observation rides its job into ``LAST_BUILD_METRICS``.
     Where executor loss must be survivable, a reliable ``checkpoint()``
     has the same semantics."""
-    rows = read_roster_files(spark, paths).mapInPandas(_assignment_batches, _PASS_DDL)
-    stats = {
-        "est_raw": "establishments_count",
-        "workers_raw": "worker_count",
-        "boilers_raw": "boiler_count",
-    }
-    rows = rows.select(
-        *[F.col(c) for c in _PASS_COLUMNS if c not in stats],
-        *[clean_number(F.col(raw)).alias(out) for raw, out in stats.items()],
-    )
+    rows = _pass_rows(read_roster_files(spark, paths))
     kept = F.col("reject_reason").isNull()
 
     def kept_with(cond: Column) -> Column:

@@ -1,28 +1,17 @@
-"""`html_roster` — a PySpark Python Data Source (Spark 4 DataSource API)
-wrapping the HTML roster reader, so the corpus reads as a first-class
-format:
+"""`html_roster` — a streaming PySpark Python Data Source (Spark 4
+DataSource API) that tails a directory of yearly roster HTML files:
 
     spark.dataSource.register(HtmlRosterDataSource)
-    df = spark.read.format("html_roster").load("/data/diplom/fabric*.html")
+    files = spark.readStream.format("html_roster").load("/data/diplom/*.html")
 
-SURVEY.md §4 lists a DataSource implementation as the natural upgrade of
-the S2 `mapInPandas` reader ("nice-to-have; mapInPandas suffices").  Both
-paths share ONE parser body (`html_table._emit_file_rows`), so row
-semantics are pinned by the same golden tests; what the source adds:
-
-* **partition = file**: `partitions()` returns one `InputPartition` per
-  matched file, so scan parallelism equals corpus size with no
-  driver-side content reads (files open executor-side in `read()`), and
-  the per-file row order the downstream windows rely on (W1-W4) holds
-  within each partition by construction.
-* **catalog ergonomics**: the format string composes with
-  `spark.read.load`, schema is declared (never inferred), and readers
-  that only need a column subset still parse once per file (HTML is not
-  column-prunable — the docstring, not the plan, states that honestly).
-
-At 100 TB the same shape holds: the file listing is driver-side
-metadata; content I/O and parsing are fully distributed, one task per
-document file.
+Each micro-batch emits one whole-file ``(path string, content string)``
+row per new or rewritten file: the streaming twin of
+``html_table.read_roster_files``.  ``plans.inspectors_etl`` feeds both
+through the same per-document pass (``stream_assignment_rows`` and
+``parsed_assignment_rows``), so batch and stream share one input shape
+and one parser.  The only option is ``path`` (a glob, or a directory
+meaning ``dir/*.html``); non-roster names are skipped by the pass, not
+here.
 """
 
 from __future__ import annotations
@@ -32,67 +21,9 @@ import os as _os
 import warnings as _warnings
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from .html_table import READER_SCHEMA, _emit_file_rows, roster_file_year
-
-_FIELD_ORDER = [f.name for f in READER_SCHEMA.fields]
-
-
-class _RosterFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class HtmlRosterReader(DataSourceReader):
-    def __init__(self, options: dict):
-        path = options.get("path")
-        if not path:
-            raise ValueError("html_roster requires a path, e.g. .load('/dir/fabric*.html')")
-        # driver-side glob => LOCAL filesystem only; reject object-store /
-        # remote URI schemes loudly instead of silently globbing nothing
-        if "://" in path and not path.startswith("file://"):
-            raise ValueError(
-                f"html_roster reads the local filesystem only (driver-side glob); "
-                f"got non-local path {path!r} — copy the corpus locally or use the "
-                f"mapInPandas reader in sources/html_table.py over a distributed FS"
-            )
-        if path.startswith("file://"):
-            # glob.glob/open take plain paths — strip the accepted scheme
-            # (file:///x -> /x), otherwise the whitelist is unusable
-            path = path[len("file://"):]
-        import os as _os
-
-        if any(c in path for c in "*?["):
-            self._paths = sorted(_glob.glob(path))
-        else:
-            # fail at load() time, not with a confusing task error in read()
-            self._paths = [path] if _os.path.exists(path) else []
-        if not self._paths:
-            raise FileNotFoundError(
-                f"html_roster: path {path!r} matched no files "
-                f"(a typo'd path would otherwise yield an empty DataFrame)"
-            )
-
-    def partitions(self) -> list[InputPartition]:
-        # one partition per FILE: scan parallelism = corpus size, and the
-        # document-order contract (row_idx within source_file) is local to
-        # a single task
-        return [_RosterFilePartition(p) for p in self._paths]
-
-    def read(self, partition: _RosterFilePartition) -> Iterator[tuple]:
-        named = roster_file_year(partition.path)
-        if named is None:
-            return  # same warn-and-skip as the reference's file loop (:507)
-        with open(partition.path, encoding="utf-8", errors="replace") as f:
-            content = f.read()
-        for row in _emit_file_rows(*named, content):
-            yield tuple(row[c] for c in _FIELD_ORDER)
+_SCHEMA = "path string, content string"
 
 
 class HtmlRosterSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -112,14 +43,12 @@ class HtmlRosterSimpleStreamReader(SimpleDataSourceStreamReader):
     skipped with a warning (its rows are unrecoverable — losing only
     them beats failing the whole recovery).  The simple API routes rows
     through the driver; that is the right tradeoff for an incremental
-    tail of LARGE documents arriving one-per-year — the
-    partition-parallel batch reader above remains the bulk-backfill
-    path."""
+    tail of LARGE documents arriving one-per-year — the partition-parallel
+    ``read_roster_files`` remains the bulk-backfill path."""
 
     def __init__(self, options: dict):
-        # reuse the batch reader's path validation (local-only, loud on
-        # zero matches) but tolerate an initially EMPTY directory: a
-        # stream legitimately starts before data exists
+        # driver-side glob => local filesystem only; an initially EMPTY
+        # directory is fine: a stream legitimately starts before data exists
         path = options.get("path")
         if not path:
             raise ValueError("html_roster requires a path, e.g. .load('/dir/*.html')")
@@ -155,13 +84,8 @@ class HtmlRosterSimpleStreamReader(SimpleDataSourceStreamReader):
 
     def _rows_for(self, paths: list[str]) -> Iterator[tuple]:
         for p in paths:
-            named = roster_file_year(p)
-            if named is None:
-                continue  # same warn-and-skip as the batch reader
             with open(p, encoding="utf-8", errors="replace") as f:
-                content = f.read()
-            for row in _emit_file_rows(*named, content):
-                yield tuple(row[c] for c in _FIELD_ORDER)
+                yield p, f.read()
 
     def read(self, start: dict):
         seen = self._signatures(start.get("processed"))
@@ -231,11 +155,8 @@ class HtmlRosterDataSource(DataSource):
     def name(cls) -> str:
         return "html_roster"
 
-    def schema(self):
-        return READER_SCHEMA
-
-    def reader(self, schema) -> HtmlRosterReader:
-        return HtmlRosterReader(self.options)
+    def schema(self) -> str:
+        return _SCHEMA
 
     def simpleStreamReader(self, schema) -> HtmlRosterSimpleStreamReader:
         return HtmlRosterSimpleStreamReader(self.options)

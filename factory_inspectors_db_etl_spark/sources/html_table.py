@@ -1,10 +1,13 @@
-"""HTML table source (SURVEY.md §2.1 S2/S3, §2.10 U2).
+"""HTML roster table parser (SURVEY.md §2.1 S2/S3, §2.10 U2).
 
-A Spark reader for the reference corpus' yearly roster files: whole-file
-text rows (``spark.read.text(..., wholetext=True)``) flow through a
-``mapInPandas`` UDTF that parses the first ``<table>`` with the stdlib
-``html.parser`` (bs4 is not available in this environment) and emits one
-output row per ``<tr>`` with a stable in-document ``row_idx``.
+``_emit_file_rows`` parses the first ``<table>`` of one yearly roster
+document with the stdlib ``html.parser`` (bs4 is not available in this
+environment) and emits one row per ``<tr>`` with a stable in-document
+``row_idx``.  Its one production caller is the ETL's per-document pass
+(``plans.inspectors_etl._file_assignment_rows``), which reads whole-file
+``(path, content)`` rows from ``read_roster_files`` in batch and from the
+``html_roster`` stream source in streaming; ``roster_file_year`` decides
+which of those files are rosters.
 
 Row-selection and rowspan semantics replicate the reference loader
 byte-for-byte (populate_db_ru_v1.py:503-651), including its quirks:
@@ -206,7 +209,7 @@ def parse_first_table(html_text: str) -> tuple[list[_Row], int]:
 
 
 # ---------------------------------------------------------------------------
-# Reader UDTF
+# Reader rows
 # ---------------------------------------------------------------------------
 
 READER_SCHEMA = T.StructType(
@@ -228,6 +231,9 @@ READER_SCHEMA = T.StructType(
     ]
 )
 
+# matched against the whole base name: "fabric1905.html.bak" and
+# "old_fabric1905.html" are not rosters (the reference opens only names
+# from its own config list)
 _YEAR_RE = re.compile(r"fabric(\d{4})\.html")
 
 
@@ -388,28 +394,15 @@ def _emit_file_rows(source_file: str, year: int, html_text: str) -> Iterator[dic
 
 def roster_file_year(path: str | None) -> tuple[str, int] | None:
     """(base name, year) of a ``fabric{YYYY}.html`` path; None for any
-    other file, which every reader skips (:507 warn-and-skip)."""
+    other file, which the pass skips (:507 warn-and-skip)."""
     base = (path or "").rsplit("/", 1)[-1]
-    m = _YEAR_RE.search(base)
+    m = _YEAR_RE.fullmatch(base)
     return (base, int(m.group(1))) if m else None
 
 
-def parse_content_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (path, content) batches -> reader rows.  Shared
-    by the batch reader and the streaming file-ingestion path."""
-    columns = [f.name for f in READER_SCHEMA.fields]
-    for pdf in batches:
-        out: list[dict] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            named = roster_file_year(path)
-            if named is not None:
-                out.extend(_emit_file_rows(*named, content))
-        yield pd.DataFrame(out, columns=columns)
-
-
 def read_roster_files(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """Whole-file ``(path, content)`` rows, one per roster file: the input
-    of every per-document pass (the reader below, the fused ETL pass)."""
+    """Whole-file ``(path, content)`` rows, one per file: the batch input
+    of the ETL's per-document pass."""
     return spark.read.text(paths, wholetext=True).select(
         F.input_file_name().alias("path"), F.col("value").alias("content")
     )
@@ -417,5 +410,20 @@ def read_roster_files(spark: SparkSession, paths: str | list[str]) -> DataFrame:
 
 def read_roster_rows(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """Read yearly roster HTML file(s) into one row per <tr> (B1 schema of
-    FIXTURES.md), with the reference's exact row-selection semantics."""
-    return read_roster_files(spark, paths).mapInPandas(parse_content_batches, READER_SCHEMA)
+    FIXTURES.md), with the reference's exact row-selection semantics.
+
+    The ETL does not call this: it is kept only for the benchmark's
+    personnel-parser probe (``perfbench/workloads.py``), until the next
+    benchmark change moves that probe onto the per-document pass."""
+    columns = [f.name for f in READER_SCHEMA.fields]
+
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[dict] = []
+            for path, content in zip(pdf["path"], pdf["content"]):
+                named = roster_file_year(path)
+                if named is not None:
+                    out.extend(_emit_file_rows(*named, content))
+            yield pd.DataFrame(out, columns=columns)
+
+    return read_roster_files(spark, paths).mapInPandas(parse, READER_SCHEMA)

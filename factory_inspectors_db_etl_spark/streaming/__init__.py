@@ -7,7 +7,6 @@ from .ops import (  # noqa: F401
     stateful_running_stats_tws,
     stateful_sessionize,
     stream_events,
-    stream_roster_rows,
     stream_static_enrich,
     stream_stream_view_purchase_join,
     streaming_dedup,

@@ -2,7 +2,9 @@
 
 The reference is strictly batch — its only "incremental" pattern is a new
 yearly roster file appearing on disk (populate_db_ru_v1.py:16-21).  That
-pattern IS Spark's file streaming source, so the module provides:
+pattern lives with the ETL: ``plans.inspectors_etl.stream_assignment_rows``
+feeds the ``html_roster`` stream source through the batch build's own
+per-document pass.  This module provides the general streaming operators:
 
 * ``stream_events`` — parquet file-stream of the synthetic ``events``
   table (event-time ``ts``), the substrate for window/dedup/state ops;
@@ -15,9 +17,6 @@ pattern IS Spark's file streaming source, so the module provides:
   running aggregate (the custom-stateful-operator shape), plus the
   ``transformWithStateInPandas`` form (``stateful_running_stats_tws``,
   RocksDB-backed state, pyspark >= 4.0);
-* ``stream_roster_rows`` — incremental ingestion of new yearly roster
-  HTML files through the SAME reader UDTF the batch ETL uses (one code
-  path for batch and streaming, the Spark ideal).
 
 Every op returns an unstarted streaming DataFrame; ``run_available_now``
 executes it to a deterministic finite result (Trigger.AvailableNow ->
@@ -26,8 +25,7 @@ equivalent.  State stores are per-query temp dirs; watermark semantics in
 AvailableNow mode process all available data, so batch-equality holds.
 
 Scale posture: window/dedup state is bounded by (watermark horizon x key
-cardinality); the file source checkpoints its seen-files log, giving
-exactly-once ingestion of late-arriving yearly files.
+cardinality).
 """
 
 from __future__ import annotations
@@ -42,7 +40,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..sources.html_table import READER_SCHEMA
 from ..sources.tables import load_table
 
 EVENTS_SCHEMA = T.StructType(
@@ -486,23 +483,6 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame, key: str = "user_id"
     return events.join(F.broadcast(dim), key, "left")
 
 
-def stream_roster_rows(spark: SparkSession, dir_glob: str) -> DataFrame:
-    """Incremental roster ingestion: file-stream whole HTML documents and
-    push them through the batch ETL's reader UDTF — new yearly files are
-    picked up exactly once via the source's file log (the streaming form
-    of populate_db_ru_v1.py:781-784's per-file loop).  One parser body
-    serves batch and streaming."""
-    from ..sources.html_table import parse_content_batches
-
-    raw = (
-        spark.readStream.format("text")
-        .option("wholetext", "true")
-        .load(dir_glob)
-        .select(F.input_file_name().alias("path"), F.col("value").alias("content"))
-    )
-    return raw.mapInPandas(parse_content_batches, READER_SCHEMA)
-
-
 def cdc_snapshot_upsert(
     snapshot_dir: str,
     key_cols: list[str],
@@ -586,7 +566,7 @@ def run_available_now(stream: DataFrame, name: str, output_mode: str = "append")
     The memory sink cannot recover a checkpoint, so each call is a fresh
     run; for incremental (resume-across-runs, exactly-once) ingestion use
     a file sink with a persistent checkpointLocation — see
-    tests/test_streaming.py::test_roster_incremental_ingestion_exactly_once."""
+    tests/test_streaming.py::test_html_roster_stream_datasource_incremental."""
     spark = stream.sparkSession
     with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
         q = (

@@ -30,9 +30,13 @@ from factory_inspectors_db_etl_spark.sources.html_table import _emit_file_rows
 CORPUS = "/root/reference/diplom"
 
 
-def _rows(year: int) -> list[dict]:
-    with open(f"{CORPUS}/fabric{year}.html", encoding="utf-8") as f:
+def _file_rows(directory: str, year: int) -> list[dict]:
+    with open(f"{directory}/fabric{year}.html", encoding="utf-8") as f:
         return list(_emit_file_rows(f"fabric{year}.html", year, f.read()))
+
+
+def _rows(year: int) -> list[dict]:
+    return _file_rows(CORPUS, year)
 
 
 # ---------------------------------------------------------------------------
@@ -125,56 +129,63 @@ def test_parse_cross_reference_note():
 # ---------------------------------------------------------------------------
 
 
-def test_reader_rowspan_bleeds_across_gubernia_header():
-    """fabric1906.html:2355: rowspan=3 personnel cell spans a
+def test_reader_rowspan_bleeds_across_gubernia_header(generated_roster):
+    """fabric1906.html:2355: a rowspan=3 personnel cell spans a
     gubernia-header row; header rows do not consume the counter
     (populate_db_ru_v1.py:584 continues before :632), so the value lands
-    on the next gubernia's first data row."""
-    rows = _rows(1906)
-    batum = [r for r in rows if (r["cell0_raw"] or "").startswith("Батумская Область")]
-    assert len(batum) == 1
-    assert batum[0]["personnel_html"] == "Старшій фабричный инспекторъ."
-    bleed = [
-        r
-        for r in rows
-        if (r["cell0_raw"] or "").startswith("составляетъ одинъ фабричный участокъ")
-        and r["row_idx"] > batum[0]["row_idx"]
-    ]
-    # the row AFTER the Кутаисская header inherits the spanned personnel
-    assert bleed and bleed[0]["personnel_html"] == "Старшій фабричный инспекторъ."
-    # and the header row between them is classified, not expanded
-    between = [
-        r
-        for r in rows
-        if batum[0]["row_idx"] < r["row_idx"] < bleed[0]["row_idx"]
-    ]
-    assert any(r["row_kind"] == "gubernia_header" for r in between)
+    on the next gubernia's first TWO data rows — the second one's own
+    personnel cell is ignored.  The generator plants this at the end of
+    a gubernia block: the row after the header lacks its personnel cell."""
+    n = 0
+    for year in (1901, 1905, 1906, 1913):
+        rows = _file_rows(generated_roster, year)
+        ncols = 4 if year == 1901 else 6
+        for i, r in enumerate(rows[2:-1], start=2):
+            if r["row_kind"] != "data" or rows[i - 1]["row_kind"] == "data":
+                continue
+            if r["n_raw_cells"] != ncols - 1:
+                continue
+            n += 1
+            # the header between them is classified, not expanded
+            assert rows[i - 1]["row_kind"] in ("gubernia_header", "header_1901")
+            spanned = rows[i - 2]["personnel_html"]
+            assert rows[i - 2]["row_kind"] == "data" and spanned
+            assert r["personnel_html"] == spanned
+            assert rows[i + 1]["n_raw_cells"] == ncols
+            assert rows[i + 1]["personnel_html"] == spanned
+    assert n >= 4
 
 
-def test_reader_1901_four_column_layout_and_ascii_ditto():
-    rows = _rows(1901)
-    data = [r for r in rows if r["row_kind"] == "data"]
-    assert all(r["est_raw"] is None for r in data)  # G1 has no stat columns
+def test_reader_1901_four_column_layout_and_ascii_ditto(generated_roster, quirk_roster):
+    for d in (generated_roster, quirk_roster):
+        data = [r for r in _file_rows(d, 1901) if r["row_kind"] == "data"]
+        assert data and all(r["est_raw"] is None for r in data)  # G1: no stat columns
     # fabric1901.html:62: ASCII '"' ditto in the location cell
-    assert any(r["loc_raw"] == '"' for r in data)
+    assert any(r["loc_raw"] == '"' for r in _file_rows(quirk_roster, 1901))
 
 
-def test_reader_g2_six_column_layout():
-    rows = _rows(1905)
+def test_reader_g2_six_column_layout(generated_roster):
+    rows = _file_rows(generated_roster, 1905)
     data = [r for r in rows if r["row_kind"] == "data"]
     assert any(r["est_raw"] not in (None, "") for r in data)
     assert any(r["loc_raw"] == "»" for r in data)  # G2 ditto mark
 
 
-def test_reader_thead_offset_quirk_skips_first_okrug_header():
+def test_reader_thead_offset_quirk_skips_first_okrug_header(quirk_roster):
     """The reference indexes into the tbody row list but offsets by the
-    thead row count (populate_db_ru_v1.py:530-551), so each G2 file's
-    first okrug header never reaches the loop. Parity-pinned."""
-    rows = _rows(1905)
-    first_okrug = next(r for r in rows if r["row_kind"] == "okrug_header")
-    # С.-Петербургский (first) okrug header was swallowed; the first
-    # surviving okrug header is a later one.
-    assert "петербург" not in (first_okrug["okrug_header_std"] or "")
+    thead row count (populate_db_ru_v1.py:530-551), so a G2 file with a
+    ``<thead>`` loses its first tbody rows — here the column-number row,
+    the first okrug header and its gubernia header.  Parity-pinned: the
+    quirk roster's 1913 file is its 1906 body behind a ``<thead>``."""
+
+    def body(rows):
+        return [{k: v for k, v in r.items() if k not in ("source_file", "year", "row_idx")} for r in rows]
+
+    plain, thead = _file_rows(quirk_roster, 1906), _file_rows(quirk_roster, 1913)
+    assert plain[1]["okrug_header_std"] == "московский фабричный округ"
+    assert body(thead) == body(plain[3:])
+    first_okrug = next(r for r in thead if r["row_kind"] == "okrug_header")
+    assert first_okrug["okrug_header_std"] == "владимирский фабричный округ"
 
 
 def test_reader_row_counts_pinned():
@@ -185,9 +196,53 @@ def test_reader_row_counts_pinned():
 
 
 @pytest.mark.parametrize("year", [1901, 1905, 1913])
-def test_reader_row_idx_dense_and_ordered(year):
-    rows = _rows(year)
-    assert [r["row_idx"] for r in rows] == list(range(len(rows)))
+def test_reader_row_idx_dense_and_ordered(generated_roster, year):
+    rows = _file_rows(generated_roster, year)
+    assert rows and [r["row_idx"] for r in rows] == list(range(len(rows)))
+
+
+@pytest.mark.parametrize(
+    "path, want",
+    [
+        ("fabric1905.html", ("fabric1905.html", 1905)),
+        ("file:///data/diplom/fabric1913.html", ("fabric1913.html", 1913)),
+        ("/data/fabric1905.html.bak", None),
+        ("/data/old_fabric1905.html", None),
+        ("/data/fabric1905.htm", None),
+        ("/data/fabric190.html", None),
+        ("/data/notes.html", None),
+        ("", None),
+        (None, None),
+    ],
+)
+def test_roster_file_year(path, want):
+    from factory_inspectors_db_etl_spark.sources.html_table import roster_file_year
+
+    assert roster_file_year(path) == want
+
+
+def test_build_skips_stray_files_beside_rosters(spark, generated_roster, tmp_path):
+    """A backup or renamed copy of a roster in the input directory is not
+    a roster: building over the directory equals building over the
+    ``fabric*.html`` files alone."""
+    import json
+    import shutil
+
+    from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse
+
+    def tables(path):
+        return {
+            name: sorted(json.dumps(r.asDict(), sort_keys=True, default=str) for r in df.collect())
+            for name, df in build_warehouse(spark, path).items()
+        }
+
+    d = tmp_path / "rosters"
+    shutil.copytree(generated_roster, d)
+    shutil.copy(d / "fabric1905.html", d / "fabric1905.html.bak")
+    shutil.copy(d / "fabric1905.html", d / "old_fabric1905.html")
+    dirty = tables(str(d))
+    assert dirty == tables(f"{generated_roster}/fabric*.html")
+    assert len(dirty["assignments"]) > 0
 
 
 # ---------------------------------------------------------------------------
@@ -380,26 +435,6 @@ def test_warehouse_full_corpus_counts(spark):
     rej = {r["reject_reason"]: r["count"] for r in t["rejects"].groupBy("reject_reason").count().collect()}
     assert rej == {"location_unresolvable": 6}
     fact.unpersist()
-
-
-def test_html_roster_datasource_matches_mapinpandas_reader(spark):
-    """The Spark-4 Python Data Source form of the S2 reader
-    (spark.read.format('html_roster')) must be row-identical to the
-    mapInPandas form — both run the same parser body — and must plan one
-    input partition per file (scan parallelism = corpus size, document
-    order local to a task)."""
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterDataSource,
-    )
-    from factory_inspectors_db_etl_spark.sources.html_table import read_roster_rows
-
-    glob = "/root/reference/diplom/fabric*.html"
-    spark.dataSource.register(HtmlRosterDataSource)
-    ds = spark.read.format("html_roster").load(glob)
-    assert ds.rdd.getNumPartitions() == 11  # one per corpus file
-    a = sorted(tuple(r) for r in ds.collect())
-    b = sorted(tuple(r) for r in read_roster_rows(spark, glob).collect())
-    assert a == b
 
 
 def test_refresh_year_partitions_dynamic_overwrite(spark, tmp_path):

@@ -92,18 +92,24 @@ def test_nanos_probe_restores_conf_on_failure(spark):
     assert spark.conf.get(key, None) == before
 
 
-def test_roster_source_empty_glob_raises():
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import HtmlRosterReader
+def test_roster_source_empty_glob_raises(spark):
+    """A typo'd roster path fails the build loudly instead of building an
+    empty warehouse."""
+    from pyspark.errors import AnalysisException
 
-    with pytest.raises(FileNotFoundError, match="matched no files"):
-        HtmlRosterReader({"path": "/nonexistent_dir_xyz/fabric*.html"})
+    from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        build_warehouse(spark, "/nonexistent/fabric*.html")
 
 
 def test_roster_source_remote_scheme_raises():
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import HtmlRosterReader
+    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
+        HtmlRosterSimpleStreamReader,
+    )
 
     with pytest.raises(ValueError, match="local filesystem only"):
-        HtmlRosterReader({"path": "s3://bucket/fabric*.html"})
+        HtmlRosterSimpleStreamReader({"path": "s3://bucket/fabric*.html"})
 
 
 def test_build_dim_incremental_bucket_passthrough(spark):

@@ -6,13 +6,14 @@ collected and digested:
 * ``perfbench/gen_roster.generate(dir, seed, 1)`` for seeds 1 and 2 —
   11 yearly files with every layout generation and reader quirk the
   generator knows;
-* ``_write_quirk_roster`` below — four hand-written documents for the
-  branches the generator never takes: note rows of every kind, exact-role
-  descriptions, "(должность не указана)", the whole-gubernia uchastok,
-  non-ASCII digits, 1901 area rows in the first cell, a name that fails
-  to canonicalize (an ``inspector_unparsed`` reject), senior markers with
-  and without a carried senior, repeated (okrug, gubernia) pairs, the
-  thead-offset quirk and a file the readers skip.
+* the ``quirk_roster`` fixture (``tests/conftest.py``) — four
+  hand-written documents for the branches the generator never takes:
+  note rows of every kind, exact-role descriptions, "(должность не
+  указана)", the whole-gubernia uchastok, non-ASCII digits, 1901 area
+  rows in the first cell, a name that fails to canonicalize (an
+  ``inspector_unparsed`` reject), senior markers with and without a
+  carried senior, repeated (okrug, gubernia) pairs, the thead-offset
+  quirk and a file the pass skips.
 
 How the digests were produced: at commit b22c5ca (the window-based ETL
 with three checkpoint barriers) ``_digest`` below was applied to each
@@ -37,89 +38,6 @@ def _digest(df) -> tuple[int, str]:
         json.dumps(r.asDict(), sort_keys=True, ensure_ascii=False, default=str) for r in df.collect()
     )
     return len(lines), hashlib.sha256("\n".join(lines).encode("utf-8")).hexdigest()
-
-
-def _tr(*cells: str) -> str:
-    return "<tr>" + "".join(f"<td>{c}</td>" for c in cells) + "</tr>"
-
-
-def _heading(text: str, ncols: int, cls: str) -> str:
-    return f'<tr class="{cls}"><td colspan="{ncols}">{text}</td></tr>'
-
-
-def _doc(rows: list[str], thead: str = "") -> str:
-    head = f"<thead>{thead}</thead>" if thead else ""
-    return f"<html><body><table>{head}<tbody>" + "\n".join(rows) + "</tbody></table></body></html>"
-
-
-_G2_TH = "<tr>" + "<th>x</th>" * 6 + "</tr>"
-_G2 = [
-    _tr("1", "2", "3", "4", "", "6"),
-    _heading("Московскій фабричный округъ", 6, "okrug-header"),
-    _heading("Московская губернія", 6, "gubernia-header"),
-    _tr("Окружный фабричный инспекторъ", "—", "—", "—", "Москва", "Д. С. С. Инж.-тех. В. П. Ивановъ."),
-    _tr("Старшій фабричный инспекторъ", "12", "1.503", "3", "»", "К. С. Л. М. Петровъ."),
-    _tr("1-й участокъ", "5", "1\xa0234", "—", "Подольскъ", "  Т. С. Б. Ф. Сидоровъ.  "),
-    _tr("2-й участокъ", "7", "2.345.678", "1", "»", "»"),
-    _tr("3-й уч.", "1", "12,345", "0", "", "Старшій фабричный инспекторъ."),
-    _tr("(должность не указана)", "", "", "", "Коломна", "Вакансія."),
-    _tr("", "", "", "", "»", "съ 1 января"),
-    _tr("Вся губернія составляетъ одинъ участокъ", "3", "44", "5", "Клинъ", "ъъ"),
-    _tr("٣-й участокъ", "3", "44", "5", "»", "Инж.-мех. Р. Ш. Бѣлевъ (†).<br>съ 3 мая вакансія."),
-    _tr("Кандидатъ на должность фабричнаго инспектора", "3", "44", "5", '"', "И. д. Горн. инж. П. В. Волковъ."),
-    _tr("*) сноска", "", "", "", "", ""),
-    _tr("1) Надзоръ за паровыми котлами въ губерніи возложенъ на окружного инспектора и прочее"),
-    _tr("Примечание: что-то", "", "", "", "", ""),
-    _tr("Длинный текстъ безъ цифръ который не является строкой данныхъ вообще"),
-    _tr("Длинный текстъ съ цифрой 7 который не является строкой данныхъ вообще"),
-    _heading("губернія", 6, "gubernia-header"),
-    _tr("4-й участокъ", "1", "2", "3", "Тверь", "»"),
-    _heading("Тверская губернія", 6, "gubernia-header"),
-    _tr("1-й участокъ", "1", "2", "3", "»", "Старшій фабричный инспекторъ.<br>К. А. М. Б. Шиловъ."),
-    _tr("Старшій фабричный инспекторъ", "1", "2", "3", "»", "Н. С. Ф. Р. Юрьевъ."),
-    _tr("2-й участокъ", "1", "2", "3", "»", "Старшій инспекторъ."),
-    _heading("Владимірскій фабричный округъ", 6, "okrug-header"),
-    _heading("Московская губернія", 6, "gubernia-header"),
-    _tr("5-й участокъ", "1", "2", "3", "Москва", "Старшій фабричный инспекторъ."),
-    _tr("6-й участокъ", "1", "2", "3", "»", "(нет данных)<br>—<br>Вакансія съ 10 дек."),
-    _heading("Московскій фабричный округъ", 6, "okrug-header"),
-    _heading("Московская губернія", 6, "gubernia-header"),
-    _tr("7-й участокъ", "1", "2", "3", "Москва", "Старшій фабричный инспекторъ (см. выше)."),
-    _tr("8-й участокъ", "1", "2", "3", "»", "Старшій фабричный инспекторъ."),
-    _tr("9-й участокъ", "—", "—", "—", "Серпуховъ", "Неим. чина В. Л. Ромовъ, канд. унив."),
-    _tr("10", "—", "—", "—", "»",
-        "Инж.-тех. <b>С. В.</b> В. Ф. Даровъ<br/>съ 5 марта по 1 іюня вакансія; съ 1 іюня Ф. П. Кураевъ"),
-    _tr("11-й участокъ", "—", "—", "—", "»"),
-]
-_G1 = [
-    "<tr>" + "<th>x</th>" * 4 + "</tr>",
-    _tr("1", "2", "", "4"),
-    _tr("", "1-й участокъ", "", "В. П. Ивановъ."),
-    _tr("Архангельская губернія", "Старшій фабричный инспекторъ", "Архангельскъ", "К. С. Л. М. Петровъ."),
-    _tr("", "1-й участокъ", '"', "Старшій фабричный инспекторъ."),
-    _tr("Закаспійская область", "2-й участокъ", "Асхабадъ", "Т. С. Б. Ф. Сидоровъ."),
-    _tr("", "(должность не указана)", "»", "Вакансія."),
-    _heading("С.-Петербургскій фабричный округа", 4, "section-header"),
-    _heading("Приморская область", 4, "section-header"),
-    _tr("Область Войска Донского", "3-й участокъ", "Новочеркасскъ", "»"),
-    _tr("", "4-й участокъ", "»", "Старшій фабричный инспекторъ."),
-    _heading("Нѣчто", 4, "section-header"),
-    _tr("", "", "»", "В. Ш. Лавровъ"),
-    _tr("Войско Донское съ областью", "5-й участокъ", "Черкасскъ", "ъъъ<br>Ф. Р. Юрьевъ"),
-    _tr("", "Старшій фабричный инспекторъ", "»", "М. Б. Шиловъ"),
-    _tr("", "6-й участокъ", "»", "»"),
-    _tr("", "7-й участокъ", "»", "Старшій фабричный инспекторъ"),
-    _tr("*) Донская областью сноска", "8-й участокъ", "»", "»"),
-    _tr("", "9-й участокъ", "»", "»<br>x"),
-]
-
-
-def _write_quirk_roster(d) -> None:
-    d.mkdir(parents=True, exist_ok=True)
-    (d / "fabric1906.html").write_text(_doc([_G2_TH, *_G2]), encoding="utf-8")
-    (d / "fabric1901.html").write_text(_doc(_G1), encoding="utf-8")
-    (d / "fabric1913.html").write_text(_doc(_G2, thead=_G2_TH), encoding="utf-8")
-    (d / "notes.html").write_text(_doc([_G2_TH, *_G2]), encoding="utf-8")
 
 
 GOLDEN = {
@@ -165,6 +83,5 @@ def test_generated_roster_tables_match_golden(spark, tmp_path, gen_roster, seed)
     assert _build_digests(spark, tmp_path) == GOLDEN[seed]
 
 
-def test_quirk_roster_tables_match_golden(spark, tmp_path):
-    _write_quirk_roster(tmp_path)
-    assert _build_digests(spark, tmp_path) == QUIRKS_GOLDEN
+def test_quirk_roster_tables_match_golden(spark, quirk_roster):
+    assert _build_digests(spark, quirk_roster) == QUIRKS_GOLDEN

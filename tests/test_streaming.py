@@ -7,6 +7,7 @@ this checks the streaming semantics: watermarks, state, file source).
 from __future__ import annotations
 
 import shutil
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +19,6 @@ from factory_inspectors_db_etl_spark.streaming import (
     sliding_counts,
     stateful_running_stats,
     stream_events,
-    stream_roster_rows,
     streaming_dedup,
     tumbling_counts,
 )
@@ -281,61 +281,6 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     }
 
 
-def test_roster_incremental_ingestion_exactly_once(spark, tmp_path):
-    """A new yearly file arriving between runs is processed exactly once:
-    the streaming form of the reference's file-per-year loop (the memory
-    sink accumulates; run 2 must append ONLY the new file's rows)."""
-    src = tmp_path / "incoming"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def run_once():
-        # memory sinks cannot recover a checkpoint; a parquet sink is the
-        # real incremental-ingestion shape anyway
-        q = (
-            stream_roster_rows(spark, str(src))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    shutil.copy(f"/root/reference/diplom/fabric1901.html", src / "fabric1901.html")
-    got1 = run_once()
-    n1 = got1.count()
-    assert got1.select("source_file").distinct().count() == 1
-
-    shutil.copy(f"/root/reference/diplom/fabric1905.html", src / "fabric1905.html")
-    got2 = run_once()
-    per_file = {r["source_file"]: r["count"] for r in got2.groupBy("source_file").count().collect()}
-    # 1901 rows NOT reprocessed (would double if the file log were ignored)
-    assert per_file["fabric1901.html"] == n1
-    assert per_file["fabric1905.html"] > 0
-
-
-def test_roster_file_stream_matches_batch_reader(spark, tmp_path):
-    """New yearly files are ingested through the same UDTF as the batch
-    reader: streaming two files == batch-reading them."""
-    from factory_inspectors_db_etl_spark.sources.html_table import read_roster_rows
-
-    src = tmp_path / "rosters"
-    src.mkdir()
-    for year in (1901, 1905):
-        shutil.copy(f"/root/reference/diplom/fabric{year}.html", src / f"fabric{year}.html")
-
-    got = run_available_now(stream_roster_rows(spark, str(src)), "t_roster")
-    want = read_roster_rows(spark, str(src))
-    assert got.count() == want.count()
-    assert _rows(got, "source_file", "row_idx", "row_kind") == _rows(
-        want, "source_file", "row_idx", "row_kind"
-    )
-
-
 def test_stream_json_enrichment_matches_batch(spark, tmp_path):
     """Scalar JVM-side transformations (get_json_object) compose with
     readStream exactly as with batch: streaming the same files through
@@ -590,52 +535,62 @@ def test_streaming_cdc_apply_equals_batch_merge(spark, tmp_path):
     assert got == {1: ("one-b", 11.0), 3: ("three-c", 33.0), 4: ("four", 40.0)}
 
 
-def test_html_roster_stream_datasource_incremental(spark, tmp_path):
-    """Spark-4 SimpleDataSourceStreamReader on the html_roster source:
-    run 1 ingests the initial file, run 2 (same checkpoint) appends ONLY
-    the file that arrived in between, and rows equal the batch reader's
-    for the same files."""
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterDataSource,
-    )
-    from factory_inspectors_db_etl_spark.sources.html_table import read_roster_rows
+def _roster_stream_run(spark, src, ckpt, out):
+    """One AvailableNow run of the roster stream into a parquet sink with
+    a persistent checkpoint; returns everything the sink holds."""
+    from factory_inspectors_db_etl_spark.plans.inspectors_etl import stream_assignment_rows
 
-    spark.dataSource.register(HtmlRosterDataSource)
+    q = (
+        stream_assignment_rows(spark, f"{src}/*.html")
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.read.parquet(out)
+
+
+def _batch_pass(spark, src):
+    """The batch build's pass over the same files, before its barrier."""
+    from factory_inspectors_db_etl_spark.plans.inspectors_etl import _pass_rows
+    from factory_inspectors_db_etl_spark.sources.html_table import read_roster_files
+
+    return _pass_rows(read_roster_files(spark, f"{src}/*.html"))
+
+
+def _bag(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_html_roster_stream_datasource_incremental(spark, tmp_path, generated_roster):
+    """The roster stream (the html_roster source through the batch
+    build's per-document pass): run 1 ingests the initial file, run 2
+    (same checkpoint) appends ONLY the file that arrived in between, and
+    the streamed rows equal the batch pass's rows for the same files —
+    every column, rejects included."""
     src = tmp_path / "tail"
     src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
-    def run_once():
-        q = (
-            spark.readStream.format("html_roster")
-            .load(f"{src}/*.html")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    shutil.copy("/root/reference/diplom/fabric1901.html", src / "fabric1901.html")
-    got1 = run_once()
+    shutil.copy(f"{generated_roster}/fabric1901.html", src / "fabric1901.html")
+    got1 = _roster_stream_run(spark, src, ckpt, out)
     n1 = got1.count()
     assert n1 > 0 and got1.select("source_file").distinct().count() == 1
+    assert _bag(got1) == _bag(_batch_pass(spark, src))
 
-    shutil.copy("/root/reference/diplom/fabric1905.html", src / "fabric1905.html")
-    got2 = run_once()
+    shutil.copy(f"{generated_roster}/fabric1905.html", src / "fabric1905.html")
+    got2 = _roster_stream_run(spark, src, ckpt, out)
     per_file = {r["source_file"]: r["count"] for r in got2.groupBy("source_file").count().collect()}
     assert per_file["fabric1901.html"] == n1  # not reprocessed
     assert per_file["fabric1905.html"] > 0
 
-    want = read_roster_rows(spark, str(src))
-    assert got2.count() == want.count()
-    assert _rows(got2, "source_file", "row_idx", "row_kind") == _rows(
-        want, "source_file", "row_idx", "row_kind"
-    )
+    want = _batch_pass(spark, src)
+    assert got2.columns == want.columns
+    assert got2.filter(F.col("reject_reason").isNotNull()).count() > 0
+    assert _bag(got2) == _bag(want)
 
 
 def test_stateful_sessionize_cross_batch_reorder(spark, tmp_path):
@@ -684,59 +639,39 @@ def test_stateful_sessionize_cross_batch_reorder(spark, tmp_path):
     assert gap[0].n_events == 3
 
 
-def test_html_roster_stream_picks_up_in_place_rewrite(spark, tmp_path):
+def test_html_roster_stream_picks_up_in_place_rewrite(spark, tmp_path, generated_roster, gen_roster):
     """A roster file REWRITTEN IN PLACE (the corrected-roster case) must
     be re-ingested: the offset tracks (mtime, size), not just the name.
     Output contains both generations (append sink can't retract); the
-    second generation's rows equal a batch read of the new content."""
+    second generation's rows equal the batch pass over the new content
+    (another seed's 1901 roster)."""
     import os
     import time as _time
 
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterDataSource,
-    )
-
-    spark.dataSource.register(HtmlRosterDataSource)
     src = tmp_path / "tail"
     src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
-    def run_once():
-        q = (
-            spark.readStream.format("html_roster")
-            .load(f"{src}/*.html")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    shutil.copy("/root/reference/diplom/fabric1901.html", src / "fabric1901.html")
-    n1 = run_once().count()
+    shutil.copy(f"{generated_roster}/fabric1901.html", src / "fabric1901.html")
+    first = _bag(_roster_stream_run(spark, src, ckpt, out))
+    n1 = sum(first.values())
     assert n1 > 0
 
     # no change -> no new rows
-    assert run_once().count() == n1
+    assert _roster_stream_run(spark, src, ckpt, out).count() == n1
 
     # rewrite in place with different content (and force a distinct mtime
     # in case the filesystem's mtime granularity is coarse)
+    gen_roster.generate(str(tmp_path / "seed2"), 2, 1)
     _time.sleep(0.05)
-    shutil.copy("/root/reference/diplom/fabric1905.html", src / "fabric1901.html")
+    shutil.copy(tmp_path / "seed2" / "fabric1901.html", src / "fabric1901.html")
     os.utime(src / "fabric1901.html")
-    got = run_once()
-    n2 = got.count()
-    assert n2 > n1  # rewrite re-ingested
-
-    want = spark.read.format("html_roster").load(f"{src}/*.html")
-    assert n2 - n1 == want.count()
+    got = _bag(_roster_stream_run(spark, src, ckpt, out))
+    assert got - first == _bag(_batch_pass(spark, src))  # rewrite re-ingested
+    assert sum(got.values()) > n1
 
 
-def test_html_roster_offset_legacy_and_missing_file_replay():
+def test_html_roster_offset_legacy_and_missing_file_replay(generated_roster):
     """Offset-format unit pins (no Spark needed): legacy name-only
     offsets adopt signatures without re-emitting, and replay of a span
     whose file was deleted warns and skips instead of raising."""
@@ -751,7 +686,7 @@ def test_html_roster_offset_legacy_and_missing_file_replay():
 
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "fabric1901.html")
-        shutil.copy("/root/reference/diplom/fabric1901.html", p)
+        shutil.copy(f"{generated_roster}/fabric1901.html", p)
         rdr = HtmlRosterSimpleStreamReader({"path": f"{d}/*.html"})
 
         # legacy list-of-names offset: file already ingested under the old
@@ -764,12 +699,12 @@ def test_html_roster_offset_legacy_and_missing_file_replay():
         # replay across the legacy-adoption span emits nothing either
         assert rdr.readBetweenOffsets({"processed": [p]}, end) == []
 
-        # fresh ingest from the real initial offset
+        # fresh ingest from the real initial offset: one whole-file row
         rows2, end2 = rdr.read(rdr.initialOffset())
         rows2 = list(rows2)
-        assert len(rows2) > 0
-        replayed = rdr.readBetweenOffsets(rdr.initialOffset(), end2)
-        assert len(replayed) == len(rows2)
+        with open(p, encoding="utf-8") as f:
+            assert rows2 == [(p, f.read())]
+        assert rdr.readBetweenOffsets(rdr.initialOffset(), end2) == rows2
 
         # delete the file: replay warns and returns [] instead of raising
         os.remove(p)
@@ -916,7 +851,7 @@ def test_stream_stream_full_outer_matches_batch_with_watermark_cut(
     assert old_unmatched_views and old_unmatched_views <= got_view_nulls
 
 
-def test_html_roster_replay_skips_rewritten_file_without_duplicating():
+def test_html_roster_replay_skips_rewritten_file_without_duplicating(generated_roster):
     """Recovery edge (round-5 review finding): a file rewritten IN PLACE
     between commit and recovery must NOT be replayed as the committed
     batch (that would fabricate the old batch from new bytes AND
@@ -934,7 +869,7 @@ def test_html_roster_replay_skips_rewritten_file_without_duplicating():
 
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "fabric1901.html")
-        shutil.copy("/root/reference/diplom/fabric1901.html", p)
+        shutil.copy(f"{generated_roster}/fabric1901.html", p)
         rdr = HtmlRosterSimpleStreamReader({"path": f"{d}/*.html"})
         rows1, end1 = rdr.read(rdr.initialOffset())
         n1 = len(list(rows1))
@@ -942,7 +877,7 @@ def test_html_roster_replay_skips_rewritten_file_without_duplicating():
 
         # rewrite in place (distinct mtime) BEFORE recovery replays
         _time.sleep(0.05)
-        shutil.copy("/root/reference/diplom/fabric1905.html", p)
+        shutil.copy(f"{generated_roster}/fabric1905.html", p)
         os.utime(p)
         with warnings.catch_warnings(record=True) as w:
             warnings.simplefilter("always")
@@ -952,10 +887,11 @@ def test_html_roster_replay_skips_rewritten_file_without_duplicating():
 
         # the new generation then arrives exactly once as its own batch
         rows2, end2 = rdr.read(end1)
-        n2 = len(list(rows2))
-        assert n2 > 0
+        rows2 = list(rows2)
+        with open(f"{generated_roster}/fabric1905.html", encoding="utf-8") as f:
+            assert rows2 == [(p, f.read())]
         # and that batch IS replayable (signature still matches)
-        assert len(rdr.readBetweenOffsets(end1, end2)) == n2
+        assert rdr.readBetweenOffsets(end1, end2) == rows2
 
 
 def test_stream_stream_semi_join_matches_batch(spark, sf_dir, events_stream):
