@@ -2,16 +2,10 @@ from .text import (
     standardize_text_py,
     standardize_text,
     clean_number,
-    canonicalize_person_name,
-    extract_date_phrase,
-    split_br_segments,
 )
 
 __all__ = [
     "standardize_text_py",
     "standardize_text",
     "clean_number",
-    "canonicalize_person_name",
-    "extract_date_phrase",
-    "split_br_segments",
 ]

@@ -1,12 +1,16 @@
 """Scalar text functions (SURVEY.md §2.3 F1-F8).
 
-Each function exists in two forms with identical semantics:
+``standardize_text`` and ``clean_number`` exist in two forms with
+identical semantics:
 
 * ``*_py``  -- plain-Python, used at import time to pre-standardize the
   reference dictionaries (mirroring populate_db_ru_v1.py:92-158) and inside
-  the personnel-parser UDF where per-row Python already runs.
+  the per-document roster pass where per-row Python already runs.
 * column form -- pure ``pyspark.sql.functions`` expression chain (the hot
   path: JVM-side, whole-stage-codegen, no UDF).
+
+The name canonicalization runs only inside the per-document pass, so it
+has only the Python form.
 
 Behavioral contract follows the reference's ``standardize_text``
 (populate_db_ru_v1.py:38-89), ``clean_number`` (:253-262) and the
@@ -16,7 +20,6 @@ forms agree on corpus-like inputs.
 
 from __future__ import annotations
 
-import html as _html
 import re
 
 from pyspark.sql import Column
@@ -197,64 +200,3 @@ def canonicalize_person_name_py(name: str | None) -> str | None:
     if surname and init_str:
         return f"{surname} {init_str}"
     return surname or init_str or None
-
-
-def canonicalize_person_name(col: Column) -> Column:
-    """Columnar form of F8 via higher-order array functions.
-
-    split -> split fused "а.б." initials -> partition initials vs surname
-    tokens -> array_sort initials -> "surname и.о.".  Initial-order
-    invariance (the reference sorts initials, :281) holds by construction.
-    """
-    std = standardize_text(col)
-    parts = F.split(std, " ")
-    flat = F.flatten(
-        F.transform(
-            parts,
-            lambda p: F.when(
-                p.rlike(r"^[а-яё]\.[а-яё]\.$"),
-                F.array(F.substring(p, 1, 2), F.substring(p, 3, 2)),
-            ).otherwise(F.array(p)),
-        )
-    )
-    is_initial = lambda p: p.rlike(r"^[а-яё]\.$") | p.rlike(r"^\p{L}\.$")  # noqa: E731
-    initials = F.array_sort(
-        F.transform(F.filter(flat, is_initial), lambda p: F.replace(p, F.lit("."), F.lit("")))
-    )
-    init_str = F.concat_ws("", F.transform(initials, lambda i: F.concat(i, F.lit("."))))
-    surname = F.concat_ws(" ", F.filter(flat, lambda p: ~is_initial(p)))
-    out = (
-        F.when((surname != "") & (init_str != ""), F.concat(surname, F.lit(" "), init_str))
-        .when(surname != "", surname)
-        .when(init_str != "", init_str)
-    )
-    return out
-
-
-# -- F4 <br> segmentation ---------------------------------------------------
-
-def split_br_segments(col: Column) -> Column:
-    """Split a personnel cell's inner HTML on ``<br>`` into an array of
-    assignment segments (contract: populate_db_ru_v1.py:308-311)."""
-    return F.split(col, r"(?i)<br\s*/?>")
-
-
-def unescape_html_py(s: str) -> str:
-    return _html.unescape(s)
-
-
-# -- F5 date-phrase extraction ----------------------------------------------
-
-DATE_PATTERN = r"(?:(съ|с|до|по)\s+(\d{1,2})\s+([а-яѣію]+(?:(?:\.|ъ|ь)\s*)?))"
-
-
-def extract_date_phrase(col: Column, kind: str) -> Column:
-    """Extract the first start ("съ|с") or end ("до|по") date phrase as
-    "prefix day month" with the month standardized (populate_db_ru_v1.py:381-393)."""
-    prefixes = ("съ", "с") if kind == "start" else ("до", "по")
-    pat = rf"(?:({prefixes[0]}|{prefixes[1]})\s+(\d{{1,2}})\s+([а-яѣію]+))"
-    prefix = F.regexp_extract(col, pat, 1)
-    day = F.regexp_extract(col, pat, 2)
-    month = standardize_text(F.regexp_replace(F.regexp_extract(col, pat, 3), r"[ .ьъ]+$", ""))
-    out = F.concat_ws(" ", prefix, day, month)
-    return F.when(prefix == "", F.lit(None)).otherwise(out)

@@ -40,8 +40,14 @@ from .materialize import materialize
 class NonConvergenceError(RuntimeError):
     """An iterative algorithm hit its round bound before reaching a fixed
     point.  Distinct from RuntimeError so callers (``assign_components``'s
-    ``auto`` path) can fall back on THIS specifically without masking
-    unrelated runtime failures (lost executors, OOM, bad input)."""
+    large-star fallback) can fall back on THIS specifically without
+    masking unrelated runtime failures (lost executors, OOM, bad input)."""
+
+
+# round budgets of the two components algorithms: min-label's covers the
+# diameter of any near-dup clique; large-star's O(log^2 n) covers any graph
+_MIN_LABEL_ROUNDS = 25
+_LARGE_STAR_ROUNDS = 20
 
 # -- portable 60-bit hash (cross-engine deterministic) -----------------------
 #
@@ -503,7 +509,7 @@ def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iters: int = 25,
+    max_iters: int = _MIN_LABEL_ROUNDS,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph: (node, component)
     where ``component`` is the smallest node id reachable from ``node``.
@@ -597,7 +603,7 @@ def connected_components_large_star(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iters: int = 20,
+    max_iters: int = _LARGE_STAR_ROUNDS,
 ) -> DataFrame:
     """Connected components via alternating Large-Star / Small-Star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -717,7 +723,6 @@ def ngram_cluster_assignments(
     k: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 1000,
-    **assign_kwargs,
 ) -> DataFrame:
     """Per-doc (id, component_id) from the n-gram-Jaccard closure, with
     the EXACT-DUP COLLAPSE in front of the pair join (the setsim/LSH
@@ -767,7 +772,7 @@ def ngram_cluster_assignments(
     )
     reps = tagged.filter(F.col(id_col) == F.col("_rep")).select(id_col, text_col)
     pairs = ngram_jaccard_pairs(reps, id_col, text_col, k=k, threshold=threshold, max_df=max_df)
-    rep_comp = assign_components(reps, pairs, id_col, **assign_kwargs).select(
+    rep_comp = assign_components(reps, pairs, id_col).select(
         F.col(id_col).alias("_rep"), "component_id"
     )
     members = (
@@ -785,9 +790,6 @@ def assign_components(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iters: int = 25,
-    broadcast_components: bool = False,
-    algorithm: str = "min_label",
 ) -> DataFrame:
     """Per-doc cluster assignment + canonical flag from near-dup pairs.
 
@@ -795,39 +797,30 @@ def assign_components(
     its duplicate cluster; itself when unpaired) and ``is_canonical``
     (True for exactly one doc per cluster — the keep decision).
 
-    ``algorithm``: ``"min_label"`` (rounds = diameter; the right default
-    for near-dup cliques), ``"large_star"`` (O(log^2 n) rounds, any
-    diameter), or ``"auto"`` — min-label first, falling back to
-    large-star if the diameter bound is exceeded instead of raising.
-    Both algorithms produce identical (node, min-id) labelings, so the
-    fallback changes cost, never results.  The fallback triggers ONLY on
-    ``NonConvergenceError`` (any other runtime failure propagates) and
-    runs large-star with ``max(max_iters, 20)`` rounds: the caller's
-    budget bounded DIAMETER rounds, while large-star needs O(log^2 n) —
-    a deliberately tight min-label budget (fast bail to the fallback)
-    must not also starve the fallback itself.
+    The components come from min-label propagation
+    (``connected_components``, ``_MIN_LABEL_ROUNDS`` rounds), the cheaper
+    algorithm on near-dup cliques whose diameter is 2-4.  When the pair
+    graph has a longer chain than that budget, min-label raises
+    ``NonConvergenceError`` and large-star/small-star
+    (``connected_components_large_star``, ``_LARGE_STAR_ROUNDS`` rounds,
+    O(log^2 n) on any diameter) runs instead.  Both produce the same
+    (node, min-id) labeling, so the fallback changes cost, never
+    results; any other runtime failure propagates.
 
-    Only paired docs appear in the components table, but "paired" can be
-    30%+ of a crawl corpus, so it is NOT hinted broadcast by default —
-    the components table is localCheckpoint'ed (so its size is known,
-    not estimated) and AQE picks broadcast vs shuffle from the REAL
-    size at runtime.  Pass ``broadcast_components=True`` only when the
-    dup-cluster set is known-small (e.g. after an aggressive threshold).
+    Runs eagerly: min-label's two barriers (symmetric edges, initial
+    labels), then per round one barrier plus one convergence ``sum``
+    job.  On the fallback, after min-label's whole budget, large-star's
+    two barriers (canonical edges, node universe), one node count for
+    the broadcast gate, one edge count, then per round one barrier, one
+    count and, when the count did not move, one ``exceptAll`` probe.  The returned frame's join
+    against ``docs`` is lazy; AQE picks broadcast or shuffle for it from
+    the components' runtime size.
     """
-    if algorithm == "large_star":
-        comp = connected_components_large_star(pairs, max_iters=max_iters)
-    elif algorithm == "auto":
-        try:
-            comp = connected_components(pairs, max_iters=max_iters)
-        except NonConvergenceError:
-            comp = connected_components_large_star(pairs, max_iters=max(max_iters, 20))
-    elif algorithm == "min_label":
-        comp = connected_components(pairs, max_iters=max_iters)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}: min_label | large_star | auto")
+    try:
+        comp = connected_components(pairs, max_iters=_MIN_LABEL_ROUNDS)
+    except NonConvergenceError:
+        comp = connected_components_large_star(pairs, max_iters=_LARGE_STAR_ROUNDS)
     comp = comp.withColumnRenamed("node", id_col)
-    if broadcast_components:
-        comp = F.broadcast(comp)
     out = docs.join(comp, id_col, "left")
     component = F.coalesce(F.col("component"), F.col(id_col))
     return out.select(

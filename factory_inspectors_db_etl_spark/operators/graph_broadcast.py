@@ -1,9 +1,12 @@
 """Size-gated small-side strategy for iterative graph joins.
 
-Every iterative graph operator in this repo (pagerank, label
-propagation, BFS, WCC, min-label components, assortativity, link
-prediction) joins a |V|-row per-node table (ranks / labels / minima /
-frontier) against an |E|-row edge list each round.  Broadcasting the
+The graph queries in ``plans/catalog_graph.py`` (pagerank, label
+propagation, BFS, assortativity, k-core, link prediction) and the
+large-star components in ``operators/dedup.py`` (g5_wcc and the
+dedup-closure fallback) join a |V|-row per-node table (ranks / labels /
+minima / frontier / alive set) against an |E|-row edge list.  Min-label
+components do not: their near-dup pair graphs are tiny, and the
+broadcast measured slower there.  Broadcasting the
 node table removes the edge-side exchange+sort per round — the r11 g1
 win — but an UNGATED broadcast would OOM the driver on billion-node
 graphs (VERDICT r11 item #4: "nothing automatically flips it").
@@ -23,7 +26,7 @@ This module centralizes the decision:
     to broadcast, the pre-r12 behavior.
 
 The gate bounds MONOTONE-GROWING tables too: g4's settled set and the
-WCC/min-label label tables are subsets of the node universe, so gating
+large-star per-node minima are subsets of the node universe, so gating
 on |V| once per query is a correct conservative bound for every round
 (ADVICE r11: the settled set approaches reachable-|V| by the last hop —
 |V| under the threshold means every round's broadcast is too).

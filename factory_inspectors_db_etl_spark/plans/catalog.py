@@ -59,6 +59,7 @@ from . import (
     catalog_ext7,
     catalog_ext8,
     catalog_ext9,
+    catalog_graph,
 )
 
 
@@ -3427,6 +3428,7 @@ _ALL = merge_registries(
     catalog_ext7.REGISTRY,
     catalog_ext8.REGISTRY,
     catalog_ext9.REGISTRY,
+    catalog_graph.REGISTRY,
 )
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     n: q for n, (q, _) in _ALL.items()

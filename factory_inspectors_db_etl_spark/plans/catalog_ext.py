@@ -1,8 +1,6 @@
 """Round-4/5 extension catalog: histogramming (equi-width + equi-depth),
 skew-salted / interval / fuzzy-blocked joins, canonical-doc selection,
-corpus LM scoring, group-wise model fitting, graph centrality and
-community detection (broadcast + shuffle join modes), exact heavy
-hitters, substring-window dedup, and stream-stream join batch twins.
+corpus LM scoring, group-wise model fitting, exact heavy hitters, substring-window dedup, and stream-stream join batch twins.
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle and
 the pair is registered in ``catalog.QUERIES`` / ``catalog.ORACLES``.
@@ -16,10 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.dedup import assign_components, ngram_jaccard_pairs, portable_hash60
-from ..operators.graph_broadcast import graph_small_side, resolve_graph_broadcast
+from ..operators.dedup import portable_hash60
 from ..operators.materialize import materialize
-from ..session import clamp_iterative_shuffle
 from ..operators import text_analysis as TA
 from ..sources.tables import load_table
 
@@ -391,290 +387,6 @@ SELECT event_type, n,
          AS intercept_cents
 FROM s
 """
-
-
-# ---------------------------------------------------------------------------
-# G1: integer-mass PageRank (deterministic fixed-point iteration)
-# ---------------------------------------------------------------------------
-
-_PR_ITERS = 5
-_PR_INIT = 1_000_000  # integer mass per node; 0.15 teleport = 150000
-
-
-@clamp_iterative_shuffle  # single-JVM per-round shuffle-mass guard (see session.py)
-def q_g1_pagerank(
-    spark: SparkSession, sf: str, broadcast_nodes: bool | None = None
-) -> DataFrame:
-    """G1: PageRank over the part co-purchase graph (parts are linked
-    when they appear in the same order) — the iterative-graph-algorithm
-    family (centrality, label propagation) expressed as pure joins+aggs.
-
-    Determinism: ranks are integer MASS, updates are integer division
-    (``mass div outdeg``, ``(85*in) div 100``), so every iteration is
-    exact and order-free — bit-identical in any engine, unlike float
-    PageRank whose contribution-sum order varies.  (Production float
-    variant: same plan, drop the divs.)
-
-    Plan per iteration: ranks (|V| rows, tiny vs |E|) broadcast onto the
-    edge list, one shuffle to sum incoming mass by dst, broadcast-join
-    back to the node list; edges are materialized ONCE and reused, ranks
-    re-materialized per round to keep the plan flat (iterative barrier).
-    Edge degree is bounded by lines-per-order (<=13 in TPC-H-ish data),
-    so pair generation can't blow up; unbounded baskets would need a
-    per-key cap first.
-
-    r11 (guide §2.4 "remove shuffles outright"): the rank table CARRIES
-    the (static) out-degree column instead of re-joining the degree
-    table every round — the per-round ranks⋈deg SMJ (two exchanges +
-    two sorts of |V| rows, 5x per query) is gone, contributions are a
-    projection of the checkpointed rank table; and the |V|-row
-    ``incoming`` aggregate rides ``graph_small_side`` on the update
-    join too, so in broadcast mode one round = ONE exchange (the
-    map-side-combined vote shuffle) instead of five.  Mass arithmetic
-    is unchanged — same integer updates against the same static degrees
-    — so g1/g1b outputs and oracles are untouched
-    (plans/r11/g1_pagerank_{before,after}.txt)."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
-    deg = materialize(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-    # r12 size gate (VERDICT r11 item #8): resolve the small-side
-    # strategy ONCE per query — deg is the materialized exact-|V| table,
-    # so the bound is one cheap checkpoint-count job; above
-    # spark.graft.graph.broadcast.maxRows the update joins fall back to
-    # shuffle automatically instead of relying on the conf alone
-    broadcast_nodes = resolve_graph_broadcast(spark, broadcast_nodes, deg.count)
-    ranks = deg.select(
-        F.col("src").alias("node"), "deg", F.lit(_PR_INIT).cast("long").alias("mass")
-    )
-    for _ in range(_PR_ITERS):
-        # per-NODE contribution is a projection (deg rides the rank
-        # table), then one broadcast onto the edge list — the per-edge
-        # work is a single hash lookup, not a division + second join
-        node_contrib = ranks.select(
-            F.col("node").alias("src"), F.expr("mass div deg").alias("contrib")
-        )
-        incoming = (
-            edges.join(graph_small_side(spark, node_contrib, broadcast_nodes), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("contrib").alias("inmass"))
-        )
-        ranks = materialize(
-            ranks.select("node", "deg")
-            .join(graph_small_side(spark, incoming, broadcast_nodes), "node", "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit(_PR_INIT * 15 // 100)
-                    + F.expr("(85 * coalesce(inmass, 0L)) div 100")
-                ).cast("long").alias("mass"),
-            ),
-            iterative=True,
-        )
-    return ranks.select(F.col("node").alias("part_id"), F.col("mass").alias("pagerank_mass"))
-
-
-def _gen_pagerank_oracle(iters: int = _PR_ITERS) -> str:
-    sql = f"""
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey <> b.l_partkey
-), deg AS (
-  SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1
-), r0 AS (
-  SELECT src AS node, CAST({_PR_INIT} AS BIGINT) AS mass FROM deg
-)"""
-    for i in range(1, iters + 1):
-        sql += f""",
-r{i} AS (
-  SELECT d.src AS node,
-         CAST({_PR_INIT * 15 // 100} + (85 * coalesce(s.inmass, 0)) // 100 AS BIGINT) AS mass
-  FROM deg d LEFT JOIN (
-    SELECT e.dst AS node, sum(r.mass // g.deg) AS inmass
-    FROM e JOIN r{i - 1} r ON e.src = r.node JOIN deg g ON g.src = e.src
-    GROUP BY 1
-  ) s ON s.node = d.src
-)"""
-    sql += f"\nSELECT node AS part_id, mass AS pagerank_mass FROM r{iters}"
-    return sql
-
-
-O_G1_PAGERANK = _gen_pagerank_oracle()
-
-
-# ---------------------------------------------------------------------------
-# G2: triangle counting
-# ---------------------------------------------------------------------------
-
-def q_g2_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
-    """G2: per-node triangle participation over the (urgent-order) part
-    co-purchase graph — the clustering-coefficient / community-density
-    primitive.  Standard canonical-orientation algorithm: edges stored
-    once as (u < v), wedges built by joining edges on the middle node
-    (only a<b<c survive by construction), closed against the edge list.
-
-    Scale posture: the wedge join is the quadratic term (sum of deg^2).
-    Here the graph is bounded by restricting to one order-priority class;
-    production graphs bound it the standard way — cap or split
-    high-degree nodes before wedge generation (the salting trick, J10,
-    applied to graphs).  Edges are materialized once and reused by all
-    three plan arms; joins are equi-joins on node ids, AQE-splittable."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    e1 = edges.select(F.col("u").alias("ta"), F.col("v").alias("tb"))
-    e2 = edges.select(F.col("u").alias("tb"), F.col("v").alias("tc"))
-    wedges = e1.join(e2, "tb")
-    tri = wedges.join(
-        edges.select(F.col("u").alias("ta"), F.col("v").alias("tc")), ["ta", "tc"]
-    )
-    return (
-        tri.select(F.explode(F.array("ta", "tb", "tc")).alias("part_id"))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-
-
-O_G2_TRIANGLES = """
-WITH li AS (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-), tri AS (
-  SELECT e1.u AS ta, e1.v AS tb, e2.v AS tc
-  FROM e e1
-  JOIN e e2 ON e2.u = e1.v
-  JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-)
-SELECT part_id, CAST(count(*) AS BIGINT) AS n_triangles
-FROM (
-  SELECT ta AS part_id FROM tri
-  UNION ALL SELECT tb FROM tri
-  UNION ALL SELECT tc FROM tri
-)
-GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# G3: synchronous label propagation (community detection)
-# ---------------------------------------------------------------------------
-
-_LPA_ITERS = 4
-
-
-@clamp_iterative_shuffle  # single-JVM per-round shuffle-mass guard (see session.py)
-def q_g3_label_propagation(
-    spark: SparkSession, sf: str, broadcast_nodes: bool | None = None
-) -> DataFrame:
-    """G3: community detection by SYNCHRONOUS label propagation
-    (Raghavan et al. '07) over the urgent-order co-purchase graph — the
-    third graph family next to centrality (g1) and triangles (g2), and
-    the cheap community pass real pipelines run before per-community
-    work.  Each round every node adopts the MODE of its neighbors'
-    labels; all-integer counts with (count DESC, label ASC) tie-break
-    make every round exact and order-free, and a FIXED iteration count
-    sidesteps sync-LPA's oscillation — deterministic in any engine, like
-    g1's integer masses.
-
-    Plan per round: labels (|V| rows) broadcast onto the edge list, one
-    shuffle to count (dst, label) votes, an argmin-struct partial agg
-    for the mode (map-side combined, no window), barriered per round.
-    The oracle unrolls the same rounds in SQL."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
-    labels = edges.select("src").distinct().select(
-        F.col("src").alias("node"), F.col("src").alias("label")
-    )
-    # r12 size gate: |V| <= |E| here (every node appears as src of the
-    # symmetric edge list), so the materialized edge count is a cheap
-    # conservative bound — above maxRows the per-round label join falls
-    # back to shuffle automatically (VERDICT r11 item #8)
-    broadcast_nodes = resolve_graph_broadcast(spark, broadcast_nodes, edges.count)
-    for _ in range(_LPA_ITERS):
-        votes = (
-            edges.join(graph_small_side(spark, labels, broadcast_nodes), edges["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node2"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        labels = materialize(
-            votes.groupBy(F.col("node2").alias("node"))
-            .agg(F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("label").alias("l"))).alias("_m"))
-            .select("node", F.col("_m.l").alias("label")),
-            iterative=True,
-        )
-    return labels.select(F.col("node").alias("part_id"), F.col("label").alias("community"))
-
-
-def _gen_lpa_oracle(iters: int = _LPA_ITERS) -> str:
-    sql = """
-WITH li AS (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey <> b.l_partkey
-), l0 AS (
-  SELECT DISTINCT src AS node, src AS label FROM e
-)"""
-    for i in range(1, iters + 1):
-        sql += f""",
-l{i} AS (
-  SELECT node, label FROM (
-    SELECT v.node, v.label,
-           row_number() OVER (PARTITION BY v.node ORDER BY v.cnt DESC, v.label ASC) AS rn
-    FROM (
-      SELECT e.dst AS node, r.label, count(*) AS cnt
-      FROM e JOIN l{i - 1} r ON e.src = r.node
-      GROUP BY 1, 2
-    ) v
-  ) WHERE rn = 1
-)"""
-    sql += f"\nSELECT node AS part_id, CAST(label AS BIGINT) AS community FROM l{iters}"
-    return sql
-
-
-O_G3_LPA = _gen_lpa_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1480,135 +1192,6 @@ FROM p LEFT JOIN v
 """
 
 
-def q_g1b_pagerank_shuffle(spark: SparkSession, sf: str) -> DataFrame:
-    """G1b: PageRank with the per-round |V|-row join as a SHUFFLE join
-    (``broadcast_nodes=False``, an explicit per-call parameter — no
-    session-conf mutation to race with concurrent plan builds) instead
-    of a broadcast — the mode for billion-node graphs where the rank
-    table itself no longer fits one executor.  Bit-identical output
-    (same integer-mass arithmetic, same oracle as g1); only the exchange
-    strategy flips, which tests/test_plan_shapes.py pins on both
-    modes."""
-    return q_g1_pagerank(spark, sf, broadcast_nodes=False)
-
-
-def q_g3b_label_prop_shuffle(spark: SparkSession, sf: str) -> DataFrame:
-    """G3b: label propagation in shuffle-join mode — see g1b."""
-    return q_g3_label_propagation(spark, sf, broadcast_nodes=False)
-
-
-# ---------------------------------------------------------------------------
-# G4: bounded-hop BFS (k-hop reachability / shortest hop distance)
-# ---------------------------------------------------------------------------
-
-_BFS_HOPS = 3
-_BFS_SEED_MOD = 100  # deterministic seed set: part ids divisible by 100
-
-
-def q_g4_khop_bfs(spark: SparkSession, sf: str) -> DataFrame:
-    """G4: minimum hop distance (<=3) from a deterministic seed set over
-    the part co-purchase graph — bounded-hop BFS, the reachability
-    member of the iterative-graph family (g1 centrality, g2 triangles,
-    g3 communities).
-
-    Textbook distributed BFS: per round, join the FRONTIER (nodes first
-    reached last round) onto the edge list, then anti-join against the
-    settled set so each node is expanded exactly once — the settled
-    table grows monotonically and every round is one equi-join + one
-    anti-join, both on the node key.  Joining the full distance table
-    instead of the frontier would be correct under min-merge but
-    re-expands every settled node every round.  Hop counts are exact
-    integers; the oracle is an INDEPENDENT algorithm (DuckDB recursive
-    CTE enumerating all paths <=3 then taking min), not a plan twin.
-    Frontier side is broadcast by default, conf-switchable to a shuffle
-    join (``spark.graft.graph.broadcast=false``) like g1/g3.
-    """
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    settled = materialize(
-        nodes.filter(F.col("node") % _BFS_SEED_MOD == 0).select(
-            "node", F.lit(0).cast("int").alias("hops")
-        ),
-        iterative=True,
-    )
-    # r12 size gate (VERDICT r11 item #8 + ADVICE r11 on the growing
-    # settled set): every per-round table here — frontier, settled — is
-    # a subset of the node universe, and |V| <= |E| on this symmetric
-    # edge list, so ONE cheap count of the materialized edges bounds
-    # every round's broadcast; above maxRows all rounds fall back to
-    # shuffle joins automatically.
-    bcast = resolve_graph_broadcast(spark, None, edges.count)
-    frontier = settled
-    for k in range(1, _BFS_HOPS + 1):
-        reached = (
-            edges.join(
-                graph_small_side(
-                    spark, frontier.select(F.col("node").alias("src")), bcast
-                ),
-                "src",
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        # r11: the settled set is |V|-bounded like the frontier — ride
-        # the same broadcast helper on the anti-join's build side so a
-        # round is one distinct-exchange, not distinct + SMJ anti
-        # (size-gated to shuffle for billion-node graphs).
-        new = materialize(
-            reached.join(
-                graph_small_side(spark, settled.select("node"), bcast),
-                "node",
-                "left_anti",
-            ).select("node", F.lit(k).cast("int").alias("hops")),
-            iterative=True,
-        )
-        settled = materialize(settled.unionByName(new), iterative=True)
-        frontier = new
-    return settled.select(F.col("node").alias("part_id"), "hops")
-
-
-def _gen_khop_oracle(hops: int = _BFS_HOPS) -> str:
-    """Level-wise min-merge BFS unrolled to SQL (like the g1/g3
-    generated oracles).  A recursive-CTE path enumeration is the more
-    independent check but enumerates ~seeds x degree^hops rows — at the
-    sf1 stress scale (avg co-purchase degree ~90) that is billions of
-    paths and the oracle itself becomes the bottleneck; the level-wise
-    form is bounded by one edge-list expansion per hop.  Algorithmic
-    independence is covered by the Python queue-BFS property test."""
-    sql = f"""
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-  FROM lineitem a JOIN lineitem b USING (l_orderkey)
-  WHERE a.l_partkey <> b.l_partkey
-), d0 AS (
-  SELECT node, 0 AS dist FROM (SELECT DISTINCT src AS node FROM e)
-  WHERE node % {_BFS_SEED_MOD} = 0
-)"""
-    for k in range(1, hops + 1):
-        sql += f""", d{k} AS (
-  SELECT node, min(dist) AS dist FROM (
-    SELECT node, dist FROM d{k - 1}
-    UNION ALL
-    SELECT e.dst AS node, d.dist + 1 AS dist
-    FROM d{k - 1} d JOIN e ON d.node = e.src
-  ) GROUP BY node
-)"""
-    sql += f"""
-SELECT node AS part_id, CAST(dist AS INTEGER) AS hops FROM d{hops}
-"""
-    return sql
-
-
-O_G4_KHOP = _gen_khop_oracle()
-
-
 REGISTRY = {
     "a10_histogram": (q_a10_histogram, O_A10_HISTOGRAM),
     "a12_equidepth_histogram": (q_a12_equidepth_histogram, O_A12_EQUIDEPTH),
@@ -1617,19 +1200,13 @@ REGISTRY = {
     "j12_fuzzy_blocked_join": (q_j12_fuzzy_blocked_join, O_J12_FUZZY),
     "j12b_deletion_join": (q_j12b_deletion_join, O_J12B_DELETION),
     "s13_stream_stream_left_outer": (q_s13_stream_stream_left_outer, O_S13_LEFT_OUTER),
-    "g1b_pagerank_shuffle": (q_g1b_pagerank_shuffle, O_G1_PAGERANK),
-    "g3b_label_prop_shuffle": (q_g3b_label_prop_shuffle, O_G3_LPA),
     "j10_salted_join": (q_j10_salted_join, O_J10_SALTED),
     "d_keep_best": (q_d_keep_best, O_D_KEEP_BEST),
     "t_unigram_lm": (q_t_unigram_lm, O_T_UNIGRAM_LM),
     "a11_groupwise_linreg": (q_a11_groupwise_linreg, O_A11_LINREG),
-    "g1_pagerank": (q_g1_pagerank, O_G1_PAGERANK),
-    "g2_triangle_count": (q_g2_triangle_count, O_G2_TRIANGLES),
     "w15_cumulative_distinct": (q_w15_cumulative_distinct, O_W15_CUM_DISTINCT),
     "t_bpe_train": (q_t_bpe_train, O_T_BPE_TRAIN),
     "j11_interval_overlap": (q_j11_interval_overlap, O_J11_INTERVAL_OVERLAP),
     "s2c_variant_extract": (q_s2c_variant_extract, O_S2C_VARIANT),
     "t_bpe_encode": (q_t_bpe_encode, O_T_BPE_ENCODE),
-    "g3_label_propagation": (q_g3_label_propagation, O_G3_LPA),
-    "g4_khop_bfs": (q_g4_khop_bfs, O_G4_KHOP),
 }

@@ -1,5 +1,4 @@
 """Round-6 catalog: TF-IDF-weighted cosine entity-resolution join,
-weakly-connected components at catalog level (large-star/small-star),
 a REAL PNG encode→decode round-trip, market-concentration (HHI),
 per-market RFM segmentation, session→calendar interval alignment,
 n-gram novelty scoring, deterministic exact-k reservoir sampling, and
@@ -28,7 +27,6 @@ from pyspark.sql import functions as F
 from ..operators import multimodal as MM
 from ..operators.allocation import fifo_allocate
 from ..operators.dedup import (
-    connected_components_large_star,
     materialize,
     normalize_for_shingling,
     shingles,
@@ -117,91 +115,6 @@ WITH grp AS MATERIALIZED (
 )
 SELECT * FROM cross_pairs UNION ALL SELECT * FROM self_pairs
 """
-
-
-# ---------------------------------------------------------------------------
-# G5: weakly connected components (large-star/small-star at catalog level)
-# ---------------------------------------------------------------------------
-
-
-def q_g5_wcc(spark: SparkSession, sf: str) -> DataFrame:
-    """G5: weakly-connected components over the urgent-order part
-    co-purchase graph, via the alternating Large-Star/Small-Star
-    algorithm (Kiveris SoCC'14) — the O(log² n)-round scale mode that
-    ``connected_components``'s diameter-bounded min-propagation is not
-    (the g1b lesson: the scale mode needs its own driver row).  Every
-    node gets its component's minimum part id.  The oracle replays the
-    closure with a recursive CTE, so the componentization itself is
-    value-checked."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("id_a"), F.col("b.l_partkey").alias("id_b"))
-        .distinct()
-    )
-    comp = connected_components_large_star(edges)
-    return comp.select(
-        F.col("node").alias("part_id"), F.col("component").alias("component")
-    )
-
-
-# level-wise unrolled min-label propagation, NOT a recursive transitive
-# closure: the urgent co-purchase graph is one near-giant component, so
-# a walk CTE materializes O(|component|²) rows (~3.6e8 at sf0.1,
-# infeasible at sf1) — the same oracle-is-the-bottleneck lesson as g4.
-# Each round joins the label table against the symmetric edge list once;
-# _G5_ROUNDS=16 covers any plausible diameter of a dense co-purchase
-# graph (measured convergence is ~4-6 rounds), and an insufficient round
-# count cannot pass silently: Spark computes the true fixed point, so
-# the hashes would mismatch.  Every CTE is MATERIALIZED: each round
-# references its predecessor twice, and DuckDB's default inlining would
-# re-expand the whole chain 2^rounds times (measured: "too many open
-# files" at round 16 — g4 survives only because it unrolls 3).
-_G5_ROUNDS = 16
-
-
-def _gen_wcc_oracle(rounds: int = _G5_ROUNDS) -> str:
-    sql = """
-WITH li AS MATERIALIZED (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-), edges AS MATERIALIZED (
-  SELECT u, v FROM e0
-  UNION
-  SELECT v AS u, u AS v FROM e0
-), r0 AS MATERIALIZED (
-  SELECT DISTINCT u AS node, u AS lab FROM edges
-)"""
-    for i in range(1, rounds + 1):
-        sql += f""",
-r{i} AS MATERIALIZED (
-  SELECT r.node, least(r.lab, coalesce(m.ml, r.lab)) AS lab
-  FROM r{i - 1} r LEFT JOIN (
-    SELECT e.u AS node, min(p.lab) AS ml
-    FROM edges e JOIN r{i - 1} p ON p.node = e.v
-    GROUP BY 1
-  ) m ON m.node = r.node
-)"""
-    sql += f"\nSELECT node AS part_id, lab AS component FROM r{rounds}"
-    return sql
-
-
-O_G5_WCC = _gen_wcc_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -982,100 +895,6 @@ FROM w WHERE event_type = 'purchase'
 
 
 # ---------------------------------------------------------------------------
-# G6: local clustering coefficient (triangles / possible wedges per node)
-# ---------------------------------------------------------------------------
-
-
-def q_g6_clustering_coeff(spark: SparkSession, sf: str) -> DataFrame:
-    """G6: local clustering coefficient over the urgent co-purchase
-    graph — coeff(v) = 2·T(v) / (d(v)·(d(v)−1)), the community-density
-    metric g2's raw triangle counts feed.  Same canonical-orientation
-    triangle enumeration as g2 (edges stored once as u<v, wedge join on
-    the middle node); degree from the symmetric edge list; the headline
-    is the EXACT integer ``coeff_e6 = (2T·10⁶) div (d(d−1))`` (the a22
-    int128→double lesson) with the display double derived from it.
-    Nodes with d < 2 report coefficient 0."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    deg = (
-        edges.select(F.col("u").alias("part_id"))
-        .unionAll(edges.select(F.col("v").alias("part_id")))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
-    e1 = edges.select(F.col("u").alias("ta"), F.col("v").alias("tb"))
-    e2 = edges.select(F.col("u").alias("tb"), F.col("v").alias("tc"))
-    tri = (
-        e1.join(e2, "tb")
-        .join(edges.select(F.col("u").alias("ta"), F.col("v").alias("tc")), ["ta", "tc"])
-        .select(F.explode(F.array("ta", "tb", "tc")).alias("part_id"))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    out = deg.join(tri, "part_id", "left").fillna(0, subset=["n_triangles"])
-    coeff_e6 = F.expr(
-        "CASE WHEN degree < 2 THEN CAST(0 AS BIGINT) "
-        "ELSE CAST((2 * n_triangles * 1000000) div (degree * (degree - 1)) AS BIGINT) END"
-    )
-    return out.select(
-        "part_id",
-        "degree",
-        "n_triangles",
-        coeff_e6.alias("coeff_e6"),
-    ).withColumn("clustering_coeff", F.col("coeff_e6").cast("double") / F.lit(1.0e6))
-
-
-O_G6_CLUSTERING = """
-WITH li AS MATERIALIZED (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-), deg AS (
-  SELECT part_id, CAST(count(*) AS BIGINT) AS degree
-  FROM (SELECT u AS part_id FROM e UNION ALL SELECT v FROM e)
-  GROUP BY 1
-), tri AS (
-  SELECT part_id, CAST(count(*) AS BIGINT) AS n_triangles
-  FROM (
-    SELECT unnest([e1.u, e1.v, e2.v]) AS part_id
-    FROM e e1
-    JOIN e e2 ON e2.u = e1.v
-    JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-  )
-  GROUP BY 1
-)
-SELECT d.part_id, d.degree,
-       CAST(COALESCE(t.n_triangles, 0) AS BIGINT) AS n_triangles,
-       CAST(CASE WHEN d.degree < 2 THEN 0
-                 ELSE (2 * COALESCE(t.n_triangles, 0) * 1000000)
-                      // (d.degree * (d.degree - 1)) END AS BIGINT) AS coeff_e6,
-       CAST(CASE WHEN d.degree < 2 THEN 0
-                 ELSE (2 * COALESCE(t.n_triangles, 0) * 1000000)
-                      // (d.degree * (d.degree - 1)) END AS DOUBLE) / 1e6
-         AS clustering_coeff
-FROM deg d LEFT JOIN tri t USING (part_id)
-"""
-
-
-# ---------------------------------------------------------------------------
 # P-TS: temporal train/test split with cold-start labeling
 # ---------------------------------------------------------------------------
 
@@ -1691,7 +1510,6 @@ HAVING count(DISTINCT o_orderpriority) = kk
 
 REGISTRY = {
     "j16_tfidf_cosine_join": (q_j16_tfidf_cosine_join, O_J16),
-    "g5_wcc": (q_g5_wcc, O_G5_WCC),
     "m_png_decode": (q_m_png_decode, O_M_PNG),
     "a22_hhi_concentration": (q_a22_hhi_concentration, O_A22_HHI),
     "w28_rfm_segmentation": (q_w28_rfm_segmentation, O_W28_RFM),
@@ -1704,7 +1522,6 @@ REGISTRY = {
     "m_wav_energy": (q_m_wav_energy, O_M_WAV),
     "t_vocab_growth": (q_t_vocab_growth, O_T_VOCAB_GROWTH),
     "w29_last_touch_attribution": (q_w29_last_touch_attribution, O_W29_ATTRIBUTION),
-    "g6_clustering_coeff": (q_g6_clustering_coeff, O_G6_CLUSTERING),
     "p_temporal_split": (q_p_temporal_split, O_P_TEMPORAL_SPLIT),
     "j23_incremental_join_view": (q_j23_incremental_join_view, O_J23_INC_VIEW),
     "a24_percentile_rank": (q_a24_percentile_rank, O_A24_PCT_RANK),

@@ -1,7 +1,7 @@
-"""Round-8 catalog: four classic analytics shapes absent until now —
+"""Round-8 catalog: three classic analytics shapes absent until now —
 life-table survival (Kaplan-Meier with administrative censoring),
-two-sample Kolmogorov-Smirnov drift detection, Zipf-law exponent fit,
-and graph degree assortativity.
+two-sample Kolmogorov-Smirnov drift detection and Zipf-law exponent
+fit — plus the linear SemDeDup form (auto-k, LSH-pruned assignment).
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle in
 ``catalog.ORACLES`` and the pair sits inside the driver's 50-key window
@@ -12,7 +12,7 @@ is unavoidable (Zipf's logs) it is snapped to fixed-point integers
 immediately so every downstream sum/product is exact.
 
 Reference parity: the reference repo (populate_db_ru_v1.py) has no
-survival/drift/Zipf/graph path — this module extends the engine's
+survival/drift/Zipf path — this module extends the engine's
 analytics surface beyond the reference (SURVEY.md §2 additions).
 """
 
@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.graph_broadcast import graph_small_side, resolve_graph_broadcast
-from ..operators.materialize import materialize
 from ..sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -399,146 +397,6 @@ FROM s
 
 
 # ---------------------------------------------------------------------------
-# G7: degree assortativity (Newman '02) over the co-purchase graph
-# ---------------------------------------------------------------------------
-
-
-def q_g7_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
-    """G7: DEGREE ASSORTATIVITY (Newman '02, Phys Rev Lett 89) of the
-    urgent-order part co-purchase graph — the Pearson correlation of
-    degrees across edge endpoints, the standard one-number summary of
-    whether hubs link to hubs (r>0, social-like) or to leaves (r<0,
-    technological/dependency-like).  Uses the same canonical u<v edge
-    set as g2_triangle_count (catalog_ext.py:508).
-
-    Undirected handling: each edge contributes BOTH ordered stubs
-    (deg_u, deg_v) and (deg_v, deg_u), the textbook symmetrization, so
-    sx=sy and sxx=syy by construction and r reduces to one integer
-    ratio: r = (n*sxy - sx*sy) / (n*sxx - sx*sx) — exact integer moments
-    with one trailing IEEE division.  The moment SUMS fit BIGINT at any
-    realistic scale (sum <= n*max_deg^2: 3.5e10 at sf1, measured), but
-    the final n*sxy / sx*sy products grow ~n^2, so they are computed in
-    DECIMAL(38,0) (Spark) / HUGEINT (DuckDB) — exact to 1e38, then one
-    cast to double; both engines convert the identical integer to the
-    identical nearest double.
-
-    Scale (r11 rewrite — guide §2.3/§2.4 "shuffle fewer bytes / remove
-    shuffles outright"): three of the five stub moments are pure
-    functions of the DEGREE TABLE alone — n = Σdeg (every node appears
-    in deg(v) stubs), sx = sy = Σdeg² (each edge contributes its
-    endpoints' degrees once per orientation), sxx = syy = Σdeg³ — so
-    they are ONE aggregation over the |V|-row degree table with no edge
-    join at all.  Only the cross-moment sxy = 2·Σ_edges deg_u·deg_v
-    genuinely needs degrees attached to edges; that attachment
-    broadcasts the |V|-row degree table onto the edge list
-    (conf-switchable to a shuffle join for billion-node graphs via
-    ``spark.graft.graph.broadcast``, the g1/g3 pattern).  The pre-r11
-    form materialized the stub union of the doubly-joined edge list —
-    Spark computed the two-SMJ attach subtree TWICE (once per union
-    branch) and the degree aggregation FOUR times (24 exchanges at
-    sf0.01, plans/r11/g7_degree_assortativity_before.txt); this form is
-    3 exchanges and never shuffles the edge list.  Moment values are
-    the identical integers (same longs, same decimal(38,0) products,
-    same one trailing IEEE division) — the oracle is unchanged."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    deg = materialize(
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    # degree-table moments: n = Σdeg (stub count), sx = Σdeg², sxx = Σdeg³
-    # — the same longs the stub enumeration summed, one |V|-row pass.
-    # coalesce(n, 0) pins the empty-graph case to the stub-count
-    # semantics (count over zero stubs = 0, not NULL).
-    s = deg.agg(
-        F.coalesce(F.sum("deg"), F.lit(0).cast("long")).alias("n"),
-        F.sum(F.col("deg") * F.col("deg")).alias("sx"),
-        F.sum(F.col("deg") * F.col("deg") * F.col("deg")).alias("sxx"),
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v"))
-    # r12 size gate: deg is the materialized exact-|V| table — one cheap
-    # checkpoint-count bounds both attach joins (VERDICT r11 item #8)
-    bcast = resolve_graph_broadcast(spark, None, deg.count)
-    sxy_row = (
-        edges.join(graph_small_side(spark, du, bcast), "u")
-        .join(graph_small_side(spark, dv, bcast), "v")
-        .agg((F.lit(2) * F.sum(F.col("deg_u") * F.col("deg_v"))).alias("sxy"))
-    )
-    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    num = dec("n") * dec("sxy") - dec("sx") * dec("sx")
-    den = dec("n") * dec("sxx") - dec("sx") * dec("sx")
-    # Degenerate-graph guard (r8 ADVICE): on a REGULAR graph every stub
-    # degree is equal, so den = n*sxx - sx² = 0 and the correlation is
-    # undefined — Spark's double 0/0 yields NaN while DuckDB's behavior
-    # is version/setting-dependent, so both engines pin the case to NULL
-    # via NULLIF instead of relying on either's division semantics.
-    return s.crossJoin(F.broadcast(sxy_row)).select(
-        (F.col("n") / 2).cast("long").alias("n_edges"),
-        "n_nodes",
-        (F.col("n").cast("double") / F.col("n_nodes").cast("double")).alias(
-            "mean_degree"
-        ),
-        (
-            num.cast("double")
-            / F.when(den != 0, den).otherwise(F.lit(None)).cast("double")
-        ).alias("assortativity"),
-    )
-
-
-O_G7_ASSORTATIVITY = """
-WITH li AS (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-), deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg
-  FROM (SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-  GROUP BY node
-), ed AS (
-  SELECT du.deg AS deg_u, dv.deg AS deg_v
-  FROM e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
-), stubs AS (
-  SELECT deg_u AS x, deg_v AS y FROM ed
-  UNION ALL SELECT deg_v, deg_u FROM ed
-), s AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM stubs
-), nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg)
-SELECT CAST(n / 2 AS BIGINT) AS n_edges, n_nodes,
-       CAST(n AS DOUBLE) / CAST(n_nodes AS DOUBLE) AS mean_degree,
-       CAST(CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-         / CAST(nullif(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx, 0) AS DOUBLE)
-         AS assortativity
-FROM s, nn
-"""
-
-
-# ---------------------------------------------------------------------------
 # M6 dedup: SemDeDup auto-k with LSH-pruned assignment — the linear form
 # ---------------------------------------------------------------------------
 
@@ -649,144 +507,9 @@ WHERE u.rn = 1
 O_D_SEMANTIC_DEDUP_LSHASSIGN = _gen_semantic_lsh_oracle()
 
 
-# ---------------------------------------------------------------------------
-# G8: k-core extraction (iterative peeling, fixed-round form)
-# ---------------------------------------------------------------------------
-
-_KCORE_K = 8  # minimum in-core degree
-_KCORE_ROUNDS = 6  # fixed peels; fixpoint measured at <=4 for sf0.01..sf1
-
-
-def q_g8_kcore(spark: SparkSession, sf: str) -> DataFrame:
-    """G8: K-CORE extraction (Seidman '83) of the urgent-order
-    co-purchase graph — the classic cohesive-subgraph/graph-pruning
-    primitive (every surviving node has >= k neighbors that also
-    survive), computed by iterative peeling: drop nodes with degree < k,
-    re-filter edges to surviving endpoints, repeat.  Completes the graph
-    family next to pagerank/triangles/label-prop/k-hop/wcc/clustering/
-    assortativity.
-
-    FIXED-ROUND form: exactly ``_KCORE_ROUNDS`` peels, not
-    loop-until-fixpoint.  Peeling is monotone (once converged, further
-    rounds are no-ops), the fixpoint was MEASURED at <= 4 rounds for
-    k=8 on sf0.01/sf0.1/sf1 (6 gives margin), and a fixed round count
-    makes the query (a) driver-action-free — no per-round convergence
-    .count() on the driver, unlike the wcc loop — and (b) exactly
-    replayable as an unrolled SQL CTE chain, so the oracle needs no
-    recursion.  A production run on an unknown graph loops to
-    fixpoint with the same per-round plan.
-
-    Plan per round: one map-side-combinable degree aggregation over the
-    edge stubs + two equi-joins filtering edges to surviving endpoints
-    (the alive set is far smaller than the edge list — broadcastable
-    here, AQE-shuffle at 100 TB).  Edges are materialized once and
-    every round's output feeds the next, so the whole peel is one
-    linear pipeline with no driver round-trips."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    cur = edges
-    # r12: the |V|-bounded alive set rides the size-gated graph
-    # broadcast (the g1 pattern) — pins what the docstring previously
-    # left to AQE, so a round's only edge-scale exchange is the
-    # map-side-combined degree aggregation.  On this oriented edge list
-    # |V| can reach 2|E| (a matching), so the gate's bound is twice one
-    # cheap count of the materialized edges
-    bcast = resolve_graph_broadcast(spark, None, lambda: 2 * edges.count())
-    for _ in range(_KCORE_ROUNDS):
-        deg = (
-            cur.select(F.col("u").alias("node"))
-            .unionAll(cur.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("_d"))
-        )
-        alive = deg.filter(F.col("_d") >= _KCORE_K).select("node")
-        # materialize per round: each round reads `cur` TWICE (degree agg
-        # + edge filter), so without a barrier the lineage doubles every
-        # round — 2^R copies of the base scan in one Catalyst tree (found
-        # the hard way: the unmaterialized 6-round plan stalled the
-        # optimizer).  The barrier keeps every round's plan constant-size,
-        # exactly the g5_wcc iteration discipline.
-        cur = materialize(
-            cur.join(
-                graph_small_side(spark, alive.withColumnRenamed("node", "u"), bcast), "u"
-            )
-            .join(
-                graph_small_side(spark, alive.withColumnRenamed("node", "v"), bcast), "v"
-            )
-            .select("u", "v")
-        )
-    core_deg = (
-        cur.select(F.col("u").alias("node"))
-        .unionAll(cur.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-    )
-    return core_deg.select("node", "core_degree")
-
-
-def _gen_kcore_oracle() -> str:
-    # every e{{i}} is referenced TWICE by round i+1 (degree agg + edge
-    # filter): default inlined CTEs would expand 2^R copies of the base
-    # scan (measured: fd exhaustion at R=6) — MATERIALIZED pins each
-    # round to evaluate once, mirroring the Spark side's per-round
-    # materialize() barrier
-    rounds = []
-    prev = "e0"
-    for i in range(1, _KCORE_ROUNDS + 1):
-        rounds.append(
-            f"""a{i} AS MATERIALIZED (
-  SELECT node FROM (
-    SELECT node, count(*) AS c
-    FROM (SELECT u AS node FROM {prev} UNION ALL SELECT v FROM {prev})
-    GROUP BY node)
-  WHERE c >= {_KCORE_K}
-), e{i} AS MATERIALIZED (
-  SELECT e.u, e.v FROM {prev} e
-  JOIN a{i} x ON x.node = e.u
-  JOIN a{i} y ON y.node = e.v
-)"""
-        )
-        prev = f"e{i}"
-    chain = ",\n".join(rounds)
-    return f"""
-WITH li AS (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-),
-{chain}
-SELECT node, CAST(count(*) AS BIGINT) AS core_degree
-FROM (SELECT u AS node FROM {prev} UNION ALL SELECT v FROM {prev})
-GROUP BY node
-"""
-
-
-O_G8_KCORE = _gen_kcore_oracle()
-
-
 REGISTRY = {
     "w34_survival_curve": (q_w34_survival_curve, O_W34_SURVIVAL),
     "p_ks_drift": (q_p_ks_drift, O_P_KS_DRIFT),
     "t_zipf_fit": (q_t_zipf_fit, O_T_ZIPF),
-    "g7_degree_assortativity": (q_g7_degree_assortativity, O_G7_ASSORTATIVITY),
     "d_semantic_dedup_lshassign": (q_d_semantic_dedup_lshassign, O_D_SEMANTIC_DEDUP_LSHASSIGN),
-    "g8_kcore": (q_g8_kcore, O_G8_KCORE),
 }

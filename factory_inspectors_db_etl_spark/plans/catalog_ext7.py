@@ -1,7 +1,7 @@
-"""Round-9 catalog: six analytics/curation shapes new this round —
+"""Round-9 catalog: five analytics/curation shapes new this round —
 CUSUM change-point detection, linear-interpolation as-of join, Shannon
-entropy profiling, bottom-k (KMV) distinct sketches, Flesch readability
-scoring, and common-neighbor/Adamic-Adar link prediction.
+entropy profiling, bottom-k (KMV) distinct sketches and Flesch
+readability scoring.
 
 Same contract as ``plans.catalog``: every query here has a DuckDB
 oracle and sits inside the driver's 50-key window for round 9.
@@ -13,7 +13,7 @@ downstream sum/product is exact; wide products that could outgrow
 BIGINT at 100 TB run in DECIMAL(38,0) / HUGEINT (the g7 discipline).
 
 Reference parity: the reference repo (populate_db_ru_v1.py) has no
-drift/interpolation/entropy/sketch/readability/graph path — this module
+drift/interpolation/entropy/sketch/readability path — this module
 extends the engine's analytics surface beyond the reference
 (SURVEY.md §2 additions).
 """
@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash60
-from ..operators.graph_broadcast import graph_small_side, resolve_graph_broadcast
 from ..operators.materialize import materialize
 from ..sources.tables import load_table
 
@@ -564,149 +563,10 @@ FROM f
 """
 
 
-# ---------------------------------------------------------------------------
-# G9: common-neighbor / Adamic-Adar link prediction (graph family)
-# ---------------------------------------------------------------------------
-
-_G9_MAX_HUB_DEG = 64  # exclude hub intermediates: candidate volume = n*cap^2
-_G9_TOP = 50
-
-
-def q_g9_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
-    """G9: LINK PREDICTION over the urgent-order co-purchase graph —
-    score NON-adjacent node pairs by common-neighbor count and
-    Adamic-Adar (sum over shared neighbors w of 1/ln(deg_w);
-    Adamic & Adar '03, Liben-Nowell & Kleinberg '03), the classic
-    "which edge forms next" primitive; same canonical u<v edge set as
-    g2/g7/g8.
-
-    Hub exclusion: intermediates with degree > ``_G9_MAX_HUB_DEG``
-    generate no candidate pairs, bounding candidate volume at n*cap²
-    instead of the n*max_deg² blowup — the standard scale mitigation
-    (it biases AA low on hub-mediated pairs, documented; production
-    tunes the cap).  deg_w >= 2 holds by construction for any shared
-    neighbor, so ln(deg_w) > 0 and the AA term divides safely.
-
-    Cross-engine exactness: per-intermediate AA contributions snap to
-    fixed-point BIGINTs (round(1e6/ln(deg_w)) — the t_zipf ln
-    discipline), so pair scores are exact integer sums with one
-    trailing division; the top-50 cut orders by (cn, aa, u, v) — a
-    total order, so the SET is deterministic and the driver's
-    order-insensitive hash matches.
-
-    Scale: degree table is one map-side count; candidate generation is
-    an equi-join of the adjacency list with itself ON the intermediate
-    (shuffle keyed by w, bounded by the cap); the existing-edge
-    anti-join and the final top-k (TakeOrdered, no global window) are
-    standard."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    adj = edges.select(F.col("u").alias("w"), F.col("v").alias("x")).unionAll(
-        edges.select(F.col("v").alias("w"), F.col("u").alias("x"))
-    )
-    deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    mid = deg.filter((F.col("deg") >= 2) & (F.col("deg") <= _G9_MAX_HUB_DEG))
-    aa_w = F.round(F.lit(1_000_000.0) / F.log(F.col("deg").cast("double"))).cast(
-        "long"
-    )
-    # r11: the |V|-row filtered-degree table rides graph_small_side
-    # (broadcast by default, conf-switchable to a shuffle join via
-    # spark.graft.graph.broadcast) — the pre-r11 plan SMJ-joined adj
-    # against mid and, because adj_mid feeds both wedge sides, ran that
-    # SMJ subtree TWICE; the broadcast leaves the adjacency unshuffled
-    # until the wedge join itself (12 -> 8 exchanges, 4 -> 2 SMJ: only
-    # the wedge self-join and the existing-edge anti-join still shuffle,
-    # plans/r11/g9_link_prediction_{before,after}.txt).  A
-    # collect_list-and-explode wedge form (one adj shuffle) was measured
-    # SLOWER at sf0.1 — ObjectHashAggregate + Generate leave whole-stage
-    # codegen (isolated 3.2s -> 5.2s), so the codegen self-join stays.
-    # r12 size gate: mid is a deg-filtered subset of V, and |V| can reach
-    # 2|E| on this oriented edge list, so twice the materialized edge
-    # count bounds it (VERDICT r11 item #8)
-    bcast = resolve_graph_broadcast(spark, None, lambda: 2 * edges.count())
-    adj_mid = adj.join(graph_small_side(spark, mid, bcast), "w").select(
-        "w", "x", aa_w.alias("aa")
-    )
-    p1 = adj_mid.select("w", F.col("x").alias("u"), "aa")
-    p2 = adj_mid.select("w", F.col("x").alias("v"))
-    cand = p1.join(p2, "w").filter(F.col("u") < F.col("v"))
-    # aggregate BEFORE the existing-edge anti-join: the wedge stream is
-    # the big intermediate (139M rows at sf1 — measured exactly 10x the
-    # sf0.1 volume) and groupBy gets a map-side partial combine, so the
-    # (u,v) shuffle carries combined pair scores, not raw wedges; the
-    # anti-join then runs on the far smaller distinct-pair set.  The
-    # filter commutes with the aggregation (both key on (u,v)).
-    scored_all = cand.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("cn"),
-        F.sum("aa").cast("long").alias("aa_scaled"),
-    )
-    scored = scored_all.join(edges, ["u", "v"], "left_anti")
-    top = scored.orderBy(
-        F.col("cn").desc(), F.col("aa_scaled").desc(), F.col("u").asc(), F.col("v").asc()
-    ).limit(_G9_TOP)
-    return top.select(
-        "u",
-        "v",
-        "cn",
-        (F.col("aa_scaled").cast("double") / F.lit(1_000_000.0)).alias("adamic_adar"),
-    )
-
-
-O_G9_LINK_PREDICTION = f"""
-WITH li AS (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-), adj AS (
-  SELECT u AS w, v AS x FROM e UNION ALL SELECT v, u FROM e
-), deg AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY w
-), mid AS (
-  SELECT w, CAST(round(1000000.0 / ln(deg)) AS BIGINT) AS aa
-  FROM deg WHERE deg >= 2 AND deg <= {_G9_MAX_HUB_DEG}
-), am AS (
-  SELECT adj.w, adj.x, mid.aa FROM adj JOIN mid USING (w)
-), cand AS (
-  SELECT p1.w, p1.x AS u, p2.x AS v, p1.aa
-  FROM am p1 JOIN am p2 ON p1.w = p2.w
-  WHERE p1.x < p2.x
-), ne AS (
-  SELECT c.u, c.v, c.w, c.aa FROM cand c
-  WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.u = c.u AND e.v = c.v)
-), scored AS (
-  SELECT u, v, CAST(count(*) AS BIGINT) AS cn, CAST(sum(aa) AS BIGINT) AS aa_scaled
-  FROM ne GROUP BY u, v
-)
-SELECT u, v, cn, CAST(aa_scaled AS DOUBLE) / 1000000.0 AS adamic_adar
-FROM scored
-ORDER BY cn DESC, aa_scaled DESC, u ASC, v ASC
-LIMIT {_G9_TOP}
-"""
-
-
 REGISTRY = {
     "w35_changepoint": (q_w35_changepoint, O_W35_CHANGEPOINT),
     "j24_interp_join": (q_j24_interp_join, O_J24_INTERP),
     "a26_entropy": (q_a26_entropy, O_A26_ENTROPY),
     "a27_bottomk_distinct": (q_a27_bottomk_distinct, O_A27_BOTTOMK),
     "t_readability": (q_t_readability, O_T_READABILITY),
-    "g9_link_prediction": (q_g9_link_prediction, O_G9_LINK_PREDICTION),
 }

@@ -1,13 +1,12 @@
-"""Catalog extension: g10_neighbor_jaccard, t_mattr, t_rake_keyphrases,
-t_lm_perplexity and m_bmp_decode.  g10's common-neighbor count is
-degree-ordered (VERDICT r9 item #2 — see its docstring).
+"""Catalog extension: t_mattr, t_rake_keyphrases, t_lm_perplexity and
+m_bmp_decode.
 
 Same determinism discipline as plans.catalog (exact integers, one
 trailing IEEE division, ln snapped to fixed point, NULLIF on every
 degenerate divisor).
 
 Reference parity: the reference repo (populate_db_ru_v1.py) has no
-graph-similarity / lexical-diversity / keyphrase path — these extend
+lexical-diversity / keyphrase path — these extend
 the engine's analytics surface beyond the reference (SURVEY.md §2).
 """
 
@@ -18,161 +17,6 @@ from pyspark.sql import functions as F
 
 from ..operators.materialize import materialize
 from ..sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# G10: neighbor-Jaccard edge similarity (graph family)
-# ---------------------------------------------------------------------------
-
-
-def q_g10_neighbor_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    """G10: NEIGHBOR-JACCARD similarity per EDGE of the urgent-order
-    co-purchase graph — |N(u)∩N(v)| / |N(u)∪N(v)| over the endpoints'
-    neighbor sets (excluding the endpoints themselves), the classic
-    edge-strength/tie-strength feature (Granovetter-style weak-tie
-    analysis; also the embeddedness feature in link-strength models).
-    Complements g9: g9 scores NON-edges (what forms next), this scores
-    EXISTING edges (how embedded each tie is).
-
-    With deg taken over the canonical u<v edge set: the intersection is
-    the edge's triangle count (common neighbors w); |N(u)\\{v}| =
-    deg_u−1, |N(v)\\{u}| = deg_v−1, so union = (deg_u−1)+(deg_v−1)−∩.
-    All exact BIGINTs, ONE trailing division; an isolated edge (both
-    degrees 1) has union 0 — undefined similarity, NULLIF-pinned NULL.
-
-    Scale: degree table is one map-side count; the common-neighbor
-    count per edge is the edge's TRIANGLE count, so it runs as
-    DEGREE-ORDERED triangle enumeration (the g2 family's orientation,
-    sharpened): orient every edge from its lower-(deg, id) endpoint to
-    the higher, build wedges only between OUT-neighbors of the shared
-    low vertex, close against the edge list, then explode each
-    triangle (found exactly once, from its minimum-rank vertex) into
-    its three edges and count.  Candidate volume is Σ outdeg(a)² —
-    outdeg under this orientation is O(√E), so the wedge stream is
-    O(E^1.5) regardless of hub skew, EXACT with no cap or bias
-    (VERDICT r9 item 2: the raw Σ deg(w)² self-join this replaces was
-    the scale-killer on skewed graphs; the r9 sweep measured it at
-    8.27× per 10× data)."""
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    urgent = (
-        load_table(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    li = li.join(urgent, li["l_orderkey"] == urgent["o_orderkey"]).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = materialize(
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    adj = edges.select(F.col("u").alias("w"), F.col("v").alias("x")).unionAll(
-        edges.select(F.col("v").alias("w"), F.col("u").alias("x"))
-    )
-    deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    du = deg.select(F.col("w").alias("u"), F.col("deg").alias("deg_u"))
-    dv = deg.select(F.col("w").alias("v"), F.col("deg").alias("deg_v"))
-    # degree-ordered orientation: each edge points low-(deg, id) ->
-    # high-(deg, id).  Every triangle then has exactly ONE vertex with
-    # two out-edges (its minimum-rank vertex), so joining the oriented
-    # adjacency with itself on that shared tail enumerates each
-    # triangle exactly once, and outdeg <= O(sqrt(E)) bounds the wedge
-    # stream at O(E^1.5) even under hub skew — no cap, no bias.
-    ed = materialize(edges.join(du, "u").join(dv, "v"))
-    u_first = (F.col("deg_u") < F.col("deg_v")) | (
-        (F.col("deg_u") == F.col("deg_v")) & (F.col("u") < F.col("v"))
-    )
-    oadj = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    )
-    o1 = oadj.select("a", F.col("b").alias("x1"))
-    o2 = oadj.select("a", F.col("b").alias("x2"))
-    # x1 < x2 by id keeps each out-neighbor pair once AND matches the
-    # canonical u<v edge list directly; the inner join closes wedges
-    # into triangles BEFORE any aggregation, so the exploded stream is
-    # 3x |triangles|, not the wedge volume.
-    tri = (
-        o1.join(o2, "a")
-        .filter(F.col("x1") < F.col("x2"))
-        .join(
-            edges.select(F.col("u").alias("x1"), F.col("v").alias("x2")),
-            ["x1", "x2"],
-        )
-    )
-    # each triangle contributes one common neighbor to each of its 3
-    # edges: w=a for edge (x1,x2); w=x2 for edge (a,x1); w=x1 for (a,x2)
-    contrib = tri.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("x1").alias("cu"), F.col("x2").alias("cv")),
-                F.struct(
-                    F.least("a", "x1").alias("cu"),
-                    F.greatest("a", "x1").alias("cv"),
-                ),
-                F.struct(
-                    F.least("a", "x2").alias("cu"),
-                    F.greatest("a", "x2").alias("cv"),
-                ),
-            )
-        ).alias("e")
-    ).select(F.col("e.cu").alias("u"), F.col("e.cv").alias("v"))
-    shared = contrib.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("n_shared")
-    )
-    e = ed.join(shared, ["u", "v"], "left").withColumn(
-        "n_shared", F.coalesce(F.col("n_shared"), F.lit(0))
-    )
-    union = F.col("deg_u") - 1 + F.col("deg_v") - 1 - F.col("n_shared")
-    return e.select(
-        "u",
-        "v",
-        "deg_u",
-        "deg_v",
-        "n_shared",
-        (
-            F.col("n_shared").cast("double")
-            / F.nullif(union, F.lit(0)).cast("double")
-        ).alias("jaccard"),
-    )
-
-
-O_G10_NEIGHBOR_JACCARD = """
-WITH li AS (
-  SELECT l.l_orderkey, l.l_partkey
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE o.o_orderpriority = '1-URGENT'
-), e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM li a JOIN li b USING (l_orderkey)
-  WHERE a.l_partkey < b.l_partkey
-), adj AS (
-  SELECT u AS w, v AS x FROM e UNION ALL SELECT v, u FROM e
-), deg AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY w
-), shared AS (
-  SELECT c.u, c.v, CAST(count(*) AS BIGINT) AS n_shared
-  FROM (
-    SELECT p1.w, p1.x AS u, p2.x AS v
-    FROM adj p1 JOIN adj p2 ON p1.w = p2.w
-    WHERE p1.x < p2.x
-  ) c
-  WHERE EXISTS (SELECT 1 FROM e WHERE e.u = c.u AND e.v = c.v)
-  GROUP BY c.u, c.v
-)
-SELECT e.u, e.v, du.deg AS deg_u, dv.deg AS deg_v,
-       coalesce(s.n_shared, 0) AS n_shared,
-       CAST(coalesce(s.n_shared, 0) AS DOUBLE)
-         / CAST(nullif(du.deg - 1 + dv.deg - 1 - coalesce(s.n_shared, 0), 0) AS DOUBLE)
-         AS jaccard
-FROM e
-JOIN deg du ON du.w = e.u
-JOIN deg dv ON dv.w = e.v
-LEFT JOIN shared s ON s.u = e.u AND s.v = e.v
-"""
-
 
 # ---------------------------------------------------------------------------
 # T-MATTR: moving-average type-token ratio (text family)
@@ -691,7 +535,6 @@ WHERE NOT d.is_train
 REGISTRY = {
     "m_bmp_decode": (q_m_bmp_decode, O_M_BMP),
     "t_lm_perplexity": (q_t_lm_perplexity, O_T_LM_PERPLEXITY),
-    "g10_neighbor_jaccard": (q_g10_neighbor_jaccard, O_G10_NEIGHBOR_JACCARD),
     "t_mattr": (q_t_mattr, O_T_MATTR),
     "t_rake_keyphrases": (q_t_rake_keyphrases, O_T_RAKE),
 }

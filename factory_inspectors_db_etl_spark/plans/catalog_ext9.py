@@ -164,9 +164,9 @@ def q_er_entity_clusters(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select(F.col("ra.nid").alias("id_a"), F.col("rb.nid").alias("id_b"))
     )
-    comp = assign_components(
-        rep.select(F.col("nid").alias("doc_id")), pairs, "doc_id", algorithm="auto"
-    ).select(F.col("doc_id").alias("nid"), F.col("component_id").alias("entity_id"))
+    comp = assign_components(rep.select(F.col("nid").alias("doc_id")), pairs, "doc_id").select(
+        F.col("doc_id").alias("nid"), F.col("component_id").alias("entity_id")
+    )
     return (
         p.join(rep, ["p_brand", "p_name"])
         .join(comp, "nid")

@@ -46,6 +46,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.parquet(path)
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}

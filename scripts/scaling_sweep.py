@@ -65,7 +65,7 @@ FAMILIES = {
     "t_rake_keyphrases": "two explodes + two map-side-combinable aggs + per-doc rank window — expect ~linear in tokens",
     "t_lm_perplexity": "one vocab-count shuffle + broadcast LM join + per-doc agg — expect ~linear in tokens",
     "d_minhash_lsh": "shingle -> minhash -> banded bucket equi-join with exact-dup collapse; the replicated stress corpus is the collapse guard's worst case (100 verbatim copies/text at sf10) — expect ~linear, quadratic without the guard",
-    "d_dedup_clusters": "pair gen (collapse-guarded) + large-star/small-star closure, O(log^2 n) rounds — expect ~linear + log factor",
+    "d_dedup_clusters": "pair gen (collapse-guarded) + min-label closure, rounds = cluster diameter (large-star fallback on long chains) — expect ~linear",
     "m_jpeg_decode": "Arrow-batched mapInPandas real JPEG decode per doc — the Python-UDF scale path; expect ~linear in docs",
     "d_keep_best": "exact-dup-collapsed closure (ngram_cluster_assignments) + quality score + one per-cluster window — expect ~flat in replication like d_dedup_clusters",
 }

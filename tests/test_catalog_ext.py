@@ -1,8 +1,9 @@
 """Invariant tests for the round-4 extension catalog
 (plans/catalog_ext.py): salting is a pure physical rewrite, keep-best
-picks exactly one doc per cluster, integer-mass PageRank matches a
-brute-force fixed-point oracle, the unigram LM ranks OOV-heavy docs
-lower, and the histogram partitions the input.
+picks exactly one doc per cluster, the unigram LM ranks OOV-heavy docs
+lower, and the histogram partitions the input.  Also the brute-force
+checks of three graph queries (plans/catalog_graph.py): integer-mass
+PageRank, triangle counts and label propagation.
 
 (Value-vs-DuckDB parity is covered for all of these by the
 auto-parametrized suite in test_catalog_vs_duckdb.py.)
@@ -13,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from factory_inspectors_db_etl_spark.plans import catalog_ext as CE
+from factory_inspectors_db_etl_spark.plans import catalog_graph as CG
 from factory_inspectors_db_etl_spark.sources.tables import load_table
 
 
@@ -141,8 +143,8 @@ def test_pagerank_matches_bruteforce_python(spark, sf_dir):
         for b in parts
         if a != b
     }
-    expect = _pagerank_bruteforce(edges, CE._PR_ITERS, CE._PR_INIT)
-    got = {r.part_id: r.pagerank_mass for r in CE.q_g1_pagerank(spark, sf_dir).collect()}
+    expect = _pagerank_bruteforce(edges, CG._PR_ITERS, CG._PR_INIT)
+    got = {r.part_id: r.pagerank_mass for r in CG.q_g1_pagerank(spark, sf_dir).collect()}
     assert got == expect
 
 
@@ -173,7 +175,7 @@ def test_triangle_count_matches_bruteforce(spark, sf_dir):
             tri[a] += 1
             tri[b] += 1
             tri[c] += 1
-    got = {r.part_id: r.n_triangles for r in CE.q_g2_triangle_count(spark, sf_dir).collect()}
+    got = {r.part_id: r.n_triangles for r in CG.q_g2_triangle_count(spark, sf_dir).collect()}
     assert got == dict(tri)
 
 
@@ -375,11 +377,11 @@ def test_label_propagation_matches_bruteforce(spark, sf_dir):
                 if a != b:
                     adj[a].add(b)
     labels = {n: n for n in adj}
-    for _ in range(CE._LPA_ITERS):
+    for _ in range(CG._LPA_ITERS):
         new = {}
         for n in adj:
             votes = Counter(labels[m] for m in adj[n])
             new[n] = sorted(votes.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
         labels = new
-    got = {r.part_id: r.community for r in CE.q_g3_label_propagation(spark, sf_dir).collect()}
+    got = {r.part_id: r.community for r in CG.q_g3_label_propagation(spark, sf_dir).collect()}
     assert got == labels

@@ -202,15 +202,19 @@ def test_large_star_converges_on_long_chain(spark):
     assert got == {i: 0 for i in range(61)}
 
 
-def test_assign_components_auto_falls_back_on_long_chain(spark):
-    from factory_inspectors_db_etl_spark.operators.dedup import assign_components
+def test_assign_components_auto_falls_back_on_long_chain(spark, monkeypatch):
+    """A 40-node chain exceeds min-label's round budget (cut to 3 here so
+    the bail-out is fast); assign_components must fall back to large-star,
+    whose own budget the tight min-label one does not starve, and produce
+    the exact single cluster with one canonical doc."""
+    from factory_inspectors_db_etl_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "_MIN_LABEL_ROUNDS", 3)
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
-    # 40-node chain: min-label would raise at max_iters=3; auto must fall
-    # back to large-star and produce the correct single cluster
     pairs = spark.createDataFrame([(i, i + 1) for i in range(39)], "id_a long, id_b long")
-    got = assign_components(docs, pairs, max_iters=3, algorithm="auto")
+    got = dedup.assign_components(docs, pairs)
     rows = {r["doc_id"]: (r["component_id"], r["is_canonical"]) for r in got.collect()}
+    assert rows.keys() == set(range(40))
     assert all(c == 0 for c, _ in rows.values())
     assert [d for d, (_, canon) in rows.items() if canon] == [0]
 

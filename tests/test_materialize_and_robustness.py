@@ -14,9 +14,7 @@ from pyspark.sql import functions as F
 
 from factory_inspectors_db_etl_spark.operators.dedup import (
     NonConvergenceError,
-    assign_components,
     connected_components,
-    connected_components_large_star,
 )
 from factory_inspectors_db_etl_spark.operators.dims import build_dim_incremental
 from factory_inspectors_db_etl_spark.operators.materialize import (
@@ -132,19 +130,6 @@ def test_connected_components_raises_typed_nonconvergence(spark):
     chain = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
     with pytest.raises(NonConvergenceError):
         connected_components(chain, max_iters=3)
-
-
-def test_assign_components_auto_falls_back_to_large_star(spark):
-    """A 40-node chain exceeds 6 min-label rounds; auto must fall back to
-    large-star (with a floor of 20 rounds — a tight min-label budget must
-    not starve the fallback) and produce the exact components."""
-    n = 40
-    chain_edges = [(i, i + 1) for i in range(n - 1)]
-    chain = spark.createDataFrame(chain_edges, "id_a long, id_b long")
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    out = assign_components(docs, chain, id_col="doc_id", max_iters=6, algorithm="auto")
-    got = {r["doc_id"]: r["component_id"] for r in out.collect()}
-    assert got == {i: 0 for i in range(n)}
 
 
 def test_materialize_reliable_survives_source_deletion(spark, tmp_path, _restore_mode):

@@ -403,9 +403,9 @@ def test_kcore_size_gate_bounds_vertices_not_edges(spark, sf_dir, monkeypatch):
     from factory_inspectors_db_etl_spark.operators.graph_broadcast import (
         GRAPH_BROADCAST_MAX_ROWS_CONF,
     )
-    from factory_inspectors_db_etl_spark.plans import catalog_ext6
+    from factory_inspectors_db_etl_spark.plans import catalog_graph
 
-    real = catalog_ext6.materialize
+    real = catalog_graph.materialize
     seen = []
 
     def recording(df, *args, **kwargs):
@@ -413,16 +413,16 @@ def test_kcore_size_gate_bounds_vertices_not_edges(spark, sf_dir, monkeypatch):
         seen.append((_physical(df), out))
         return out
 
-    monkeypatch.setattr(catalog_ext6, "materialize", recording)
+    monkeypatch.setattr(catalog_graph, "materialize", recording)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        catalog_ext6.q_g8_kcore(spark, sf_dir)
+        catalog_graph.q_g8_kcore(spark, sf_dir)
         n_edges = seen[0][1].count()  # first barrier is the edge list
         rounds_default = [plan for plan, _ in seen[1:]]
         seen.clear()
         spark.conf.set(GRAPH_BROADCAST_MAX_ROWS_CONF, str(n_edges))
-        catalog_ext6.q_g8_kcore(spark, sf_dir)
+        catalog_graph.q_g8_kcore(spark, sf_dir)
         rounds_gated = [plan for plan, _ in seen[1:]]
     finally:
         spark.conf.unset(GRAPH_BROADCAST_MAX_ROWS_CONF)

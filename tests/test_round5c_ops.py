@@ -598,7 +598,7 @@ def test_khop_bfs_matches_bruteforce(spark, sf_dir):
     agree, and no unreached node may appear."""
     from collections import deque
 
-    from factory_inspectors_db_etl_spark.plans.catalog_ext import (
+    from factory_inspectors_db_etl_spark.plans.catalog_graph import (
         _BFS_HOPS,
         _BFS_SEED_MOD,
         q_g4_khop_bfs,

@@ -29,13 +29,13 @@ from factory_inspectors_db_etl_spark.operators.setsim import (
 )
 from factory_inspectors_db_etl_spark.plans.catalog_ext4 import (
     q_a22_hhi_concentration,
-    q_g5_wcc,
     q_j18_interval_align,
     q_o8_skyline_2d,
     q_p_reservoir_sample,
     q_t_ngram_novelty,
     q_w28_rfm_segmentation,
 )
+from factory_inspectors_db_etl_spark.plans.catalog_graph import q_g5_wcc
 from factory_inspectors_db_etl_spark.sources.tables import load_table
 
 
@@ -514,7 +514,7 @@ def test_w29_attribution_matches_bruteforce(spark, sf_dir):
 
 
 def test_g6_clustering_coeff_matches_set_bruteforce(spark, sf_dir):
-    from factory_inspectors_db_etl_spark.plans.catalog_ext4 import q_g6_clustering_coeff
+    from factory_inspectors_db_etl_spark.plans.catalog_graph import q_g6_clustering_coeff
 
     out = q_g6_clustering_coeff(spark, sf_dir).toPandas()
     assert out["clustering_coeff"].between(0, 1).all()

@@ -15,11 +15,11 @@ import pandas as pd
 
 from factory_inspectors_db_etl_spark.plans.catalog_ext6 import (
     _W34_CHURN_GAP_DAYS,
-    q_g7_degree_assortativity,
     q_p_ks_drift,
     q_t_zipf_fit,
     q_w34_survival_curve,
 )
+from factory_inspectors_db_etl_spark.plans.catalog_graph import q_g7_degree_assortativity
 from factory_inspectors_db_etl_spark.sources.tables import load_table
 
 
@@ -354,7 +354,7 @@ def test_g8_kcore_matches_python_peeling_to_fixpoint(spark, sf_dir):
     fixpoint) on the test graphs — the fixed round count (6) was chosen
     above the measured fixpoint (<=4), and peeling is monotone, so any
     difference means the margin eroded or the peel is wrong."""
-    from factory_inspectors_db_etl_spark.plans.catalog_ext6 import (
+    from factory_inspectors_db_etl_spark.plans.catalog_graph import (
         _KCORE_K,
         q_g8_kcore,
     )
@@ -445,7 +445,7 @@ def test_g8_kcore_round_margin_holds_at_driver_sf():
     duckdb+python: no Spark session needed for the property."""
     import duckdb
 
-    from factory_inspectors_db_etl_spark.plans.catalog_ext6 import (
+    from factory_inspectors_db_etl_spark.plans.catalog_graph import (
         _KCORE_K,
         _KCORE_ROUNDS,
     )
@@ -493,7 +493,7 @@ def test_g7_regular_graph_pins_null_assortativity(spark, tmp_path):
     4-cycle built from 4 two-part urgent orders (every degree = 2)."""
     import pandas as pd
 
-    from factory_inspectors_db_etl_spark.plans.catalog_ext6 import (
+    from factory_inspectors_db_etl_spark.plans.catalog_graph import (
         q_g7_degree_assortativity,
     )
 

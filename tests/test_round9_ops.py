@@ -13,15 +13,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from factory_inspectors_db_etl_spark.plans.catalog_ext7 import (
-    _G9_MAX_HUB_DEG,
     _KMV_K,
     q_a26_entropy,
     q_a27_bottomk_distinct,
-    q_g9_link_prediction,
     q_j24_interp_join,
     q_t_readability,
     q_w35_changepoint,
 )
+from factory_inspectors_db_etl_spark.plans.catalog_graph import _G9_MAX_HUB_DEG, q_g9_link_prediction
 from factory_inspectors_db_etl_spark.sources.tables import load_table
 
 

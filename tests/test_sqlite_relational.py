@@ -144,16 +144,16 @@ def test_overwrite_clears_previous_rows(spark, db):
     assert got == [100, 101, 102]
 
 
-def test_warehouse_star_schema_to_live_sql(spark, db):
+def test_warehouse_star_schema_to_live_sql(spark, db, generated_roster):
     """The reference's ACTUAL sink shape (populate_db_ru_v1.py:765-769 —
     a relational star-schema load with get-or-create dims) against a
     live SQL engine: all five dims + fact land in SQLite, a re-run
     changes nothing (idempotent load), and referential integrity is
     verified BY THE SQL ENGINE (the join the reference's FK constraints
-    enforce)."""
+    enforce).  Runs on the generated roster: every check is structural."""
     from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse
 
-    t = build_warehouse(spark, "/root/reference/diplom/fabric*.html")
+    t = build_warehouse(spark, f"{generated_roster}/fabric*.html")
     dims = {
         "inspectors": "inspector_id",
         "locations": "location_id",

@@ -20,10 +20,10 @@ from factory_inspectors_db_etl_spark.plans.catalog_ext8 import (
     _MATTR_W,
     _RAKE_STOP,
     _RAKE_TOP,
-    q_g10_neighbor_jaccard,
     q_t_mattr,
     q_t_rake_keyphrases,
 )
+from factory_inspectors_db_etl_spark.plans.catalog_graph import q_g10_neighbor_jaccard
 from factory_inspectors_db_etl_spark.sources.tables import load_table
 
 

@@ -14,8 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from factory_inspectors_db_etl_spark.functions.text import (
-    canonicalize_person_name,
-    canonicalize_person_name_py,
     clean_number,
     clean_number_py,
     standardize_text,
@@ -86,10 +84,6 @@ def test_standardize_forms_agree(spark, corpus_strings):
 
 def test_clean_number_forms_agree(spark, corpus_strings):
     _compare(spark, corpus_strings, clean_number, clean_number_py, cast=int)
-
-
-def test_name_canonicalization_forms_agree(spark, corpus_strings):
-    _compare(spark, corpus_strings, canonicalize_person_name, canonicalize_person_name_py)
 
 
 def test_sql_surface_registration(spark, sf_dir):
