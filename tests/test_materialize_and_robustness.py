@@ -12,6 +12,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from factory_inspectors_db_etl_spark.operators import dedup
 from factory_inspectors_db_etl_spark.operators.dedup import (
     NonConvergenceError,
     connected_components,
@@ -130,6 +131,22 @@ def test_connected_components_raises_typed_nonconvergence(spark):
     chain = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
     with pytest.raises(NonConvergenceError):
         connected_components(chain, max_iters=3)
+
+
+def test_assign_components_auto_falls_back_to_large_star(spark, monkeypatch):
+    """A 40-node chain exceeds 6 min-label rounds; assign_components must
+    fall back to large-star (whose own round budget a tight min-label one
+    must not starve) and produce the exact components."""
+    n = 40
+    chain_edges = [(i, i + 1) for i in range(n - 1)]
+    chain = spark.createDataFrame(chain_edges, "id_a long, id_b long")
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    monkeypatch.setattr(dedup, "_MIN_LABEL_ROUNDS", 6)
+    with pytest.raises(NonConvergenceError):
+        connected_components(chain, max_iters=dedup._MIN_LABEL_ROUNDS)
+    out = dedup.assign_components(docs, chain, id_col="doc_id")
+    got = {r["doc_id"]: r["component_id"] for r in out.collect()}
+    assert got == {i: 0 for i in range(n)}
 
 
 def test_materialize_reliable_survives_source_deletion(spark, tmp_path, _restore_mode):
