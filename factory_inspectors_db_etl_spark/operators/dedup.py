@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph_broadcast import graph_small_side, resolve_graph_broadcast
-from .materialize import materialize
+from .materialize import materialize, materialize_counted
 
 
 class NonConvergenceError(RuntimeError):
@@ -519,22 +519,25 @@ def connected_components(
     drop decision needs CLUSTERS — pairs (1,2) and (2,3) must collapse to
     one kept doc, not two independent drops).
 
-    Algorithm: iterative min-label propagation.  Every node starts
-    labeled with itself; each round every node takes the min of its own
+    Algorithm: iterative min-label propagation.  Round 1 labels every
+    node with the min of itself and its neighbors, straight from the
+    edge list; each later round every node takes the min of its own
     label and its neighbors' labels; stop when a round changes nothing.
-    Rounds = graph diameter.  Near-dup graphs are dense little cliques
-    (diameter 2-4), so 3-5 rounds is typical; ``max_iters`` bounds
-    adversarial chains, and hitting it raises rather than returning a
-    silently unconverged labeling.
+    Rounds = graph diameter + 1.  Near-dup graphs are dense little
+    cliques (diameter 2-4), so 3-5 rounds is typical; ``max_iters``
+    bounds adversarial chains (round 1 counts against it), and hitting
+    it raises rather than returning a silently unconverged labeling.
 
     100 TB posture:
-    * per round: the neighbor-min propagation (labels x symmetric-edges
-      equi-join + map-side-combined groupBy-min) plus one left join back
-      onto the label table — no other joins;
+    * round 1: one map-side-combined groupBy-min over the symmetric
+      edges; each later round: the neighbor-min propagation (labels x
+      symmetric-edges equi-join + map-side-combined groupBy-min) plus
+      one left join back onto the label table — no other joins;
     * the convergence check is FOLDED INTO the label update: the same
       select that computes the new label also emits a ``changed`` flag,
-      and convergence is a single sum() over the just-checkpointed
-      result — no extra labels-vs-labels self-join per round;
+      and its sum is observed from the round's own barrier job
+      (``materialize_counted``) — no extra job and no labels-vs-labels
+      self-join per round;
     * lineage is cut every round with ``localCheckpoint`` (the iterative-
       algorithm contract in Spark: without it the plan doubles per round
       and the optimizer re-analyzes an exponentially growing tree);
@@ -545,20 +548,15 @@ def connected_components(
       chosen here because dedup clusters are diameter-bounded and each
       round is strictly cheaper.
 
-    Only nodes that appear in ``pairs`` are returned; callers give
-    singleton docs their own component via a left join + coalesce (see
-    ``assign_components``).
+    Runs one barrier for the symmetric edges and one per round, and no
+    other action.  Only nodes that appear in ``pairs`` are returned;
+    callers give singleton docs their own component via a left join +
+    coalesce (see ``assign_components``).
     """
     edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct(),
-        iterative=True,
-    )
-    labels = materialize(
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node")),
         iterative=True,
     )
     # r12 NOTE — broadcast-joining labels/nbr_min (the g1/large-star
@@ -569,17 +567,28 @@ def connected_components(
     # isolated floors d_keep_best 4.18 -> 5.9-6.1 s, d_dedup_clusters
     # 3.47 -> 4.1-4.4 s across two 3-run draws.  Graphs big enough for
     # the broadcast to win take the large-star path, which has it.
+    labels = None
     for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_min"))
-        )
+        if labels is None:
+            # round 1 from the identity labeling, which is the edge list
+            # itself: every node has at least one neighbor
+            step = (
+                edges.groupBy("u")
+                .agg(F.min("v").alias("nbr_min"))
+                .select(F.col("u").alias("node"), F.col("u").alias("label"), "nbr_min")
+            )
+        else:
+            nbr_min = (
+                edges.join(labels, edges.v == labels.node)
+                .groupBy("u")
+                .agg(F.min("label").alias("nbr_min"))
+            )
+            step = labels.join(nbr_min, labels.node == nbr_min.u, "left")
         new_label = F.least(
             F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
         )
-        new_labels = materialize(
-            labels.join(nbr_min, labels.node == nbr_min.u, "left").select(
+        new_labels, _, sums = materialize_counted(
+            step.select(
                 "node",
                 new_label.alias("label"),
                 # convergence flag computed IN the update (labels only ever
@@ -587,10 +596,10 @@ def connected_components(
                 (new_label < F.col("label")).cast("long").alias("changed"),
             ),
             iterative=True,
+            changed="changed",
         )
-        changed = new_labels.agg(F.sum("changed")).first()[0] or 0
         labels = new_labels.select("node", "label")
-        if changed == 0:
+        if sums["changed"] == 0:
             return labels.select("node", F.col("label").alias("component"))
     raise NonConvergenceError(
         f"connected_components did not converge in {max_iters} rounds; "
@@ -612,8 +621,8 @@ def connected_components_large_star(
     would not terminate in reasonable rounds.  Converges in
     O(log^2 n) rounds on ANY graph shape.
 
-    Per round (all hash shuffles on node ids, no global barrier beyond
-    the convergence count):
+    Per round (all hash shuffles on node ids; one barrier, whose job
+    also counts the round's edges):
 
     * Large-Star: every node u computes m = min({u} ∪ N(u)) over the
       SYMMETRIC edge list and re-points its strictly-larger neighbors at
@@ -631,7 +640,7 @@ def connected_components_large_star(
     identical to ``connected_components`` output.  Same
     lineage-truncation contract (``localCheckpoint`` per round).
     """
-    edges = materialize(
+    edges, prev_cnt, _ = materialize_counted(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
@@ -640,7 +649,7 @@ def connected_components_large_star(
     )
     # node universe from the UNfiltered pairs so self-paired nodes get a
     # (node, node) row, matching connected_components exactly
-    all_nodes = materialize(
+    all_nodes, n_nodes, _ = materialize_counted(
         pairs.select(F.col(src).alias("node"))
         .union(pairs.select(F.col(dst).alias("node")))
         .distinct(),
@@ -652,10 +661,10 @@ def connected_components_large_star(
     # so a round's exchanges are the two map-side-combined groupBys plus
     # ONE edge-scale distinct (small-star's), instead of two join
     # exchange+sort pairs and TWO edge-scale distincts.  all_nodes is
-    # the materialized exact node universe: one cheap count gates every
-    # round (m ⊆ nodes always).
+    # the materialized exact node universe: its barrier's row count
+    # gates every round (m ⊆ nodes always).
     spark = pairs.sparkSession
-    bcast = resolve_graph_broadcast(spark, None, all_nodes.count)
+    bcast = resolve_graph_broadcast(spark, None, n_nodes)
 
     def _large_star(e: DataFrame) -> DataFrame:
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -688,14 +697,14 @@ def connected_components_large_star(
 
     # convergence probe (r12): both round outputs are DISTINCT sets, so
     # new == old  <=>  |new| == |old| AND new.exceptAll(old) is empty.
-    # The count is a cheap checkpoint scan with no shuffle; rounds whose
-    # count moved (most non-converged rounds) skip the exceptAll
-    # entirely — vs the r11 probe which shuffled BOTH edge lists through
-    # two exceptAll directions every round.
-    prev_cnt = edges.count()
+    # The counts come from the barriers' own jobs; rounds whose count
+    # moved (most non-converged rounds) skip the exceptAll entirely —
+    # vs the r11 probe which shuffled BOTH edge lists through two
+    # exceptAll directions every round.
     for _ in range(max_iters):
-        new_edges = materialize(_small_star(_large_star(edges)), iterative=True)
-        new_cnt = new_edges.count()
+        new_edges, new_cnt, _ = materialize_counted(
+            _small_star(_large_star(edges)), iterative=True
+        )
         changed = 1
         if new_cnt == prev_cnt:
             changed = new_edges.exceptAll(edges).limit(1).count()
@@ -807,14 +816,16 @@ def assign_components(
     (node, min-id) labeling, so the fallback changes cost, never
     results; any other runtime failure propagates.
 
-    Runs eagerly: min-label's two barriers (symmetric edges, initial
-    labels), then per round one barrier plus one convergence ``sum``
-    job.  On the fallback, after min-label's whole budget, large-star's
-    two barriers (canonical edges, node universe), one node count for
-    the broadcast gate, one edge count, then per round one barrier, one
-    count and, when the count did not move, one ``exceptAll`` probe.  The returned frame's join
-    against ``docs`` is lazy; AQE picks broadcast or shuffle for it from
-    the components' runtime size.
+    Runs eagerly: min-label's symmetric-edge barrier, then one barrier
+    per round (round 1 straight from the edges), each observing its own
+    convergence sum — no other job.  On the
+    fallback, after min-label's whole budget, large-star's two barriers
+    (canonical edges, node universe — their observed row counts give the
+    first edge count and the broadcast gate's bound), then per round one
+    barrier observing its edge count and, when the count did not move,
+    one ``exceptAll`` probe.  The returned frame's join against ``docs``
+    is lazy; AQE picks broadcast or shuffle for it from the components'
+    runtime size.
     """
     try:
         comp = connected_components(pairs, max_iters=_MIN_LABEL_ROUNDS)

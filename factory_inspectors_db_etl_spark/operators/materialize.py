@@ -37,7 +37,8 @@ flips ALL barriers with one setting and zero code changes:
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 MATERIALIZE_MODE_CONF = "spark.graft.materialize.mode"
 _MODES = ("local", "reliable", "persist")
@@ -74,3 +75,25 @@ def materialize(df: DataFrame, eager: bool = True, iterative: bool = False) -> D
         out.count()
         return out
     raise ValueError(f"unknown {MATERIALIZE_MODE_CONF}={mode!r}; expected one of {_MODES}")
+
+
+def materialize_counted(
+    df: DataFrame, iterative: bool = False, **sums: Column | str
+) -> tuple[DataFrame, int, dict[str, int]]:
+    """``materialize(df, iterative=iterative)`` that also returns the
+    barrier's exact row count and one ``sum`` per keyword (a column or
+    column name; 0 over no rows).
+
+    The figures are read through ``DataFrame.observe`` from the barrier's
+    own job, so a loop that needs its round's size or convergence flag
+    pays no second action for it.  A barrier that fails raises from the
+    materialization before the observation is read."""
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("_rows"),
+        *[F.sum(c).alias(name) for name, c in sums.items()],
+    )
+    out = materialize(observed, iterative=iterative)
+    got = obs.get
+    return out, got["_rows"], {name: got[name] or 0 for name in sums}

@@ -569,8 +569,8 @@ def semantic_dedup(
 
     * Fixed ``k`` while the corpus grows: the O(n²·n_probe/k) PAIR term
       is quadratic (r7 sweep: 17.7× wall-clock for 10× data at k=16).
-    * ``n_clusters="auto"`` (k = max(16, n // target_cell_size), one
-      metadata-cheap count) makes the pair term linear
+    * ``n_clusters="auto"`` (k = max(16, n // target_cell_size), n from
+      the one eager aggregate) makes the pair term linear
       (n·target_cell_size·n_probe) — but with ``assign="exact"`` the
       ASSIGNMENT term O(n·k) = O(n²/cell) is now the quadratic one
       (r8 sweep: 64.5× for 10× data at sf1 — WORSE than fixed-k,
@@ -595,30 +595,40 @@ def semantic_dedup(
     width): ``None`` (default) infers it from the corpus via the same
     min/max-size aggregate that guards against mixed widths; an
     explicit value must match the embedding width exactly.
+
+    Eager jobs: ONE aggregate over the corpus whenever auto-k or LSH
+    mode needs it (row count, min and max vector width together), the
+    k-means training with ``centroids="kmeans"``, the LSH
+    candidate-ranking barrier in LSH mode, and the assignment barrier;
+    the pair search and the verdict are lazy.
     """
-    if n_clusters == "auto":
-        n_total = vectors.count()
-        n_clusters = max(16, n_total // target_cell_size)
-    elif not isinstance(n_clusters, int):
+    if n_clusters != "auto" and not isinstance(n_clusters, int):
         raise ValueError(f"n_clusters must be an int or 'auto', got {n_clusters!r}")
+    # One eager aggregate serves both reads of the corpus: the row count
+    # auto-k needs and, in LSH mode, the min/max vector width of the dim
+    # guard below.
+    n_total = lo = hi = None
+    if n_clusters == "auto" or assign == "lsh":
+        n_total, lo, hi = vectors.agg(
+            F.count(F.lit(1)), F.min(F.size(F.col(vec_col))), F.max(F.size(F.col(vec_col)))
+        ).first()
+    if n_clusters == "auto":
+        n_clusters = max(16, n_total // target_cell_size)
     cents = _resolve_centroids(
         vectors, id_col, vec_col, n_clusters, centroids,
         kmeans_seed, kmeans_train_filter, kmeans_max_iter,
     )
 
     if assign == "lsh":
-        # dim mismatch guard (one metadata-cheap aggregate): zip_with pads
-        # the shorter array with nulls, so planes of the wrong width make
-        # every projection NULL -> every vector AND centroid lands in
-        # bucket 0 -> (1+bits)*n*k candidates, silently WORSE than the
-        # exact loop this mode replaces.  The guard aggregates min AND max
-        # vector size over the WHOLE corpus (not just the first row — a
-        # mixed-width corpus whose first row happens to match would
-        # otherwise slip through and degrade row-by-row, the exact failure
-        # mode this documents).  Fail loudly instead.
-        lo, hi = vectors.agg(
-            F.min(F.size(F.col(vec_col))), F.max(F.size(F.col(vec_col)))
-        ).first()
+        # dim mismatch guard: zip_with pads the shorter array with nulls,
+        # so planes of the wrong width make every projection NULL -> every
+        # vector AND centroid lands in bucket 0 -> (1+bits)*n*k
+        # candidates, silently WORSE than the exact loop this mode
+        # replaces.  The guard reads min AND max vector size over the
+        # WHOLE corpus (not just the first row — a mixed-width corpus
+        # whose first row happens to match would otherwise slip through
+        # and degrade row-by-row, the exact failure mode this documents).
+        # Fail loudly instead.
         if dim is None:
             if lo is None:
                 raise ValueError(
@@ -863,10 +873,15 @@ def lsh_bucket_expr(vec: Column, planes: np.ndarray) -> Column:
     For band signatures (16 bands x 4 bits = 64 planes) use
     ``band_buckets_udf``: 64 unrolled higher-order-function dots are
     evaluated interpreted (HOF lambdas don't enter whole-stage codegen)
-    and measured ~10x slower than one Arrow-batched BLAS matmul."""
+    and measured ~10x slower than one Arrow-batched BLAS matmul.
+
+    Each plane's literal array is ONE parsed SQL expression — one py4j
+    call instead of one ``F.lit`` per coordinate.  Coordinates are
+    written as their ``repr`` with the ``D`` suffix, which parses back
+    to the identical double."""
     bucket = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
+        lit_plane = F.expr("array(" + ", ".join(f"{float(x)!r}D" for x in plane) + ")")
         proj = dot(vec, lit_plane)
         bucket = bucket + F.when(proj > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
     return bucket

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_large_star
 from ..operators.graph_broadcast import graph_small_side, resolve_graph_broadcast
-from ..operators.materialize import materialize
+from ..operators.materialize import materialize, materialize_counted
 from ..session import clamp_iterative_shuffle
 from ..sources.tables import load_table
 
@@ -707,11 +707,11 @@ FROM s, nn
 """
 
 # ---------------------------------------------------------------------------
-# G8: k-core extraction (iterative peeling, fixed-round form)
+# G8: k-core extraction (iterative peeling to an observed fixpoint)
 # ---------------------------------------------------------------------------
 
 _KCORE_K = 8  # minimum in-core degree
-_KCORE_ROUNDS = 6  # fixed peels; fixpoint measured at <=4 for sf0.01..sf1
+_KCORE_ROUNDS = 6  # peel cap; fixpoint measured at <=4 for sf0.01..sf1
 
 
 def q_g8_kcore(spark: SparkSession, sf: str) -> DataFrame:
@@ -723,31 +723,33 @@ def q_g8_kcore(spark: SparkSession, sf: str) -> DataFrame:
     family next to pagerank/triangles/label-prop/k-hop/wcc/clustering/
     assortativity.
 
-    FIXED-ROUND form: exactly ``_KCORE_ROUNDS`` peels, not
-    loop-until-fixpoint.  Peeling is monotone (once converged, further
-    rounds are no-ops), the fixpoint was MEASURED at <= 4 rounds for
-    k=8 on sf0.01/sf0.1/sf1 (6 gives margin), and a fixed round count
-    makes the query (a) driver-action-free — no per-round convergence
-    .count() on the driver, unlike the wcc loop — and (b) exactly
-    replayable as an unrolled SQL CTE chain, so the oracle needs no
-    recursion.  A production run on an unknown graph loops to
-    fixpoint with the same per-round plan.
+    At most ``_KCORE_ROUNDS`` peels, stopping at the fixpoint it
+    observes: each peel's barrier counts the edges it keeps, and a peel
+    that keeps every edge of its input has reached the fixpoint —
+    peeling only removes edges, so equal counts mean equal edge sets and
+    every further peel would be a no-op.  The cap was MEASURED above the
+    fixpoint (<= 4 rounds for k=8 on sf0.01/sf0.1/sf1; at sf0.01 the
+    edge count stops moving after round 1 or 2), so the result equals
+    the fixed ``_KCORE_ROUNDS``-round peel, which the oracle replays as
+    an unrolled SQL CTE chain with no recursion.
 
     Plan per round: one map-side-combinable degree aggregation over the
     edge stubs + two equi-joins filtering edges to surviving endpoints
     (the alive set is far smaller than the edge list — broadcastable
     here, AQE-shuffle at 100 TB).  Edges are materialized once and
-    every round's output feeds the next, so the whole peel is one
-    linear pipeline with no driver round-trips."""
+    every round's output feeds the next.  Eager jobs: the edge-list
+    barrier, one count of it (the fixpoint's first reference and the
+    size gate's bound) and one barrier per peel."""
     edges = _copurchase_edges(spark, sf, urgent=True, oriented=True)
+    n_cur = edges.count()
     cur = edges
     # r12: the |V|-bounded alive set rides the size-gated graph
     # broadcast (the g1 pattern) — pins what the docstring previously
     # left to AQE, so a round's only edge-scale exchange is the
     # map-side-combined degree aggregation.  On this oriented edge list
-    # |V| can reach 2|E| (a matching), so the gate's bound is twice one
-    # cheap count of the materialized edges
-    bcast = resolve_graph_broadcast(spark, None, lambda: 2 * edges.count())
+    # |V| can reach 2|E| (a matching), so the gate's bound is twice the
+    # edge count
+    bcast = resolve_graph_broadcast(spark, None, 2 * n_cur)
     for _ in range(_KCORE_ROUNDS):
         alive = _degrees(cur, "node", "_d").filter(F.col("_d") >= _KCORE_K).select("node")
         # materialize per round: each round reads `cur` TWICE (degree agg
@@ -756,7 +758,7 @@ def q_g8_kcore(spark: SparkSession, sf: str) -> DataFrame:
         # the hard way: the unmaterialized 6-round plan stalled the
         # optimizer).  The barrier keeps every round's plan constant-size,
         # exactly the g5_wcc iteration discipline.
-        cur = materialize(
+        cur, n_kept, _ = materialize_counted(
             cur.join(
                 graph_small_side(spark, alive.withColumnRenamed("node", "u"), bcast), "u"
             )
@@ -765,6 +767,9 @@ def q_g8_kcore(spark: SparkSession, sf: str) -> DataFrame:
             )
             .select("u", "v")
         )
+        if n_kept == n_cur:
+            break
+        n_cur = n_kept
     return _degrees(cur, "node", "core_degree")
 
 

@@ -17,12 +17,19 @@ plan is their composition):
 5. packing              — token-budget bins, sharded, train split only
                           (p_pack_bins)
 
-Scale posture: one corpus scan feeds shingling and the columnar
-signals; the pair join is banded/inverted-index (never all-pairs); the
-cluster keep-decision and every later stage are equi-joins on doc_id —
+Scale posture: one per-document barrier holds each document with its
+exact-dup representative, its quality score and its language verdict,
+computed once; the representatives fed to the pair join, the keep-best
+window and the quality/language gate all read it.  The pair join is
+banded/inverted-index (never all-pairs); the cluster keep-decision and
+every later stage are equi-joins on doc_id or the representative id —
 AQE-splittable at any corpus size.  The cluster stage is barriered
-(iterative CC already localCheckpoints internally), so downstream
-consumers see a flat plan.
+(iterative CC materializes every round), so downstream consumers see a
+flat plan.
+
+Eager jobs: the per-document barrier, the pair join's shingle barrier,
+the components' barriers (see ``assign_components``) and the barrier
+on ``kept``; ``splits`` and ``packed_train`` are lazy.
 """
 
 from __future__ import annotations
@@ -44,11 +51,11 @@ def build_training_set(
     budget: int = 2000,
     shards: int = 16,
 ) -> dict[str, DataFrame]:
-    """Returns {'kept', 'splits', 'packed_train'} DataFrames."""
+    """Returns {'kept', 'splits', 'packed_train', 'components'}
+    DataFrames; 'components' is (doc_id, component_id) for every doc."""
     docs = load_table(spark, sf_dir, "documents")
+    doc_cols = docs.columns
 
-    # 1-2: cluster near-dups, keep the best doc per cluster.
-    #
     # EXACT-DUP COLLAPSE before any pair enumeration (the r5 LSH/setsim
     # guard, applied to the clustering stage): identical texts have
     # identical shingle sets, hence identical neighbors, hence the same
@@ -62,7 +69,7 @@ def build_training_set(
     # pair computation scales with distinct texts.
     # NULL-text safety (ADVICE r7): md5(NULL) is NULL, and groupBy keeps
     # the NULL-fingerprint group, so `reps` DOES contain a representative
-    # for NULL-text docs — but a plain equi-join on _fp would drop them
+    # for NULL-text docs — but a plain equi-join on the md5 would drop them
     # (NULL never equi-joins).  eqNullSafe (`<=>`) keeps the mapping total:
     # every doc, NULL text included, lands on exactly one representative,
     # matching the pre-collapse assign_components behavior (PERMISSIVE
@@ -72,44 +79,43 @@ def build_training_set(
         F.col("fingerprint").alias("_rfp"),
         F.col("representative_id").alias("_rep_id"),
     )
-    rep_map = (
-        docs.select("doc_id", F.md5(F.col("text")).alias("_fp"))
-        .join(rep_side, F.col("_fp").eqNullSafe(F.col("_rfp")))
-        .select("doc_id", "_rep_id")
+    # The per-document barrier: every later stage reads a document's
+    # representative, quality and language verdict from here, so the
+    # md5, the exact-dup aggregate and the text signals run once.
+    # Tokens are BOUND to a column first — language_guess_from_tokens
+    # references its input once per language vote, and HOF lambdas get
+    # no CSE, so an unbound tokens(lower(text)) would re-tokenize per
+    # vote (the documented contract of that function; same pattern as
+    # q_t_language_guess)
+    per_doc = materialize(
+        docs.join(rep_side, F.md5(F.col("text")).eqNullSafe(F.col("_rfp")))
+        .withColumn("_toks", TA.tokens(F.lower(F.col("text"))))
+        .select(
+            *doc_cols,
+            "_rep_id",
+            TA.quality_score(F.col("text")).alias("quality"),
+            (TA.language_guess_from_tokens(F.col("_toks")) != "und").alias("_lang_known"),
+        )
     )
-    rep_docs = docs.join(
-        reps.select(F.col("representative_id").alias("doc_id")), "doc_id"
-    )
+
+    # 1-2: cluster near-dups over the representatives, keep the best doc
+    # per cluster
+    rep_docs = per_doc.filter(F.col("doc_id") == F.col("_rep_id")).select("doc_id", "text")
     pairs = ngram_jaccard_pairs(rep_docs, "doc_id", "text", k=3, threshold=0.5)
     comp_rep = assign_components(rep_docs, pairs, "doc_id").select(
         F.col("doc_id").alias("_rep_id"), "component_id"
     )
-    comp = rep_map.join(comp_rep, "_rep_id").select("doc_id", "component_id")
+    scored = per_doc.join(comp_rep, "_rep_id")
     # `comp` is TOTAL over docs (one row per input doc_id) — pinned by
     # tests/test_corpus_pipeline.py::test_null_text_docs_not_silently_dropped.
-    scored = docs.join(comp, "doc_id").withColumn(
-        "quality", TA.quality_score(F.col("text"))
-    )
+    comp = scored.select("doc_id", "component_id")
     wk = W.partitionBy("component_id").orderBy(F.desc("quality"), F.asc("doc_id"))
-    canonical = (
-        scored.withColumn("_rn", F.row_number().over(wk))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    canonical = scored.withColumn("_rn", F.row_number().over(wk)).filter(F.col("_rn") == 1)
 
-    # 3: columnar quality/language gates.  Tokens are BOUND to a column
-    # first — language_guess_from_tokens references its input once per
-    # language vote, and HOF lambdas get no CSE, so an unbound
-    # tokens(lower(text)) would re-tokenize per vote (the documented
-    # contract of that function; same pattern as q_t_language_guess)
-    kept = (
-        canonical.withColumn("_toks", TA.tokens(F.lower(F.col("text"))))
-        .filter(
-            (F.col("quality") >= min_quality)
-            & (TA.language_guess_from_tokens(F.col("_toks")) != "und")
-        )
-        .drop("_toks")
-    )
+    # 3: columnar quality/language gates, read from the barrier
+    kept = canonical.filter(
+        (F.col("quality") >= min_quality) & F.col("_lang_known")
+    ).select(*doc_cols, "component_id", "quality")
 
     # barrier: three sinks consume this point (kept/splits/packed) and
     # Spark shares no computation across separate actions — without the

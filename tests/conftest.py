@@ -36,13 +36,25 @@ def gen_roster():
 
 
 @pytest.fixture(scope="session")
-def generated_roster(gen_roster, tmp_path_factory) -> str:
+def _generated_roster_with_truth(gen_roster, tmp_path_factory) -> tuple[str, dict]:
+    d = str(tmp_path_factory.mktemp("generated_roster"))
+    return d, gen_roster.generate(d, 1, 1)
+
+
+@pytest.fixture(scope="session")
+def generated_roster(_generated_roster_with_truth) -> str:
     """A generated roster (seed 1, scale 1): ``fabric{YYYY}.html`` for the
     generator's 11 years, every layout generation and reader quirk it
     knows, in a directory of its own."""
-    d = str(tmp_path_factory.mktemp("generated_roster"))
-    gen_roster.generate(d, 1, 1)
-    return d
+    return _generated_roster_with_truth[0]
+
+
+@pytest.fixture(scope="session")
+def generated_roster_truth(_generated_roster_with_truth) -> dict:
+    """The generator's ground-truth warehouse counts for
+    ``generated_roster`` (``assignments``, ``inspectors``, ``locations``,
+    ``vacancies``, ``rejects``, ``workers_sum``)."""
+    return _generated_roster_with_truth[1]
 
 
 def _tr(*cells: str) -> str:

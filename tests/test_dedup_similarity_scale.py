@@ -171,6 +171,62 @@ def test_connected_components_converges_with_headroom(spark):
     assert got == {i: 0 for i in range(11)}
 
 
+def test_connected_components_budget_counts_the_seeded_round(spark):
+    from factory_inspectors_db_etl_spark.operators.dedup import (
+        NonConvergenceError,
+        connected_components,
+    )
+
+    # chain 1-2-3-4: three rounds move the min label to node 4, a fourth
+    # observes no change — round 1 (seeded from the edge list) counts
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
+    with pytest.raises(NonConvergenceError):
+        connected_components(pairs, max_iters=3)
+    got = {r["node"]: r["component"] for r in connected_components(pairs, max_iters=4).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+
+
+def test_connected_components_runs_three_barriers_and_no_other_action(spark, monkeypatch):
+    """A 4-clique plus a self-paired island converges in round 2: the
+    symmetric-edge barrier, round 1 seeded from the edges and round 2,
+    which observes no change from its own barrier job.  Each barrier
+    runs under its own job group, so any other action (a count, a
+    convergence sum) would show up in the outer group."""
+    from factory_inspectors_db_etl_spark.operators import dedup
+
+    sc = spark.sparkContext
+    outer = "cc-outer"
+    barriers: list[str] = []
+
+    def in_own_group(fn):
+        def recording(df, *args, **kwargs):
+            gid = f"cc-barrier-{len(barriers)}"
+            barriers.append(gid)
+            sc.setJobGroup(gid, gid)
+            try:
+                return fn(df, *args, **kwargs)
+            finally:
+                sc.setJobGroup(outer, outer)
+
+        return recording
+
+    monkeypatch.setattr(dedup, "materialize", in_own_group(dedup.materialize))
+    monkeypatch.setattr(dedup, "materialize_counted", in_own_group(dedup.materialize_counted))
+    clique = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    pairs = spark.createDataFrame(clique + [(9, 9)], "id_a long, id_b long")
+    sc.setJobGroup(outer, outer)
+    try:
+        comp = dedup.connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert len(barriers) == 3
+    assert all(tracker.getJobIdsForGroup(g) for g in barriers)
+    assert tracker.getJobIdsForGroup(outer) == []
+    got = {r["node"]: r["component"] for r in comp.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 9: 9}
+
+
 def test_large_star_agrees_with_min_propagation(spark):
     from factory_inspectors_db_etl_spark.operators.dedup import (
         connected_components,
@@ -217,6 +273,43 @@ def test_assign_components_auto_falls_back_on_long_chain(spark, monkeypatch):
     assert rows.keys() == set(range(40))
     assert all(c == 0 for c, _ in rows.values())
     assert [d for d, (_, canon) in rows.items() if canon] == [0]
+
+
+def test_lsh_bucket_expr_parsed_planes_match_per_coordinate_literals(spark):
+    """The parsed-SQL plane arrays carry the exact doubles: buckets equal
+    the per-coordinate ``F.lit`` form on random vectors, tiny ones
+    included (projections near zero), for 1, 5 and 16 planes."""
+    import numpy as np
+
+    from factory_inspectors_db_etl_spark.operators.similarity import (
+        dot,
+        lsh_bucket_expr,
+        random_hyperplanes,
+    )
+
+    def per_literal(vec, planes):
+        bucket = F.lit(0).cast("long")
+        for i, plane in enumerate(planes):
+            proj = dot(vec, F.array(*[F.lit(float(x)) for x in plane]))
+            bucket = bucket + F.when(proj > 0, F.lit(1 << i).cast("long")).otherwise(
+                F.lit(0).cast("long")
+            )
+        return bucket
+
+    rng = np.random.default_rng(1)
+    rows = [(i, [float(x) for x in rng.standard_normal(32)]) for i in range(500)]
+    rows += [(500 + i, [float(x) * 1e-300 for x in rng.standard_normal(32)]) for i in range(20)]
+    vecs = spark.createDataFrame(rows, "id long, v array<double>")
+    planes = random_hyperplanes(32, 16, 42)
+    for bits in (1, 5, 16):
+        want = vecs.select("id", per_literal(F.col("v"), planes[:bits]).alias("b"))
+        got = vecs.select("id", lsh_bucket_expr(F.col("v"), planes[:bits]).alias("b"))
+        assert sorted(got.collect()) == sorted(want.collect())
+    coords = [float(x) for x in planes.ravel()]
+    parsed = spark.range(1).select(
+        F.expr("array(" + ", ".join(f"{x!r}D" for x in coords) + ")")
+    ).first()[0]
+    assert parsed == coords
 
 
 def test_pq_topk_contract_and_plan(spark, sf_dir):

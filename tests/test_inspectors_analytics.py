@@ -1,32 +1,45 @@
 """Analytics pack over the warehouse (A2/A3/W7/O5 + date extension) and
-the parquet round-trip (S4/S5): one warehouse build shared module-wide.
+the parquet round-trip (S4/S5): one warehouse build of the generated
+roster shared module-wide.  Expected counts come from the generator's
+ground truth or from DuckDB over the parquet the warehouse was written to.
 """
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from factory_inspectors_db_etl_spark.plans import inspectors_analytics as A
 from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse, write_warehouse
 
-CORPUS = "/root/reference/diplom"
-
 
 @pytest.fixture(scope="module")
-def warehouse(spark):
-    t = build_warehouse(spark, f"{CORPUS}/fabric*.html")
+def warehouse(spark, generated_roster):
+    t = build_warehouse(spark, f"{generated_roster}/fabric*.html")
     t["assignments"] = t["assignments"].cache()
     return t
 
 
-def test_regional_rollup_grand_total(warehouse):
+def _duckdb_year_rows(fact_dir: str, year: int) -> int:
+    """Rows of one year in a written fact table, counted by DuckDB."""
+    con = duckdb.connect()
+    try:
+        return con.execute(
+            f"SELECT count(*) FROM read_parquet('{fact_dir}/*/*.parquet', hive_partitioning = true)"
+            f" WHERE year = {year}"
+        ).fetchone()[0]
+    finally:
+        con.close()
+
+
+def test_regional_rollup_grand_total(warehouse, generated_roster_truth):
     roll = A.regional_rollup(warehouse["assignments"])
     grand = roll.filter(
         "year IS NULL AND okrug_name IS NULL AND gubernia_name IS NULL"
     ).collect()
     assert len(grand) == 1
-    assert grand[0]["n_assignments"] == 4127
+    assert grand[0]["n_assignments"] == generated_roster_truth["assignments"]
     # rollup grand total equals a direct aggregate
     direct = warehouse["assignments"].agg(F.sum("worker_count")).collect()[0][0]
     assert grand[0]["workers"] == direct
@@ -106,19 +119,20 @@ def test_top_mobile_inspectors(warehouse):
     )
 
 
-def test_warehouse_roundtrip_partition_pruning(spark, warehouse, tmp_path):
+def test_warehouse_roundtrip_partition_pruning(spark, warehouse, generated_roster_truth, tmp_path):
     out = str(tmp_path / "wh")
     write_warehouse(warehouse, out)
     fact = spark.read.parquet(f"{out}/assignments")
-    assert fact.count() == 4127
+    assert fact.count() == generated_roster_truth["assignments"]
     # year partition actually prunes: only one partition directory scanned
     pruned = fact.filter("year = 1905")
-    assert pruned.count() == 351
+    n_1905 = _duckdb_year_rows(f"{out}/assignments", 1905)
+    assert n_1905 > 0 and pruned.count() == n_1905
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(year" in plan or "year#" in plan
 
 
-def test_warehouse_catalog_bootstrap(spark, warehouse, tmp_path):
+def test_warehouse_catalog_bootstrap(spark, warehouse, generated_roster_truth, tmp_path):
     from factory_inspectors_db_etl_spark.plans.inspectors_etl import (
         bootstrap_warehouse_catalog,
     )
@@ -129,15 +143,17 @@ def test_warehouse_catalog_bootstrap(spark, warehouse, tmp_path):
     assert {"inspectors", "locations", "ranks", "professions", "educations",
             "assignments", "rejects"} <= tables
     # queryable via plain SQL, and the fact partition-prunes on year
+    n_assignments = generated_roster_truth["assignments"]
     n = spark.sql("SELECT count(*) AS n FROM wh_test.assignments").collect()[0]["n"]
-    assert n == 4127
+    assert n == n_assignments
     pruned = spark.sql("SELECT count(*) AS n FROM wh_test.assignments WHERE year = 1905")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(year" in plan or "year#" in plan
-    assert pruned.collect()[0]["n"] == 351
+    n_1905 = _duckdb_year_rows(str(tmp_path / "db" / "assignments"), 1905)
+    assert n_1905 > 0 and pruned.collect()[0]["n"] == n_1905
     # overwrite bootstrap is idempotent (the reference's DROP+CREATE)
     bootstrap_warehouse_catalog(spark, warehouse, database="wh_test", location=str(tmp_path / "db"))
-    assert spark.sql("SELECT count(*) AS n FROM wh_test.assignments").collect()[0]["n"] == 4127
+    assert spark.sql("SELECT count(*) AS n FROM wh_test.assignments").collect()[0]["n"] == n_assignments
 
 
 @pytest.mark.skip(

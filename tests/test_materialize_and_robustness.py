@@ -21,6 +21,7 @@ from factory_inspectors_db_etl_spark.operators.dims import build_dim_incremental
 from factory_inspectors_db_etl_spark.operators.materialize import (
     MATERIALIZE_MODE_CONF,
     materialize,
+    materialize_counted,
 )
 from factory_inspectors_db_etl_spark.plans.catalog import QUERIES
 
@@ -79,6 +80,41 @@ def test_materialize_unknown_mode_raises(spark, _restore_mode):
 
 
 # --- ADVICE.md r3 fixes -----------------------------------------------------
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable", "persist"])
+def test_materialize_counted_exact_in_every_mode(spark, tmp_path, _restore_mode, mode):
+    """The counted barrier returns the barrier's exact row count and
+    named sums from its own job, in every durability mode, and 0 for the
+    sums of an empty barrier."""
+    if mode == "reliable":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(MATERIALIZE_MODE_CONF, mode)
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("g")).agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    out, n, sums = materialize_counted(df, big=(F.col("c") > 142).cast("long"), total="c")
+    assert n == 7 == out.count()
+    assert sums == {"big": 6, "total": 1000}
+    assert _rows(out) == _rows(df)
+    _, n_empty, sums_empty = materialize_counted(df.filter(F.col("g") < 0), total="c")
+    assert (n_empty, sums_empty) == (0, {"total": 0})
+
+
+def test_materialize_counted_failing_barrier_raises(spark):
+    """A barrier whose job fails raises from the materialization instead
+    of blocking on an observation that never arrives."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    boom = F.udf(lambda x: int("boom"), "long")
+    failing = spark.range(10).select(boom("id").alias("b"))
+    pool = ThreadPoolExecutor(1)
+    try:
+        fut = pool.submit(materialize_counted, failing)
+        with pytest.raises(Exception, match="boom"):
+            fut.result(timeout=180)
+    finally:
+        pool.shutdown(wait=False)
 
 
 def test_nanos_probe_restores_conf_on_failure(spark):

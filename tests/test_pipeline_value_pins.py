@@ -64,9 +64,11 @@ def test_corpus_pipeline_build_value_pin(spark):
         "packed_train": _value_hash(
             parts["packed_train"].select("shard", "bin", "doc_id")
         ),
+        "components": _value_hash(parts["components"].select("doc_id", "component_id")),
     }
     assert got == {
         "kept": (371, "8d00dbf1256809e0"),
         "splits": (371, "f6f191563742a3a0"),
         "packed_train": (359, "b285329fb8074854"),
+        "components": (500, "c1771f5c8976bdb9"),
     }, f"corpus pipeline composition drifted: {got}"

@@ -405,15 +405,26 @@ def test_kcore_size_gate_bounds_vertices_not_edges(spark, sf_dir, monkeypatch):
     )
     from factory_inspectors_db_etl_spark.plans import catalog_graph
 
-    real = catalog_graph.materialize
     seen = []
 
-    def recording(df, *args, **kwargs):
-        out = real(df, *args, **kwargs)
-        seen.append((_physical(df), out))
-        return out
+    def recording(real, barrier):
+        def record(df, *args, **kwargs):
+            out = real(df, *args, **kwargs)
+            seen.append((_physical(df), barrier(out)))
+            return out
 
-    monkeypatch.setattr(catalog_graph, "materialize", recording)
+        return record
+
+    # the edge list goes through `materialize`, every peel round through
+    # `materialize_counted`
+    monkeypatch.setattr(
+        catalog_graph, "materialize", recording(catalog_graph.materialize, lambda out: out)
+    )
+    monkeypatch.setattr(
+        catalog_graph,
+        "materialize_counted",
+        recording(catalog_graph.materialize_counted, lambda out: out[0]),
+    )
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

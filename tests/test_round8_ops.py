@@ -349,6 +349,30 @@ def test_assign_lsh_bits_formula_matches_sql_replay_exactly():
 # ---------------------------------------------------------------------------
 
 
+def test_g8_kcore_stops_at_its_observed_fixpoint(spark, sf_dir, monkeypatch):
+    """The peel loop ends at the first round that keeps every edge of its
+    input, so on the test graph it runs fewer round barriers than its
+    ``_KCORE_ROUNDS`` cap."""
+    from factory_inspectors_db_etl_spark.plans import catalog_graph
+
+    real = catalog_graph.materialize_counted
+    kept_counts = []
+
+    def recording(df, *args, **kwargs):
+        out = real(df, *args, **kwargs)
+        kept_counts.append(out[1])
+        return out
+
+    monkeypatch.setattr(catalog_graph, "materialize_counted", recording)
+    catalog_graph.q_g8_kcore(spark, sf_dir)
+    assert 0 < len(kept_counts) < catalog_graph._KCORE_ROUNDS
+    edges = catalog_graph._copurchase_edges(spark, sf_dir, urgent=True, oriented=True)
+    counts = [edges.count()] + kept_counts
+    # every round but the last removes edges; the last keeps them all
+    assert all(a > b for a, b in zip(counts[:-2], counts[1:-1]))
+    assert counts[-1] == counts[-2]
+
+
 def test_g8_kcore_matches_python_peeling_to_fixpoint(spark, sf_dir):
     """The fixed-round query must equal the TRUE k-core (peel to
     fixpoint) on the test graphs — the fixed round count (6) was chosen
