@@ -65,7 +65,7 @@ def _bpe_rounds(words: DataFrame, rounds: int) -> tuple[list[DataFrame], DataFra
     cur = words.select("word", F.split("word", "").alias("syms"), "cnt")
     learned = []
     for rnd in range(1, rounds + 1):
-        cur = materialize(cur, iterative=True)
+        cur = materialize(cur)
         pairs = cur.select(
             F.explode(
                 F.arrays_zip(

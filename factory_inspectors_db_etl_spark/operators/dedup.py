@@ -68,6 +68,12 @@ def portable_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def portable_hash60_sql(expr: str) -> str:
+    """DuckDB SQL rendering of ``portable_hash60`` over the SQL
+    expression ``expr`` (the oracles' copy of the hash)."""
+    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+
+
 def affine_params(n: int, seed: int = 0x5EED) -> list[tuple[int, int, int]]:
     """Deterministic (a, b, c) triples for the universal family
     g_i(h) = (a_i*hi + b_i*lo + c_i) mod (2^31-1) over the two 30-bit
@@ -160,11 +166,11 @@ def ngram_jaccard_pairs(
     # (doc id + 64-bit hash = 16 B/shingle); durability is session-
     # configurable via spark.graft.materialize.mode (local checkpoint by
     # default; 'reliable' survives executor loss — see operators/
-    # materialize.py).  eager=True deliberately: a LAZY checkpoint lets
-    # the consuming stages race the cache and re-compute (measured
-    # +30-50% on every barriered query); the cost is that plan-only
-    # callers (the audit tool) execute the upstream job at construction
-    # time.
+    # materialize.py).  The barrier is eager deliberately: a LAZY
+    # checkpoint lets the consuming stages race the cache and re-compute
+    # (measured +30-50% on every barriered query); the cost is that
+    # plan-only callers (the audit tool) execute the upstream job at
+    # construction time.
     sh = materialize(
         _with_words(df, text_col)
         .select(
@@ -461,7 +467,7 @@ def simhash_near_duplicates(
     value).  ``bits`` must match the fingerprint width (60 for portable
     SimHash, 64 for xxhash64).
 
-    The fingerprint table is materialized (``localCheckpoint``) before
+    The fingerprint table is materialized (``materialize``) before
     the self-join: Spark plans no ReusedExchange across the two sides
     here, so without the barrier the 60-aggregate SimHash computation
     executes TWICE (measured 2x the hash cost at sf0.1).  The
@@ -538,9 +544,9 @@ def connected_components(
       and its sum is observed from the round's own barrier job
       (``materialize_counted``) — no extra job and no labels-vs-labels
       self-join per round;
-    * lineage is cut every round with ``localCheckpoint`` (the iterative-
-      algorithm contract in Spark: without it the plan doubles per round
-      and the optimizer re-analyzes an exponentially growing tree);
+    * lineage is cut every round by the barrier (the iterative-algorithm
+      contract in Spark: without it the plan doubles per round and the
+      optimizer re-analyzes an exponentially growing tree);
     * for graphs whose diameter is genuinely large (not the dedup use
       case), the O(log^2 n)-round alternating large-star/small-star
       algorithm (Kiveris et al., "Connected Components in MapReduce and
@@ -556,8 +562,7 @@ def connected_components(
     edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct(),
-        iterative=True,
+        .distinct()
     )
     # r12 NOTE — broadcast-joining labels/nbr_min (the g1/large-star
     # pattern) was tried here and MEASURED SLOWER, then reverted: this
@@ -595,7 +600,6 @@ def connected_components(
                 # decrease, so changed == strictly smaller) — no self-join
                 (new_label < F.col("label")).cast("long").alias("changed"),
             ),
-            iterative=True,
             changed="changed",
         )
         labels = new_labels.select("node", "label")
@@ -638,22 +642,20 @@ def connected_components_large_star(
 
     Returns (node, component) for every node appearing in ``pairs``,
     identical to ``connected_components`` output.  Same
-    lineage-truncation contract (``localCheckpoint`` per round).
+    lineage-truncation contract (one barrier per round).
     """
     edges, prev_cnt, _ = materialize_counted(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct(),
-        iterative=True,
+        .distinct()
     )
     # node universe from the UNfiltered pairs so self-paired nodes get a
     # (node, node) row, matching connected_components exactly
     all_nodes, n_nodes, _ = materialize_counted(
         pairs.select(F.col(src).alias("node"))
         .union(pairs.select(F.col(dst).alias("node")))
-        .distinct(),
-        iterative=True,
+        .distinct()
     )
 
     # r12 (guide §2.4, the g1 pattern): the per-node min table m is
@@ -664,7 +666,7 @@ def connected_components_large_star(
     # the materialized exact node universe: its barrier's row count
     # gates every round (m ⊆ nodes always).
     spark = pairs.sparkSession
-    bcast = resolve_graph_broadcast(spark, None, n_nodes)
+    bcast = resolve_graph_broadcast(spark, n_nodes)
 
     def _large_star(e: DataFrame) -> DataFrame:
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -675,7 +677,7 @@ def connected_components_large_star(
         # extra edge-scale shuffle.  Emission volume is exactly |E|
         # (one orientation survives the v > u filter per edge).
         return (
-            sym.join(graph_small_side(spark, m, bcast), "u")
+            sym.join(graph_small_side(m, bcast), "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
@@ -685,7 +687,7 @@ def connected_components_large_star(
         # e is canonical (u > v) after large-star's (larger -> m) emit
         can = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         m = can.groupBy("u").agg(F.least(F.first("u"), F.min("v")).alias("m"))
-        joined = can.join(graph_small_side(spark, m, bcast), "u")
+        joined = can.join(graph_small_side(m, bcast), "u")
         pointed = joined.select(F.col("v").alias("u"), F.col("m").alias("v")).union(
             joined.select(F.col("u"), F.col("m").alias("v"))
         )
@@ -702,9 +704,7 @@ def connected_components_large_star(
     # vs the r11 probe which shuffled BOTH edge lists through two
     # exceptAll directions every round.
     for _ in range(max_iters):
-        new_edges, new_cnt, _ = materialize_counted(
-            _small_star(_large_star(edges)), iterative=True
-        )
+        new_edges, new_cnt, _ = materialize_counted(_small_star(_large_star(edges)))
         changed = 1
         if new_cnt == prev_cnt:
             changed = new_edges.exceptAll(edges).limit(1).count()

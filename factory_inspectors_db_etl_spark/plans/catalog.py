@@ -33,6 +33,7 @@ from ..operators.dedup import (
     ngram_cluster_assignments,
     ngram_jaccard_pairs,
     portable_hash60,
+    portable_hash60_sql,
     simhash,
 )
 from ..operators.dims import build_dim, null_safe_join
@@ -1559,11 +1560,6 @@ def q_d_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     return minhash_lsh_candidates(sigs, bands=16, rows_per_band=4)
 
 
-def _portable60_sql(expr: str) -> str:
-    """DuckDB rendering of operators.dedup.portable_hash60."""
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
 def _minhash_bands_cte(k: int = 5, num_hashes: int = 64, bands: int = 16, rows_per_band: int = 4) -> str:
     """Shared CTE prefix (through ``bands``) for the MinHash oracles: same
     shingling as O_D_JACCARD, same affine coefficients as
@@ -1575,7 +1571,7 @@ def _minhash_bands_cte(k: int = 5, num_hashes: int = 64, bands: int = 16, rows_p
     )
     band_rows = "\n  UNION ALL\n  ".join(
         f"SELECT doc_id, {b} AS band, "
-        + _portable60_sql(
+        + portable_hash60_sql(
             " || ',' || ".join(
                 f"CAST(g{b * rows_per_band + j} AS VARCHAR)" for j in range(rows_per_band)
             )
@@ -1592,7 +1588,7 @@ WITH toks AS (
   FROM toks, UNNEST(range(1, greatest(len(w) - {k - 1}, 1) + 1)) AS t(i)
 ), halves AS (
   SELECT doc_id, h >> 30 AS hi, h & 1073741823 AS lo
-  FROM (SELECT doc_id, {_portable60_sql("sh")} AS h FROM sh)
+  FROM (SELECT doc_id, {portable_hash60_sql("sh")} AS h FROM sh)
 ), sig AS (
   SELECT doc_id,
          {g}
@@ -1641,7 +1637,7 @@ def _gen_incremental_oracle() -> str:
         _minhash_bands_cte()
         + f"""
 , flags AS (
-  SELECT doc_id, ({_portable60_sql("text")} % 5 = 0) AS is_delta FROM documents
+  SELECT doc_id, ({portable_hash60_sql("text")} % 5 = 0) AS is_delta FROM documents
 ), cand AS (
   SELECT a.doc_id, count(DISTINCT b.doc_id) AS n_dup_sources
   FROM bands a
@@ -1685,7 +1681,7 @@ WITH toks AS (
 ), th AS (
   SELECT doc_id, unnest(w) AS tok FROM toks
 ), hh AS (
-  SELECT doc_id, {_portable60_sql("tok")} AS h FROM th
+  SELECT doc_id, {portable_hash60_sql("tok")} AS h FROM th
 ), votes AS (
   SELECT doc_id,
          {votes}
@@ -1870,7 +1866,7 @@ def q_p_pack_bins(spark: SparkSession, sf: str) -> DataFrame:
 
 O_P_PACK = f"""
 WITH h AS (
-  SELECT doc_id, n_chars, {_portable60_sql("text")} AS h, text FROM documents
+  SELECT doc_id, n_chars, {portable_hash60_sql("text")} AS h, text FROM documents
 ), s AS (
   SELECT doc_id, n_chars, h, h % 16 AS shard, text FROM h
 ), c AS (
@@ -1916,8 +1912,8 @@ def q_d_contamination(spark: SparkSession, sf: str) -> DataFrame:
 O_D_CONTAM = f"""
 WITH split AS (
   SELECT doc_id, text,
-         CASE WHEN {_portable60_sql("text")} % 10000 < 8000 THEN 'train'
-              WHEN {_portable60_sql("text")} % 10000 < 9000 THEN 'val'
+         CASE WHEN {portable_hash60_sql("text")} % 10000 < 8000 THEN 'train'
+              WHEN {portable_hash60_sql("text")} % 10000 < 9000 THEN 'val'
               ELSE 'test' END AS split
   FROM documents
 ), toks AS (
@@ -1926,7 +1922,7 @@ WITH split AS (
   FROM split
 ), sh AS (
   SELECT DISTINCT doc_id, split,
-         {_portable60_sql("array_to_string(list_slice(w, i, i + 4), ' ')")} AS sh
+         {portable_hash60_sql("array_to_string(list_slice(w, i, i + 4), ' ')")} AS sh
   FROM toks, UNNEST(range(1, greatest(len(w) - 4, 1) + 1)) AS t(i)
 )
 SELECT a.doc_id AS test_doc, count(DISTINCT b.doc_id) AS n_contaminating_train_docs
@@ -2018,7 +2014,7 @@ def _gen_hash_split_oracle(fractions: dict[str, float], buckets: int = 10_000) -
     cum, cases = 0.0, []
     for name in names[:-1]:
         cum += fractions[name]
-        cases.append(f"WHEN {_portable60_sql('text')} % {buckets} < {int(cum * buckets)} THEN '{name}'")
+        cases.append(f"WHEN {portable_hash60_sql('text')} % {buckets} < {int(cum * buckets)} THEN '{name}'")
     return f"""
 SELECT doc_id,
        CASE {' '.join(cases)} ELSE '{names[-1]}' END AS split
@@ -2049,7 +2045,7 @@ def _gen_stratified_oracle(rates: dict[str, float], default_rate: float, buckets
     )
     return f"""
 SELECT doc_id, lang FROM documents
-WHERE {_portable60_sql('text')} % {buckets} < (CASE {ladder} ELSE {int(default_rate * buckets)} END)
+WHERE {portable_hash60_sql('text')} % {buckets} < (CASE {ladder} ELSE {int(default_rate * buckets)} END)
 """
 
 
@@ -2073,7 +2069,7 @@ SELECT user_id, event_id FROM (
   SELECT user_id, event_id,
          row_number() OVER (
            PARTITION BY user_id
-           ORDER BY {_portable60_sql("CAST(event_id AS VARCHAR)")}, CAST(event_id AS VARCHAR)
+           ORDER BY {portable_hash60_sql("CAST(event_id AS VARCHAR)")}, CAST(event_id AS VARCHAR)
          ) AS rn
   FROM events)
 WHERE rn <= 2
@@ -2947,7 +2943,7 @@ t AS (SELECT min(n / w) AS t FROM wtab),
 rates AS (SELECT lang, least(1.0, w * t.t / n) AS rate FROM wtab CROSS JOIN t)
 SELECT d.doc_id, d.lang
 FROM inmix d JOIN rates USING (lang)
-WHERE {_portable60_sql("text")} % {buckets} < floor(rate * {buckets} + 1e-9)
+WHERE {portable_hash60_sql("text")} % {buckets} < floor(rate * {buckets} + 1e-9)
 """
 
 
@@ -3214,7 +3210,7 @@ def q_t_quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
 
 def _gen_classifier_oracle(weights: list[float]) -> str:
     warr = "[" + ", ".join(repr(w) for w in weights) + "]"
-    h = _portable60_sql("t")
+    h = portable_hash60_sql("t")
     return f"""
 WITH toks AS (
   SELECT doc_id, string_split(trim(lower(text)), ' ') AS tk FROM documents

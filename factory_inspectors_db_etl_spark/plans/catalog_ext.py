@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.dedup import portable_hash60
+from ..operators.dedup import portable_hash60, portable_hash60_sql
 from ..operators.materialize import materialize
 from ..operators import text_analysis as TA
 from ..sources.tables import load_table
@@ -23,10 +23,6 @@ from ..sources.tables import load_table
 def _dec(c) -> F.Column:
     c = F.col(c) if isinstance(c, str) else c
     return c.cast("decimal(18,2)")
-
-
-def _portable60_sql(expr: str) -> str:
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -281,7 +277,7 @@ WITH docs AS (
   SELECT doc_id,
          CASE WHEN trim(lower(text)) = '' THEN []
               ELSE string_split_regex(trim(lower(text)), '\\s+') END AS w,
-         {_portable60_sql('text')} % 10000 < 8000 AS is_train
+         {portable_hash60_sql('text')} % 10000 < 8000 AS is_train
   FROM documents
 ), tok AS (
   SELECT doc_id, is_train, unnest(w) AS tok FROM docs
@@ -881,7 +877,7 @@ def q_d_substring_dedup(spark: SparkSession, sf: str) -> DataFrame:
 O_D_SUBSTRING_DEDUP = f"""
 WITH w AS (
   SELECT DISTINCT doc_id,
-         {_portable60_sql(f"unnest(list_transform(generate_series(1, greatest(length(text)-{_SSD_WIN - 1}, 1), {_SSD_STRIDE}), i -> substr(text, i, {_SSD_WIN})))")} AS wh
+         {portable_hash60_sql(f"unnest(list_transform(generate_series(1, greatest(length(text)-{_SSD_WIN - 1}, 1), {_SSD_STRIDE}), i -> substr(text, i, {_SSD_WIN})))")} AS wh
   FROM documents
 ), shared AS (
   SELECT wh FROM w GROUP BY wh HAVING count(*) >= 2

@@ -26,16 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import assign_components, ngram_cluster_assignments
+from ..operators.dedup import (
+    assign_components,
+    ngram_cluster_assignments,
+    portable_hash60_sql,
+)
 from ..operators.sampling import hash_split
 from ..sources.tables import load_table
-
-
-def _portable60_sql(expr: str) -> str:
-    """DuckDB rendering of operators.dedup.portable_hash60 (same as
-    plans.catalog's copy — re-declared here because catalog imports this
-    module, not the reverse)."""
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -111,7 +108,7 @@ WITH RECURSIVE toks AS (
   FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 )
 SELECT doc_id, component_id,
-       CASE WHEN {_portable60_sql("CAST(component_id AS VARCHAR)")} % 10000 < 9000
+       CASE WHEN {portable_hash60_sql("CAST(component_id AS VARCHAR)")} % 10000 < 9000
             THEN 'train' ELSE 'val' END AS split
 FROM assigned
 """

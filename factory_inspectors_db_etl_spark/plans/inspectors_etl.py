@@ -4,8 +4,8 @@ The reference's engine is a sequential per-file loop with mutable state
 (populate_db_ru_v1.py:520-681).  Here that loop runs as ONE Arrow pass
 per document: a ``mapInPandas`` over whole-file ``(path, content)`` rows
 parses the table (U2), carries the loop state in Python and emits
-assignment-grain rows plus the location rejects, which one
-``localCheckpoint`` barrier materializes.  After the barrier the plan is
+assignment-grain rows plus the location rejects, which one barrier
+(``operators/materialize.py``) materializes.  After the barrier the plan is
 columnar: dim builds (J2) each materialized once, broadcast FK joins
 (J1/J3), fact assembly (W6).  ``stream_assignment_rows`` runs the same
 pass over the files the ``html_roster`` stream source emits.
@@ -39,13 +39,14 @@ from collections.abc import Callable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.dictionaries import KNOWN_EDUCATIONS, KNOWN_PROFESSIONS, KNOWN_RANKS, ROLE_MAP_STD
 from ..functions.personnel_parser import SENIOR_ROLE, parse_personnel
 from ..functions.text import canonicalize_person_name_py, clean_number, standardize_text_py
 from ..operators.dims import build_dim, mint_surrogate_ids
+from ..operators.materialize import materialize, materialize_counted
 from ..sources.html_roster_source import HtmlRosterDataSource
 
 # ``read_roster_rows`` is not used by the fused pass (it reads whole files)
@@ -303,28 +304,27 @@ def parsed_assignment_rows(
 
     Eager: the call runs a Spark job before returning, with or without
     ``return_rejects`` — the per-document pass (one task per input split
-    of whole files, no shuffle) materialized by one ``localCheckpoint``.
+    of whole files, no shuffle) materialized by one ``materialize_counted``
+    barrier (``spark.graft.materialize.mode`` picks its durability).
     The barrier keeps the Python pass single-run for every consumer (five
     dims, the fact, the rejects) and truncates the plan they analyze; the
-    ``etl_quality`` observation rides its job into ``LAST_BUILD_METRICS``.
-    Where executor loss must be survivable, a reliable ``checkpoint()``
-    has the same semantics."""
+    quality sums it observes from its own job go to
+    ``LAST_BUILD_METRICS``."""
     rows = _pass_rows(read_roster_files(spark, paths))
     kept = F.col("reject_reason").isNull()
 
     def kept_with(cond: Column) -> Column:
-        return F.sum(F.when(kept & cond, 1).otherwise(0))
+        return (kept & cond).cast("long")
 
-    obs = Observation("etl_quality")
-    rows = rows.observe(
-        obs,
-        F.count(F.when(kept, 1)).alias("parsed_rows"),
-        kept_with(F.col("inspector_key").isNull()).alias("rows_without_inspector"),
-        kept_with(F.col("city_key").isNull()).alias("rows_without_city"),
-        kept_with(F.col("start_date_raw").isNotNull()).alias("rows_with_start_date"),
-    ).localCheckpoint()
+    rows, _, quality = materialize_counted(
+        rows,
+        parsed_rows=kept.cast("long"),
+        rows_without_inspector=kept_with(F.col("inspector_key").isNull()),
+        rows_without_city=kept_with(F.col("city_key").isNull()),
+        rows_with_start_date=kept_with(F.col("start_date_raw").isNotNull()),
+    )
     LAST_BUILD_METRICS.clear()
-    LAST_BUILD_METRICS.update(obs.get)
+    LAST_BUILD_METRICS.update(quality)
 
     a = rows.filter(kept).drop("reject_reason")
     if not return_rejects:
@@ -399,7 +399,8 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
 
     Eager: before returning, the call runs the ``parsed_assignment_rows``
     barrier job and then materializes each of the five dims exactly once
-    (``localCheckpoint``, the five concurrently).  A dim's write and the
+    (``materialize``, the five concurrently, in the session's
+    ``spark.graft.materialize.mode``).  A dim's write and the
     fact's broadcast join then read the same blocks instead of each
     re-deriving the dim.  The fact and the rejects stay lazy: columnar
     plans over the checkpointed blocks, run by whoever writes them."""
@@ -442,7 +443,7 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
         )
 
     dims = _concurrently(
-        lambda _, dim: dim.localCheckpoint(),
+        lambda _, dim: materialize(dim),
         {
             "inspectors": inspectors,
             "locations": locations,

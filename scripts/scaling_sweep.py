@@ -54,7 +54,7 @@ FAMILIES = {
     "d_semantic_dedup_lshassign": "auto k + LSH-pruned assignment: ~(1+bits)*8 centroid candidates per vector (bits ~ log k) + n*cell*n_probe pairs — both terms ~n log n, expect ~linear",
     "d_setsim_prefix_join": "posting-list candidates + exact-dup collapse — expect ~linear after collapse",
     "g7_degree_assortativity": "edge build is sum over orders of (parts/order)^2 with bounded parts/order — expect ~linear in orders; moment agg is one reduce",
-    "g8_kcore": "g7's edge build + 6 fixed peel rounds (degree agg + 2 alive joins each, per-round materialize) — expect ~linear in edges",
+    "g8_kcore": "g7's edge build + peel rounds to the observed fixpoint, at most 6 (degree agg + 2 alive joins each, per-round materialize) — expect ~linear in edges",
     "g4_khop_bfs": "O(E * hops), 3 hops — expect ~linear in E",
     "corpus_pipeline_build": "composition of linear stages — expect ~linear",
     "g9_link_prediction": "candidate volume n*cap^2 with the deg<=64 hub cap — expect ~linear in edges once capped; TakeOrdered top-k, no global sort",

@@ -281,16 +281,16 @@ def test_iterative_shuffle_clamp_bounds_local_mode(spark, sf_dir):
 
 def test_graph_join_strategy_flips_with_conf(spark, sf_dir):
     """The iterative-graph |V|-row join must be a broadcast join by
-    default and a plain shuffle join under
-    spark.graft.graph.broadcast=false (the billion-node scale-out mode,
+    default and a plain shuffle join once its bound passes
+    spark.graft.graph.broadcast.maxRows (the billion-node scale-out mode,
     VERDICT r4 item #3).  Auto-broadcast is disabled for the shuffle
-    probe so the assertion sees the planner's unhinted choice.  A value
-    outside {auto, true, false}, or a maxRows that is not a positive
-    integer, raises instead of reading as the default."""
+    probe so the assertion sees the planner's unhinted choice.  A maxRows
+    that is not a positive integer raises instead of reading as the
+    default."""
     from factory_inspectors_db_etl_spark.operators.graph_broadcast import (
-        GRAPH_BROADCAST_CONF,
         GRAPH_BROADCAST_MAX_ROWS_CONF,
         graph_small_side,
+        resolve_graph_broadcast,
     )
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -303,68 +303,58 @@ def test_graph_join_strategy_flips_with_conf(spark, sf_dir):
     )
     contrib = edges.groupBy("src").agg(F.count(F.lit(1)).alias("contrib"))
 
-    plan_bcast = _physical(edges.join(graph_small_side(spark, contrib), "src"))
+    def gated_join():
+        bcast = resolve_graph_broadcast(spark, 1_000)
+        return _physical(edges.join(graph_small_side(contrib, bcast), "src"))
+
+    plan_bcast = gated_join()
     assert "BroadcastHashJoin" in plan_bcast
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set(GRAPH_BROADCAST_CONF, "false")
+    spark.conf.set(GRAPH_BROADCAST_MAX_ROWS_CONF, "999")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan_shuffle = _physical(edges.join(graph_small_side(spark, contrib), "src"))
+        plan_shuffle = gated_join()
     finally:
-        spark.conf.unset(GRAPH_BROADCAST_CONF)
+        spark.conf.unset(GRAPH_BROADCAST_MAX_ROWS_CONF)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
     assert "BroadcastHashJoin" not in plan_shuffle
     assert "SortMergeJoin" in plan_shuffle or "ShuffledHashJoin" in plan_shuffle
 
-    for conf, bad in [
-        (GRAPH_BROADCAST_CONF, "off"),
-        (GRAPH_BROADCAST_CONF, "0"),
-        (GRAPH_BROADCAST_CONF, "fasle"),
-        (GRAPH_BROADCAST_MAX_ROWS_CONF, "0"),
-        (GRAPH_BROADCAST_MAX_ROWS_CONF, "-5"),
-        (GRAPH_BROADCAST_MAX_ROWS_CONF, "20M"),
-    ]:
-        spark.conf.set(conf, bad)
+    for bad in ["0", "-5", "20M"]:
+        spark.conf.set(GRAPH_BROADCAST_MAX_ROWS_CONF, bad)
         try:
-            with pytest.raises(ValueError, match=re.escape(conf)):
-                graph_small_side(spark, contrib)
+            with pytest.raises(ValueError, match=re.escape(GRAPH_BROADCAST_MAX_ROWS_CONF)):
+                resolve_graph_broadcast(spark, 1)
         finally:
-            spark.conf.unset(conf)
+            spark.conf.unset(GRAPH_BROADCAST_MAX_ROWS_CONF)
 
 
 def test_graph_join_strategy_size_gate(spark, sf_dir):
-    """The r12 auto size gate (VERDICT r11 item #8): in the default
-    ``auto`` mode the |V|-row graph small side broadcasts below
-    spark.graft.graph.broadcast.maxRows and falls back to a shuffle
-    join above it — so a billion-node graph cannot OOM the driver even
-    when nobody set the conf.  Below the threshold plans are unchanged
-    (broadcast, the r11 behavior); the explicit per-call override and
-    the true/false conf still win."""
+    """The r12 size gate (VERDICT r11 item #8): the |V|-row graph small
+    side broadcasts below spark.graft.graph.broadcast.maxRows and falls
+    back to a shuffle join above it — so a billion-node graph cannot OOM
+    the driver even when nobody set the conf.  Below the threshold plans
+    are unchanged (broadcast, the r11 behavior); the explicit per-call
+    override still wins."""
     from factory_inspectors_db_etl_spark.operators.graph_broadcast import (
-        GRAPH_BROADCAST_CONF,
         GRAPH_BROADCAST_MAX_ROWS_CONF,
         graph_small_side,
         resolve_graph_broadcast,
     )
 
-    # auto (default): gate by the caller's row bound
-    assert resolve_graph_broadcast(spark, None, lambda: 1_000) is True
-    assert resolve_graph_broadcast(spark, None, None) is True  # no bound: pre-r12 behavior
+    # default maxRows: gate by the caller's row bound
+    assert resolve_graph_broadcast(spark, 1_000) is True
     spark.conf.set(GRAPH_BROADCAST_MAX_ROWS_CONF, "500")
     try:
-        assert resolve_graph_broadcast(spark, None, lambda: 1_000) is False
-        assert resolve_graph_broadcast(spark, None, 400) is True
+        assert resolve_graph_broadcast(spark, 1_000) is False
+        assert resolve_graph_broadcast(spark, 400) is True
         # explicit per-call override beats the gate (g1b/g3b contract)
-        assert resolve_graph_broadcast(spark, True, lambda: 10**9) is True
-        assert resolve_graph_broadcast(spark, False, lambda: 1) is False
-        # conf=true/false beats the gate too
-        spark.conf.set(GRAPH_BROADCAST_CONF, "true")
-        assert resolve_graph_broadcast(spark, None, lambda: 10**9) is True
+        assert resolve_graph_broadcast(spark, 10**9, True) is True
+        assert resolve_graph_broadcast(spark, 1, False) is False
 
         # end-to-end: the same join that broadcasts below the gate plans
         # a shuffle join above it
-        spark.conf.unset(GRAPH_BROADCAST_CONF)
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         a, b = li.alias("a"), li.alias("b")
         edges = (
@@ -378,10 +368,10 @@ def test_graph_join_strategy_size_gate(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             over = _physical(
-                edges.join(graph_small_side(spark, contrib, None, lambda: 501), "src")
+                edges.join(graph_small_side(contrib, resolve_graph_broadcast(spark, 501)), "src")
             )
             under = _physical(
-                edges.join(graph_small_side(spark, contrib, None, lambda: 499), "src")
+                edges.join(graph_small_side(contrib, resolve_graph_broadcast(spark, 499)), "src")
             )
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
@@ -390,8 +380,6 @@ def test_graph_join_strategy_size_gate(spark, sf_dir):
         assert "BroadcastHashJoin" in under
     finally:
         spark.conf.unset(GRAPH_BROADCAST_MAX_ROWS_CONF)
-        if spark.conf.get(GRAPH_BROADCAST_CONF, None):
-            spark.conf.unset(GRAPH_BROADCAST_CONF)
 
 
 def test_kcore_size_gate_bounds_vertices_not_edges(spark, sf_dir, monkeypatch):
@@ -406,25 +394,15 @@ def test_kcore_size_gate_bounds_vertices_not_edges(spark, sf_dir, monkeypatch):
     from factory_inspectors_db_etl_spark.plans import catalog_graph
 
     seen = []
+    real = catalog_graph.materialize_counted
 
-    def recording(real, barrier):
-        def record(df, *args, **kwargs):
-            out = real(df, *args, **kwargs)
-            seen.append((_physical(df), barrier(out)))
-            return out
+    def recording(df, *args, **kwargs):
+        out = real(df, *args, **kwargs)
+        seen.append((_physical(df), out[0]))
+        return out
 
-        return record
-
-    # the edge list goes through `materialize`, every peel round through
-    # `materialize_counted`
-    monkeypatch.setattr(
-        catalog_graph, "materialize", recording(catalog_graph.materialize, lambda out: out)
-    )
-    monkeypatch.setattr(
-        catalog_graph,
-        "materialize_counted",
-        recording(catalog_graph.materialize_counted, lambda out: out[0]),
-    )
+    # the edge list and every peel round go through `materialize_counted`
+    monkeypatch.setattr(catalog_graph, "materialize_counted", recording)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -441,3 +419,43 @@ def test_kcore_size_gate_bounds_vertices_not_edges(spark, sf_dir, monkeypatch):
     assert n_edges > 0 and rounds_default and rounds_gated
     assert all("BroadcastHashJoin" in plan for plan in rounds_default)
     assert not any("BroadcastHashJoin" in plan for plan in rounds_gated)
+
+
+@pytest.mark.parametrize("query", ["q_g1_pagerank", "q_g8_kcore"])
+def test_gated_graph_queries_run_no_job_outside_a_barrier(spark, sf_dir, monkeypatch, query):
+    """The size gate reads its bound from a barrier's observed count, so a
+    gated graph query runs no job of its own: every job runs inside a
+    barrier, each of which gets its own job group here, and none in the
+    outer group.  Table loads get a group of their own too, since reading
+    a parquet footer for the schema is a job."""
+    from factory_inspectors_db_etl_spark.plans import catalog_graph
+
+    sc = spark.sparkContext
+    outer = f"{query}-outer"
+    groups: list[str] = []
+
+    def in_own_group(fn, kind):
+        def recording(*args, **kwargs):
+            gid = f"{query}-{kind}-{len(groups)}"
+            groups.append(gid)
+            sc.setJobGroup(gid, gid)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setJobGroup(outer, outer)
+
+        return recording
+
+    for name in ("materialize", "materialize_counted"):
+        monkeypatch.setattr(catalog_graph, name, in_own_group(getattr(catalog_graph, name), "barrier"))
+    monkeypatch.setattr(catalog_graph, "load_table", in_own_group(catalog_graph.load_table, "scan"))
+    sc.setJobGroup(outer, outer)
+    try:
+        getattr(catalog_graph, query)(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    barriers = [g for g in groups if "-barrier-" in g]
+    assert len(barriers) >= 2
+    assert all(tracker.getJobIdsForGroup(g) for g in barriers)
+    assert tracker.getJobIdsForGroup(outer) == []

@@ -356,18 +356,21 @@ def test_g8_kcore_stops_at_its_observed_fixpoint(spark, sf_dir, monkeypatch):
     from factory_inspectors_db_etl_spark.plans import catalog_graph
 
     real = catalog_graph.materialize_counted
-    kept_counts = []
+    barrier_counts = []
 
     def recording(df, *args, **kwargs):
         out = real(df, *args, **kwargs)
-        kept_counts.append(out[1])
+        barrier_counts.append(out[1])
         return out
 
     monkeypatch.setattr(catalog_graph, "materialize_counted", recording)
     catalog_graph.q_g8_kcore(spark, sf_dir)
+    # the first counted barrier is the edge list, the rest are the peels
+    n_edges, *kept_counts = barrier_counts
     assert 0 < len(kept_counts) < catalog_graph._KCORE_ROUNDS
-    edges = catalog_graph._copurchase_edges(spark, sf_dir, urgent=True, oriented=True)
-    counts = [edges.count()] + kept_counts
+    edges, _ = catalog_graph._copurchase_edges(spark, sf_dir, urgent=True, oriented=True)
+    assert edges.count() == n_edges
+    counts = [n_edges] + kept_counts
     # every round but the last removes edges; the last keeps them all
     assert all(a > b for a, b in zip(counts[:-2], counts[1:-1]))
     assert counts[-1] == counts[-2]
