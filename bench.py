@@ -15,10 +15,14 @@ result transfer.
 
 from __future__ import annotations
 
+import atexit
+import importlib.util
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -40,6 +44,26 @@ from factory_inspectors_db_etl_spark.session import get_spark  # noqa: E402
 # it CONSTANT per query, so round-over-round common-entry deltas are
 # interpretable at face value again.
 HEADLINE = sorted(QUERIES)
+
+
+def roster_corpus() -> str:
+    """Directory of yearly ``fabric{YYYY}.html`` rosters for the ETL
+    entries: ``$SPARK_GRAFT_CORPUS`` when set (the reference corpus),
+    else a roster from ``perfbench/gen_roster.py`` (seed 1, scale 1:
+    11 files, ~1.1k assignments) in a temporary directory removed at
+    exit."""
+    corpus = os.environ.get("SPARK_GRAFT_CORPUS")
+    if corpus:
+        return corpus
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench", "gen_roster.py")
+    spec = importlib.util.spec_from_file_location("_gen_roster", path)
+    gen = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = gen  # dataclasses resolve their module by name
+    spec.loader.exec_module(gen)
+    out = tempfile.mkdtemp(prefix="bench_roster_")
+    atexit.register(shutil.rmtree, out, True)
+    gen.generate(out, 1, 1)
+    return out
 
 
 def _median_ratio(
@@ -183,20 +207,19 @@ def main() -> None:
     # the flagship document pipeline itself: full-corpus warehouse build +
     # parquet star-schema write (reader UDTF -> personnel parser -> dims ->
     # fact -> partitioned sink), the reference's end-to-end ETL run.
-    # Corpus size is fixed (13 yearly rosters), independent of sf.
-    import shutil
-    import tempfile
-
+    # Corpus size is fixed (``roster_corpus``), independent of sf.
     from factory_inspectors_db_etl_spark.plans.inspectors_etl import (
         build_warehouse,
         write_warehouse,
     )
 
+    corpus = roster_corpus()
+
     # warm the two Python UDF islands (reader UDTF + personnel parser) on
     # a single file first: worker spin-up + Arrow serializer init costs
     # ~2-4s and belongs to session startup, not the measured build
     try:
-        build_warehouse(spark, "/root/reference/diplom/fabric1901.html")[
+        build_warehouse(spark, f"{corpus}/fabric1901.html")[
             "assignments"
         ].write.mode("overwrite").format("noop").save()
     except Exception as e:  # noqa: BLE001 — warm-up is best-effort, but never silent
@@ -214,7 +237,7 @@ def main() -> None:
         out = tempfile.mkdtemp(prefix="bench_wh_")
         try:
             t0 = time.time()
-            write_warehouse(build_warehouse(spark, "/root/reference/diplom/fabric*.html"), out)
+            write_warehouse(build_warehouse(spark, f"{corpus}/fabric*.html"), out)
             if i > 0:  # run 0 is the full-plan warm-up
                 runs.append(time.time() - t0)
         finally:

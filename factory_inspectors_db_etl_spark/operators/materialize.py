@@ -2,7 +2,7 @@
 
 Several operators (MinHash/SimHash signatures, shingle streams, LSH
 bucket tables, tf-idf term frequencies, iterative connected-components
-rounds, the roster ETL's per-document pass and its dims) must be
+rounds, the roster ETL's per-document pass) must be
 computed EXACTLY ONCE and then re-read by a downstream self-join, loop
 or writer.  Spark's contract for that is a materialization barrier; the
 engine takes every one through this module, in one of two durability

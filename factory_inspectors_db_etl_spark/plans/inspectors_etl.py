@@ -5,10 +5,13 @@ The reference's engine is a sequential per-file loop with mutable state
 per document: a ``mapInPandas`` over whole-file ``(path, content)`` rows
 parses the table (U2), carries the loop state in Python and emits
 assignment-grain rows plus the location rejects, which one barrier
-(``operators/materialize.py``) materializes.  After the barrier the plan is
-columnar: dim builds (J2) each materialized once, broadcast FK joins
-(J1/J3), fact assembly (W6).  ``stream_assignment_rows`` runs the same
-pass over the files the ``html_roster`` stream source emits.
+(``operators/materialize.py``) materializes.  After the barrier one
+grouping-sets aggregate yields every dim's distinct natural keys and each
+file's row count; the driver mints the dims' surrogate ids (J2) and the
+fact's per-file id offsets (W6) from it and hands the dims back as local
+relations, which the fact joins by broadcast (J1/J3).
+``stream_assignment_rows`` runs the same pass over the files the
+``html_roster`` stream source emits.
 
 Per-document state (reset per file, bounded by rows-per-document):
   current okrug / gubernia                -> set by header markers and 1901
@@ -21,7 +24,8 @@ Per-document state (reset per file, bounded by rows-per-document):
                                              "ID не найден" note suffix
   assignment counter                      -> per-file fact ordinal (W6)
   rowspan counters                        -> inside the reader (W3)
-  dim caches                              -> build_dim + broadcast joins (J2/J1)
+  dim caches                              -> driver-minted local dims +
+                                             broadcast joins (J2/J1)
 
 Documented divergences from the reference (SURVEY.md §7):
   * surrogate ids are ordered by natural key (dims) / by (file, row_idx,
@@ -35,18 +39,20 @@ Documented divergences from the reference (SURVEY.md §7):
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from itertools import accumulate
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.dictionaries import KNOWN_EDUCATIONS, KNOWN_PROFESSIONS, KNOWN_RANKS, ROLE_MAP_STD
 from ..functions.personnel_parser import SENIOR_ROLE, parse_personnel
 from ..functions.text import canonicalize_person_name_py, clean_number, standardize_text_py
-from ..operators.dims import build_dim, mint_surrogate_ids
-from ..operators.materialize import materialize, materialize_counted
+from ..operators.materialize import materialize_counted
 from ..sources.html_roster_source import HtmlRosterDataSource
 
 # ``read_roster_rows`` is not used by the fused pass (it reads whole files)
@@ -306,9 +312,9 @@ def parsed_assignment_rows(
     ``return_rejects`` — the per-document pass (one task per input split
     of whole files, no shuffle) materialized by one ``materialize_counted``
     barrier (``spark.graft.materialize.mode`` picks its durability).
-    The barrier keeps the Python pass single-run for every consumer (five
-    dims, the fact, the rejects) and truncates the plan they analyze; the
-    quality sums it observes from its own job go to
+    The barrier keeps the Python pass single-run for every consumer (the
+    dims' aggregate, the fact, the rejects) and truncates the plan they
+    analyze; the quality sums it observes from its own job go to
     ``LAST_BUILD_METRICS``."""
     rows = _pass_rows(read_roster_files(spark, paths))
     kept = F.col("reject_reason").isNull()
@@ -387,72 +393,136 @@ def _concurrently(fn: Callable[[str, DataFrame], object], items: dict[str, DataF
     """``{name: fn(name, df)}``, the calls submitted from a local
     thread pool so their Spark jobs run concurrently under the scheduler
     (overlapping per-job scheduling and commit latency; with sequential
-    calls the cluster idles between small jobs).  The first error
-    re-raises."""
+    calls the cluster idles between small jobs).  The warehouse writes
+    use it.  The first error re-raises."""
     with ThreadPoolExecutor(max_workers=len(items)) as pool:
         return dict(zip(items, pool.map(fn, items.keys(), items.values())))
+
+
+# one grouping set per dim natural key, plus the fact's per-file counts
+_KEY_SETS = {
+    "inspectors": ("inspector_key",),
+    "locations": ("city_key", "gubernia_std", "okrug_std"),
+    "ranks": ("rank_abbr",),
+    "professions": ("profession_key",),
+    "educations": ("education_key",),
+    "files": ("source_file",),
+}
+_KEY_COLS = list(dict.fromkeys(c for cols in _KEY_SETS.values() for c in cols))
+
+
+def _grouping_id(cols: tuple[str, ...]) -> int:
+    """``grouping_id()`` of the grouping set ``cols`` over ``_KEY_COLS``:
+    one bit per column, the first column highest, set where the column
+    is not grouped."""
+    n = len(_KEY_COLS)
+    return sum(1 << (n - 1 - i) for i, c in enumerate(_KEY_COLS) if c not in cols)
+
+
+def natural_key_order(keys: Iterable[tuple]) -> list[tuple]:
+    """``keys`` sorted as ``ORDER BY k1, k2, ... ASC NULLS FIRST``: the key
+    at position i is the one ``row_number()`` over that order numbers
+    i + 1.  Python compares strings by code point and Spark's binary
+    collation by UTF-8 bytes; the two orders are the same."""
+    return sorted(keys, key=lambda k: tuple((v is not None, v or "") for v in k))
+
+
+def _local_table(spark: SparkSession, ddl: str, columns: list[list]) -> DataFrame:
+    """A ``LocalRelation`` of ``columns`` under the DDL schema, nullability
+    included.  An Arrow table gives a local relation whatever the
+    session's Arrow conf, where a list of rows would give an RDD scan."""
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema)
 
 
 def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, DataFrame]:
     """Full star schema from roster HTML files (FIXTURES.md B3), plus the
     ``rejects`` quarantine table (P6).
 
-    Eager: before returning, the call runs the ``parsed_assignment_rows``
-    barrier job and then materializes each of the five dims exactly once
-    (``materialize``, the five concurrently, in the session's
-    ``spark.graft.materialize.mode``).  A dim's write and the
-    fact's broadcast join then read the same blocks instead of each
-    re-deriving the dim.  The fact and the rejects stay lazy: columnar
-    plans over the checkpointed blocks, run by whoever writes them."""
+    Eager: before returning, the call runs three Spark jobs: the
+    ``parsed_assignment_rows`` barrier (in the session's
+    ``spark.graft.materialize.mode``), then the map and result jobs of
+    one grouping-sets aggregate over it, which the driver collects.  The
+    aggregate yields every dim's distinct natural keys and each file's
+    assignment count; the driver mints the surrogate ids and the fact's
+    per-file offsets from them and returns the five dims as local
+    relations.  The dims hold one row per distinct key, so they fit on
+    the driver like the broadcast joins that read them.  The fact and the
+    rejects stay lazy: columnar plans over the checkpointed blocks, run by
+    whoever writes them."""
     a, rejects = parsed_assignment_rows(spark, paths, return_rejects=True)
 
-    # bucket = first letter of the name: order-preserving (a string sorts
-    # after every string with a smaller first char), so phase-1 windows
-    # parallelize over ~30 letter groups instead of one per distinct name
-    inspectors = build_dim(
-        a.filter(F.col("inspector_key").isNotNull()).select(
-            F.col("inspector_key").alias("full_name")
-        ),
-        ["full_name"],
-        "inspector_id",
-        bucket=F.substring(F.col("full_name"), 1, 1),
-    ).select("inspector_id", "full_name", F.lit(None).cast("string").alias("notes"))
-
-    locations = (
-        a.groupBy("city_key", "gubernia_std", "okrug_std")
-        .agg(F.min_by("city_std", "global_order").alias("city_name"))
-        .withColumn("location_type", F.lit("Город"))
-    )
-    locations = mint_surrogate_ids(
-        locations, ["city_key", "gubernia_std", "okrug_std"], "location_id"
-    ).select(
-        "location_id", "city_name", "city_key",
-        F.col("gubernia_std").alias("gubernia_name"),
-        F.col("okrug_std").alias("okrug_name"),
-        "location_type",
-    )
-
-    def _abbr_dim(key_col: str, id_col: str, dictionary: dict[str, str]) -> DataFrame:
-        dim = build_dim(
-            a.filter(F.col(key_col).isNotNull()).select(F.col(key_col).alias("abbreviation")),
-            ["abbreviation"],
-            id_col,
+    groups = {_grouping_id(cols): name for name, cols in _KEY_SETS.items()}
+    rows: dict[str, list] = {name: [] for name in _KEY_SETS}
+    for r in (
+        a.groupingSets([list(cols) for cols in _KEY_SETS.values()], *_KEY_COLS)
+        .agg(
+            F.grouping_id().alias("_gid"),
+            F.min_by("city_std", "global_order").alias("city_name"),
+            F.count(F.lit(1)).alias("n"),
+            F.min("year").alias("year"),
         )
+        .collect()
+    ):
+        rows[groups[r["_gid"]]].append(r)
+
+    def _minted(name: str) -> list:
+        """The set's grouped rows in natural-key order (id = position + 1);
+        a single-key dim drops the null key, as the reference's caches
+        never hold one."""
+        cols = _KEY_SETS[name]
+        keyed = {tuple(r[c] for c in cols): r for r in rows[name]}
+        if len(cols) == 1:
+            keyed.pop((None,), None)
+        return [keyed[k] for k in natural_key_order(keyed)]
+
+    def _ids(n: int) -> list[int]:
+        return list(range(1, n + 1))
+
+    inspectors = _minted("inspectors")
+    locations = _minted("locations")
+    dims = {
+        "inspectors": _local_table(
+            spark,
+            "inspector_id int NOT NULL, full_name string, notes string",
+            [_ids(len(inspectors)), [r["inspector_key"] for r in inspectors], [None] * len(inspectors)],
+        ),
+        "locations": _local_table(
+            spark,
+            "location_id int NOT NULL, city_name string, city_key string, gubernia_name string,"
+            " okrug_name string, location_type string NOT NULL",
+            [
+                _ids(len(locations)),
+                *([r[c] for r in locations] for c in ("city_name", *_KEY_SETS["locations"])),
+                ["Город"] * len(locations),
+            ],
+        ),
+    }
+
+    def _abbr_dim(name: str, id_col: str, dictionary: dict[str, str]) -> DataFrame:
+        keys = [r[_KEY_SETS[name][0]] for r in _minted(name)]
+        dim = _local_table(spark, f"{id_col} int NOT NULL, abbreviation string", [_ids(len(keys)), keys])
         return dim.select(
             id_col, "abbreviation", _lookup_full_name("abbreviation", dictionary).alias("full_name_ru")
         )
 
-    dims = _concurrently(
-        lambda _, dim: materialize(dim),
-        {
-            "inspectors": inspectors,
-            "locations": locations,
-            "ranks": _abbr_dim("rank_abbr", "rank_id", KNOWN_RANKS).withColumn(
-                "rank_type", F.lit(None).cast("string")
-            ),
-            "professions": _abbr_dim("profession_key", "profession_id", KNOWN_PROFESSIONS),
-            "educations": _abbr_dim("education_key", "education_id", KNOWN_EDUCATIONS),
-        },
+    dims["ranks"] = _abbr_dim("ranks", "rank_id", KNOWN_RANKS).withColumn(
+        "rank_type", F.lit(None).cast("string")
+    )
+    dims["professions"] = _abbr_dim("professions", "profession_id", KNOWN_PROFESSIONS)
+    dims["educations"] = _abbr_dim("educations", "education_id", KNOWN_EDUCATIONS)
+
+    # W6 surrogate ids: the pass's per-file ordinal + the file's offset,
+    # the rows in all files before it in (year, source_file) order —
+    # identical ids to a global row_number over global_order (files are
+    # disjoint year ranges).  The source_file tie-break gives two files
+    # sharing a year disjoint id ranges; the fabric(\d{4}).html name
+    # contract rules such a tie out today
+    files = sorted(rows["files"], key=lambda r: (r["year"], r["source_file"]))
+    offsets = _local_table(
+        spark,
+        "source_file string, _off bigint NOT NULL",
+        [[r["source_file"] for r in files], list(accumulate((r["n"] for r in files[:-1]), initial=0))],
     )
 
     fact = (
@@ -498,32 +568,6 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
             on="education_key",
             how="left",
         )
-    )
-    # W6 surrogate ids, two-phase: the pass's per-file ordinal + broadcast
-    # cumulative offsets ordered by year — identical ids to a global
-    # row_number over global_order (files are disjoint year ranges)
-    # without a window or a single-partition funnel.  Offsets = rows in
-    # all earlier-year files, via a broadcast inequality self-join over
-    # the per-file counts (no cumsum window — see
-    # operators.dims.mint_surrogate_ids for the pattern rationale)
-    counts = a.groupBy("source_file").agg(
-        F.count(F.lit(1)).alias("_n"), F.min("year").alias("_yr")
-    )
-    cb = counts.select(
-        F.col("source_file").alias("_sf2"), F.col("_yr").alias("_yr2"), F.col("_n").alias("_n2")
-    )
-    # tie-break on source_file so two files sharing a year would get
-    # DISJOINT id ranges.  Today the fabric(\d{4}).html name contract
-    # makes a tie impossible (one file per year by construction); the
-    # tie-break is defense-in-depth for future multi-file-per-year
-    # sources, where a year-only inequality would collide ids
-    earlier = (F.col("_yr2") < F.col("_yr")) | (
-        (F.col("_yr2") == F.col("_yr")) & (F.col("_sf2") < F.col("source_file"))
-    )
-    offsets = (
-        counts.join(F.broadcast(cb), earlier, "left")
-        .groupBy("source_file")
-        .agg(F.coalesce(F.sum("_n2"), F.lit(0)).alias("_off"))
     )
     fact = fact.join(F.broadcast(offsets), "source_file").select(
         (F.col("file_ordinal") + F.col("_off")).cast("long").alias("assignment_id"),

@@ -72,14 +72,16 @@ def _run_one(name: str, sf_dir: str) -> None:
         import shutil
         import tempfile
 
+        from bench import roster_corpus
         from factory_inspectors_db_etl_spark.plans.inspectors_etl import (
             build_warehouse,
             write_warehouse,
         )
 
+        corpus = roster_corpus()
         # single-file warm (UDF worker spin-up), then one untimed
         # full-corpus build (whole-plan codegen), then 3 timed runs
-        build_warehouse(spark, "/root/reference/diplom/fabric1901.html")[
+        build_warehouse(spark, f"{corpus}/fabric1901.html")[
             "assignments"
         ].write.mode("overwrite").format("noop").save()
         runs = []
@@ -88,7 +90,7 @@ def _run_one(name: str, sf_dir: str) -> None:
             try:
                 t0 = time.time()
                 write_warehouse(
-                    build_warehouse(spark, "/root/reference/diplom/fabric*.html"), out
+                    build_warehouse(spark, f"{corpus}/fabric*.html"), out
                 )
                 if i > 0:
                     runs.append(time.time() - t0)

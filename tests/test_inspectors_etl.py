@@ -28,6 +28,12 @@ from factory_inspectors_db_etl_spark.functions.text import (
 from factory_inspectors_db_etl_spark.sources.html_table import _emit_file_rows
 
 CORPUS = "/root/reference/diplom"
+# the reference corpus: 11 yearly roster files; the tests pinned to its
+# exact contents skip when it is absent
+CORPUS = os.environ.get("SPARK_GRAFT_CORPUS", CORPUS)
+needs_corpus = pytest.mark.skipif(
+    not os.path.isdir(CORPUS), reason=f"reference corpus {CORPUS} absent (set SPARK_GRAFT_CORPUS)"
+)
 
 
 def _file_rows(directory: str, year: int) -> list[dict]:
@@ -188,6 +194,7 @@ def test_reader_thead_offset_quirk_skips_first_okrug_header(quirk_roster):
     assert first_okrug["okrug_header_std"] == "владимирский фабричный округ"
 
 
+@needs_corpus
 def test_reader_row_counts_pinned():
     # golden: total emitted rows per generation representative
     assert len(_rows(1901)) == 371
@@ -338,6 +345,7 @@ def test_name_canon_fused_initials_split():
 # ---------------------------------------------------------------------------
 
 
+@needs_corpus
 def test_warehouse_1905_golden_snapshot(spark):
     """Value-level golden for the G2 representative file: dim contents and
     the first fact rows, natural-key-identified (SURVEY.md §5.2)."""
@@ -371,6 +379,7 @@ def test_warehouse_1905_golden_snapshot(spark):
     ]
 
 
+@needs_corpus
 def test_warehouse_1901_golden_snapshot(spark):
     """G1 (4-column, ASCII-ditto) generation golden. The leading
     'Неизвестно' gubernias replicate the reference's thead-offset quirk
@@ -395,6 +404,7 @@ def test_warehouse_1901_golden_snapshot(spark):
     ]
 
 
+@needs_corpus
 def test_warehouse_1913_golden_snapshot(spark):
     """G3 (dot-leader-polluted) generation golden: the richer 1913 markup
     still normalizes into the same star schema."""
@@ -412,6 +422,7 @@ def test_warehouse_1913_golden_snapshot(spark):
     ]
 
 
+@needs_corpus
 def test_warehouse_full_corpus_counts(spark):
     from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse
 
@@ -434,6 +445,35 @@ def test_warehouse_full_corpus_counts(spark):
     # P6 quarantine: the reference's warn-and-drop rows land in `rejects`
     rej = {r["reject_reason"]: r["count"] for r in t["rejects"].groupBy("reject_reason").count().collect()}
     assert rej == {"location_unresolvable": 6}
+    fact.unpersist()
+
+
+def test_warehouse_generated_roster_counts(spark, gen_roster, generated_roster, generated_roster_truth):
+    """``test_warehouse_full_corpus_counts`` on the generated roster,
+    checked against the generator's ground truth."""
+    from pyspark.sql import functions as F
+
+    from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse
+
+    truth = generated_roster_truth
+    t = build_warehouse(spark, f"{generated_roster}/fabric*.html")
+    fact = t["assignments"].cache()
+    n, vacancies, workers, ids = fact.agg(
+        F.count(F.lit(1)),
+        F.count_if("is_vacancy"),
+        F.sum("worker_count"),
+        F.countDistinct("assignment_id"),
+    ).first()
+    assert (n, vacancies, workers) == (truth["assignments"], truth["vacancies"], truth["workers_sum"])
+    assert ids == n
+    assert sorted(r["year"] for r in fact.select("year").distinct().collect()) == list(gen_roster.YEARS)
+    assert t["inspectors"].count() == truth["inspectors"]
+    assert t["locations"].count() == truth["locations"]
+    assert fact.filter("inspector_location_id IS NULL").count() == 0
+    assert t["rejects"].count() == truth["rejects"]
+    assert {r["reject_reason"] for r in t["rejects"].select("reject_reason").distinct().collect()} == {
+        "location_unresolvable"
+    }
     fact.unpersist()
 
 

@@ -68,8 +68,9 @@ def test_materialize_unknown_mode_raises(spark, _restore_mode):
 
 
 def test_roster_etl_barriers_follow_the_mode(spark, generated_roster, _restore_mode):
-    """The roster ETL's pass and its dims go through the engine's barrier,
-    so the session's durability mode reaches the warehouse build."""
+    """The roster ETL's per-document pass goes through the engine's
+    barrier, so the session's durability mode reaches the warehouse
+    build."""
     from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse
 
     spark.conf.set(MATERIALIZE_MODE_CONF, "ramdisk")

@@ -14,8 +14,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
+
+import pytest
 
 CORPUS = "/root/reference/diplom"
+CORPUS = os.environ.get("SPARK_GRAFT_CORPUS", CORPUS)
 SF = "/root/testdata/sf0.001"
 
 
@@ -38,6 +42,9 @@ def _value_hash(df) -> tuple[int, str]:
     return len(rows), h.hexdigest()[:16]
 
 
+@pytest.mark.skipif(
+    not os.path.isdir(CORPUS), reason=f"reference corpus {CORPUS} absent (set SPARK_GRAFT_CORPUS)"
+)
 def test_etl_warehouse_build_value_pin(spark):
     from factory_inspectors_db_etl_spark.plans.inspectors_etl import build_warehouse
 
