@@ -1,5 +1,4 @@
 from .asof import asof_fill, asof_join
-from .bucketing import bucketed_join, write_bucketed
 from .dedup import (
     NonConvergenceError,
     affine_params,
@@ -14,7 +13,7 @@ from .dedup import (
     simhash,
     simhash_near_duplicates,
 )
-from .dims import build_dim, build_dim_incremental, mint_surrogate_ids, null_safe_join, resolve_fk
+from .dims import build_dim, build_dim_incremental, mint_surrogate_ids, null_safe_join
 from .fill import forward_fill
 from .gif import decode_gif, encode_gif, parse_gif
 from .jpeg import decode_jpeg, encode_jpeg, parse_jpeg
@@ -23,8 +22,6 @@ from .materialize import MATERIALIZE_MODE_CONF, materialize
 from .multimodal import (
     decode_and_featurize,
     payload_metadata,
-    resize_images,
-    resize_ppm,
     sample_frames,
     with_payload,
 )
@@ -41,7 +38,6 @@ from .text_analysis import chunk_windows, hashed_linear_score, redact_pii, word_
 from .similarity import (
     cosine_topk_bruteforce,
     embedding_neardup_pairs,
-    embedding_neardup_pairs_matrix,
     ivf_topk,
     kmeans_centroids,
     lsh_bucket_topk,
@@ -62,8 +58,6 @@ __all__ = [
     "decode_jpeg",
     "encode_jpeg",
     "parse_jpeg",
-    "bucketed_join",
-    "write_bucketed",
     "affine_params",
     "assign_components",
     "connected_components",
@@ -89,17 +83,13 @@ __all__ = [
     "build_dim_incremental",
     "mint_surrogate_ids",
     "null_safe_join",
-    "resolve_fk",
     "forward_fill",
     "decode_and_featurize",
     "payload_metadata",
-    "resize_images",
-    "resize_ppm",
     "sample_frames",
     "with_payload",
     "cosine_topk_bruteforce",
     "embedding_neardup_pairs",
-    "embedding_neardup_pairs_matrix",
     "ivf_topk",
     "kmeans_centroids",
     "lsh_bucket_topk",

@@ -6,9 +6,6 @@ Spark-first, the whole pattern inverts into set operations:
 
 * ``build_dim``    -- J2 get-or-create == dropDuplicates + row_number
                       surrogate keys, deterministic by natural-key order.
-* ``resolve_fk``   -- J1 fact->dim natural-key lookup == broadcast hash
-                      join (dims are small by construction; the reference's
-                      cache dict IS the broadcast hash table).
 * ``null_safe_join`` -- J3 composite keys where NULL must match NULL
                       (populate_db_ru_v1.py:229-235) == `<=>` equality.
 
@@ -137,21 +134,6 @@ def build_dim_incremental(
         .drop("_relid", "m")
     )
     return existing.unionByName(minted.select(*existing.columns))
-
-
-def resolve_fk(
-    fact: DataFrame,
-    dim: DataFrame,
-    natural_key: Sequence[str],
-    id_col: str,
-    how: str = "left",
-) -> DataFrame:
-    """Attach ``dim``'s surrogate ``id_col`` to ``fact`` by natural key.
-
-    Broadcast hash join — no shuffle of the fact side.
-    """
-    keep = fact.join(F.broadcast(dim.select(*natural_key, id_col)), on=list(natural_key), how=how)
-    return keep
 
 
 def null_safe_join(

@@ -30,8 +30,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from .raster import nn_target
-
 _MAX_PIXELS = 1 << 24  # same 16M-pixel dimension-bomb cap as parse_jpeg
 
 
@@ -233,8 +231,7 @@ def parse_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
 def _skip_to_image_descriptor(d: bytes) -> tuple[int, np.ndarray | None]:
     """Walk the GIF stream past the header, global color table, and any
     extension blocks to the FIRST image descriptor; returns (offset just
-    past the 0x2C introducer, global color table or None).  Shared by
-    the full decoder and the header-only ``first_image_dims``."""
+    past the 0x2C introducer, global color table or None)."""
     if len(d) < 13 or d[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("gif: missing GIF87a/89a signature")
     packed = d[10]
@@ -271,31 +268,9 @@ def _skip_to_image_descriptor(d: bytes) -> tuple[int, np.ndarray | None]:
         raise ValueError(f"gif: unknown block 0x{block:02X}")
 
 
-def first_image_dims(payload: bytes) -> tuple[int, int]:
-    """(width, height) of the FIRST IMAGE DESCRIPTOR, header-walk only —
-    no LZW decode.  This is what ``parse_gif_indexed``/``decode_gif``
-    actually rasterize, which can differ from the logical-screen dims in
-    externally-produced GIFs (a sub-screen first frame is valid per
-    spec); metadata derived from the raster must report these, not the
-    screen descriptor (round-8 review finding)."""
-    d = bytes(payload)
-    pos, _ = _skip_to_image_descriptor(d)
-    if pos + 9 > len(d):
-        raise ValueError("gif: truncated image descriptor")
-    iw = int.from_bytes(d[pos + 4 : pos + 6], "little")
-    ih = int.from_bytes(d[pos + 6 : pos + 8], "little")
-    if iw == 0 or ih == 0:
-        raise ValueError("gif: empty image")
-    return iw, ih
-
-
 def parse_gif_indexed(payload: bytes) -> tuple[int, int, np.ndarray, np.ndarray]:
     """Decode to PALETTE space: (width, height, (h, w) uint8 index
-    raster — de-interlaced, and the active (n, 3) color table).  The
-    index raster is the lossless editing surface: transforms that
-    operate per-pixel (crop, nearest-neighbor resize) act on indices and
-    re-encode with the SAME palette, so the round trip stays bit-exact
-    in color space (``resize_gif``)."""
+    raster — de-interlaced, and the active (n, 3) color table)."""
     d = payload
     pos, gct = _skip_to_image_descriptor(d)
     if pos + 9 > len(d):
@@ -346,31 +321,6 @@ def parse_gif_indexed(payload: bytes) -> tuple[int, int, np.ndarray, np.ndarray]
         de[order, :] = idx
         idx = de
     return iw, ih, idx, ct
-
-
-def resize_gif(payload: bytes, max_side: int) -> bytes:
-    """REAL nearest-neighbor GIF resize: decode to the index raster
-    (``parse_gif_indexed``), NN-resample in INDEX space (``i*src//dst``,
-    the ``resize_ppm`` mapping — integer-exact, idempotent at fixed
-    max_side), re-encode with the SAME palette.  Because indices are
-    resampled (never RGB), every output pixel's color is bit-identical
-    to its source pixel — GIF is lossless end to end.  Output is
-    canonical-form like resize_ppm's canonical header: non-interlaced,
-    256-entry GCT (the palette zero-padded if the source table was
-    smaller — pad entries are unreferenced, so decoded RGB is
-    unchanged).  Images already within bounds return byte-identical.
-    Raises ValueError for non-GIF payloads — callers fall back to
-    passthrough, as with decode."""
-    if max_side <= 0:
-        raise ValueError("max_side must be positive")
-    w, h, idx, ct = parse_gif_indexed(payload)
-    if max(w, h) <= max_side:
-        return bytes(payload)
-    _, _, ys, xs = nn_target(w, h, max_side)
-    out = idx[np.ix_(ys, xs)]
-    palette = np.zeros((256, 3), dtype=np.uint8)
-    palette[: len(ct)] = ct[:256]
-    return encode_gif(out, palette=palette)
 
 
 def decode_gif(payload: bytes, n_features: int = 8) -> list[float]:

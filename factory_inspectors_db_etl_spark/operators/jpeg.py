@@ -43,8 +43,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from .raster import nn_target
-
 # ---------------------------------------------------------------------------
 # Constants from ITU-T T.81 (public spec)
 # ---------------------------------------------------------------------------
@@ -646,48 +644,3 @@ def decode_jpeg(payload: bytes, n_features: int = 8) -> list[float]:
     ]
     return (feats + [0.0] * n_features)[:n_features]
 
-
-def resize_jpeg(payload: bytes, max_side: int) -> bytes:
-    """REAL nearest-neighbor JPEG resize: full decode to YCbCr planes
-    (``parse_jpeg``), NN-resample each plane (``i*src//dst``, the
-    ``resize_ppm`` mapping), re-encode 4:4:4 (grayscale stays
-    grayscale).  Resampling happens in PLANE space — no YCbCr->RGB->
-    YCbCr detour, so color conversion adds zero error.
-
-    Encoder constraint: baseline MCUs are 8x8, so target dims snap DOWN
-    to the 8-pixel grid (min 8) — the longer side becomes the largest
-    multiple of 8 <= max_side; ``max_side`` < 8 is a ValueError.  JPEG
-    is the one LOSSY member of the resize family: with all-ones quant
-    tables the re-encode error is bounded by DCT coefficient rounding
-    (each of the 64 coefficients moves < 0.5 before the exact Huffman
-    stage), a few grey levels per pixel worst-case — pinned empirically
-    at <= 2 by tests/test_multimodal_resize.py.  Constant 8x8 blocks
-    still round-trip bit-exactly (one integer DC, zero ACs).  Images
-    already within bounds return byte-identical; output longer side is
-    <= max_side, so the operation is idempotent at fixed max_side.
-    Raises ValueError for non-JPEG payloads — callers fall back to
-    passthrough, as with decode."""
-    if max_side < 8:
-        raise ValueError("resize_jpeg needs max_side >= 8 (8x8 MCU grid)")
-    w, h, ncomp, planes = parse_jpeg(payload)
-    if max(w, h) <= max_side:
-        return bytes(payload)
-    nw, nh, _, _ = nn_target(w, h, max_side)
-    nw = max(8, nw - nw % 8)
-    nh = max(8, nh - nh % 8)
-    # the 8-snap floors to >= 8; when the aspect-correct short side is
-    # below 8 that would UPSCALE a dimension (100x4 @ max 16 -> 16x8,
-    # doubling the 4 real rows — round-8 review finding).  A resize must
-    # never enlarge: reject and let the caller's passthrough keep the
-    # source payload untouched.
-    if nw > w or nh > h:
-        raise ValueError(
-            "jpeg: 8x8-MCU snap would enlarge a dimension "
-            f"({w}x{h} -> {nw}x{nh}); payload left for passthrough"
-        )
-    ys = (np.arange(nh) * h) // nh
-    xs = (np.arange(nw) * w) // nw
-    rp = [p[np.ix_(ys, xs)] for p in planes]
-    if ncomp == 1:
-        return encode_jpeg(rp[0])
-    return encode_jpeg(rp[0], rp[1], rp[2])

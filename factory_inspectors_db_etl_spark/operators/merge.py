@@ -17,9 +17,8 @@ compose from two relational steps, both shuffle-minimal:
    broadcast anti join whenever the compacted changelog is small —
    typical for incremental loads, where changes << base.
 
-At 100 TB the base never rewrites more than once, the changelog shuffle
-is sized by the *changes* (not the base), and bucketing both sides on
-the key makes the anti join exchange-free (see ``operators/bucketing``).
+At 100 TB the base never rewrites more than once, and the changelog
+shuffle is sized by the *changes* (not the base).
 """
 
 from __future__ import annotations

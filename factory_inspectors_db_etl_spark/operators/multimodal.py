@@ -40,13 +40,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .gif import decode_gif, encode_gif, first_image_dims as _gif_image_dims, resize_gif
-from .jpeg import decode_jpeg, encode_jpeg, resize_jpeg
-from .raster import nn_target
+from .gif import decode_gif, encode_gif
+from .jpeg import decode_jpeg, encode_jpeg
 
 META_TYPE = T.StructType(
     [
@@ -158,14 +157,11 @@ def decode_wav_pcm(payload: bytes, n_features: int = 8) -> list[float]:
     return (feats + [0.0] * n_features)[:n_features]
 
 
-def _ppm_header(payload: bytes) -> tuple[int, int, int, int]:
-    """Parse just the P6 header -> (w, h, maxval, raster_offset).
-    Header = magic, width, height, maxval as whitespace-separated ASCII
-    tokens; '#' starts a comment through end-of-line.  Shared by the
-    full decoder and ``image_dims`` so the header-only path accepts
-    exactly the payloads the decode path accepts (round-8 review
-    finding: a fixed-window regex rejected comment-bearing headers the
-    tokenizer handles).  Raises ValueError on malformed headers."""
+def _parse_ppm(payload: bytes) -> tuple[int, int, int, np.ndarray]:
+    """Parse a binary PPM (P6) payload -> (w, h, maxval, h×w×3 uint8
+    array).  Header = magic, width, height, maxval as whitespace-separated
+    ASCII tokens; '#' starts a comment through end-of-line.  Raises
+    ValueError for anything that is not a well-formed P6."""
     if not payload.startswith(b"P6"):
         raise ValueError("not a P6 PPM payload")
     tokens, pos = [], 2
@@ -188,14 +184,7 @@ def _ppm_header(payload: bytes) -> tuple[int, int, int, int]:
         raise ValueError("non-positive PPM dimensions")
     if maxval <= 0 or maxval > 255:
         raise ValueError("bad PPM maxval")
-    return w, h, maxval, pos + 1  # single whitespace after maxval
-
-
-def _parse_ppm(payload: bytes) -> tuple[int, int, int, np.ndarray]:
-    """Parse a binary PPM (P6) payload -> (w, h, maxval, h×w×3 uint8
-    array).  Raises ValueError for anything that is not a well-formed
-    P6."""
-    w, h, maxval, pos = _ppm_header(payload)
+    pos += 1  # single whitespace after maxval
     raster = payload[pos : pos + w * h * 3]
     if len(raster) < w * h * 3:
         raise ValueError("bad PPM raster")
@@ -673,44 +662,6 @@ def sample_frames(media: DataFrame, stride: int = 1) -> DataFrame:
     return media.mapInPandas(sample, FRAME_SCHEMA)
 
 
-def resize_ppm(payload: bytes, max_side: int) -> bytes:
-    """REAL image resize for binary PPM (P6) payloads — pure numpy
-    nearest-neighbor downsample so the longer side becomes ``max_side``
-    (aspect preserved via floor division; images already within bounds
-    are returned byte-identical).  Source pixel for target index i is
-    ``i * src // dst`` — the standard NN mapping, integer-exact, so the
-    output bytes are deterministic across platforms and the operation is
-    idempotent at fixed max_side.  Output is a canonical-header P6
-    (``P6\\n{w} {h}\\n{maxval}\\n`` + raster).  Raises ValueError for
-    non-P6 payloads — callers fall back to passthrough, as with decode."""
-    if max_side <= 0:
-        raise ValueError("max_side must be positive")
-    w, h, maxval, px = _parse_ppm(payload)
-    if max(w, h) <= max_side:
-        return bytes(payload)
-    nw, nh, ys, xs = nn_target(w, h, max_side)
-    out = px[np.ix_(ys, xs)]
-    return b"P6\n%d %d\n%d\n" % (nw, nh, maxval) + out.tobytes()
-
-
-def resize_png(payload: bytes, max_side: int) -> bytes:
-    """REAL nearest-neighbor PNG resize: full decode (``_parse_png``:
-    CRC walk, inflate, all five un-filters), NN-resample the RGB raster
-    (``i*src//dst``, the ``resize_ppm`` mapping — integer-exact,
-    idempotent at fixed max_side), re-encode through ``encode_png``.
-    PNG is lossless, so every output pixel is bit-identical to its
-    source pixel.  Images already within bounds return byte-identical.
-    Raises ValueError for non-PNG payloads — callers fall back to
-    passthrough, as with decode."""
-    if max_side <= 0:
-        raise ValueError("max_side must be positive")
-    w, h, px = _parse_png(payload)
-    if max(w, h) <= max_side:
-        return bytes(payload)
-    _, _, ys, xs = nn_target(w, h, max_side)
-    return encode_png(px[np.ix_(ys, xs)])
-
-
 def encode_bmp(pixels: np.ndarray) -> bytes:
     """REAL BMP (Windows DIB) encoder for 8-bit RGB images — 24-bit
     BI_RGB, BITMAPINFOHEADER, canonical BOTTOM-UP row order, each row
@@ -819,152 +770,6 @@ def decode_bmp(payload: bytes, n_features: int = 8) -> list[float]:
 # literal (see the placeholder comment there)
 _CODECS["image/bmp"] = decode_bmp
 _CODECS["image/x-ms-bmp"] = decode_bmp
-
-
-def resize_bmp(payload: bytes, max_side: int) -> bytes:
-    """REAL nearest-neighbor BMP resize: full decode (``_parse_bmp``),
-    NN-resample (``i*src//dst``, the shared ``nn_target`` mapping —
-    integer-exact, idempotent at fixed max_side), re-encode through
-    ``encode_bmp``.  BMP is uncompressed, so every output pixel is
-    bit-identical to its source pixel; top-down inputs re-encode in the
-    canonical bottom-up order (same pixels).  Images already within
-    bounds return byte-identical.  Raises ValueError for non-BMP
-    payloads — callers fall back to passthrough."""
-    if max_side <= 0:
-        raise ValueError("max_side must be positive")
-    w, h, px = _parse_bmp(payload)
-    if max(w, h) <= max_side:
-        return bytes(payload)
-    _, _, ys, xs = nn_target(w, h, max_side)
-    return encode_bmp(np.ascontiguousarray(px[np.ix_(ys, xs)]))
-
-
-def image_dims(payload: bytes) -> tuple[int, int]:
-    """(width, height) from the image HEADER only — no raster decode.
-    Supports the four resize formats: PPM P6 (text header, the decode
-    path's tokenizer), PNG (IHDR at fixed offset), GIF (first image
-    descriptor — what the decoder rasterizes), JPEG (marker walk to
-    SOF0/SOF1).  Exists so ``resize_images`` can rewrite the meta
-    struct without decoding its own output a second time (metadata is
-    O(header), not O(pixels) — the thing that matters when the payload
-    column is terabytes).  Raises ValueError on anything else.
-
-    CONTRACT (stricter since r8, noted per the r8 review): for GIF this
-    walks extension blocks to the first image DESCRIPTOR and raises on
-    unknown/truncated blocks, where it previously returned the logical-
-    screen dims from the 10 header bytes — so malformed-but-headered
-    GIFs that used to "succeed" now fail.  ``resize_images`` (the only
-    in-repo caller) catches the ValueError and flags the row; any NEW
-    caller must either do the same or accept the raise."""
-    d = bytes(payload)
-    if d.startswith(b"P6"):
-        w, h, _, _ = _ppm_header(d)
-        return w, h
-    if d.startswith(_PNG_SIG):
-        if len(d) < 24 or d[12:16] != b"IHDR":
-            raise ValueError("png: missing IHDR")
-        return int.from_bytes(d[16:20], "big"), int.from_bytes(d[20:24], "big")
-    if d[:6] in (b"GIF87a", b"GIF89a"):
-        # FIRST IMAGE DESCRIPTOR dims, not the logical screen — the
-        # raster decode/resize paths operate on the first image, and a
-        # valid external GIF may declare a larger screen (round-8
-        # review finding: meta must describe what decode_gif features)
-        return _gif_image_dims(d)
-    if d[:2] == b"BM":
-        if len(d) < 26:
-            raise ValueError("bmp: truncated header")
-        return (
-            int.from_bytes(d[18:22], "little", signed=True),
-            abs(int.from_bytes(d[22:26], "little", signed=True)),
-        )
-    if d[:2] == b"\xff\xd8":
-        pos = 2
-        while pos + 4 <= len(d):
-            if d[pos] != 0xFF:
-                raise ValueError("jpeg: expected marker in header walk")
-            marker = d[pos + 1]
-            if marker in (0xC0, 0xC1):  # SOF0/SOF1 (baseline profiles)
-                if pos + 9 > len(d):
-                    raise ValueError("jpeg: truncated SOF")
-                hh = int.from_bytes(d[pos + 5 : pos + 7], "big")
-                ww = int.from_bytes(d[pos + 7 : pos + 9], "big")
-                return ww, hh
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                pos += 2
-                continue
-            size = int.from_bytes(d[pos + 2 : pos + 4], "big")
-            pos += 2 + size
-        raise ValueError("jpeg: no SOF before end of data")
-    raise ValueError("unrecognized image payload")
-
-
-def _resize_any(data: bytes, max_side: int) -> bytes:
-    """Magic-byte dispatch over the four REAL resizers.  ValueError for
-    any other payload (mp4 containers, corrupt rasters) — the caller's
-    passthrough contract."""
-    if data.startswith(b"P6"):
-        return resize_ppm(data, max_side)
-    if data.startswith(_PNG_SIG):
-        return resize_png(data, max_side)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return resize_gif(data, max_side)
-    if data[:2] == b"\xff\xd8":
-        return resize_jpeg(data, max_side)
-    if data[:2] == b"BM":
-        return resize_bmp(data, max_side)
-    raise ValueError("unrecognized image payload")
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", META_TYPE),
-        T.StructField("resized", T.BooleanType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
-    """Arrow-batched image resize over multimodal rows (the
-    decode→RESIZE→featurize step of a vision training-data pipeline).
-    All five raster formats with REAL in-repo codecs are really
-    resampled — PPM P6 (``resize_ppm``), PNG (``resize_png``), GIF
-    (``resize_gif``, lossless in index space), JPEG (``resize_jpeg``,
-    YCbCr plane space, 8-snapped dims), BMP (``resize_bmp``, lossless)
-    — dispatched on magic bytes.
-    Payloads in no raster format (mp4 containers — frame decode is the
-    declared H.264 fallback — or corrupt rasters) pass through
-    untouched with ``resized=false``, the same never-crash posture as
-    ``decode_and_featurize``.  The meta struct is rewritten with the
-    actual post-resize dimensions from the output HEADER
-    (``image_dims`` — O(header), no second raster decode), so
-    downstream metadata filters see truth, not the pre-resize claim.
-
-    Scale: payload bytes move only inside Arrow batches (mapInPandas,
-    one output row per input row, bounded per-batch memory); no shuffle
-    is introduced — partitioning is whatever the upstream scan had."""
-
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                data = bytes(payload) if payload is not None else b""
-                meta = dict(meta) if meta is not None else {}
-                try:
-                    out = _resize_any(data, max_side)
-                    nw, nh = image_dims(out)
-                    meta["width"], meta["height"] = nw, nh
-                    rows.append(
-                        {"doc_id": doc_id, "payload": out, "meta": meta, "resized": out != data}
-                    )
-                except ValueError:
-                    rows.append(
-                        {"doc_id": doc_id, "payload": data, "meta": meta, "resized": False}
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return media.mapInPandas(rs, RESIZED_SCHEMA)
 
 
 def with_png_payload(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -708,73 +708,6 @@ def semantic_dedup(
     )
 
 
-def embedding_neardup_pairs_matrix(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    round_to: int = 4,
-    max_broadcast_bytes: int = 512 * 1024 * 1024,
-) -> DataFrame:
-    """Broadcast-matrix form of ``embedding_neardup_pairs``: the unit-vector
-    matrix is broadcast and every partition scores its rows against it
-    with one BLAS matmul (Arrow-batched mapInPandas) — ~30x the
-    higher-order-function form, because the inner loop is C, not
-    per-element codegen closures.
-
-    SIZE-GUARDED: building the broadcast side requires collecting the
-    (id, vector) pairs to the driver, so this form is only legal when
-    ``n * dim * 8`` fits ``max_broadcast_bytes`` (default 512 MB, ~1M
-    rows at dim 64).  The guard is enforced with a metadata-cheap
-    count/dim aggregate BEFORE any data moves; past it, a ValueError
-    names the scale-safe forms (``embedding_neardup_pairs_blocked`` for
-    exact, ``embedding_neardup_pairs_lsh`` for approximate) — the
-    general-case registered query uses the blocked form, which never
-    touches the driver.
-
-    Numerics: unit-normalize then dot, like the columnar form; BLAS
-    summation order differs from sequential at ~1e-16, which the
-    ``round_to`` rounding absorbs.
-    """
-
-    spark = vectors.sparkSession
-    n, dim = vectors.agg(
-        F.count(F.lit(1)), F.max(F.size(F.col(vec_col)))
-    ).first()
-    if n * (dim or 0) * 8 > max_broadcast_bytes:
-        raise ValueError(
-            f"unit matrix would be {n}x{dim} doubles (> {max_broadcast_bytes}B "
-            "broadcast guard); use embedding_neardup_pairs_blocked (exact, "
-            "distributed) or embedding_neardup_pairs_lsh (approximate)"
-        )
-    pdf = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    ids = pdf["id"].to_numpy(dtype="int64")
-    mat = np.stack([np.asarray(v, dtype="float64") for v in pdf["v"]])
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, unit))
-
-    def score(batches):
-        b_ids, b_unit = bc.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            q = np.stack([np.asarray(v, dtype="float64") for v in batch["v"]])
-            q = q / np.linalg.norm(q, axis=1, keepdims=True)
-            scores = np.round(q @ b_unit.T, round_to)
-            out_a, out_b, out_s = [], [], []
-            for i, qid in enumerate(batch["id"].to_numpy(dtype="int64")):
-                mask = (b_ids > qid) & (scores[i] >= threshold)
-                nb = b_ids[mask]
-                out_a.extend([qid] * len(nb))
-                out_b.extend(nb.tolist())
-                out_s.extend(scores[i][mask].tolist())
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "cosine": out_s})
-
-    return vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).mapInPandas(
-        score, "id_a long, id_b long, cosine double"
-    )
-
-
 def embedding_neardup_pairs_blocked(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -800,9 +733,10 @@ def embedding_neardup_pairs_blocked(
     * nothing ever moves to the driver.
 
     ``n_blocks`` defaults from a count() (a metadata-only parquet
-    aggregate, not a data collect).  Scores use the same
-    unit-normalize -> BLAS-dot -> round numerics as the matrix form, so
-    the two are value-identical at ``round_to``.
+    aggregate, not a data collect).  Scores unit-normalize, BLAS-dot and
+    round: BLAS summation order differs from ``embedding_neardup_pairs``'
+    sequential sum at ~1e-16, which the ``round_to`` rounding absorbs, so
+    the two are value-identical.
     """
     import pandas as pd
 

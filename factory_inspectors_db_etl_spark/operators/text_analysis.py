@@ -152,19 +152,11 @@ def redact_pii(text: Column) -> Column:
     return out
 
 
-def language_guess(text: Column) -> Column:
-    """Stopword-vote language heuristic over LANG_STOPWORDS; 'und'
-    (undetermined) when no language scores > 0.  Ties break by language
-    code order for determinism.
-
-    PERFORMANCE: prefer ``language_guess_from_tokens`` with a bound token
-    array — this convenience form re-tokenizes once per language vote.
-    """
-    return language_guess_from_tokens(tokens(F.lower(text)))
-
-
 def language_guess_from_tokens(toks: Column) -> Column:
-    """``language_guess`` over a pre-tokenized (lowercased, BOUND) array."""
+    """Stopword-vote language heuristic over LANG_STOPWORDS, on a
+    pre-tokenized (lowercased, BOUND) array; 'und' (undetermined) when no
+    language scores > 0.  Ties break by language code order for
+    determinism."""
     expr = F.lit("und")
     best = F.lit(0)
 

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from ..operators.asof import asof_fill
 from ..operators.dedup import (
     affine_params,
-    assign_components,
     exact_dedup,
     minhash_lsh_candidates,
     minhash_signatures,
@@ -43,7 +42,6 @@ from ..operators import multimodal as MM
 from ..operators.merge import apply_cdc
 from ..operators.similarity import (
     cosine_topk_bruteforce,
-    embedding_neardup_pairs,
     ivf_topk,
     lsh_bucket_topk,
     semantic_dedup,
@@ -2574,9 +2572,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 
 
 O_D_SIMHASH_NEARDUP = _gen_simhash_neardup_oracle()
-
-
-_F1_DECOR_SPARK = None  # built lazily below
 
 
 def _f1_decorated(t: Column, did: Column) -> Column:

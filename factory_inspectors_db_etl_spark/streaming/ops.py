@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..sources.tables import load_table
+from ..sources.tables import read_events
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -60,52 +60,20 @@ EVENTS_SCHEMA_TS = T.StructType(
 )
 
 
-def _events_ts_is_nanos(spark: SparkSession, path: str, column: str = "ts") -> bool:
-    """Pyarrow-free physical-unit sniff, mirroring the batch loader
-    (``sources/tables.py``): under ``nanosAsLong`` a TIMESTAMP(NANOS)
-    column surfaces as ``bigint`` in the batch-read schema.  One
-    driver-side footer read, no data scanned — as cheap at 100 TB as at
-    1 MB (readStream needs an explicit schema, so the unit must be known
-    before the stream is built).  An unreadable footer raises loudly here
-    instead of silently mis-routing to the MICROS branch.
-
-    The ``nanosAsLong`` conf is needed only for the probe (and for the
-    subsequent NANOS read path); when the column turns out to be MICROS
-    the prior value is RESTORED so the probe cannot silently change how
-    unrelated NANOS parquet reads behave later in the session."""
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    # try/finally so a failed probe (missing file, transient FS error)
-    # cannot leave the session-wide conf flipped; the conf stays set only
-    # on the successful NANOS path, where the caller's read needs it
-    is_nanos = False
-    try:
-        is_nanos = dict(spark.read.parquet(path).dtypes).get(column) == "bigint"
-    finally:
-        if not is_nanos:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-    return is_nanos
-
-
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream the events table with event-time ``ts``.
 
-    The generator has shipped ``ts`` as both TIMESTAMP(NANOS) and
-    TIMESTAMP(MICROS) across testdata revisions, so the physical unit is
-    sniffed from the footer (mirroring the batch loader's dtype check in
-    ``sources/tables.py``).  NANOS: Spark's parquet reader rejects it, so
-    read nanos as long and rebuild a TIMESTAMP from epoch micros
-    (``timestamp_micros`` — tz-independent).  MICROS: read TimestampType
-    directly.  Watermarks reject TIMESTAMP_NTZ, so unlike the batch
-    loader this column is tz-aware; with the engine's UTC session the two
-    are value-identical."""
+    readStream needs an explicit schema, so the physical ``ts`` unit is
+    sniffed first, by the batch loader's own footer read
+    (``sources.tables.read_events``).  NANOS: read nanos as long and
+    rebuild a TIMESTAMP from epoch micros (``timestamp_micros`` —
+    tz-independent).  MICROS: read TimestampType directly.  Watermarks
+    reject TIMESTAMP_NTZ, so unlike the batch loader this column is
+    tz-aware; with the engine's UTC session the two are value-identical."""
     # the file source wants a directory; select just the events file via
     # a glob filter so sibling tables in the sf dir are not picked up
-    if _events_ts_is_nanos(spark, f"{sf_dir}/events.parquet"):
+    _, is_nanos = read_events(spark, f"{sf_dir}/events.parquet")
+    if is_nanos:
         raw = (
             spark.readStream.schema(EVENTS_SCHEMA)
             .option("pathGlobFilter", "events.parquet")
@@ -211,131 +179,6 @@ def stateful_running_stats(events: DataFrame, watermark: str = "10 minutes") -> 
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-_SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_ms", T.LongType()),
-        T.StructField("end_ms", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-_SESSION_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.StringType()),
-        T.StructField("session_end", T.StringType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("closed_by", T.StringType()),
-    ]
-)
-
-
-def stateful_sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Sessionization with EVENT-TIME TIMEOUT — the canonical custom
-    stateful operator (``applyInPandasWithState`` +
-    ``GroupStateTimeout.EventTimeTimeout``): sessions that close because
-    a later event arrives past the gap are emitted immediately
-    (``closed_by='gap'``); a user's dangling last session is held in
-    state and flushed by the timeout when the WATERMARK passes
-    ``session_end + gap`` (``closed_by='timeout'``) — how unbounded
-    streams avoid keeping every idle user's state forever.
-
-    Gap semantics and the output formatting match batch w13
-    (``q_w13_sessionize``) exactly; the streaming-vs-batch equivalence is
-    pinned in tests/test_streaming.py.  State per user is one (start,
-    end, count) struct — O(1) per key, watermark-expired; compare
-    ``session_window`` (s10) for the built-in form and w13 for the batch
-    twin.  Timestamps cross the Arrow boundary as epoch millis and are
-    formatted driver-format-free (NTZ arithmetic only)."""
-    gap_ms = gap_minutes * 60_000
-
-    def fmt(ms: int) -> str:
-        return pd.Timestamp(ms, unit="ms").strftime("%Y-%m-%d %H:%M:%S")
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_ms, end_ms, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "session_start": fmt(start_ms),
-                        "session_end": fmt(end_ms),
-                        "n_events": n,
-                        "closed_by": "timeout",
-                    }
-                ]
-            )
-            return
-        # interval-sweep merge, NOT an append-only walk: a later batch can
-        # deliver an event that is within-watermark but EARLIER than the
-        # stored session end (cross-batch reorder) — an append walk would
-        # move end_ms backwards and emit end < start sessions.  Treating
-        # the stored session as one more interval and sweep-merging the
-        # sorted set is order-correct for any within-batch arrival order.
-        # (Cross-batch caveat, documented: a session emitted by an
-        # observed gap is final; an extreme straggler that batch-mode
-        # would have merged into it starts a new session instead.)
-        intervals = []
-        if state.exists:
-            s0, e0, n0 = state.get
-            intervals.append((s0, e0, n0))
-        for pdf in pdfs:
-            intervals.extend(
-                (t, t, 1)
-                for t in (int(v.value // 1_000_000) for v in pd.to_datetime(pdf["ts"]))
-            )
-        intervals.sort()
-        if not intervals:  # defensive: invoked with no rows and no state
-            return
-        merged = [intervals[0]]
-        for s, e, k in intervals[1:]:
-            ps, pe, pk = merged[-1]
-            if s - pe <= gap_ms:
-                merged[-1] = (ps, max(pe, e), pk + k)
-            else:
-                merged.append((s, e, k))
-        closed = merged[:-1]
-        start_ms, end_ms, n = merged[-1]
-        state.update((start_ms, end_ms, n))
-        # flush the open session when the watermark passes end + gap
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(end_ms + gap_ms, wm + 1))
-        if closed:
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "session_start": fmt(s),
-                        "session_end": fmt(e),
-                        "n_events": k,
-                        "closed_by": "gap",
-                    }
-                    for s, e, k in closed
-                ]
-            )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_SESSION_OUT_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -464,23 +307,6 @@ def stream_stream_view_purchase_join(
         "view_ts",
         "view_value",
     )
-
-
-def stream_static_enrich(events: DataFrame, dim: DataFrame, key: str = "user_id") -> DataFrame:
-    """Stream-static join: every micro-batch of the stream is joined to a
-    STATIC batch dimension — the standard fact-enrichment pattern.  No
-    watermark or join-state store is needed on either side (unlike
-    stream-stream joins): the static side is simply re-planned per
-    micro-batch, so a dim updated in place (e.g. by ``foreachBatch`` dim
-    maintenance or a CDC merge) is picked up on the next trigger.
-
-    The static side is explicitly broadcast: a broadcastable dim means
-    the stream side never shuffles — per-batch latency stays flat as the
-    stream scales.  A dim too big to broadcast makes this a per-batch
-    shuffle join; at that size prefer pre-bucketing the dim on the key.
-    Left join so facts without a dim row survive with NULLs (same
-    contract as the batch ETL's J1)."""
-    return events.join(F.broadcast(dim), key, "left")
 
 
 def cdc_snapshot_upsert(

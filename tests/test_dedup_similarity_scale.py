@@ -1,9 +1,8 @@
 """Scale-path behavior of the near-dup operators: the blocked distributed
 exact form must equal the columnar exact form, the LSH candidates+rescore
-pipeline must be a pure-recall approximation (no false positives), the
-broadcast-matrix form must refuse oversized inputs, and the n-gram
-Jaccard stop-shingle cap must bound hot postings without changing results
-on corpora below the cap.
+pipeline must be a pure-recall approximation (no false positives), and
+the n-gram Jaccard stop-shingle cap must bound hot postings without
+changing results on corpora below the cap.
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ from factory_inspectors_db_etl_spark.operators.similarity import (
     embedding_neardup_pairs,
     embedding_neardup_pairs_blocked,
     embedding_neardup_pairs_lsh,
-    embedding_neardup_pairs_matrix,
     ivf_topk,
 )
 from factory_inspectors_db_etl_spark.sources.tables import load_table
@@ -92,13 +90,6 @@ def test_ivf_unknown_centroid_mode_raises(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError, match="annoy"):
         ivf_topk(e, e.limit(1), centroids="annoy")
-
-
-def test_matrix_form_size_guard(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="broadcast guard"):
-        # 500 x 64 doubles = 256 KB > 1 KB guard
-        embedding_neardup_pairs_matrix(e, threshold=THRESHOLD, max_broadcast_bytes=1024)
 
 
 def test_ngram_max_df_caps_hot_shingle(spark):

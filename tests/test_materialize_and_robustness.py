@@ -117,13 +117,34 @@ def test_materialize_counted_failing_barrier_raises(spark):
 
 
 def test_nanos_probe_restores_conf_on_failure(spark):
-    from factory_inspectors_db_etl_spark.streaming.ops import _events_ts_is_nanos
+    from factory_inspectors_db_etl_spark.sources.tables import read_events
 
     key = "spark.sql.legacy.parquet.nanosAsLong"
     before = spark.conf.get(key, None)
     with pytest.raises(Exception):
-        _events_ts_is_nanos(spark, "/nonexistent/events.parquet")
+        read_events(spark, "/nonexistent/events.parquet")
     assert spark.conf.get(key, None) == before
+
+
+def test_load_events_leaves_nanos_conf_unset_on_micros(spark, sf_dir):
+    """The testdata's events ``ts`` is TIMESTAMP(MICROS): loading it
+    writes nothing into the caller's session conf and still counts every
+    row of the file."""
+    import pyarrow.parquet as pq
+
+    from factory_inspectors_db_etl_spark.sources.tables import load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        unset = spark.conf.get(key, None)
+        n = load_table(spark, sf_dir, "events").count()
+        assert spark.conf.get(key, None) == unset
+        assert n == pq.read_metadata(f"{sf_dir}/events.parquet").num_rows > 0
+    finally:
+        if before is not None:
+            spark.conf.set(key, before)
 
 
 def test_roster_source_empty_glob_raises(spark):

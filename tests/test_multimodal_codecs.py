@@ -137,67 +137,6 @@ def test_codecs_reject_degenerate_headers_without_crashing():
             decode_ppm(hdr)
 
 
-def test_resize_ppm_nearest_neighbor_exact():
-    from factory_inspectors_db_etl_spark.operators.multimodal import (
-        _parse_ppm,
-        resize_ppm,
-    )
-
-    # 8x4 image with distinct per-pixel values so every sampled index is
-    # checkable against the i*src//dst mapping
-    w, h = 8, 4
-    px = [(x * 16, y * 32, (x + y) * 8) for y in range(h) for x in range(w)]
-    src = make_ppm(w, h, px)
-    out = resize_ppm(src, 4)
-    nw, nh, maxval, arr = _parse_ppm(out)
-    assert (nw, nh, maxval) == (4, 2, 255)
-    for ty in range(nh):
-        for tx in range(nw):
-            sx, sy = tx * w // nw, ty * h // nh
-            assert tuple(arr[ty, tx]) == (sx * 16, sy * 32, (sx + sy) * 8)
-    # within-bounds images return byte-identical; resize is idempotent
-    assert resize_ppm(src, 8) == src
-    assert resize_ppm(out, 4) == out
-    # aspect preserved for tall images
-    tall = make_ppm(2, 8, [(1, 2, 3)] * 16)
-    tw, th, _, _ = _parse_ppm(resize_ppm(tall, 4))
-    assert (tw, th) == (1, 4)
-    with pytest.raises(ValueError):
-        resize_ppm(b"nonsense", 4)
-    with pytest.raises(ValueError):
-        resize_ppm(src, 0)
-
-
-def test_resize_images_dataframe_passthrough_and_meta(spark):
-    from factory_inspectors_db_etl_spark.operators.multimodal import (
-        _parse_ppm,
-        resize_images,
-    )
-
-    big = make_ppm(8, 4, [(x, y, 0) for y in range(4) for x in range(8)])
-    rows = [
-        (1, bytearray(big), ("image/ppm", 8, 4, 1)),
-        (2, bytearray(b"not an image"), ("text/plain", 0, 0, 1)),
-        (3, None, ("image/ppm", 8, 4, 1)),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "doc_id long, payload binary, "
-        "meta struct<mime:string,width:int,height:int,n_frames:int>",
-    )
-    out = {r["doc_id"]: r for r in resize_images(df, max_side=4).collect()}
-    assert out[1]["resized"] is True
-    nw, nh, _, _ = _parse_ppm(bytes(out[1]["payload"]))
-    assert (nw, nh) == (4, 2)
-    # meta rewritten with post-resize truth
-    assert (out[1]["meta"]["width"], out[1]["meta"]["height"]) == (4, 2)
-    # non-PPM payloads pass through untouched, meta untouched
-    assert out[2]["resized"] is False
-    assert bytes(out[2]["payload"]) == b"not an image"
-    assert out[2]["meta"]["width"] == 0
-    assert out[3]["resized"] is False
-
-
 def test_payload_rules_are_codepoint_based_unicode_exact(spark):
     """ADVICE r6: the PNG/WAV/MP4 payload rules used utf-8 BYTES while
     their DuckDB oracles replay per CHARACTER (length(text),

@@ -2,8 +2,8 @@
 visible in `.explain` output, and must not regress.
 
 These assert plan *shape*, not timings: pushdown reaches scans, star
-joins broadcast (no shuffle of the big side), bucketed joins plan without
-exchanges, IVF probe joins stay broadcast.
+joins broadcast (no shuffle of the big side), IVF probe joins stay
+broadcast.
 """
 
 from __future__ import annotations
@@ -55,43 +55,6 @@ def test_window_fill_partitions_by_group(spark, sf_dir):
     plan = _physical(QUERIES["w1_forward_fill"](spark, sf_dir))
     assert "Window" in plan
     assert plan.count("Exchange") <= 2
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    from factory_inspectors_db_etl_spark.operators.bucketing import bucketed_join, write_bucketed
-
-    import shutil
-
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(o.select("o_orderkey", "o_custkey"), "b_orders", "o_orderkey", 4)
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", "o_orderkey", 4
-    )
-    # at test scale the planner would rather broadcast; disable it so the
-    # bucketed SortMergeJoin path (what a big-big join would plan) shows
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", on="o_orderkey")
-        plan = _physical(joined)
-        # co-located: the join requires no shuffle of either side
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert "Bucketed: true" in plan
-        # sanity: results match the unbucketed join
-        want = (
-            o.join(li.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey")
-            .count()
-        )
-        assert joined.count() == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_ivf_probe_join_broadcasts_queries(spark, sf_dir):

@@ -20,12 +20,12 @@ from factory_inspectors_db_etl_spark.operators.bloom_join import (
     build_bloom,
 )
 from factory_inspectors_db_etl_spark.operators.setsim import (
-    bruteforce_jaccard_pairs,
     containment_pairs,
     prefix_filter_jaccard_pairs,
 )
 from factory_inspectors_db_etl_spark.operators.timeseries import gap_fill_hourly
 from factory_inspectors_db_etl_spark.sources.tables import load_table
+from setsim_oracles import bruteforce_jaccard_pairs
 
 
 def _pairs(df):

@@ -24,7 +24,6 @@ from factory_inspectors_db_etl_spark.operators.multimodal import (
     encode_png,
 )
 from factory_inspectors_db_etl_spark.operators.setsim import (
-    bruteforce_tfidf_cosine_pairs,
     tfidf_cosine_pairs,
 )
 from factory_inspectors_db_etl_spark.plans.catalog_ext4 import (
@@ -37,6 +36,7 @@ from factory_inspectors_db_etl_spark.plans.catalog_ext4 import (
 )
 from factory_inspectors_db_etl_spark.plans.catalog_graph import q_g5_wcc
 from factory_inspectors_db_etl_spark.sources.tables import load_table
+from setsim_oracles import bruteforce_tfidf_cosine_pairs
 
 
 # ---------------------------------------------------------------------------

@@ -344,6 +344,12 @@ def test_gif_roundtrips_dictionary_growth_interlace_and_palette():
     _, _, rgb = parse_gif(encode_gif(idx, palette=pal))
     assert np.array_equal(rgb[:, :, 0], idx)
     assert np.array_equal(rgb[:, :, 2], 255 - idx)
+    # a logical screen larger than the first image (valid per spec): the
+    # decoder rasterizes the image descriptor's dims
+    screen = bytearray(encode_gif(idx))
+    screen[6:10] = (200).to_bytes(2, "little") + (100).to_bytes(2, "little")
+    w, h, rgb = parse_gif(bytes(screen))
+    assert (w, h) == (37, 23) and np.array_equal(rgb[:, :, 0], idx)
 
 
 def test_gif_corruption_grid_and_rejections():

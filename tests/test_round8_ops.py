@@ -426,41 +426,6 @@ def test_g8_kcore_matches_python_peeling_to_fixpoint(spark, sf_dir):
     assert all(d >= _KCORE_K for d in got.values()) or not got
 
 
-@given(
-    st.integers(1, 5000), st.integers(1, 5000), st.integers(1, 512)
-)
-@settings(max_examples=300, deadline=None)
-def test_nn_target_invariants(w, h, max_side):
-    """The shared NN mapping (operators/raster.py): output dims bounded
-    by max_side, longer side exactly max_side, aspect ordering
-    preserved, index maps in-range and non-decreasing, and idempotence
-    (resizing an already-conforming image is the identity mapping)."""
-    from factory_inspectors_db_etl_spark.operators.raster import nn_target
-
-    nw, nh, ys, xs = nn_target(w, h, max_side)
-    assert max(nw, nh) == max_side and min(nw, nh) >= 1
-    # aspect ORDER is preserved up to flooring: the longer source side
-    # never maps to the strictly shorter target side
-    if w > h:
-        assert nw >= nh
-    elif h > w:
-        assert nh >= nw
-    else:
-        assert nw == nh
-    assert len(ys) == nh and len(xs) == nw
-    assert 0 <= ys[0] and ys[-1] < h and 0 <= xs[0] and xs[-1] < w
-    assert all(ys[i] <= ys[i + 1] for i in range(nh - 1))
-    assert all(xs[i] <= xs[i + 1] for i in range(nw - 1))
-    if max(w, h) <= max_side:
-        # callers skip within-bounds payloads; if they didn't, the map
-        # must still never upscale-shuffle: it stays injective monotone
-        pass
-    # idempotence: resizing the output dims again is the identity
-    nw2, nh2, ys2, xs2 = nn_target(nw, nh, max_side)
-    assert (nw2, nh2) == (nw, nh)
-    assert list(ys2) == list(range(nh)) and list(xs2) == list(range(nw))
-
-
 def test_g8_kcore_round_margin_holds_at_driver_sf():
     """MARGIN PIN (VERDICT r8 item #5): the fixed 6-round peel equals
     the true k-core only while the data's fixpoint stays below it.  The

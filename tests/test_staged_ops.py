@@ -315,7 +315,6 @@ def test_bmp_roundtrip_exact_including_stride_padding():
     from factory_inspectors_db_etl_spark.operators.multimodal import (
         _parse_bmp,
         encode_bmp,
-        image_dims,
     )
 
     rng = np.random.RandomState(11)
@@ -326,7 +325,6 @@ def test_bmp_roundtrip_exact_including_stride_padding():
             w2, h2, px2 = _parse_bmp(b)
             assert (w2, h2) == (w, h)
             assert (px2 == px).all()
-            assert image_dims(b) == (w, h)
 
 
 def test_bmp_top_down_variant_decodes_identically():
@@ -370,38 +368,6 @@ def test_bmp_rejects_unsupported_profiles():
         _parse_bmp(b"XX" + good[2:])
     with pytest.raises(ValueError, match="truncated raster"):
         _parse_bmp(good[:-4])
-
-
-def test_bmp_resize_dispatch_and_idempotence(spark):
-    """resize_images must really resample BMP payloads (fifth format in
-    the magic-byte dispatch), rewrite meta from the output header, and
-    be idempotent at fixed max_side."""
-    from factory_inspectors_db_etl_spark.operators.multimodal import (
-        _parse_bmp,
-        encode_bmp,
-        image_dims,
-        resize_bmp,
-        resize_images,
-    )
-
-    rng = np.random.RandomState(13)
-    px = rng.randint(0, 256, (4, 16, 3)).astype(np.uint8)
-    bmp = encode_bmp(px)
-    df = spark.createDataFrame(
-        [(1, bytearray(bmp), ("image/bmp", 16, 4, 1))],
-        "doc_id long, payload binary, "
-        "meta struct<mime:string,width:int,height:int,n_frames:int>",
-    )
-    out = resize_images(df, max_side=8).collect()[0]
-    assert out["resized"] and image_dims(bytes(out["payload"])) == (8, 2)
-    assert (out["meta"]["width"], out["meta"]["height"]) == (8, 2)
-    # NN mapping: resized pixels are exact source pixels (lossless codec)
-    _, _, small = _parse_bmp(bytes(out["payload"]))
-    ys = [i * 4 // 2 for i in range(2)]
-    xs = [i * 16 // 8 for i in range(8)]
-    assert (small == px[np.ix_(ys, xs)]).all()
-    # idempotent at fixed max_side
-    assert resize_bmp(bytes(out["payload"]), 8) == bytes(out["payload"])
 
 
 def test_g10_exact_on_hub_skewed_graph(spark, tmp_path):

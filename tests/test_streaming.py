@@ -294,8 +294,8 @@ def test_stream_json_enrichment_matches_batch(spark, tmp_path):
     # file streams need a DIRECTORY source
     shutil.copy("/root/testdata/sf0.001/events.parquet", src / "events.parquet")
     path = str(src)
-    # events.parquet stores TIMESTAMP(NANOS); read nanos as long exactly
-    # like sources.tables.load_table (ts is unused here)
+    # the testdata's ts is TIMESTAMP(MICROS); nanosAsLong keeps this read
+    # working on the older TIMESTAMP(NANOS) revisions too (ts is unused)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch = spark.read.parquet(path)
 
@@ -353,73 +353,6 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, events_stream):
     g = sorted((r[0], r[1], str(r[2]), r[3]) for r in got.collect())
     w = sorted((r[0], r[1], str(r[2]), r[3]) for r in want.collect())
     assert g == w and len(g) > 0
-
-
-def test_stateful_sessionize_with_event_time_timeout(spark, sf_dir, events_stream):
-    """Sessionization via applyInPandasWithState + EventTimeTimeout:
-    gap-closed sessions must equal the batch w13 sessions that are NOT
-    each user's last (those close only because a later event arrives);
-    timeout-flushed sessions must be a subset of the last-session set;
-    nothing is emitted twice."""
-    from pyspark.sql import Window
-
-    from factory_inspectors_db_etl_spark.streaming import stateful_sessionize
-
-    got = run_available_now(
-        stateful_sessionize(events_stream), "t_sessionize_state"
-    ).collect()
-    keys = [(r.user_id, r.session_start, r.session_end, r.n_events) for r in got]
-    assert len(keys) == len(set(keys)), "duplicate session emission"
-    gap_rows = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in got
-        if r.closed_by == "gap"
-    }
-    timeout_rows = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in got
-        if r.closed_by == "timeout"
-    }
-
-    from factory_inspectors_db_etl_spark.plans.catalog import q_w13_sessionize
-
-    batch = q_w13_sessionize(spark, sf_dir)
-    w = Window.partitionBy("user_id")
-    batch = batch.withColumn("_last", F.col("session_idx") == F.max("session_idx").over(w))
-    non_last = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in batch.filter(~F.col("_last")).collect()
-    }
-    last = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in batch.filter(F.col("_last")).collect()
-    }
-    assert gap_rows == non_last
-    assert timeout_rows <= last
-    assert not (gap_rows & timeout_rows)
-
-
-def test_stream_static_join_matches_batch(spark, sf_dir, events_stream):
-    """Stream-static enrichment (§2.9): per-user lifetime stats computed
-    BATCH-side, broadcast onto every micro-batch.  No watermark/state
-    store involved; availableNow output must equal the batch left join
-    row for row, including facts whose user is missing from the dim."""
-    from factory_inspectors_db_etl_spark.streaming import stream_static_enrich
-
-    ev = load_table(spark, sf_dir, "events")
-    dim = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("user_events"),
-        F.min("ts").alias("first_seen"),
-    ).filter(F.pmod("user_id", F.lit(2)) == 0)  # half the users intentionally absent
-    got = run_available_now(
-        stream_static_enrich(events_stream, dim), "t_stream_static"
-    )
-    want = ev.join(F.broadcast(dim), "user_id", "left")
-    cols = ["event_id", "user_id", "user_events"]
-    g = sorted(tuple(r) for r in got.select(*cols).collect())
-    w = sorted(tuple(r) for r in want.select(*cols).collect())
-    assert g == w and len(g) > 0
-    assert any(r[2] is None for r in g), "expected some un-enriched facts"
 
 
 def test_foreachbatch_incremental_dim_maintenance(spark, tmp_path):
@@ -591,52 +524,6 @@ def test_html_roster_stream_datasource_incremental(spark, tmp_path, generated_ro
     assert got2.columns == want.columns
     assert got2.filter(F.col("reject_reason").isNotNull()).count() > 0
     assert _bag(got2) == _bag(want)
-
-
-def test_stateful_sessionize_cross_batch_reorder(spark, tmp_path):
-    """A later micro-batch delivering a within-watermark event EARLIER
-    than the stored session end must interval-merge (extend the session
-    backwards), never move end_ms backwards or emit end < start."""
-    import datetime as _dt
-
-    from factory_inspectors_db_etl_spark.streaming import stateful_sessionize
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    base = _dt.datetime(2024, 1, 1, 10, 0, 0)
-
-    def write_file(name, minutes):
-        df = spark.createDataFrame(
-            [(i, 1, base + _dt.timedelta(minutes=m), "e", 1.0, "{}")
-             for i, m in enumerate(minutes)],
-            "event_id long, user_id long, ts timestamp, event_type string, value double, props string",
-        )
-        df.coalesce(1).write.parquet(str(src / name))
-
-    # batch 1: events at 10:00, 10:05; batch 2: late 10:02 (within
-    # watermark) + 11:30 (gap-closes the merged session)
-    write_file("f1", [0, 5])
-    import time as _time
-
-    _time.sleep(1.1)  # availableNow orders batches by file mtime
-    write_file("f2", [2, 90])
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts timestamp, event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    got = run_available_now(stateful_sessionize(stream), "t_sess_reorder").collect()
-    for r in got:
-        assert r.session_start <= r.session_end, r
-    gap = [r for r in got if r.closed_by == "gap"]
-    assert len(gap) == 1
-    # the merged session covers 10:00-10:05 INCLUDING the late 10:02 row
-    assert gap[0].session_start == "2024-01-01 10:00:00"
-    assert gap[0].session_end == "2024-01-01 10:05:00"
-    assert gap[0].n_events == 3
 
 
 def test_html_roster_stream_picks_up_in_place_rewrite(spark, tmp_path, generated_roster, gen_roster):
