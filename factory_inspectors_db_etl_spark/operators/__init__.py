@@ -27,7 +27,6 @@ from .multimodal import (
 )
 from .sampling import (
     hash_bucket,
-    hash_sample,
     hash_split,
     hash_topk_per_group,
     mixture_sample,
@@ -44,7 +43,7 @@ from .similarity import (
     pq_topk,
     semantic_dedup,
 )
-from .skew import salted_agg, skew_safe_count_distinct
+from .skew import skew_safe_count_distinct
 
 __all__ = [
     "MATERIALIZE_MODE_CONF",
@@ -64,7 +63,6 @@ __all__ = [
     "connected_components_large_star",
     "portable_hash60",
     "hash_bucket",
-    "hash_sample",
     "hash_split",
     "hash_topk_per_group",
     "pack_token_bins",
@@ -98,6 +96,5 @@ __all__ = [
     "apply_cdc",
     "latest_changes",
     "mixture_sample",
-    "salted_agg",
     "skew_safe_count_distinct",
 ]

@@ -62,13 +62,6 @@ def hash_split(
     return df.withColumn(out_col, out)
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, rate: float, buckets: int = 10_000, salt: str = ""
-) -> DataFrame:
-    """Keep ~``rate`` of rows, chosen by content hash (stable, driftless)."""
-    return df.filter(hash_bucket(F.col(key_col), buckets, salt) < int(rate * buckets))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     key_col: str,

@@ -112,8 +112,8 @@ def kmeans_centroids(
     embedding corpora, which cluster, trained centroids are what keeps
     recall up as cells multiply — that is why this variant exists.)
     Training is one iterative Spark ML job over the corpus; at 100 TB
-    pass ``train_filter`` (e.g. a deterministic hash-sample predicate,
-    ``operators/sampling.py::hash_sample``) — centroid quality converges
+    pass ``train_filter`` (e.g. a deterministic hash-bucket predicate,
+    ``operators/sampling.py::hash_bucket``) — centroid quality converges
     long before the full corpus is seen, and the filter keeps the
     training input deterministic, unlike ``limit()``.
     """

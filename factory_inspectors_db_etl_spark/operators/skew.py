@@ -10,11 +10,6 @@ fix:
   two-phase form shuffles on (key, value) first (spreading the hot key
   across all partitions), then counts per key — each shuffle partition
   holds a slice of the hot key's value space.
-* ``salted_agg`` — generic salted two-phase for aggregates whose partial
-  state is NOT O(1) (collect_list/collect_set/percentile sketches):
-  phase 1 aggregates on (key, salt) with salt = hash(row) % n, phase 2
-  merges the n partial states per key.  For O(1)-state aggregates this
-  only adds a shuffle — use it deliberately.
 
 Used with AQE's skew-join splitting (on by default in session.py), this
 covers the join-side and agg-side skew paths.
@@ -24,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,30 +39,3 @@ def skew_safe_count_distinct(
     keys = list(keys)
     dedup = df.select(*keys, value_col).dropDuplicates([*keys, value_col])
     return dedup.groupBy(*keys).agg(F.count(F.lit(1)).alias(out_col))
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    salt_on: str | Column,
-    partials: Sequence[Column],
-    merges: Sequence[Column],
-    n_salt: int = 16,
-) -> DataFrame:
-    """Two-phase salted aggregation.
-
-    ``partials`` aggregate within (keys..., salt); ``merges`` combine the
-    per-salt partial rows per key.  ``salt_on`` must be a row-level column
-    (or expression) with high cardinality — the salt is
-    ``pmod(xxhash64(salt_on), n_salt)``, deterministic so reruns agree.
-
-    Example (collect_set without a hot-key reducer)::
-
-        salted_agg(df, ["k"], "id",
-                   partials=[F.collect_set("v").alias("vs")],
-                   merges=[F.array_distinct(F.flatten(F.collect_list("vs"))).alias("vs")])
-    """
-    keys = list(keys)
-    salt = F.pmod(F.xxhash64(F.col(salt_on) if isinstance(salt_on, str) else salt_on), F.lit(n_salt))
-    phase1 = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*partials)
-    return phase1.groupBy(*keys).agg(*merges)

@@ -3,12 +3,11 @@ join, directed containment dedup, hourly gap-fill with exact linear
 interpolation, and a Bloom-pre-filtered selective join.
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle and
-the pair is registered in ``catalog.QUERIES`` / ``catalog.ORACLES``
-inside the driver's 50-key window.  Determinism follows the catalog
-conventions: thresholds and interpolation as integer rationals with one
-trailing IEEE division, time buckets via calendar arithmetic on
-TIMESTAMP_NTZ + ISO strings (never session-timezone epochs), integer
-aggregates CAST to BIGINT on the oracle side.
+the pair is registered through this module's ``REGISTRY``.  Determinism
+follows the catalog conventions: thresholds and interpolation as integer
+rationals with one trailing IEEE division, time buckets via calendar
+arithmetic on TIMESTAMP_NTZ + ISO strings (never session-timezone
+epochs), integer aggregates CAST to BIGINT on the oracle side.
 """
 
 from __future__ import annotations

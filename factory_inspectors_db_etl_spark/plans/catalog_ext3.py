@@ -5,12 +5,11 @@ integer-exact weighted Bernoulli sampling, and a seasonal-baseline
 anomaly flag.
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle and
-the pair is registered in ``catalog.QUERIES`` / ``catalog.ORACLES``
-inside the driver's 50-key window.  Determinism follows the catalog
-conventions: epoch keys via ``timestampdiff`` on TIMESTAMP_NTZ (never
-session-timezone ``unix_timestamp``), money in integer cents with one
-trailing IEEE division, integer aggregates CAST to BIGINT on the oracle
-side, every window over a provably TOTAL per-partition order
+the pair is registered through this module's ``REGISTRY``.  Determinism
+follows the catalog conventions: epoch keys via ``timestampdiff`` on
+TIMESTAMP_NTZ (never session-timezone ``unix_timestamp``), money in
+integer cents with one trailing IEEE division, integer aggregates CAST
+to BIGINT on the oracle side, every window over a provably TOTAL per-partition order
 (``(ts_us, event_id)`` — event_id breaks any future ts collision).
 """
 

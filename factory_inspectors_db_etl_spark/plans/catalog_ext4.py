@@ -5,9 +5,8 @@ n-gram novelty scoring, deterministic exact-k reservoir sampling, and
 a 2-D skyline (Pareto frontier).
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle
-registered in ``catalog.ORACLES`` and the pair sits inside the driver's
-50-key window for round 6.  Determinism follows the catalog
-conventions: money in integer cents, integer cross-multiplied
+registered with it in this module's ``REGISTRY``.  Determinism follows
+the catalog conventions: money in integer cents, integer cross-multiplied
 thresholds (DECIMAL(38,0) / HUGEINT on the oracle side), one trailing
 IEEE division per float output, integer aggregates CAST to BIGINT in
 oracles, date/bucket outputs as ISO strings, and every window over a

@@ -2,10 +2,9 @@
 oracle.
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle
-registered in ``catalog.ORACLES`` and the pair sits inside the driver's
-50-key window for round 7.  Determinism follows the catalog
-conventions: exact integer sums with one trailing IEEE division per
-float output, integer aggregates CAST to BIGINT in oracles.
+registered with it in this module's ``REGISTRY``.  Determinism follows
+the catalog conventions: exact integer sums with one trailing IEEE
+division per float output, integer aggregates CAST to BIGINT in oracles.
 
 Reference parity: the reference repo (populate_db_ru_v1.py) has no
 media path — this module extends the engine's LLM-data-pipeline

@@ -4,12 +4,12 @@ two-sample Kolmogorov-Smirnov drift detection and Zipf-law exponent
 fit — plus the linear SemDeDup form (auto-k, LSH-pruned assignment).
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle in
-``catalog.ORACLES`` and the pair sits inside the driver's 50-key window
-for round 8.  Determinism discipline follows the catalog conventions:
-exact integer arithmetic end-to-end with one trailing IEEE division per
-float output (w12/a25 lesson); where a genuinely transcendental input
-is unavoidable (Zipf's logs) it is snapped to fixed-point integers
-immediately so every downstream sum/product is exact.
+this module's ``REGISTRY``.  Determinism discipline follows the catalog
+conventions: exact integer arithmetic end-to-end with one trailing IEEE
+division per float output (w12/a25 lesson); where a genuinely
+transcendental input is unavoidable (Zipf's logs) it is snapped to
+fixed-point integers immediately so every downstream sum/product is
+exact.
 
 Reference parity: the reference repo (populate_db_ru_v1.py) has no
 survival/drift/Zipf path — this module extends the engine's

@@ -4,7 +4,7 @@ entropy profiling, bottom-k (KMV) distinct sketches and Flesch
 readability scoring.
 
 Same contract as ``plans.catalog``: every query here has a DuckDB
-oracle and sits inside the driver's 50-key window for round 9.
+oracle, registered with it in this module's ``REGISTRY``.
 Determinism discipline follows the catalog conventions: exact integer
 arithmetic end-to-end with one trailing IEEE division per float output
 (the w12/a25 lesson); transcendental inputs (ln) are snapped to

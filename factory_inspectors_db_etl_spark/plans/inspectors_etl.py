@@ -39,7 +39,7 @@ Documented divergences from the reference (SURVEY.md §7):
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 from itertools import accumulate
 
@@ -297,22 +297,22 @@ def stream_assignment_rows(spark: SparkSession, dir_glob: str) -> DataFrame:
 
 
 def parsed_assignment_rows(
-    spark: SparkSession, paths: str | list[str], return_rejects: bool = False
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Reader through exploded, dim-key-annotated assignment rows (one row
-    per assignment, pre-dim-join; ``file_ordinal`` is the row's 1-based
-    position among its file's assignments).
+    spark: SparkSession, paths: str | list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """Reader through exploded, dim-key-annotated assignment rows, and the
+    quarantine (P6): returns ``(assignments, rejects)``.
 
-    With ``return_rejects=True`` also returns the quarantine DataFrame
-    (P6): rows/assignments the reference warn-and-drops
-    (populate_db_ru_v1.py:718-719,748-749) routed to a sink with a reason
-    column instead of vanishing into logs.
+    ``assignments`` has one row per assignment, pre-dim-join
+    (``file_ordinal`` is the row's 1-based position among its file's
+    assignments).  ``rejects`` holds the rows/assignments the reference
+    warn-and-drops (populate_db_ru_v1.py:718-719,748-749), routed to a
+    sink with a reason column instead of vanishing into logs.
 
-    Eager: the call runs a Spark job before returning, with or without
-    ``return_rejects`` — the per-document pass (one task per input split
-    of whole files, no shuffle) materialized by one ``materialize_counted``
-    barrier (``spark.graft.materialize.mode`` picks its durability).
-    The barrier keeps the Python pass single-run for every consumer (the
+    Eager: the call runs one Spark job before returning — the
+    per-document pass (one task per input split of whole files, no
+    shuffle) materialized by one ``materialize_counted`` barrier
+    (``spark.graft.materialize.mode`` picks its durability).  The
+    barrier keeps the Python pass single-run for every consumer (the
     dims' aggregate, the fact, the rejects) and truncates the plan they
     analyze; the quality sums it observes from its own job go to
     ``LAST_BUILD_METRICS``."""
@@ -332,9 +332,6 @@ def parsed_assignment_rows(
     LAST_BUILD_METRICS.clear()
     LAST_BUILD_METRICS.update(quality)
 
-    a = rows.filter(kept).drop("reject_reason")
-    if not return_rejects:
-        return a
     rejects = rows.filter(~kept).select(
         "source_file",
         "year",
@@ -343,60 +340,16 @@ def parsed_assignment_rows(
         "reject_reason",
         F.col("personnel_raw_string").alias("payload"),
     )
-    return a, rejects
+    return rows.filter(kept).drop("reject_reason"), rejects
 
 
-def _sql_str(s: str) -> str:
-    """Escape a python string as a Spark SQL single-quoted literal body."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
-
-
-def _lookup_full_name(key_col: str, dictionary: dict[str, str]) -> Column:
-    """FullName_RU lookup with the reference's ±trailing-dot fallback
-    (populate_db_ru_v1.py:186-192).
-
-    Rendered as ONE ``F.expr`` CASE string instead of a chain of
-    ``F.when`` calls: each Column method is a py4j roundtrip (~1ms), and
-    the three dictionary ladders alone cost ~3.2s of plan-build time in
-    that form (profiled); a single parsed SQL string is one roundtrip.
-    WHEN order is the reverse of dict order, matching the original
-    later-entry-wraps-earlier nesting (conditions are mutually exclusive
-    per unique keys, so precedence is moot — preserved for fidelity).
-    """
-    items = [(k, v) for k, v in dictionary.items() if k]
-    if not items:
-        return F.lit(None).cast("string")
-    main = " ".join(
-        f"WHEN {key_col} = '{_sql_str(k)}' THEN '{_sql_str(v)}'" for k, v in reversed(items)
-    )
-    # ±one-trailing-dot fallback, exactly as the reference probes key[:-1]
-    # and key+'.'
-    fb = []
-    for k, v in reversed(items):
-        if k.endswith("."):
-            fb.append(
-                f"WHEN regexp_replace({key_col}, '\\\\.$', '') = '{_sql_str(k[:-1])}'"
-                f" THEN '{_sql_str(v)}'"
-            )
-        else:
-            fb.append(
-                f"WHEN concat({key_col}, '.') = '{_sql_str(k + '.')}'"
-                f" THEN '{_sql_str(v)}'"
-            )
-    return F.expr(
-        f"coalesce(CASE {main} ELSE CAST(NULL AS STRING) END, "
-        f"CASE {' '.join(fb)} ELSE CAST(NULL AS STRING) END)"
-    )
-
-
-def _concurrently(fn: Callable[[str, DataFrame], object], items: dict[str, DataFrame]) -> dict:
-    """``{name: fn(name, df)}``, the calls submitted from a local
-    thread pool so their Spark jobs run concurrently under the scheduler
-    (overlapping per-job scheduling and commit latency; with sequential
-    calls the cluster idles between small jobs).  The warehouse writes
-    use it.  The first error re-raises."""
-    with ThreadPoolExecutor(max_workers=len(items)) as pool:
-        return dict(zip(items, pool.map(fn, items.keys(), items.values())))
+def full_name_ru(key: str, dictionary: dict[str, str]) -> str | None:
+    """FullName_RU of an abbreviation, probed as the reference does
+    (populate_db_ru_v1.py:186-192): the key, then the key without its
+    trailing dot, or with one added."""
+    if key in dictionary:
+        return dictionary[key]
+    return dictionary.get(key[:-1] if key.endswith(".") else key + ".")
 
 
 # one grouping set per dim natural key, plus the fact's per-file counts
@@ -429,10 +382,27 @@ def natural_key_order(keys: Iterable[tuple]) -> list[tuple]:
 
 def _local_table(spark: SparkSession, ddl: str, columns: list[list]) -> DataFrame:
     """A ``LocalRelation`` of ``columns`` under the DDL schema, nullability
-    included.  An Arrow table gives a local relation whatever the
-    session's Arrow conf, where a list of rows would give an RDD scan."""
+    included; the DDL's columns past ``columns`` are all null.  An Arrow
+    table gives a local relation whatever the session's Arrow conf, where
+    a list of rows would give an RDD scan."""
     schema = StructType.fromDDL(ddl)
+    nulls = [None] * len(columns[0])
+    columns = columns + [nulls] * (len(schema) - len(columns))
     return spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema)
+
+
+# the fact's join to each dim: dim -> (id column, {dim column: fact key
+# column}), the fact's key columns being the dim's grouping set
+_DIM_JOINS = {
+    "inspectors": ("inspector_id", {"full_name": "inspector_key"}),
+    "locations": (
+        "location_id",
+        {"city_key": "city_key", "gubernia_name": "gubernia_std", "okrug_name": "okrug_std"},
+    ),
+    "ranks": ("rank_id", {"abbreviation": "rank_abbr"}),
+    "professions": ("profession_id", {"abbreviation": "profession_key"}),
+    "educations": ("education_id", {"abbreviation": "education_key"}),
+}
 
 
 def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, DataFrame]:
@@ -444,13 +414,14 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
     ``spark.graft.materialize.mode``), then the map and result jobs of
     one grouping-sets aggregate over it, which the driver collects.  The
     aggregate yields every dim's distinct natural keys and each file's
-    assignment count; the driver mints the surrogate ids and the fact's
-    per-file offsets from them and returns the five dims as local
-    relations.  The dims hold one row per distinct key, so they fit on
+    assignment count; the driver mints the surrogate ids, looks up the
+    abbreviations' full names in the reference dictionaries and computes
+    the fact's per-file offsets, and returns each dim as one local
+    relation.  The dims hold one row per distinct key, so they fit on
     the driver like the broadcast joins that read them.  The fact and the
     rejects stay lazy: columnar plans over the checkpointed blocks, run by
     whoever writes them."""
-    a, rejects = parsed_assignment_rows(spark, paths, return_rejects=True)
+    a, rejects = parsed_assignment_rows(spark, paths)
 
     groups = {_grouping_id(cols): name for name, cols in _KEY_SETS.items()}
     rows: dict[str, list] = {name: [] for name in _KEY_SETS}
@@ -476,8 +447,8 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
             keyed.pop((None,), None)
         return [keyed[k] for k in natural_key_order(keyed)]
 
-    def _ids(n: int) -> list[int]:
-        return list(range(1, n + 1))
+    def _ids(minted: list) -> list[int]:
+        return list(range(1, len(minted) + 1))
 
     inspectors = _minted("inspectors")
     locations = _minted("locations")
@@ -485,32 +456,29 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
         "inspectors": _local_table(
             spark,
             "inspector_id int NOT NULL, full_name string, notes string",
-            [_ids(len(inspectors)), [r["inspector_key"] for r in inspectors], [None] * len(inspectors)],
+            [_ids(inspectors), [r["inspector_key"] for r in inspectors]],
         ),
         "locations": _local_table(
             spark,
             "location_id int NOT NULL, city_name string, city_key string, gubernia_name string,"
             " okrug_name string, location_type string NOT NULL",
             [
-                _ids(len(locations)),
+                _ids(locations),
                 *([r[c] for r in locations] for c in ("city_name", *_KEY_SETS["locations"])),
                 ["Город"] * len(locations),
             ],
         ),
     }
-
-    def _abbr_dim(name: str, id_col: str, dictionary: dict[str, str]) -> DataFrame:
+    abbr = "int NOT NULL, abbreviation string, full_name_ru string"
+    for name, ddl, dictionary in (
+        ("ranks", f"rank_id {abbr}, rank_type string", KNOWN_RANKS),
+        ("professions", f"profession_id {abbr}", KNOWN_PROFESSIONS),
+        ("educations", f"education_id {abbr}", KNOWN_EDUCATIONS),
+    ):
         keys = [r[_KEY_SETS[name][0]] for r in _minted(name)]
-        dim = _local_table(spark, f"{id_col} int NOT NULL, abbreviation string", [_ids(len(keys)), keys])
-        return dim.select(
-            id_col, "abbreviation", _lookup_full_name("abbreviation", dictionary).alias("full_name_ru")
+        dims[name] = _local_table(
+            spark, ddl, [_ids(keys), keys, [full_name_ru(k, dictionary) for k in keys]]
         )
-
-    dims["ranks"] = _abbr_dim("ranks", "rank_id", KNOWN_RANKS).withColumn(
-        "rank_type", F.lit(None).cast("string")
-    )
-    dims["professions"] = _abbr_dim("professions", "profession_id", KNOWN_PROFESSIONS)
-    dims["educations"] = _abbr_dim("educations", "education_id", KNOWN_EDUCATIONS)
 
     # W6 surrogate ids: the pass's per-file ordinal + the file's offset,
     # the rows in all files before it in (year, source_file) order —
@@ -525,50 +493,10 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
         [[r["source_file"] for r in files], list(accumulate((r["n"] for r in files[:-1]), initial=0))],
     )
 
-    fact = (
-        a.join(
-            F.broadcast(
-                dims["inspectors"].select(F.col("full_name").alias("inspector_key"), "inspector_id")
-            ),
-            on="inspector_key",
-            how="left",
-        )
-        .join(
-            F.broadcast(
-                dims["locations"].select(
-                    "location_id",
-                    "city_key",
-                    F.col("gubernia_name").alias("gubernia_std"),
-                    F.col("okrug_name").alias("okrug_std"),
-                )
-            ),
-            on=["city_key", "gubernia_std", "okrug_std"],
-            how="left",
-        )
-        .join(
-            F.broadcast(dims["ranks"].select(F.col("abbreviation").alias("rank_abbr"), "rank_id")),
-            on="rank_abbr",
-            how="left",
-        )
-        .join(
-            F.broadcast(
-                dims["professions"].select(
-                    F.col("abbreviation").alias("profession_key"), "profession_id"
-                )
-            ),
-            on="profession_key",
-            how="left",
-        )
-        .join(
-            F.broadcast(
-                dims["educations"].select(
-                    F.col("abbreviation").alias("education_key"), "education_id"
-                )
-            ),
-            on="education_key",
-            how="left",
-        )
-    )
+    fact = a
+    for name, (id_col, keys) in _DIM_JOINS.items():
+        dim = dims[name].select(id_col, *(F.col(d).alias(k) for d, k in keys.items()))
+        fact = fact.join(F.broadcast(dim), on=list(keys.values()), how="left")
     fact = fact.join(F.broadcast(offsets), "source_file").select(
         (F.col("file_ordinal") + F.col("_off")).cast("long").alias("assignment_id"),
         "inspector_id",
@@ -631,7 +559,10 @@ def write_warehouse(tables: dict[str, DataFrame], out_dir: str) -> None:
             writer = writer.partitionBy("year")
         writer.parquet(f"{out_dir}/{name}")
 
-    _concurrently(_write, tables)
+    # submitted from a local thread pool so the small jobs overlap their
+    # scheduling and commit latency; the first error re-raises
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        list(pool.map(_write, tables.keys(), tables.values()))
 
 
 def bootstrap_warehouse_catalog(

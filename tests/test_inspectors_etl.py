@@ -288,6 +288,22 @@ def test_role_classification(desc, want):
     assert _classify_role(desc) == want
 
 
+@pytest.mark.parametrize("name", ["KNOWN_RANKS", "KNOWN_PROFESSIONS", "KNOWN_EDUCATIONS"])
+def test_full_name_lookup_probes_like_reference(name):
+    """F10 (populate_db_ru_v1.py:186-192): the key first, then the key
+    without its trailing dot, or with one added — in both directions, so
+    a dotted variant of a dotless key finds that key's name."""
+    from factory_inspectors_db_etl_spark.functions import dictionaries
+    from factory_inspectors_db_etl_spark.plans.inspectors_etl import full_name_ru
+
+    d = getattr(dictionaries, name)
+    for key, full in d.items():
+        assert full_name_ru(key, d) == full, key
+        variant = key[:-1] if key.endswith(".") else key + "."
+        assert full_name_ru(variant, d) == d.get(variant, full), variant
+    assert full_name_ru("нѣтъ такого", d) is None
+
+
 # ---------------------------------------------------------------------------
 # Property tests (F1/F2/F8, SURVEY.md §5.4)
 # ---------------------------------------------------------------------------
@@ -540,7 +556,7 @@ def test_observe_build_metrics_match_recompute(spark, generated_roster):
     sc = spark.sparkContext
     sc.setJobGroup("observe_barrier", "parsed_assignment_rows")
     try:
-        a = parsed_assignment_rows(spark, path)
+        a, _ = parsed_assignment_rows(spark, path)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("observe_barrier")) == 1

@@ -84,7 +84,7 @@ def test_ivf_kmeans_probe_join_same_shape(spark, sf_dir):
 
 
 def test_sampling_is_scan_plus_filter_no_shuffle(spark, sf_dir):
-    # hash_split/hash_sample/stratified are pure scan->project/filter:
+    # hash_split/stratified sampling are pure scan->project/filter:
     # a sampling pass over 100 TB must not shuffle anything
     for q in ("p_hash_split", "p_stratified_sample"):
         plan = _physical(QUERIES[q](spark, sf_dir))

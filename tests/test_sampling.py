@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from factory_inspectors_db_etl_spark.operators.sampling import (
-    hash_sample,
     hash_split,
     hash_topk_per_group,
     stratified_hash_sample,
@@ -43,17 +42,6 @@ def test_split_driftless_under_corpus_growth(spark, docs):
 def test_split_fractions_must_sum_to_one(docs):
     with pytest.raises(ValueError):
         hash_split(docs, "text", {"train": 0.5, "val": 0.1})
-
-
-def test_hash_sample_rate_and_subset(docs):
-    s10 = hash_sample(docs, "text", 0.10)
-    s50 = hash_sample(docs, "text", 0.50)
-    n10, n50 = s10.count(), s50.count()
-    assert 0 < n10 < n50 < 300
-    # nested: a lower-rate sample is a subset of a higher-rate one
-    ids10 = {r["doc_id"] for r in s10.select("doc_id").collect()}
-    ids50 = {r["doc_id"] for r in s50.select("doc_id").collect()}
-    assert ids10 <= ids50
 
 
 def test_stratified_rates_apply_per_stratum(docs):

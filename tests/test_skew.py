@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from factory_inspectors_db_etl_spark.operators.skew import salted_agg, skew_safe_count_distinct
+from factory_inspectors_db_etl_spark.operators.skew import skew_safe_count_distinct
 from factory_inspectors_db_etl_spark.sources.tables import load_table
 
 
@@ -16,26 +16,6 @@ def test_skew_safe_count_distinct_equivalent(spark, sf_dir):
         li.groupBy("l_returnflag").agg(F.countDistinct("l_orderkey").alias("n")).collect()
     )
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-
-
-def test_salted_collect_set_equivalent(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").limit(2000)
-    got = salted_agg(
-        li,
-        ["l_returnflag"],
-        "l_orderkey",
-        partials=[F.collect_set("l_linenumber").alias("vs")],
-        merges=[F.array_sort(F.array_distinct(F.flatten(F.collect_list("vs")))).alias("vs")],
-        n_salt=8,
-    ).collect()
-    want = (
-        li.groupBy("l_returnflag")
-        .agg(F.array_sort(F.collect_set("l_linenumber")).alias("vs"))
-        .collect()
-    )
-    g = {r["l_returnflag"]: r["vs"] for r in got}
-    w = {r["l_returnflag"]: r["vs"] for r in want}
-    assert g == w
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

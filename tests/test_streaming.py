@@ -281,22 +281,15 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     }
 
 
-def test_stream_json_enrichment_matches_batch(spark, tmp_path):
+def test_stream_json_enrichment_matches_batch(spark, sf_dir, tmp_path):
     """Scalar JVM-side transformations (get_json_object) compose with
     readStream exactly as with batch: streaming the same files through
     the enrichment yields the batch result."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
     src = tmp_path / "ev"
     src.mkdir()
     # file streams need a DIRECTORY source
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "events.parquet")
+    shutil.copy(f"{sf_dir}/events.parquet", src / "events.parquet")
     path = str(src)
-    # the testdata's ts is TIMESTAMP(MICROS); nanosAsLong keeps this read
-    # working on the older TIMESTAMP(NANOS) revisions too (ts is unused)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch = spark.read.parquet(path)
 
     def enrich(df):
