@@ -60,6 +60,7 @@ _LARGE_STAR_ROUNDS = 20
 
 PORTABLE_MOD = (1 << 31) - 1  # Mersenne prime 2^31-1
 _HALF_MASK = (1 << 30) - 1
+_SIMHASH_BITS = 60  # fingerprint width: one bit per portable_hash60 bit
 
 
 def portable_hash60(col: Column) -> Column:
@@ -132,58 +133,45 @@ def _with_words(df: DataFrame, text_col: str, out: str = "_words") -> DataFrame:
     return df.withColumn(out, F.split(normalize_for_shingling(F.col(text_col)), " "))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 1000,
-) -> DataFrame:
-    """All-pairs n-gram Jaccard similarity >= threshold.
+def _shingle_stream(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(doc, sh) stream: each document's distinct word ``k``-shingles as
+    64-bit xxhash64 values (``k=1``: its distinct tokens).  The one
+    shingle stream of every set-similarity operator here and in
+    ``setsim``: fixed-width hashes keep the shuffle payload at 16 B per
+    shingle (collision odds ~2^-64).  A NULL text has no shingles, as in
+    the DuckDB oracles (``shingles`` alone would give it the empty
+    shingle, so NULL and empty texts would pair)."""
+    words = _with_words(df.filter(F.col(text_col).isNotNull()), text_col)
+    elems = F.array_distinct(F.col("_words")) if k == 1 else shingles(F.col("_words"), k)
+    return words.select(
+        F.col(id_col).alias("doc"), F.explode(elems).alias("sh")
+    ).select("doc", F.xxhash64("sh").alias("sh"))
 
-    Inverted-index join: explode shingles, self-join on the shingle hash
-    (only docs sharing >=1 shingle ever meet), count the intersection, then
-    |A ∪ B| = |A| + |B| - |A ∩ B|.  Returns (id_a, id_b, jaccard) with
-    id_a < id_b.
 
-    ``max_df`` is the stop-shingle cap: a posting list longer than it is
-    dropped BEFORE any pair is generated, because one shingle shared by
-    m documents emits O(m^2) pairs — a single stop-shingle across 10M
-    docs would otherwise be one giant posting row and 5*10^13 pairs.
-    Dropped shingles still count toward |A| and |B| (sizes come from the
-    full shingle sets), so affected pairs' Jaccard is UNDERestimated —
-    conservative for a near-dup gate.  The number of capped shingles is
-    published as the observed metric ``ngram_jaccard_capped_postings``
-    (CollectMetrics — free at execution time, readable from any query
-    listener).  Exact mode: ``max_df=None``; on corpora where no shingle
-    reaches the cap (e.g. the driver tables) the result is identical.
-    """
-    # Materialize the hashed shingle stream ONCE: it feeds three
-    # consumers (sizes, the frequency probe, the postings join) and Spark
-    # plans no reuse across them — without the barrier the full
-    # text-scan+tokenize+explode runs three times.  The stream is compact
-    # (doc id + 64-bit hash = 16 B/shingle); durability is session-
-    # configurable via spark.graft.materialize.mode (local checkpoint by
-    # default; 'reliable' survives executor loss — see operators/
-    # materialize.py).  The barrier is eager deliberately: a LAZY
-    # checkpoint lets the consuming stages race the cache and re-compute
-    # (measured +30-50% on every barriered query); the cost is that
-    # plan-only callers (the audit tool) execute the upstream job at
-    # construction time.
-    sh = materialize(
-        _with_words(df, text_col)
-        .select(
-            F.col(id_col).alias("doc"),
-            F.explode(shingles(F.col("_words"), k)).alias("sh"),
-        )
-        .select("doc", F.xxhash64("sh").alias("sh"))
-    )
+def _shingle_intersections(
+    df: DataFrame, id_col: str, text_col: str, k: int, max_df: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """Inverted-index intersection counts over the ``k``-shingle stream:
+    ``(inter, sizes)`` with ``inter`` = (id_a, id_b, inter), id_a < id_b,
+    for every pair sharing at least one shingle, and ``sizes`` = (doc, sz)
+    per document.
+
+    The stream is materialized ONCE: it feeds three consumers (sizes, the
+    frequency probe, the postings join) and Spark plans no reuse across
+    them — without the barrier the full text-scan+tokenize+explode runs
+    three times.  The barrier is eager deliberately: a LAZY checkpoint
+    lets the consuming stages race the cache and re-compute (measured
+    +30-50% on every barriered query); the cost is that plan-only
+    callers (the audit tool) execute the upstream job at construction
+    time.
+
+    Postings: shingle -> list of docs, pairs emitted from each list, so
+    the shingle set is shuffled once (on the 64-bit hash) instead of
+    twice as in a shingle self-join, and postings of size 1 never emit.
+    ``max_df`` is the stop-shingle cap (see ``ngram_jaccard_pairs``);
+    ``None`` counts every shingle."""
+    sh = materialize(_shingle_stream(df, id_col, text_col, k))
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    # Inverted index: shingle -> posting list, then emit pairs from each
-    # list.  Equivalent to the shingle self-join but computes the shingle
-    # set ONCE (one shuffle on the 64-bit shingle hash) instead of twice,
-    # and postings of size 1 are dropped before any pair is generated.
     if max_df is None:
         postings = (
             sh.groupBy("sh")
@@ -222,6 +210,71 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+    return inter, sizes
+
+
+def _collapse_duplicates(
+    df: DataFrame, id_col: str, key: Column
+) -> tuple[DataFrame, DataFrame]:
+    """Group the rows of ``df`` whose ``key`` is equal.  Returns
+    ``(reps, members)``: ``reps`` is one row per group — its min-id row,
+    every column of ``df`` plus the group size ``_gn`` — and ``members``
+    maps each rep id ``rep`` to every member id ``mid`` (itself included).
+
+    The duplicate-density guard of every pair operator on texts or
+    vectors: a corpus where each document has r verbatim copies makes
+    every posting list or LSH bucket r× longer and the pair join r²×
+    bigger, while the pair set over DISTINCT contents is unchanged — so
+    pairs are computed once per rep and expanded to members afterward.
+    Bit-identical whenever the pair values are pure functions of the
+    content (shingle sets, vectors): each group's min member IS its rep.
+    Text callers key on ``md5(text)``, which keeps the window's exchange
+    key 16 bytes wide instead of shipping every multi-KB text twice (key +
+    payload) — the equality ``exact_dedup`` already stakes on.  A NULL key
+    is a group of its own, so callers whose NULL rows must stay apart
+    filter them out first.  One window pass behind one barrier, because
+    both the reps and the member expansion read it."""
+    grp = Window.partitionBy(key)
+    tagged = materialize(
+        df.select(
+            "*",
+            F.min(id_col).over(grp).alias("_rep"),
+            F.count(F.lit(1)).over(grp).alias("_gn"),
+        )
+    )
+    members = tagged.select(F.col("_rep").alias("rep"), F.col(id_col).alias("mid"))
+    reps = tagged.filter(F.col(id_col) == F.col("_rep")).drop("_rep")
+    return reps, members
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = 3,
+    threshold: float = 0.5,
+    max_df: int | None = 1000,
+) -> DataFrame:
+    """All-pairs n-gram Jaccard similarity >= threshold.
+
+    Inverted-index join (``_shingle_intersections``): only docs sharing
+    >=1 shingle ever meet, the intersection is counted per pair, then
+    |A ∪ B| = |A| + |B| - |A ∩ B|.  Returns (id_a, id_b, jaccard) with
+    id_a < id_b.
+
+    ``max_df`` is the stop-shingle cap: a posting list longer than it is
+    dropped BEFORE any pair is generated, because one shingle shared by
+    m documents emits O(m^2) pairs — a single stop-shingle across 10M
+    docs would otherwise be one giant posting row and 5*10^13 pairs.
+    Dropped shingles still count toward |A| and |B| (sizes come from the
+    full shingle sets), so affected pairs' Jaccard is UNDERestimated —
+    conservative for a near-dup gate.  The number of capped shingles is
+    published as the observed metric ``ngram_jaccard_capped_postings``
+    (CollectMetrics — free at execution time, readable from any query
+    listener).  Exact mode: ``max_df=None``; on corpora where no shingle
+    reaches the cap (e.g. the driver tables) the result is identical.
+    """
+    inter, sizes = _shingle_intersections(df, id_col, text_col, k, max_df)
     out = (
         inter.join(sizes.withColumnRenamed("doc", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed("doc", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
@@ -238,21 +291,14 @@ def minhash_signatures(
     text_col: str,
     k: int = 5,
     num_hashes: int = 64,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Per-document MinHash signature (array of num_hashes minima).
 
-    ``hash_family="portable"`` (default): one ``portable_hash60`` per
-    shingle, split into two 30-bit halves, then ``num_hashes`` affine
-    maps mod 2^31-1 (``affine_params``) — a classic universal family.
-    One md5 per shingle + pure int64 arithmetic, reproducible in any
-    engine (the driver's DuckDB oracle re-runs it verbatim).
-
-    ``hash_family="xxhash64"``: each hash i is xxhash64(shingle, seed=i)
-    over the pre-hashed 64-bit shingle value — JVM-only but the full
-    64-bit space (prefer it when cross-engine verification isn't needed
-    and corpora are large enough for 31-bit collisions to matter; min
-    collision odds per doc ~ n_shingles/2^31).
+    One ``portable_hash60`` per shingle, split into two 30-bit halves,
+    then ``num_hashes`` affine maps mod 2^31-1 (``affine_params``) — a
+    classic universal family.  One md5 per shingle + pure int64
+    arithmetic, reproducible in any engine (the driver's DuckDB oracle
+    re-runs it verbatim).
 
     The signature is the elementwise min over the document's shingles —
     computed columnar as an aggregate over the exploded shingle set (one
@@ -262,22 +308,15 @@ def minhash_signatures(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col("_words"), k)).alias("sh"),
     )
-    if hash_family == "xxhash64":
-        # Hash the (variable-width) shingle string ONCE, then derive the
-        # family by re-hashing the fixed-width 64-bit value with per-index
-        # seeds — cheap long-input hashes, no overflowing arithmetic.
-        sh = sh.select("doc", F.xxhash64("sh").alias("h"))
-        mins = [F.min(F.xxhash64("h", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    else:
-        sh = sh.select("doc", portable_hash60(F.col("sh")).alias("h")).select(
-            "doc",
-            F.shiftright("h", 30).alias("hi"),
-            F.col("h").bitwiseAND(F.lit(_HALF_MASK)).alias("lo"),
-        )
-        mins = [
-            F.min((F.lit(a) * F.col("hi") + F.lit(b) * F.col("lo") + F.lit(c)) % F.lit(PORTABLE_MOD)).alias(f"h{i}")
-            for i, (a, b, c) in enumerate(affine_params(num_hashes))
-        ]
+    sh = sh.select("doc", portable_hash60(F.col("sh")).alias("h")).select(
+        "doc",
+        F.shiftright("h", 30).alias("hi"),
+        F.col("h").bitwiseAND(F.lit(_HALF_MASK)).alias("lo"),
+    )
+    mins = [
+        F.min((F.lit(a) * F.col("hi") + F.lit(b) * F.col("lo") + F.lit(c)) % F.lit(PORTABLE_MOD)).alias(f"h{i}")
+        for i, (a, b, c) in enumerate(affine_params(num_hashes))
+    ]
     sig = sh.groupBy("doc").agg(*mins)
     return sig.select("doc", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
 
@@ -286,7 +325,6 @@ def minhash_band_buckets(
     signatures: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Explode signatures into (doc, band, digest) LSH bucket rows.
 
@@ -295,13 +333,12 @@ def minhash_band_buckets(
     the whole shingle->minhash aggregation would run once PER SIDE (no
     ReusedExchange is planned across self-joins).  (doc, signature) is
     8*num_hashes bytes per doc — cheap at any scale."""
-    digest_hash = F.xxhash64 if hash_family == "xxhash64" else portable_hash60
     signatures = materialize(signatures)
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(i).alias("band"),
-                digest_hash(
+                portable_hash60(
                     F.concat_ws(",", *[F.col("signature")[i * rows_per_band + j].cast("string") for j in range(rows_per_band)])
                 ).alias("digest"),
             )
@@ -317,22 +354,21 @@ def minhash_lsh_candidates(
     signatures: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """LSH banding: docs whose signature agrees on all rows of any band.
 
     Returns candidate pairs (id_a, id_b, n_bands_matched).  The band digest
     equi-join replaces the all-pairs comparison; with b bands of r rows the
-    match probability is 1-(1-s^r)^b for Jaccard s.  The digest hash
-    matches ``hash_family`` so a "portable" pipeline is oracle-checkable
-    end to end.
+    match probability is 1-(1-s^r)^b for Jaccard s.  Signatures and band
+    digests both hash with ``portable_hash60``, so the pipeline is
+    oracle-checkable end to end.
 
     Signatures are materialized before the band self-join: without the
     barrier the whole shingle->minhash aggregation runs once PER SIDE
     (no ReusedExchange is planned across the self-join).  (doc,
     signature) is 8*num_hashes bytes per doc — cheap at any scale.
     """
-    buckets = minhash_band_buckets(signatures, bands, rows_per_band, hash_family)
+    buckets = minhash_band_buckets(signatures, bands, rows_per_band)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -352,7 +388,6 @@ def incremental_lsh_dup_flags(
     delta_flags: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Incremental near-dup detection: flag each DELTA document (a new
     ingestion batch) that near-dups against the BASE corpus or an
@@ -373,7 +408,7 @@ def incremental_lsh_dup_flags(
     doc with a SMALLER id (the deterministic earlier-arrival tiebreak —
     first occurrence in the batch is kept).  Returns one row per delta
     doc: (doc_id, n_dup_sources, is_dup)."""
-    buckets = minhash_band_buckets(signatures, bands, rows_per_band, hash_family)
+    buckets = minhash_band_buckets(signatures, bands, rows_per_band)
     flagged = buckets.join(
         delta_flags.select(F.col("doc_id").alias("doc"), "is_delta"), "doc"
     )
@@ -404,38 +439,26 @@ def incremental_lsh_dup_flags(
     )
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int | None = None,
-    hash_family: str = "portable",
-) -> DataFrame:
-    """SimHash over word tokens, fully columnar.
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """60-bit SimHash over word tokens, fully columnar.
 
-    Per token: h = hash(token); each bit votes +1/-1; the fingerprint
-    sets bit i when the summed vote is positive.  Implemented with
+    Per token: h = portable_hash60(token); each bit votes +1/-1; the
+    fingerprint sets bit i when the summed vote is positive, so the whole
+    fingerprint is reproducible in the DuckDB oracle.  Implemented with
     higher-order array functions (no UDF): aggregate over the token array
     per row — no extra shuffle at all.
-
-    ``hash_family="portable"`` (default, 60 bits) hashes tokens with
-    ``portable_hash60`` so the whole fingerprint is reproducible in the
-    DuckDB oracle; ``"xxhash64"`` uses the full 64-bit JVM hash.
     """
-    if bits is None:
-        bits = 60 if hash_family == "portable" else 64
-    token_hash = F.xxhash64 if hash_family == "xxhash64" else portable_hash60
     # Materialize the token-hash array as a bound column FIRST: the
     # per-bit vote aggregates below each reference it, and an unbound
     # split+transform expression would be re-evaluated once per aggregate
     # (bits x the tokenization cost per row).
     df = _with_words(df, text_col).withColumn(
-        "_th", F.transform(F.col("_words"), lambda t: token_hash(t))
+        "_th", F.transform(F.col("_words"), lambda t: portable_hash60(t))
     )
     hashes = F.col("_th")
     # Per bit i: vote = sum over token hashes of +1/-1 depending on bit i.
     # shiftright needs a literal bit count, so bits are unrolled in Python —
-    # 64 aggregates over the same (reused) hash array, still one pass per row.
+    # 60 aggregates over the same (reused) hash array, still one pass per row.
     def bit_vote_merger(i: int):
         # factory keeps the lambda strictly 2-argument (PySpark inspects arity)
         return lambda acc, h: acc + F.when(
@@ -443,10 +466,10 @@ def simhash(
         ).otherwise(F.lit(-1))
 
     fingerprint = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(_SIMHASH_BITS):
         vote = F.aggregate(hashes, F.lit(0).cast("long"), bit_vote_merger(i))
         fingerprint = fingerprint.bitwiseOR(
-            F.when(vote > 0, F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")).otherwise(
+            F.when(vote > 0, F.lit(1 << i).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
         )
@@ -457,15 +480,13 @@ def simhash_near_duplicates(
     fingerprints: DataFrame,
     max_hamming: int = 3,
     bands: int = 4,
-    bits: int = 60,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance <= max_hamming.
 
-    Pigeonhole LSH: split the ``bits``-bit fingerprint into ``bands``
-    slices; any pair within distance < bands must agree exactly on >=1
-    slice, so the candidate join is an equi-join on (slice index, slice
-    value).  ``bits`` must match the fingerprint width (60 for portable
-    SimHash, 64 for xxhash64).
+    Pigeonhole LSH: split the 60-bit ``simhash`` fingerprint into
+    ``bands`` slices; any pair within distance < bands must agree
+    exactly on >=1 slice, so the candidate join is an equi-join on
+    (slice index, slice value).
 
     The fingerprint table is materialized (``materialize``) before
     the self-join: Spark plans no ReusedExchange across the two sides
@@ -475,7 +496,7 @@ def simhash_near_duplicates(
     any scale; set spark.graft.materialize.mode='reliable' on a cluster
     where executor loss must be survivable.
     """
-    width = bits // bands
+    width = _SIMHASH_BITS // bands
     fingerprints = materialize(fingerprints)
     slices = F.array(
         *[
@@ -731,68 +752,49 @@ def ngram_cluster_assignments(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
 ) -> DataFrame:
     """Per-doc (id, component_id) from the n-gram-Jaccard closure, with
-    the EXACT-DUP COLLAPSE in front of the pair join (the setsim/LSH
-    duplicate-density guard, applied to closure consumers).
+    the exact-duplicate collapse (``_collapse_duplicates`` keyed on
+    ``md5(text)``) in front of the pair join.
 
     Pair-producing operators are stuck with member-level output —
     q verbatim copies genuinely form q(q-1)/2 qualifying pairs — but a
     closure consumer's output is ONE row per doc, so nothing forces the
-    quadratic intermediate: byte-identical texts collapse to their
-    min-id representative, ``ngram_jaccard_pairs`` + connected
-    components run on representatives, and members inherit their rep's
-    component.
+    quadratic intermediate: identical texts collapse to their min-id
+    representative, ``ngram_jaccard_pairs`` + ``assign_components`` run
+    on representatives, and members inherit their rep's component.
 
-    Equivalence contract (qualified — ADVICE r10): the PAIR PREDICATE is
-    bit-identical — jaccard is a pure function of the two texts, so
-    identical texts always share all shingles (jaccard = 1), the member
-    pair graph is exactly the expanded rep graph plus intra-group
-    cliques, and each exact group's min member IS its rep — same
-    component ids (cluster-min doc id), same downstream canonical picks.
-    The ``max_df`` shingle cap, however, binds at a DIFFERENT grain:
-    the member-level form counts document frequency per COPY (a text
-    duplicated more than ``max_df`` times has every shingle dropped and
-    its copies degrade to singletons), while this form counts df per
-    DISTINCT text — so under a binding cap the two plans can differ, and
-    it is THIS form that tracks the uncapped closure (the semantic
-    ground truth) more closely.  NULL texts bypass the collapse: they
-    shingle to nothing, so the member-level closure leaves each one a
-    singleton, and grouping them would wrongly merge them.
+    Equivalence: the PAIR PREDICATE is bit-identical — jaccard is a pure
+    function of the two texts, so identical texts always share all
+    shingles (jaccard = 1), the member pair graph is exactly the
+    expanded rep graph plus intra-group cliques, and each group's min
+    member IS its rep — same component ids (cluster-min doc id), same
+    downstream canonical picks.  ``ngram_jaccard_pairs``' stop-shingle
+    cap (``max_df=1000``), however, counts document frequency per
+    DISTINCT text here rather than per copy (a text duplicated more than
+    1000 times would have every shingle dropped at the member grain and
+    its copies degrade to singletons), so under a binding cap this form
+    tracks the uncapped closure more closely.  NULL texts bypass the
+    collapse: they shingle to nothing, so each one stays a singleton.
 
-    Measured (r10 second-decade sweep, 10 verbatim copies/text at sf1,
-    100 at sf10): the un-collapsed closure took 240s at sf1 and timed
-    out at sf10; this form runs 4.3s/4.5s — pair work tracks DISTINCT
-    texts, which replication does not grow."""
-    nn = docs.filter(F.col(text_col).isNotNull())
-    # Fixed-width shuffle key for the rep-tagging pass: partitioning the
-    # window on the raw text would ship every multi-KB document through
-    # the exchange twice (key + payload) and sort on it; md5 keeps the
-    # exchange 16 bytes/row wide with the same grouping semantics the
-    # module's exact_dedup already stakes on md5 equality.
-    grp = Window.partitionBy(F.md5(F.col(text_col)))
-    tagged = materialize(
-        nn.select(
-            F.col(id_col),
-            F.col(text_col),
-            F.min(id_col).over(grp).alias("_rep"),
-        )
-    )
-    reps = tagged.filter(F.col(id_col) == F.col("_rep")).select(id_col, text_col)
-    pairs = ngram_jaccard_pairs(reps, id_col, text_col, k=k, threshold=threshold, max_df=max_df)
+    Measured (second-decade sweep, 10 verbatim copies/text at sf1, 100
+    at sf10): the un-collapsed closure took 240s at sf1 and timed out at
+    sf10; this form runs 4.3s/4.5s — pair work tracks DISTINCT texts,
+    which replication does not grow."""
+    nn = docs.filter(F.col(text_col).isNotNull()).select(id_col, text_col)
+    reps, members = _collapse_duplicates(nn, id_col, F.md5(F.col(text_col)))
+    pairs = ngram_jaccard_pairs(reps, id_col, text_col, k=k, threshold=threshold)
     rep_comp = assign_components(reps, pairs, id_col).select(
-        F.col(id_col).alias("_rep"), "component_id"
-    )
-    members = (
-        tagged.select(F.col(id_col), "_rep")
-        .join(rep_comp, "_rep")
-        .select(F.col(id_col), "component_id")
+        F.col(id_col).alias("rep"), "component_id"
     )
     nulls = docs.filter(F.col(text_col).isNull()).select(
         F.col(id_col), F.col(id_col).alias("component_id")
     )
-    return members.unionByName(nulls)
+    return (
+        members.join(rep_comp, "rep")
+        .select(F.col("mid").alias(id_col), "component_id")
+        .unionByName(nulls)
+    )
 
 
 def assign_components(

@@ -1,7 +1,7 @@
-"""Set-similarity joins beyond LSH: lossless prefix filtering and
-asymmetric containment.
+"""Set-similarity joins beyond LSH: lossless prefix filtering,
+asymmetric containment and idf-weighted cosine.
 
-Two exact set-similarity operators that complement the probabilistic
+Three exact set-similarity operators that complement the probabilistic
 families in ``operators.dedup`` (MinHash/SimHash bucket *candidates*,
 these produce *exact* answers with a provably lossless candidate
 filter):
@@ -15,29 +15,29 @@ filter):
 - ``containment_pairs``: directed containment |A∩B|/|A| >= t over
   word k-shingles — the asymmetric near-dup relation Jaccard cannot
   see (a short document quoted whole inside a long one has tiny
-  Jaccard but containment ~1).  The inverted-index shape of
-  ``dedup.ngram_jaccard_pairs``, with per-direction thresholds.
-  Exact ONLY with ``max_df=None`` — the DEFAULT since round 7 (it was
-  ``max_df=1000``; flipped so the zero-arg call matches the exact
-  family contract and the registered oracle).  Callers that relied on
-  the old cap for runtime on boilerplate-heavy corpora must now opt in
-  with an explicit ``max_df``: a finite cap drops hot shingles from
-  the intersection count, which can undercount or miss true pairs —
-  an operational speed/recall trade, not a lossless filter.  (No
-  in-repo pipeline depended on the old default; the one call site,
-  ``catalog_ext2.q_d_containment``, passes ``max_df`` explicitly.)
+  Jaccard but containment ~1).  The uncapped inverted-index
+  intersections of ``dedup.ngram_jaccard_pairs``, with per-direction
+  thresholds — exact, like the prefix filter.
+- ``tfidf_cosine_pairs``: idf-weighted cosine over distinct word sets,
+  with a lossless suffix-norm prefix filter.
+
+All three read the one hashed shingle stream
+(``dedup._shingle_stream``) and collapse verbatim-duplicate texts
+first (``dedup._collapse_duplicates``), so pair work tracks distinct
+texts.
 
 Thresholds are integer rationals (``threshold_num/threshold_den``),
 never floats: ceil(t*n) on a float threshold hits the 0.6*5 == 3.0000…4
 ulp trap, and the final keep decision compares cross-multiplied
-integers, so both operators are bit-deterministic on any engine.
+integers, so every operator is bit-deterministic on any engine.
 
 Scale notes (100 TB): no stage is ever all-pairs.  Prefix postings are
 the RAREST ``|s| - ceil(t|s|) + 1`` tokens per set, so hot tokens only
 enter a posting list for documents where nothing rarer exists; the
 length-ratio prune (t|b| <= |a| <= |b|/t) drops cross-size candidates
-before the pair ever forms.  Containment reuses the capped inverted
-index (``max_df`` stop-shingle cap) from ``ngram_jaccard_pairs``.
+before the pair ever forms.  Containment's candidates are every pair
+sharing a shingle — exact, so a shingle common to m documents costs
+O(m^2) pairs.
 """
 
 from __future__ import annotations
@@ -45,55 +45,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import materialize, normalize_for_shingling, shingles
-
-
-def _collapse_exact(df: DataFrame, id_col: str, text_col: str):
-    """Group byte-identical texts; returns (reps, members) where ``reps``
-    is one row per distinct text (the min-id representative, with its
-    group size ``_gn``) and ``members`` maps rep -> every member id.
-
-    The duplicate-density guard shared with the LSH/fuzzy-join family
-    (sf1 lesson): a corpus where every document has r verbatim copies
-    makes every posting list r× longer and the pair join r²× bigger,
-    while the DISTINCT-text pair set is unchanged — so compute pairs
-    once per distinct text and expand afterward.  Bit-identical by
-    construction: shingle/element sets are pure functions of the text,
-    so every expanded pair carries exactly the values the un-collapsed
-    pipeline would have computed.  (The expansion itself is output-bound:
-    q identical docs genuinely form q(q-1)/2 qualifying pairs — exact
-    dedup upstream is the fix when that output is unwanted.)"""
-    grp = Window.partitionBy(text_col)
-    tagged = materialize(
-        df.select(
-            F.col(id_col).alias("_mid"),
-            F.col(text_col).alias(text_col),
-            F.min(id_col).over(grp).alias("_rep"),
-            F.count(F.lit(1)).over(grp).alias("_gn"),
-        )
-    )
-    members = tagged.select(F.col("_rep").alias("rep"), F.col("_mid").alias("mid"))
-    reps = (
-        tagged.filter(F.col("_mid") == F.col("_rep"))
-        .select(F.col("_mid").alias(id_col), text_col, "_gn")
-    )
-    return reps, members
-
-
-def _element_stream(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(doc, elem) stream: the document's distinct word ``k``-shingles
-    as 64-bit hashes (``k=1`` = unigram tokens).  Hashing is the
-    catalog's shingle-identity convention (collision ~2^-64) and keeps
-    the ordered arrays and verify intersections long-typed."""
-    words = df.withColumn("_words", F.split(normalize_for_shingling(F.col(text_col)), " "))
-    elems = (
-        F.array_distinct(F.col("_words"))
-        if k == 1
-        else shingles(F.col("_words"), k)
-    )
-    return words.select(
-        F.col(id_col).alias("doc"), F.explode(elems).alias("_e")
-    ).select("doc", F.xxhash64("_e").alias("elem"))
+from .dedup import (
+    _collapse_duplicates,
+    _shingle_intersections,
+    _shingle_stream,
+    materialize,
+)
 
 
 def prefix_filter_jaccard_pairs(
@@ -125,26 +82,29 @@ def prefix_filter_jaccard_pairs(
     barrier, same rationale as ``ngram_jaccard_pairs``).
 
     ``collapse_exact`` (default on) computes pairs once per DISTINCT
-    text and expands to member ids afterward — see ``_collapse_exact``.
+    text and expands to member ids afterward — see
+    ``dedup._collapse_duplicates``.
 
     Returns (id_a, id_b, inter, union_sz, jaccard) with id_a < id_b.
     """
     p, q = threshold_num, threshold_den
     members = None
     if collapse_exact:
-        df, members = _collapse_exact(df, id_col, text_col)
-    toks = materialize(_element_stream(df, id_col, text_col, k))
-    dfreq = toks.groupBy("elem").agg(F.count(F.lit(1)).alias("df"))
-    # per-doc element array sorted rarest-first under the global total
-    # order (df, elem) — ties on df are broken by the element hash, so
+        df, members = _collapse_duplicates(
+            df.select(id_col, text_col), id_col, F.md5(F.col(text_col))
+        )
+    toks = materialize(_shingle_stream(df, id_col, text_col, k))
+    dfreq = toks.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
+    # per-doc shingle array sorted rarest-first under the global total
+    # order (df, sh) — ties on df are broken by the shingle hash, so
     # every document sorts by the SAME global order (prefix-filter
-    # precondition); (df, elem) is unique per doc (elements are
+    # precondition); (df, sh) is unique per doc (shingles are
     # distinct), so sort_array makes the collect_list order immaterial.
     per_doc = (
-        toks.join(dfreq, "elem")
+        toks.join(dfreq, "sh")
         .groupBy("doc")
         .agg(
-            F.sort_array(F.collect_list(F.struct("df", "elem"))).alias("_ord"),
+            F.sort_array(F.collect_list(F.struct("df", "sh"))).alias("_ord"),
             F.count(F.lit(1)).alias("sz"),
         )
         .withColumn(
@@ -156,9 +116,9 @@ def prefix_filter_jaccard_pairs(
         per_doc.select(
             "doc",
             "sz",
-            F.transform("_ord", lambda s: s["elem"]).alias("toks"),
+            F.transform("_ord", lambda s: s["sh"]).alias("toks"),
             F.transform(
-                F.slice("_ord", F.lit(1), F.col("_plen")), lambda s: s["elem"]
+                F.slice("_ord", F.lit(1), F.col("_plen")), lambda s: s["sh"]
             ).alias("prefix"),
         )
     )
@@ -209,24 +169,23 @@ def prefix_filter_jaccard_pairs(
     if members is None:
         return out
     # identical texts always qualify (J = 1): one SELF-pair per
-    # multi-member group, valued from the group's own element-set size,
+    # multi-member group, valued from the group's own shingle-set size,
     # so the expansion emits exactly what the un-collapsed pipeline would
-    if collapse_exact:
-        self_pairs = (
-            df.filter(F.col("_gn") >= 2)
-            .select(F.col(id_col).alias("doc"))
-            .join(per_doc.select("doc", "sz"), "doc")
-            .select(
-                F.col("doc").alias("id_a"),
-                F.col("doc").alias("id_b"),
-                F.col("sz").cast("long").alias("inter"),
-                F.col("sz").cast("long").alias("union_sz"),
-                F.lit(1.0).alias("jaccard"),
-            )
+    self_pairs = (
+        df.filter(F.col("_gn") >= 2)
+        .select(F.col(id_col).alias("doc"))
+        .join(per_doc.select("doc", "sz"), "doc")
+        .select(
+            F.col("doc").alias("id_a"),
+            F.col("doc").alias("id_b"),
+            F.col("sz").cast("long").alias("inter"),
+            F.col("sz").cast("long").alias("union_sz"),
+            F.lit(1.0).alias("jaccard"),
         )
-        out = out.unionByName(self_pairs)
+    )
     return (
-        out.join(members.select(F.col("rep").alias("id_a"), F.col("mid").alias("xa")), "id_a")
+        out.unionByName(self_pairs)
+        .join(members.select(F.col("rep").alias("id_a"), F.col("mid").alias("xa")), "id_a")
         .join(members.select(F.col("rep").alias("id_b"), F.col("mid").alias("xb")), "id_b")
         .filter(F.col("xa") != F.col("xb"))
         .select(
@@ -247,7 +206,6 @@ def containment_pairs(
     k: int = 3,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    max_df: int | None = None,
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Directed containment C(src→dst) = |src∩dst|/|src| >= num/den over
@@ -255,54 +213,26 @@ def containment_pairs(
     others, which symmetric Jaccard structurally misses: a 50-shingle
     quote inside a 5000-shingle page has J ≈ 0.01 but C = 1.0.
 
-    Same inverted-index candidate plan as ``ngram_jaccard_pairs``
-    (shared-shingle equi-join, ``max_df`` stop-shingle cap, postings of
-    size 1 dropped), but each undirected intersection row fans out into
-    up to two DIRECTED rows, each thresholded against its own source
-    size with cross-multiplied integers.
-
-    EXACTNESS: the default ``max_df=None`` is lossless — the output
-    equals the brute-force all-pairs answer, matching the "exact"
-    family contract (and the registered query).  Passing a finite cap
-    is an explicit OPT-IN operational guard for boilerplate-heavy
-    corpora: it excludes any shingle whose document frequency exceeds
-    the cap from the intersection count, so pairs held together by hot
-    shingles can be undercounted or dropped.
+    Same inverted-index intersections as ``ngram_jaccard_pairs``
+    (``dedup._shingle_intersections``, uncapped — so the output equals
+    the brute-force all-pairs answer), but each undirected intersection
+    row fans out into up to two DIRECTED rows, each thresholded against
+    its own source size with cross-multiplied integers.
 
     ``collapse_exact`` (default on): pairs once per distinct text,
-    member expansion afterward (``_collapse_exact``) — measured 254s →
-    ~20s Spark-side at sf1 on the 10×-replicated stress corpus.
+    member expansion afterward (``dedup._collapse_duplicates``) —
+    measured 254s → ~20s Spark-side at sf1 on the 10×-replicated stress
+    corpus.
 
     Returns (src_id, dst_id, inter, sz_src, containment).
     """
     p, q = threshold_num, threshold_den
     members = None
     if collapse_exact:
-        df, members = _collapse_exact(df, id_col, text_col)
-    sh = materialize(
-        df.withColumn("_words", F.split(normalize_for_shingling(F.col(text_col)), " "))
-        .select(
-            F.col(id_col).alias("doc"),
-            F.explode(shingles(F.col("_words"), k)).alias("sh"),
+        df, members = _collapse_duplicates(
+            df.select(id_col, text_col), id_col, F.md5(F.col(text_col))
         )
-        .select("doc", F.xxhash64("sh").alias("sh"))
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    if max_df is None:
-        eligible = sh
-    else:
-        freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-        eligible = sh.join(
-            freq.filter((F.col("df") > 1) & (F.col("df") <= max_df)).select("sh"), "sh"
-        )
-    postings = eligible.groupBy("sh").agg(F.collect_list("doc").alias("docs"))
-    inter = (
-        postings.select(F.explode("docs").alias("id_a"), "docs")
-        .select("id_a", F.explode("docs").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter, sizes = _shingle_intersections(df, id_col, text_col, k, max_df=None)
     both = inter.join(
         sizes.select(F.col("doc").alias("id_a"), F.col("sz").alias("sz_a")), "id_a"
     ).join(sizes.select(F.col("doc").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
@@ -370,7 +300,6 @@ def tfidf_cosine_pairs(
     text_col: str,
     threshold_num: int = 3,
     threshold_den: int = 5,
-    collapse_exact: bool = True,
     expand_members: bool = True,
 ) -> DataFrame:
     """EXACT all-pairs idf-weighted cosine >= num/den over distinct word
@@ -401,13 +330,12 @@ def tfidf_cosine_pairs(
     cos <= sqrt(min/max) for same-weight intersections) drops cross-size
     candidates before the pair forms.
 
-    ``collapse_exact`` (default on): the duplicate-density guard shared
-    with the whole set-similarity family — pairs computed once per
-    DISTINCT text, df/N counted over RAW member documents (so weights
-    equal the un-collapsed pipeline's exactly), members expanded after.
+    Verbatim-duplicate texts collapse first
+    (``dedup._collapse_duplicates``): pairs computed once per DISTINCT
+    text, df/N counted over RAW member documents (so weights equal an
+    un-collapsed pipeline's exactly), members expanded after.
 
-    ``expand_members`` (default on, requires ``collapse_exact``): with it
-    OFF the result stays at the distinct-text grain — one row per
+    ``expand_members`` (default on): with it OFF the result stays at the distinct-text grain — one row per
     qualifying pair of text GROUPS (min-id representatives, plus a
     rep-with-itself row for every multi-member group, cosine exactly 1)
     with member multiplicities ``(n_a, n_b, n_pairs)``.  This is the
@@ -424,44 +352,40 @@ def tfidf_cosine_pairs(
     ``expand_members``; with it off, (id_a, id_b, dot, na2, nb2, cosine,
     n_a, n_b, n_pairs) with id_a <= id_b.
     """
-    if not expand_members and not collapse_exact:
-        raise ValueError("expand_members=False requires collapse_exact=True")
     p, q = threshold_num, threshold_den
-    members = None
-    if collapse_exact:
-        df, members = _collapse_exact(df, id_col, text_col)
-    else:
-        df = df.select(F.col(id_col), F.col(text_col), F.lit(1).alias("_gn"))
-    toks = materialize(_element_stream(df, id_col, text_col, k=1))
+    df, members = _collapse_duplicates(
+        df.select(id_col, text_col), id_col, F.md5(F.col(text_col))
+    )
+    toks = materialize(_shingle_stream(df, id_col, text_col, k=1))
     # df(t) over RAW documents: each rep's tokens count once per member
     gn = df.select(F.col(id_col).alias("doc"), F.col("_gn"))
     dfreq = (
-        toks.join(gn, "doc").groupBy("elem").agg(F.sum("_gn").cast("long").alias("df"))
+        toks.join(gn, "doc").groupBy("sh").agg(F.sum("_gn").cast("long").alias("df"))
     )
     nd = df.agg(F.sum("_gn").cast("long").alias("nd"))  # raw corpus size, 1 row
     wt = dfreq.crossJoin(F.broadcast(nd)).select(
-        "elem", F.expr("nd div df").alias("w"), "df"
+        "sh", F.expr("nd div df").alias("w"), "df"
     )
     tw = materialize(
-        toks.join(wt, "elem").select("doc", "elem", "df", (F.col("w") * F.col("w")).alias("w2"))
+        toks.join(wt, "sh").select("doc", "sh", "df", (F.col("w") * F.col("w")).alias("w2"))
     )
     norms = materialize(tw.groupBy("doc").agg(F.sum("w2").cast("long").alias("n2")))
-    # global token order (df asc, elem): w2 is non-increasing along it,
+    # global token order (df asc, sh): w2 is non-increasing along it,
     # and the order is total per doc (elements are distinct), so the
     # emit set below is a true prefix
-    wdoc = Window.partitionBy("doc").orderBy("df", "elem")
+    wdoc = Window.partitionBy("doc").orderBy("df", "sh")
     cum = F.sum("w2").over(wdoc.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     pref = (
         tw.join(norms, "doc")
         .withColumn("_suffix2", F.col("n2") - cum + F.col("w2"))
         .filter(F.lit(q * q) * F.col("_suffix2") >= F.lit(p * p) * F.col("n2"))
-        .select("doc", "elem", "n2")
+        .select("doc", "sh", "n2")
     )
     a, b = pref.alias("a"), pref.alias("b")
     cand = (
         a.join(
             b,
-            (F.col("a.elem") == F.col("b.elem"))
+            (F.col("a.sh") == F.col("b.sh"))
             & (F.col("a.doc") < F.col("b.doc"))
             # norm-ratio prune: cos <= sqrt(min(n2)/max(n2))
             & (
@@ -473,8 +397,8 @@ def tfidf_cosine_pairs(
         .distinct()
     )
     inter = (
-        cand.join(tw.select(F.col("doc").alias("id_a"), "elem", "w2"), "id_a")
-        .join(tw.select(F.col("doc").alias("id_b"), "elem"), ["id_b", "elem"])
+        cand.join(tw.select(F.col("doc").alias("id_a"), "sh", "w2"), "id_a")
+        .join(tw.select(F.col("doc").alias("id_b"), "sh"), ["id_b", "sh"])
         .groupBy("id_a", "id_b")
         .agg(F.sum("w2").cast("long").alias("dot"))
     )
@@ -498,8 +422,6 @@ def tfidf_cosine_pairs(
             ).alias("cosine"),
         )
     )
-    if members is None:
-        return out
     # identical texts: cos = 1 >= t always — one SELF-pair per
     # multi-member group, valued with the group's own norm so the
     # expansion emits exactly what the un-collapsed pipeline would

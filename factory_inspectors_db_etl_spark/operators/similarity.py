@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _collapse_duplicates
 from .materialize import materialize
 
 
@@ -165,16 +166,12 @@ def _resolve_centroids(
     raise ValueError(f"unknown centroids mode {centroids!r}: first_n | kmeans")
 
 
-def _assign_cells(
-    df: DataFrame, cents: DataFrame, out_id: str, vec_out: str, top: int,
-    keep_rank: bool = False,
-) -> DataFrame:
-    """Assign each vector to its ``top`` nearest centroid cells: broadcast
-    nested-loop against the tiny centroid set, then a top-N window keyed
-    on the vector id.  Shared by ``ivf_topk`` (corpus top-1 / query
-    n_probe) and ``semantic_dedup`` (cluster assignment; multi-probe
-    keeps ``_crank`` so rank 1 stays the canonical cluster)."""
-    scored = df.crossJoin(F.broadcast(cents)).select(
+def _rank_cells(cand: DataFrame, out_id: str, vec_out: str, top: int) -> DataFrame:
+    """Keep each vector's ``top`` best centroid cells out of its
+    (vector, centroid) candidate rows: the rounded cosine to ``_cent``,
+    ranked per vector id as ``_crank`` 1..top (ties on the lower
+    centroid id).  Returns (out_id, vec_out, centroid_id, _crank)."""
+    scored = cand.select(
         F.col(out_id),
         F.col(vec_out),
         "centroid_id",
@@ -183,11 +180,23 @@ def _assign_cells(
     w = Window.partitionBy(out_id).orderBy(
         F.col("_cscore").desc(), F.col("centroid_id").asc()
     )
-    out = (
+    return (
         scored.withColumn("_crank", F.row_number().over(w))
         .filter(F.col("_crank") <= top)
         .drop("_cscore")
     )
+
+
+def _assign_cells(
+    df: DataFrame, cents: DataFrame, out_id: str, vec_out: str, top: int,
+    keep_rank: bool = False,
+) -> DataFrame:
+    """Assign each vector to its ``top`` nearest centroid cells: broadcast
+    nested-loop against the tiny centroid set, then ``_rank_cells``.
+    Shared by ``ivf_topk`` (corpus top-1 / query n_probe) and
+    ``semantic_dedup`` (cluster assignment; multi-probe keeps ``_crank``
+    so rank 1 stays the canonical cluster)."""
+    out = _rank_cells(df.crossJoin(F.broadcast(cents)), out_id, vec_out, top)
     return out if keep_rank else out.drop("_crank")
 
 
@@ -221,7 +230,6 @@ def _assign_cells_lsh(
     top: int,
     dim: int,
     n_centroids: int,
-    keep_rank: bool = False,
 ) -> DataFrame:
     """LSH-pruned centroid assignment — the linear-time replacement for
     ``_assign_cells``'s broadcast nested loop when the centroid count
@@ -234,9 +242,10 @@ def _assign_cells_lsh(
     one of its 1+bits probed LSH codes (its own sign-bucket plus every
     single-bit flip — standard multi-probe): candidates per vector stay
     ~(1+bits)·k/2^bits ≈ (1+bits)·8, so total work is O(n·log k) — truly
-    linear up to the log factor.  Vectors whose probes hit no centroid
-    (rare by construction) fall back to the exact nested loop, so every
-    vector is always assigned.
+    linear up to the log factor.  Candidates are ranked by the same
+    ``_rank_cells`` as the exact path; vectors whose probes hit no
+    centroid (rare by construction) fall back to ``_assign_cells``'s
+    exact nested loop, so every vector is always assigned.
 
     Approximation contract: the assigned cell is the nearest centroid
     among PROBED buckets, which can differ from the global argmax when
@@ -247,20 +256,12 @@ def _assign_cells_lsh(
 
     The hash pass uses the columnar ``lsh_bucket_expr`` (interpreted HOF
     dots — fine for <= 16 planes); at extreme scale swap in
-    ``band_buckets_udf``'s Arrow/BLAS matmul, same bit semantics."""
+    ``band_buckets_udf``'s Arrow/BLAS matmul, same bit semantics.
+
+    Returns ``_rank_cells``' columns, ``_crank`` included (its one
+    caller, ``semantic_dedup``, reads rank 1 as the cluster)."""
     bits = assign_lsh_bits(n_centroids)
     planes = random_hyperplanes(dim, _ASSIGN_LSH_MAX_BITS, _ASSIGN_LSH_SEED)[:bits]
-
-    def _rank(scored: DataFrame) -> DataFrame:
-        w = Window.partitionBy(out_id).orderBy(
-            F.col("_cscore").desc(), F.col("centroid_id").asc()
-        )
-        return (
-            scored.withColumn("_crank", F.row_number().over(w))
-            .filter(F.col("_crank") <= top)
-            .drop("_cscore")
-        )
-
     v = df.withColumn("_bkt", lsh_bucket_expr(F.col(vec_out), planes))
     c = cents.withColumn("_cbkt", lsh_bucket_expr(F.col("_cent"), planes))
     probes = v.select(
@@ -276,23 +277,14 @@ def _assign_cells_lsh(
     cand = probes.join(
         F.broadcast(c.select("centroid_id", "_cent", "_cbkt")),
         probes["_code"] == F.col("_cbkt"),
-    ).select(out_id, vec_out, "centroid_id", "_cent")
+    )
     # Rank BEFORE the fallback check, then materialize the small ranked
     # result (n x top rows): both downstream consumers (the anti-join
     # and the final union) read the barrier, so the probe hash+join DAG
     # executes exactly once per action — without it the whole candidate
     # pipeline ran twice (round-8 review finding), doubling the constant
     # factor of the path that exists to be the cheap one.
-    ranked_cand = materialize(
-        _rank(
-            cand.select(
-                F.col(out_id),
-                F.col(vec_out),
-                "centroid_id",
-                F.round(cosine(F.col(vec_out), F.col("_cent")), 6).alias("_cscore"),
-            )
-        )
-    )
+    ranked_cand = materialize(_rank_cells(cand, out_id, vec_out, top))
     # rare fallback: vectors none of whose probe codes hold a centroid
     # are scored exactly against the full set (always-assigned contract);
     # their ids are disjoint from ranked_cand's by construction, so the
@@ -300,16 +292,9 @@ def _assign_cells_lsh(
     unmatched = v.join(
         ranked_cand.select(out_id).distinct(), out_id, "left_anti"
     ).select(out_id, vec_out)
-    ranked_fallback = _rank(
-        unmatched.crossJoin(F.broadcast(cents.select("centroid_id", "_cent"))).select(
-            F.col(out_id),
-            F.col(vec_out),
-            "centroid_id",
-            F.round(cosine(F.col(vec_out), F.col("_cent")), 6).alias("_cscore"),
-        )
+    return ranked_cand.unionAll(
+        _assign_cells(unmatched, cents, out_id, vec_out, top, keep_rank=True)
     )
-    out = ranked_cand.unionAll(ranked_fallback)
-    return out if keep_rank else out.drop("_crank")
 
 
 def ivf_topk(
@@ -656,7 +641,6 @@ def semantic_dedup(
             top=n_probe,
             dim=dim,
             n_centroids=n_clusters,
-            keep_rank=True,
         )
     elif assign == "exact":
         assigned = _assign_cells(
@@ -937,20 +921,9 @@ def embedding_neardup_pairs_lsh(
     hasher = band_buckets_udf(planes, bands, bits_per_band)
     members = None
     if collapse_exact:
-        # group byte-identical vectors; rep = min id.  One shuffle keyed
-        # on the vector itself (~4*dim bytes/row — comparable to the scan),
-        # barriered because both the rep set and the expansion read it.
-        grp = Window.partitionBy("vec")
-        tagged = materialize(
-            v.select(
-                "id",
-                "vec",
-                F.min("id").over(grp).alias("rep"),
-                F.count(F.lit(1)).over(grp).alias("grp_n"),
-            )
-        )
-        members = tagged.select("rep", "id")
-        v = tagged.filter(F.col("id") == F.col("rep")).select("id", "vec", "grp_n")
+        # keyed on the vector itself (~4*dim bytes/row — comparable to
+        # the scan)
+        v, members = _collapse_duplicates(v, "id", F.col("vec"))
     # materialize the buckets before the self-join: no ReusedExchange is
     # planned across the two sides, so without the barrier the Arrow/BLAS
     # hashing UDF executes once PER SIDE.  (id, band, bucket) is ~20 B
@@ -976,7 +949,7 @@ def embedding_neardup_pairs_lsh(
         # within-group pairs with exactly the value the un-collapsed
         # pipeline would have computed.
         self_pairs = (
-            v.filter(F.col("grp_n") >= 2)
+            v.filter(F.col("_gn") >= 2)
             .select(F.col("id").alias("id_a"), F.col("id").alias("id_b"))
         )
         candidates = candidates.unionByName(self_pairs)
@@ -1010,11 +983,11 @@ def embedding_neardup_pairs_lsh(
     # expansion double-emits (xa,xb)/(xb,xa), which the dedup removes.
     return (
         scored.join(
-            members.select(F.col("rep").alias("id_a"), F.col("id").alias("xa")),
+            members.select(F.col("rep").alias("id_a"), F.col("mid").alias("xa")),
             "id_a",
         )
         .join(
-            members.select(F.col("rep").alias("id_b"), F.col("id").alias("xb")),
+            members.select(F.col("rep").alias("id_b"), F.col("mid").alias("xb")),
             "id_b",
         )
         .filter(F.col("xa") != F.col("xb"))

@@ -2549,9 +2549,7 @@ def q_d_simhash_neardup(spark: SparkSession, sf: str) -> DataFrame:
     d = load_table(spark, sf, "documents")
     from ..operators.dedup import simhash_near_duplicates
 
-    return simhash_near_duplicates(
-        simhash(d, "doc_id", "text"), max_hamming=3, bands=4, bits=60
-    )
+    return simhash_near_duplicates(simhash(d, "doc_id", "text"), max_hamming=3, bands=4)
 
 
 def _gen_simhash_neardup_oracle(bits: int = 60, bands: int = 4, max_hamming: int = 3) -> str:

@@ -79,17 +79,11 @@ def q_d_containment(spark: SparkSession, sf: str) -> DataFrame:
     """Directed shingle containment |src∩dst|/|src| >= 4/5: finds
     documents quoted/embedded inside larger ones, where symmetric
     Jaccard stays near zero.  Inverted-index candidates (shared-shingle
-    equi-join, stop-shingle cap) — one undirected intersection count
-    fans out into per-direction integer threshold checks."""
+    equi-join over every shingle — no stop-shingle cap, as in
+    O_D_CONTAINMENT) — one undirected intersection count fans out into
+    per-direction integer threshold checks."""
     d = load_table(spark, sf, "documents")
-    # max_df=None: the uncapped (exact) mode, matching O_D_CONTAINMENT,
-    # which has no stop-shingle cap.  The capped default (max_df=1000)
-    # undercounts intersections once a shingle's document frequency
-    # exceeds the cap — fine as an operational guard on boilerplate-heavy
-    # corpora, but an oracle divergence here.
-    return containment_pairs(
-        d, "doc_id", "text", k=3, threshold_num=4, threshold_den=5, max_df=None
-    )
+    return containment_pairs(d, "doc_id", "text", k=3, threshold_num=4, threshold_den=5)
 
 
 O_D_CONTAINMENT = """

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from factory_inspectors_db_etl_spark.operators.setsim import _element_stream
+from factory_inspectors_db_etl_spark.operators.dedup import _shingle_stream
 
 
 def bruteforce_jaccard_pairs(
@@ -23,11 +23,11 @@ def bruteforce_jaccard_pairs(
 ) -> DataFrame:
     """Reference twin of ``prefix_filter_jaccard_pairs``."""
     p, q = threshold_num, threshold_den
-    toks = _element_stream(df, id_col, text_col, k)
+    toks = _shingle_stream(df, id_col, text_col, k)
     sizes = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     a, b = toks.alias("a"), toks.alias("b")
     inter = (
-        a.join(b, (F.col("a.elem") == F.col("b.elem")) & (F.col("a.doc") < F.col("b.doc")))
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
         .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
@@ -56,17 +56,17 @@ def bruteforce_tfidf_cosine_pairs(
 ) -> DataFrame:
     """Reference twin of ``tfidf_cosine_pairs``."""
     p, q = threshold_num, threshold_den
-    toks = _element_stream(df, id_col, text_col, k=1)
-    dfreq = toks.groupBy("elem").agg(F.count(F.lit(1)).cast("long").alias("df"))
+    toks = _shingle_stream(df, id_col, text_col, k=1)
+    dfreq = toks.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("df"))
     nd = df.agg(F.count(F.lit(1)).cast("long").alias("nd"))
     tw = (
-        toks.join(dfreq.crossJoin(F.broadcast(nd)), "elem")
-        .select("doc", "elem", (F.expr("nd div df") * F.expr("nd div df")).alias("w2"))
+        toks.join(dfreq.crossJoin(F.broadcast(nd)), "sh")
+        .select("doc", "sh", (F.expr("nd div df") * F.expr("nd div df")).alias("w2"))
     )
     norms = tw.groupBy("doc").agg(F.sum("w2").cast("long").alias("n2"))
     a, b = tw.alias("a"), tw.alias("b")
     inter = (
-        a.join(b, (F.col("a.elem") == F.col("b.elem")) & (F.col("a.doc") < F.col("b.doc")))
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
         .groupBy(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
         .agg(F.sum("a.w2").cast("long").alias("dot"))
     )

@@ -121,6 +121,38 @@ def _pairs_j(df):
     return {(r["id_a"], r["id_b"]): round(r["jaccard"], 9) for r in df.collect()}
 
 
+def test_duplicate_collapse_keeps_nulls_apart_and_copies_together(spark):
+    """The shared exact-duplicate collapse, through a closure consumer
+    and a pair operator: NULL texts never group or pair, verbatim copies
+    land on their min id, and the near-dup joins them."""
+    from factory_inspectors_db_etl_spark.operators.dedup import ngram_cluster_assignments
+    from factory_inspectors_db_etl_spark.operators.setsim import prefix_filter_jaccard_pairs
+
+    text = "the quick brown fox jumps over the lazy dog today"
+    rows = [
+        (1, None),
+        (2, None),
+        (10, text),
+        (11, text),
+        (12, text),
+        (13, "the quick brown fox jumps over the lazy dog tonight"),  # J = 7/9
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    comp = {
+        r["doc_id"]: r["component_id"]
+        for r in ngram_cluster_assignments(df, "doc_id", "text").collect()
+    }
+    assert comp == {1: 1, 2: 2, 10: 10, 11: 10, 12: 10, 13: 10}
+
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in prefix_filter_jaccard_pairs(df, "doc_id", "text").collect()
+    }
+    assert not any({1, 2} & set(p) for p in pairs)
+    assert {(10, 11), (10, 12), (11, 12)} <= pairs
+    assert {(10, 13), (11, 13), (12, 13)} <= pairs
+
+
 # ---------------------------------------------------------------------------
 # connected components / cluster assignment
 # ---------------------------------------------------------------------------
